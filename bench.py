@@ -9,9 +9,9 @@ number.
 Hygiene (round 2):
 - per-query numbers for EVERY declared query, so round-over-round deltas
   are attributable per operator;
-- median-of-3 on a warm session (JVM/catalog warmed first) so regressions
-  aren't hidden by noise; queries whose first run exceeds a cost cap are
-  not repeated (their runtime dwarfs the noise floor anyway);
+- every query: its first call reported apart (``first_call_sec``), then
+  the median of the REPS - 1 warm repeats recorded (JVM/catalog warmed
+  first), so every per-query number means the same thing;
 - "value" stays the HEADLINE total (sum of headline medians) for
   comparability with round 1's headline metric.
 
@@ -87,9 +87,7 @@ HEADLINE_V2_EXTRA = [
     "minhash_lsh_incremental_near_dups",
 ]
 
-#: A first run longer than this isn't repeated — its runtime is far above
-#: the ~0.1 s noise floor, and repeating would triple the bench wall time.
-REPEAT_CAP_S = 3.0
+#: Samples per query: the first (cold) call plus REPS - 1 warm repeats.
 REPS = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
 
 
@@ -418,42 +416,14 @@ def main() -> None:
     builds.clear()
 
     timings: dict[str, float] = {}
-    single_sampled: list[str] = []
+    first_call: dict[str, float] = {}
     for name in headline + others:
-        times = [run_once(name)]
-        if times[0] <= REPEAT_CAP_S:
-            times += [run_once(name) for _ in range(REPS - 1)]
-        elif times[0] <= 2 * REPEAT_CAP_S:
-            # noisy-box guard: a single sample just over the cap is the
-            # least trustworthy number on the board (round-3 grading spent
-            # a whole table re-timing exactly these) — one confirming
-            # repeat halves the spread for ~seconds of wall time.
-            times.append(run_once(name))
-        else:
-            single_sampled.append(name)
-        timings[name] = round(statistics.median(times), 3)
+        first_call[name] = round(run_once(name), 3)
+        warm = [run_once(name) for _ in range(REPS - 1)]
+        timings[name] = round(statistics.median(warm), 3) if warm else first_call[name]
 
-    # Tail-noise guard (round 9, r10 de-biased): the all-queries sweep is
-    # single-pass for the most expensive entries, and those single samples
-    # spike 3-4× on cold caches/GC within the 183-query session (r8: one
-    # query read 6.77 s in the sweep, 2.3 s solo-warm). Re-run every
-    # single-sampled query twice more at the end and keep the MEDIAN of 3
-    # — min-of-2 systematically biased the gate numbers low (it rewards
-    # one lucky sample); the median estimates typical cost while still
-    # shedding the one-off cold spike. All raw samples stay in the
-    # artifact so the spread is auditable.
-    tail_reruns: dict[str, dict[str, float]] = {}
-    for name in single_sampled:
-        reruns = [round(run_once(name), 3) for _ in range(2)]
-        tail_reruns[name] = {
-            "first": timings[name],
-            "rerun": reruns[0],
-            "rerun2": reruns[1],
-        }
-        timings[name] = round(statistics.median([timings[name], *reruns]), 3)
-
-    build_timings = {
-        n: round(statistics.median(v), 3) for n, v in builds.items() if n in timings
+    build_timings = {  # warm builds only, like the timings
+        n: round(statistics.median(v[1:] or v), 3) for n, v in builds.items() if n in timings
     }
     total = round(sum(timings[n] for n in headline), 3)
     total_v2 = round(sum(timings[n] for n in headline_v2), 3)
@@ -474,7 +444,7 @@ def main() -> None:
             "unit": "sec",
             "queries": timings,
             "build_sec": build_timings,
-            "tail_reruns": tail_reruns,
+            "first_call_sec": first_call,
             "noise_sentinel_median_s": round(sentinel_median, 3),
             "noise_sentinel_spread": sentinel_spread,
             "sf": sf_val,

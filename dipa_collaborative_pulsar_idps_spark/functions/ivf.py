@@ -1,5 +1,6 @@
 """IVF (inverted-file) approximate nearest neighbor — the coarse-quantizer
-scale path beside hyperplane LSH (functions/similarity.py).
+scale path beside hyperplane LSH (functions/similarity.py) — and the ONE
+persisted-index lifecycle the IVF, IVF-PQ and IVF+SQ8 families share.
 
 Build (the FAISS-style recipe): train k-means centroids on a BOUNDED
 sample (≤ ``sample_per_list``·n_list rows — driver memory is O(k·d)
@@ -12,9 +13,39 @@ n_probe / n_list.
 At 100 TB: the centroid table is tiny (broadcast); assignment is one pass;
 the probe join shuffles only on list ids. Lists should be written
 partitioned by list_id so a probe prunes partitions at scan time.
-"""
 
+Index lifecycle. A persisted index is written once, appended to
+continually and retrained under serving; the crash-consistent protocol is
+written once here over a per-family :class:`IndexCodec`:
+
+- save: re-initialise the path (deltas, stats, generations, pointer and
+  marker deleted), then write the tree;
+- tree write: encode → base rows hive-partitioned by ``list_id`` →
+  centroids → quantizer → base error stamped at ``stats/batch_id=base``
+  → ``_COMMITTED`` marker LAST;
+- append: reserved-id guard → stats read and baseline check (before
+  anything lands) → empty-batch report (nothing committed) → centroid
+  read and assignment → overwrite into ``<delta>/batch_id=<id>`` →
+  schema-pinned read-back → error measure on the committed rows → stats
+  stamp (a replay keeps its ``commit_seq``) → ledger derived from the
+  pre-commit rows → trigger;
+- load: base ∪ deltas of the active generation;
+- retrain: fresh quantizers staged in a new ``gen-NNNNN`` tree → atomic
+  ``_CURRENT`` pointer swap → prune of the old root.
+
+A codec holds the family's directory names (base, delta, quantizer), its
+stored column, its encode step (optionally over coarse residuals), its
+committed-batch and base-tree error measures, its quantizer train / save /
+load steps and geometry, and its drift trigger. The mass trigger
+(:data:`RETRAIN_MASS`) is common to all three. The twelve
+``save_*`` / ``load_*`` / ``*_append_batch`` / ``*_retrain`` functions are
+thin bindings of the protocol to :data:`IVF_CODEC`, ``pq.IVFPQ_CODEC`` and
+``sq.IVFSQ_CODEC``.
+"""
 from __future__ import annotations
+
+from dataclasses import dataclass
+from typing import Callable
 
 import numpy as np
 import pandas as pd
@@ -24,14 +55,13 @@ from pyspark.sql import functions as F
 from .similarity import cosine_cols, topk
 
 #: Pointer file naming the ACTIVE generation directory under an index
-#: root — written by :func:`ivf_retrain` (and the PQ sibling). An index
-#: that has never been retrained has no pointer and serves from the flat
-#: root layout `save_ivf_index` writes, so pre-retrain indexes load
-#: unchanged.
+#: root — written by :func:`retrain_index`. An index that has never been
+#: retrained has no pointer and serves from the flat root layout
+#: :func:`save_index` writes, so pre-retrain indexes load unchanged.
 _POINTER = "_CURRENT"
 
-#: Completeness marker written as the LAST step of `_write_ivf_tree` /
-#: `_write_ivfpq_tree` (r11 advisor): a generation directory EXISTS as soon
+#: Completeness marker written as the LAST step of `_write_tree`
+#: (r11 advisor): a generation directory EXISTS as soon
 #: as its first list file lands, so pointer-loss recovery must not trust
 #: bare existence — only a marked tree (lists + centroids + base stats all
 #: committed) is eligible to serve.
@@ -134,7 +164,7 @@ def _resolve_root(spark, path: str) -> str:
     when a retrain has promoted a generation; else the latest COMPLETE
     gen dir — one whose ``_COMMITTED`` marker landed, i.e. the staged
     tree finished before the (crashed) pointer swap — else the flat
-    *path* itself (the `save_ivf_index` layout). The completeness gate
+    *path* itself (the :func:`save_index` layout). The completeness gate
     (r11 advisor) is what makes a lost pointer always safely recoverable:
     a gen dir exists as soon as its first list file is written, so a
     retrain that crashed MID-STAGE must never shadow the intact previous
@@ -279,12 +309,11 @@ def ivf_search(
     (n_queries × n_probe rows) is collected and rides the scan kernel's
     closure — the inverted lists are scanned IN PLACE (partition-pruned
     by the list filter on a loaded index) instead of cogroup-Exchanged
-    on list_id per probe; scoring arithmetic is grouped_topk_scores'
-    verbatim, so results are unchanged (the exhaustive twin's value
-    oracle re-proves it)."""
+    on list_id per probe. The scoring is pinned by the exhaustive twin's
+    value oracle (``scripts/parity_snapshot.py:ANN_EXHAUSTIVE_TWINS``)."""
     from .similarity import collect_probe_map, probed_scan_topk, raw_topk_scorer
 
-    probe_map = collect_probe_map(probe_lists(centroids, queries, n_probe))
+    probe_map = collect_probe_map(probe_lists(centroids, queries, n_probe), "list_id")
     return probed_scan_topk(
         assigned.select("list_id", "vec_id", "e"),
         probe_map,
@@ -294,101 +323,12 @@ def ivf_search(
     )
 
 
-def _write_ivf_tree(
-    assigned: DataFrame, centroids: DataFrame, root: str
-) -> tuple[float, int]:
-    """The index trees themselves (lists hive-partitioned by list_id +
-    centroids + the stats/batch_id=base baseline) into *root* — shared by
-    :func:`save_ivf_index` (root = the index path) and
-    :func:`ivf_retrain` (root = a fresh generation dir). Returns the
-    baseline ``(mean_sq_err, n_vectors)`` it stamped.
-
-    The baseline is measured on the READ-BACK of the just-written lists —
-    the same measure-what-serving-scans contract as the append path (r11
-    advisor there), and one full pass cheaper: measuring the in-memory
-    ``assigned`` frame re-ran its whole lazy subtree (corpus scan + the
-    assignment Arrow pass) a second time (r13 opt, guide §1.2)."""
-    assigned.repartition("list_id").write.mode("overwrite").partitionBy(
-        "list_id"
-    ).parquet(f"{root}/lists")
-    centroids.write.mode("overwrite").parquet(f"{root}/centroids")
-    spark = centroids.sparkSession
-    # Empty-corpus guard (r14, advisor): a partitioned write of an empty
-    # frame lands only _SUCCESS — no list_id=* directories — and reading
-    # that back raises AnalysisException (no schema to infer). Stamp the
-    # (0.0, 0) baseline directly; there is nothing serving could scan.
-    fs, lists_path = _hadoop_fs(spark, f"{root}/lists")
-    has_lists = any(
-        st.isDirectory() and st.getPath().getName().startswith("list_id=")
-        for st in fs.listStatus(lists_path)
-    )
-    if has_lists:
-        committed = spark.read.schema(assigned.schema).parquet(
-            f"{root}/lists"
-        ).select("vec_id", "e", "list_id")
-        err, n = quantization_error(committed, centroids)
-    else:
-        err, n = 0.0, 0
-    _write_stats_row(spark, root, "base", n, err, seq=0)
-    _mark_committed(spark, root)  # LAST: marker-presence ⇒ complete tree
-    return err, n
-
-
-def save_ivf_index(assigned: DataFrame, centroids: DataFrame, path: str) -> None:
-    """Persist the index: inverted lists hive-partitioned by ``list_id`` —
-    the layout that makes a probe a PARTITION-PRUNED scan (only the
-    n_probe list directories are read; asserted in tests) — plus the tiny
-    centroid table and the build-time quantization-error baseline
-    (``stats/batch_id=base``) that :func:`ivf_append_batch` measures
-    assignment drift against. Build once, serve many: the k-means pass is
-    amortized across every subsequent query batch.
-
-    (Re)INITIALIZES the path: any appended ``deltas/``, stale ``stats/``
-    batch rows, retrain generations, and the generation pointer are
-    deleted first, so saving a rebuilt index over an appended one can
-    never serve duplicate vec_ids or count dead batch mass (r10 advisor).
-    For retrain-under-serving use :func:`ivf_retrain` — it stages the new
-    index in a fresh generation dir and promotes it with an atomic
-    pointer swap instead of rewriting trees in place."""
-    spark = centroids.sparkSession
-    for sub in ("deltas", "stats", "lists", "centroids"):
-        _delete_tree(spark, f"{path}/{sub}")
-    for gen in _list_generations(spark, path):
-        _delete_tree(spark, f"{path}/{gen}")
-    _delete_tree(spark, f"{path}/{_POINTER}")
-    _delete_tree(spark, f"{path}/{_COMMIT_MARK}")  # stale marker from a prior save
-    _write_ivf_tree(assigned, centroids, path)
-
-
-def load_ivf_index(spark, path: str) -> tuple[DataFrame, DataFrame]:
-    """Load a persisted index: (assigned, centroids), search-ready. Reads
-    from the ACTIVE generation (the ``_CURRENT`` pointer target after an
-    :func:`ivf_retrain`; the flat path before one). The serving relation
-    is the base lists UNION any appended delta batches
-    (``deltas/batch_id=*/list_id=*``) — both sides are hive-partitioned on
-    list_id, so a probe's list filter still prunes to only the probed
-    directories across base AND deltas."""
-    root = _resolve_root(spark, path)
-    assigned = spark.read.parquet(f"{root}/lists").select("vec_id", "e", "list_id")
-    deltas = _read_deltas(spark, root)
-    if deltas is not None:
-        assigned = assigned.unionByName(deltas)
-    centroids = spark.read.parquet(f"{root}/centroids")
-    return assigned, centroids
-
-
-def _read_deltas(spark, root: str) -> DataFrame | None:
-    return _read_delta_dir(spark, f"{root}/deltas", ("vec_id", "e", "list_id"))
-
-
 def _read_delta_dir(spark, root: str, cols: tuple[str, ...]) -> DataFrame | None:
     """The appended delta batches under *root*, or None when no batch was
     ever appended. Existence is checked through Hadoop's FileSystem API
     (not os.path), so the layout works unchanged on HDFS/S3 at cluster
-    scale. Shared by the IVF (raw-vector) and IVF-PQ (code) layouts."""
-    jvm = spark.sparkContext._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(root)
-    fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    scale."""
+    fs, jpath = _hadoop_fs(spark, root)
     if not fs.exists(jpath):
         return None
     return spark.read.parquet(root).select(*cols)
@@ -530,168 +470,345 @@ def _write_stats_row(
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/stats/batch_id={batch_id}")
 
 
-def ivf_append_batch(
-    spark,
-    path: str,
-    batch: DataFrame,
-    batch_id: str,
-    retrain_drift: float = 1.5,
-    retrain_mass: float = 0.5,
-) -> dict:
-    """Append new vectors to a PERSISTED IVF index without retraining —
-    the incremental-ingest path the text indexes (MinHash bands, TF-IDF
-    postings) already have.
-
-    ``batch``: (vec_id, e array<double>). Work is O(batch): assign against
-    the SAVED centroids (one Arrow pass, centroid matrix in the UDF
-    closure), write to ``deltas/batch_id=<id>/list_id=*/`` with mode
-    overwrite — the batch's own directory is the idempotent commit stamp
-    (a crashed or replayed batch rewrites the same directory, never
-    double-appends; same exactly-once shape as the streaming dedup/TF-IDF
-    sinks) — and record the batch's quantization error beside the build
-    baseline.
-
-    Returns drift stats including ``needs_retrain``, which trips when
-    (a) the batch's mean squared quantization error exceeds
-    ``retrain_drift`` × the build baseline (the data moved away from the
-    trained centroids), or (b) appended mass exceeds ``retrain_mass`` ×
-    the trained corpus (enough new data that k-means would place
-    centroids differently). Acting on the trigger is one call:
-    :func:`ivf_retrain` folds base + deltas into a fresh generation and
-    promotes it atomically."""
-    if batch_id == "base":
-        # "base" is the build baseline's reserved stats slot: an append
-        # stamped with it would overwrite the baseline and corrupt every
-        # derived drift/mass number (r14, advisor)
-        raise ValueError(
-            'batch_id "base" is reserved for the build baseline stats row'
-        )
-    root = _resolve_root(spark, path)
-    # validate the baseline BEFORE committing the delta: a missing base
-    # stats row used to surface only AFTER the delta landed, leaving a
-    # served-but-unaccounted batch (r10 advisor)
-    stats_before = _stats_rows(spark, root)
-    base, appended_before = _base_and_appended(stats_before, root)
-    if batch.isEmpty():
-        # nothing to commit: writing an empty hive dir would break schema
-        # inference for EVERY later delta read (r10 advisor) — report
-        # against the existing stats instead
-        appended_frac = (
-            appended_before / base["n_vectors"] if base["n_vectors"] else 0.0
-        )
-        return {
-            "batch_id": batch_id,
-            "n_vectors": 0,
-            "mean_sq_err": 0.0,
-            "base_mean_sq_err": base["mean_sq_err"],
-            "drift_ratio": 1.0,
-            "appended_frac": _round_ratio(appended_frac),
-            "needs_retrain": appended_frac > retrain_mass,
-        }
-    # one centroids read serves both the assignment collect and the
-    # error-measure join; the sort is driver-side — n_list rows — so the
-    # collect skips orderBy's range-partitioning sample job (r14, guide §5)
-    centroids = spark.read.parquet(f"{root}/centroids")
-    cent_rows = sorted(centroids.collect(), key=lambda r: r["list_id"])  # bounded-collect: n_list rows
-    cents = np.array([r["centroid"] for r in cent_rows], dtype=np.float64)
-    assigned = _assign_to_centroids(batch.select("vec_id", "e"), cents)
-    assigned.repartition("list_id").write.mode("overwrite").partitionBy(
-        "list_id"
-    ).parquet(f"{root}/deltas/batch_id={batch_id}")
-    # measure the COMMITTED batch (read-back, not the in-memory frame), so
-    # the stat reflects exactly what serving will scan; the explicit
-    # schema (the frame just written) skips the footer-inference job
-    committed = spark.read.schema(assigned.schema).parquet(
-        f"{root}/deltas/batch_id={batch_id}"
-    ).select("vec_id", "e", "list_id")
-    batch_err, batch_n = quantization_error(committed, centroids)
-    _write_stats_row(
-        spark, root, batch_id, batch_n, batch_err,
-        seq=_commit_seq_for(stats_before, batch_id),
-    )
-    # post-commit ledger state derived from the pre-commit rows + the row
-    # just stamped (identical to a re-read by construction; r13 opt —
-    # this was a second stats read+collect per append)
-    appended_n = _post_append_stats(stats_before, batch_id, batch_n)
-    drift = _drift_ratio(batch_err, base["mean_sq_err"])
-    appended_frac = appended_n / base["n_vectors"] if base["n_vectors"] else 0.0
-    return {
-        "batch_id": batch_id,
-        "n_vectors": batch_n,
-        "mean_sq_err": batch_err,
-        "base_mean_sq_err": base["mean_sq_err"],
-        "drift_ratio": _round_ratio(drift),
-        "appended_frac": _round_ratio(appended_frac),
-        "needs_retrain": drift > retrain_drift or appended_frac > retrain_mass,
-    }
-
-
 def _next_generation(spark, path: str) -> str:
     gens = _list_generations(spark, path)
     nxt = (int(gens[-1].split("-")[1]) + 1) if gens else 1
     return f"gen-{nxt:05d}"
 
 
-def ivf_retrain(
+#: Mass trigger shared by every family: an append trips ``needs_retrain``
+#: once the appended rows exceed this fraction of the trained corpus
+#: (enough new data that k-means would place the centroids differently).
+RETRAIN_MASS = 0.5
+
+
+@dataclass(frozen=True)
+class IndexCodec:
+    """One index family's part of the lifecycle; the protocol functions
+    below (:func:`save_index`, :func:`load_index`, :func:`append_batch`,
+    :func:`retrain_index`) are shared. ``quantizer`` is whatever the family
+    trains beside the centroids (None for raw IVF)."""
+
+    #: hive-partitioned base rows, appended batches, and the quantizer
+    #: tree (None: the centroids are the whole quantizer)
+    base_dir: str
+    delta_dir: str
+    quantizer_dir: str | None
+    #: the stored vector column: raw ``e`` or quantized ``codes``
+    payload: str
+    #: (vectors, quantizer) -> (vec_id, payload, list_id) rows to write
+    encode: Callable
+    #: (vectors, committed, centroids, quantizer) -> (err, n, clip_frac|None)
+    #: measured on the read-back of a committed delta
+    batch_error: Callable
+    #: (base_path, vectors, encoded, centroids, quantizer) -> (err, n):
+    #: the ``stats/batch_id=base`` baseline of a freshly written tree
+    tree_error: Callable
+    #: (corpus, assigned, centroids, dim, **geometry) -> quantizer
+    train: Callable
+    save_quantizer: Callable | None = None
+    load_quantizer: Callable | None = None
+    #: (assigned, centroids) -> the vectors the quantizer encodes; None
+    #: encodes the raw assigned vectors
+    residuals: Callable | None = None
+    #: (spark, root) -> the persisted geometry a retrain defaults to and
+    #: reports; None: the family has no geometry knobs
+    geometry: Callable | None = None
+    #: the per-batch drift signal (an append-result key) and its limit
+    trigger: str = "drift_ratio"
+    trigger_limit: float = 1.5
+
+    @property
+    def stores_raw(self) -> bool:
+        """The index holds the raw vectors, so a retrain can read its
+        corpus back; lossy codes make the caller supply it."""
+        return self.payload == "e"
+
+    @property
+    def trees(self) -> tuple[str, ...]:
+        """Every tree of one generation (stats included)."""
+        qdir = (self.quantizer_dir,) if self.quantizer_dir else ()
+        return (self.base_dir, "centroids", *qdir, "stats", self.delta_dir)
+
+
+def _write_partitioned(rows: DataFrame, path: str) -> None:
+    rows.repartition("list_id").write.mode("overwrite").partitionBy(
+        "list_id"
+    ).parquet(path)
+
+
+def _write_tree(
+    codec: IndexCodec, assigned: DataFrame, centroids: DataFrame, quantizer, root: str
+) -> tuple[float, int]:
+    """Base rows (hive-partitioned by list_id, so a probe is a
+    partition-pruned scan) + centroids + quantizer + the
+    ``stats/batch_id=base`` baseline into *root*, ``_COMMITTED`` marker
+    LAST. Returns the baseline ``(mean_sq_err, n_vectors)`` it stamped."""
+    spark = centroids.sparkSession
+    vecs = codec.residuals(assigned, centroids) if codec.residuals else assigned
+    enc = codec.encode(vecs, quantizer)
+    _write_partitioned(enc, f"{root}/{codec.base_dir}")
+    centroids.write.mode("overwrite").parquet(f"{root}/centroids")
+    if codec.quantizer_dir:
+        codec.save_quantizer(spark, quantizer, f"{root}/{codec.quantizer_dir}")
+    err, n = codec.tree_error(f"{root}/{codec.base_dir}", vecs, enc, centroids, quantizer)
+    _write_stats_row(spark, root, "base", n, err, seq=0)
+    _mark_committed(spark, root)  # LAST: marker-presence ⇒ complete tree
+    return err, n
+
+
+def train_index(
+    codec: IndexCodec, corpus: DataFrame, dim: int, n_list: int, **geometry
+) -> tuple[DataFrame, DataFrame, object]:
+    """(assigned, centroids, quantizer): the coarse k-means over *corpus*
+    plus the family quantizer — the inputs :func:`save_index` persists."""
+    assigned, centroids = build_ivf_index(corpus, dim=dim, n_list=n_list)
+    return assigned, centroids, codec.train(corpus, assigned, centroids, dim, **geometry)
+
+
+def save_index(
+    codec: IndexCodec, assigned: DataFrame, centroids: DataFrame, quantizer, path: str
+) -> None:
+    """Persist a built index at *path*. (Re)INITIALIZES the path: deltas,
+    stale stats rows, retrain generations, the pointer and the marker are
+    deleted first, so saving a rebuilt index over an appended one never
+    serves duplicate vec_ids, stale deltas under new quantizers, or dead
+    batch mass. For retrain-under-serving use :func:`retrain_index`."""
+    spark = centroids.sparkSession
+    for sub in codec.trees:
+        _delete_tree(spark, f"{path}/{sub}")
+    for gen in _list_generations(spark, path):
+        _delete_tree(spark, f"{path}/{gen}")
+    _delete_tree(spark, f"{path}/{_POINTER}")
+    _delete_tree(spark, f"{path}/{_COMMIT_MARK}")  # stale marker from a prior save
+    _write_tree(codec, assigned, centroids, quantizer, path)
+
+
+def _load_tree(codec: IndexCodec, spark, root: str) -> tuple:
+    cols = ("vec_id", codec.payload, "list_id")
+    rows = spark.read.parquet(f"{root}/{codec.base_dir}").select(*cols)
+    deltas = _read_delta_dir(spark, f"{root}/{codec.delta_dir}", cols)
+    if deltas is not None:
+        rows = rows.unionByName(deltas)
+    centroids = spark.read.parquet(f"{root}/centroids")
+    if not codec.quantizer_dir:
+        return rows, centroids
+    return rows, centroids, codec.load_quantizer(spark, f"{root}/{codec.quantizer_dir}")
+
+
+def load_index(codec: IndexCodec, spark, path: str) -> tuple:
+    """(rows, centroids[, quantizer]) of the ACTIVE generation, search-
+    ready: base rows UNION every appended delta batch — both sides
+    hive-partitioned on list_id, so a probe's list filter prunes across
+    base AND deltas."""
+    return _load_tree(codec, spark, _resolve_root(spark, path))
+
+
+def _commit_delta(
+    codec: IndexCodec, spark, root: str, batch: DataFrame, batch_id: str
+) -> tuple[float, int, float | None]:
+    # one centroids read serves both the assignment collect and the
+    # error/residual join; the sort is driver-side (n_list rows), which
+    # skips orderBy's range-partitioning sample job
+    centroids = spark.read.parquet(f"{root}/centroids")
+    cent_rows = sorted(centroids.collect(), key=lambda r: r["list_id"])  # bounded-collect: n_list rows
+    cents = np.array([r["centroid"] for r in cent_rows], dtype=np.float64)
+    quantizer = (
+        codec.load_quantizer(spark, f"{root}/{codec.quantizer_dir}")
+        if codec.quantizer_dir
+        else None
+    )
+    assigned = _assign_to_centroids(batch.select("vec_id", "e"), cents)
+    # residuals feed both the delta write and the committed-row rescore:
+    # persisted, so the assignment + join pass runs once
+    vecs = (
+        codec.residuals(assigned, centroids).persist() if codec.residuals else assigned
+    )
+    try:
+        enc = codec.encode(vecs, quantizer)
+        delta = f"{root}/{codec.delta_dir}/batch_id={batch_id}"
+        _write_partitioned(enc, delta)
+        # measure the COMMITTED rows, so the stat reflects exactly what
+        # serving will scan; the explicit schema (the frame just written)
+        # skips the footer-inference job
+        committed = spark.read.schema(enc.schema).parquet(delta).select(
+            "vec_id", codec.payload, "list_id"
+        )
+        return codec.batch_error(vecs, committed, centroids, quantizer)
+    finally:
+        if codec.residuals:
+            vecs.unpersist()
+
+
+def append_batch(
+    codec: IndexCodec, spark, path: str, batch: DataFrame, batch_id: str
+) -> dict:
+    """Append (vec_id, e) rows to a PERSISTED index without retraining:
+    O(batch) assignment + encoding against the SAVED quantizers, committed
+    to ``<delta_dir>/batch_id=<id>/list_id=*`` with mode overwrite — the
+    batch's own directory is the idempotent commit stamp (a replayed batch
+    rewrites it, never double-appends) — and the committed batch's error
+    stamped beside the build baseline.
+
+    Returns the batch stats with ``needs_retrain``: the family's drift
+    signal above its limit, or appended mass above :data:`RETRAIN_MASS` ×
+    the trained corpus. Acting on it is one :func:`retrain_index` call."""
+    if batch_id == "base":
+        # "base" is the build baseline's reserved stats slot: an append
+        # stamped with it would overwrite the baseline and corrupt every
+        # derived drift/mass number
+        raise ValueError('batch_id "base" is reserved for the build baseline stats row')
+    root = _resolve_root(spark, path)
+    # validate the baseline BEFORE committing: a missing base row must not
+    # leave a served-but-unaccounted delta behind
+    stats_before = _stats_rows(spark, root)
+    base, appended_n = _base_and_appended(stats_before, root)
+    if batch.isEmpty():
+        # nothing to commit: an empty hive delta dir would break schema
+        # inference for every later delta read — report against the ledger
+        err, n, clip, drift = 0.0, 0, 0.0, 1.0
+    else:
+        err, n, clip = _commit_delta(codec, spark, root, batch, batch_id)
+        _write_stats_row(
+            spark, root, batch_id, n, err, seq=_commit_seq_for(stats_before, batch_id)
+        )
+        # post-commit ledger derived from the pre-commit rows (identical to
+        # a re-read by construction, one read+collect cheaper)
+        appended_n = _post_append_stats(stats_before, batch_id, n)
+        drift = _drift_ratio(err, base["mean_sq_err"])
+    frac = appended_n / base["n_vectors"] if base["n_vectors"] else 0.0
+    out = {
+        "batch_id": batch_id,
+        "n_vectors": n,
+        "mean_sq_err": err,
+        "base_mean_sq_err": base["mean_sq_err"],
+        "drift_ratio": _round_ratio(drift),
+    }
+    if codec.trigger == "clip_frac":
+        out["clip_frac"] = _round_ratio(clip)
+    signal = clip if codec.trigger == "clip_frac" else drift
+    out["appended_frac"] = _round_ratio(frac)
+    out["needs_retrain"] = signal > codec.trigger_limit or frac > RETRAIN_MASS
+    return out
+
+
+def retrain_index(
+    codec: IndexCodec,
     spark,
     path: str,
+    corpus: DataFrame | None = None,
     n_list: int | None = None,
-    seed: int = 42,
-    sample_per_list: int = 256,
-    prune_old: bool = True,
+    **geometry,
 ) -> dict:
-    """One-call retrain/compaction: fold the persisted base + every
-    appended delta into a FRESH index (new k-means over the full current
-    corpus), staged in a new ``gen-NNNNN`` directory and promoted with an
-    atomic ``_CURRENT`` pointer swap — the response to a tripped
-    ``needs_retrain`` (pre-r11 the trigger existed but the action was
-    caller-owned prose). Exactly-once shape: the staged tree is complete
-    (lists + centroids + fresh base stats, NO deltas) before the swap; a
-    crash before the swap leaves the old generation serving; a replayed
-    retrain stages another generation and swaps again. Readers that
-    resolved the old root keep a consistent view — its trees are pruned
-    only AFTER the swap, and only when ``prune_old``.
+    """One-call retrain/compaction: fresh quantizers over the full current
+    corpus, staged in a new ``gen-NNNNN`` directory and promoted with an
+    atomic ``_CURRENT`` pointer swap. Exactly-once shape: the staged tree
+    is complete (base + centroids + quantizer + fresh base stats, NO
+    deltas, ``_COMMITTED`` last) before the swap; a crash before the swap
+    leaves the old generation serving; a replayed retrain stages another
+    generation and swaps again. The old root is pruned only AFTER the
+    swap (readers that resolved it kept a consistent view until then).
 
-    Mirrors storage.upsert_telemetry's leaf-scoped discipline: write into
-    fresh directories, never mutate a tree a reader may hold.
-
-    ``n_list`` defaults to the current centroid count. Returns
-    {generation, n_vectors, mean_sq_err, n_list}."""
+    ``corpus``: the raw (vec_id, e) source of truth; None reads the
+    index's own base ∪ deltas, which only a ``stores_raw`` index holds.
+    ``n_list`` and the family geometry default to the current index's.
+    Returns {generation, n_vectors, mean_sq_err, n_list, **geometry}."""
     old_root = _resolve_root(spark, path)
-    loaded, old_centroids = load_ivf_index(spark, path)
-    corpus = loaded.select("vec_id", "e")
-    # reuse the loaded centroids frame instead of a second read (r14)
+    if corpus is None:
+        loaded, old_centroids = _load_tree(codec, spark, old_root)[:2]
+        corpus = loaded.select("vec_id", "e")
+    else:
+        old_centroids = spark.read.parquet(f"{old_root}/centroids")
     cent_rows = old_centroids.collect()  # bounded-collect: n_list rows
     if n_list is None:
         n_list = len(cent_rows)
-    assigned, centroids = build_ivf_index(
-        corpus,
-        dim=len(cent_rows[0]["centroid"]),
-        n_list=n_list,
-        seed=seed,
-        sample_per_list=sample_per_list,
-    )
+    geom = codec.geometry(spark, old_root) if codec.geometry else {}
+    geom.update({k: v for k, v in geometry.items() if v is not None})
+    trained = train_index(codec, corpus, len(cent_rows[0]["centroid"]), n_list, **geom)
     gen = _next_generation(spark, path)
-    err, n = _write_ivf_tree(assigned, centroids, f"{path}/{gen}")
+    err, n = _write_tree(codec, *trained, f"{path}/{gen}")
     _write_pointer(spark, path, gen)
-    if prune_old:
-        if old_root == path:  # flat pre-generation layout
-            for sub in ("lists", "centroids", "stats", "deltas"):
-                _delete_tree(spark, f"{path}/{sub}")
-        else:
-            _delete_tree(spark, old_root)
-    # the staged tree's baseline is the stamp _write_ivf_tree just wrote —
-    # no need to read the stats tree back (r13 opt, guide §5)
-    return {
-        "generation": gen,
-        "n_vectors": n,
-        "mean_sq_err": err,
-        "n_list": n_list,
-    }
+    if old_root == path:  # flat pre-generation layout
+        for sub in codec.trees:
+            _delete_tree(spark, f"{path}/{sub}")
+    else:
+        _delete_tree(spark, old_root)
+    # the staged baseline is the stamp _write_tree just wrote — no stats
+    # read-back needed
+    return {"generation": gen, "n_vectors": n, "mean_sq_err": err, "n_list": n_list, **geom}
+
+
+def _ivf_tree_error(
+    base_path: str, _vecs, enc: DataFrame, centroids: DataFrame, _q
+) -> tuple[float, int]:
+    """Baseline measured on the READ-BACK of the just-written lists (the
+    same measure-what-serving-scans contract as appends, and one pass
+    cheaper than re-running the lazy assignment subtree)."""
+    spark = centroids.sparkSession
+    # empty-corpus guard: a partitioned write of an empty frame lands only
+    # _SUCCESS (no list_id=* directories), and reading that back raises
+    # AnalysisException — there is nothing serving could scan
+    fs, lists_path = _hadoop_fs(spark, base_path)
+    if not any(
+        st.isDirectory() and st.getPath().getName().startswith("list_id=")
+        for st in fs.listStatus(lists_path)
+    ):
+        return 0.0, 0
+    committed = spark.read.schema(enc.schema).parquet(base_path)
+    return quantization_error(committed.select("vec_id", "e", "list_id"), centroids)
+
+
+#: Raw IVF: the lists hold the vectors themselves, so the error is the
+#: squared distance to the assigned centroid and a retrain can read its
+#: corpus back from the index.
+IVF_CODEC = IndexCodec(
+    base_dir="lists",
+    delta_dir="deltas",
+    quantizer_dir=None,
+    payload="e",
+    encode=lambda vecs, _q: vecs,
+    batch_error=lambda _v, committed, centroids, _q: (
+        *quantization_error(committed, centroids),
+        None,
+    ),
+    tree_error=_ivf_tree_error,
+    train=lambda corpus, assigned, centroids, dim: None,
+)
+
+
+def codec_for(family: str) -> IndexCodec:
+    """The codec of index family ``ivf`` / ``ivfpq`` / ``ivfsq``."""
+    from .pq import IVFPQ_CODEC
+    from .sq import IVFSQ_CODEC
+
+    codecs = {"ivf": IVF_CODEC, "ivfpq": IVFPQ_CODEC, "ivfsq": IVFSQ_CODEC}
+    if family not in codecs:
+        raise ValueError(f"unknown ANN index family: {family!r}")
+    return codecs[family]
+
+
+def save_ivf_index(assigned: DataFrame, centroids: DataFrame, path: str) -> None:
+    """:func:`save_index` for raw IVF: (vec_id, e, list_id) lists + centroids."""
+    save_index(IVF_CODEC, assigned, centroids, None, path)
+
+
+def load_ivf_index(spark, path: str) -> tuple[DataFrame, DataFrame]:
+    """:func:`load_index` for raw IVF → (assigned, centroids)."""
+    return load_index(IVF_CODEC, spark, path)
+
+
+def ivf_append_batch(spark, path: str, batch: DataFrame, batch_id: str) -> dict:
+    """:func:`append_batch` for raw IVF (``deltas/batch_id=<id>``)."""
+    return append_batch(IVF_CODEC, spark, path, batch, batch_id)
+
+
+def ivf_retrain(spark, path: str, n_list: int | None = None) -> dict:
+    """:func:`retrain_index` for raw IVF: new k-means over base ∪ deltas."""
+    return retrain_index(IVF_CODEC, spark, path, n_list=n_list)
 
 
 def index_health(spark, path: str) -> DataFrame:
-    """The index-health ledger of a persisted IVF / IVF-PQ index: one row
+    """The index-health ledger of a persisted index (any family): one row
     per committed batch (``base`` + every append) with its size and
     quantization/reconstruction error, plus the two derived numbers the
     retrain triggers read — ``drift_ratio`` (batch error / build
@@ -701,7 +818,7 @@ def index_health(spark, path: str) -> DataFrame:
     each stats write stamps, base = 0, so non-zero-padded batch ids like
     b10/b2 can't misorder the running sum; r11 advisor).
 
-    Resolves the ACTIVE generation, so after an :func:`ivf_retrain` the
+    Resolves the ACTIVE generation, so after a :func:`retrain_index` the
     ledger restarts at the fresh baseline — exactly what a serving
     monitor should see. All JVM-side: a broadcast 1-row join against the
     base row + a running-sum window over the (tiny) batch set."""

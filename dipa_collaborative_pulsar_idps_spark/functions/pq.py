@@ -38,7 +38,14 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .ivf import _lloyd
+from .ivf import (
+    IndexCodec,
+    _lloyd,
+    append_batch,
+    load_index,
+    retrain_index,
+    save_index,
+)
 from .similarity import topk
 
 #: Hard bound on the driver-side query batch for the ADC scan — queries are
@@ -462,84 +469,6 @@ def ivfpq_search(
     return ivfpq_search_encoded(enc, centroids, codebooks, queries, k, n_probe)
 
 
-def save_ivfpq_index(
-    assigned: DataFrame,
-    centroids: DataFrame,
-    codebooks: np.ndarray,
-    path: str,
-) -> None:
-    """Persist the full IVF-PQ serving layout: RESIDUAL codes (m small
-    ints per vector — the 32× compression is ON DISK too) hive-partitioned
-    by ``list_id`` so a probe is a partition-pruned scan, plus the tiny
-    centroid table, the PQ codebooks (residual-trained —
-    :func:`train_pq_residual`), and the build-time residual-
-    reconstruction-error baseline (``stats/batch_id=base``) that
-    :func:`ivfpq_append_batch` measures codebook drift against.
-    Encode-once/serve-many: the corpus never needs its raw vectors again
-    at serving time.
-
-    (Re)INITIALIZES the path — stale ``codes_deltas/``, ``stats/`` rows,
-    retrain generations, and the generation pointer are deleted first
-    (r10 advisor: saving a rebuilt index over an appended one must not
-    serve stale deltas decoded with NEW codebooks). For retrain-under-
-    serving use :func:`ivfpq_retrain`."""
-    from .ivf import _COMMIT_MARK, _POINTER, _delete_tree, _list_generations
-
-    spark = centroids.sparkSession
-    for sub in ("codes_deltas", "stats", "codes", "centroids", "pq"):
-        _delete_tree(spark, f"{path}/{sub}")
-    for gen in _list_generations(spark, path):
-        _delete_tree(spark, f"{path}/{gen}")
-    _delete_tree(spark, f"{path}/{_POINTER}")
-    _delete_tree(spark, f"{path}/{_COMMIT_MARK}")  # stale marker from a prior save
-    _write_ivfpq_tree(assigned, centroids, codebooks, path)
-
-
-def _write_ivfpq_tree(
-    assigned: DataFrame, centroids: DataFrame, codebooks: np.ndarray, root: str
-) -> tuple[float, int]:
-    """The IVF-PQ trees (residual codes + centroids + codebooks + base
-    stats) into *root*, ``_COMMITTED`` marker last — shared by
-    :func:`save_ivfpq_index` and :func:`ivfpq_retrain`. Returns the
-    baseline ``(mean_sq_err, n_vectors)`` it stamped."""
-    from .ivf import _mark_committed, _write_stats_row
-
-    res = _residuals(assigned, centroids)
-    enc = pq_encode(res, codebooks, keep=("list_id",))
-    enc.repartition("list_id").write.mode("overwrite").partitionBy(
-        "list_id"
-    ).parquet(f"{root}/codes")
-    centroids.write.mode("overwrite").parquet(f"{root}/centroids")
-    spark = centroids.sparkSession
-    save_pq(spark, codebooks, f"{root}/pq")
-    err, n = pq_reconstruction_error(res.select("vec_id", "e"), codebooks)
-    _write_stats_row(spark, root, "base", n, err, seq=0)
-    _mark_committed(spark, root)  # LAST: marker-presence ⇒ complete tree
-    return err, n
-
-
-def load_ivfpq_index(spark, path: str) -> tuple[DataFrame, DataFrame, np.ndarray]:
-    """Load a persisted IVF-PQ index → (encoded, centroids, codebooks),
-    ready for :func:`ivfpq_search_encoded`. Reads from the ACTIVE
-    generation (pointer target after an :func:`ivfpq_retrain`; flat path
-    before one). The code relation is the base codes UNION any appended
-    delta batches (``codes_deltas/batch_id=*/list_id=*`` —
-    :func:`ivfpq_append_batch`); both sides stay hive-partitioned on
-    list_id, so a probe still prunes to the probed list directories
-    across base AND deltas."""
-    from .ivf import _read_delta_dir, _resolve_root
-
-    root = _resolve_root(spark, path)
-    enc = spark.read.parquet(f"{root}/codes").select("vec_id", "codes", "list_id")
-    deltas = _read_delta_dir(
-        spark, f"{root}/codes_deltas", ("vec_id", "codes", "list_id")
-    )
-    if deltas is not None:
-        enc = enc.unionByName(deltas)
-    centroids = spark.read.parquet(f"{root}/centroids")
-    return enc, centroids, load_pq(spark, f"{root}/pq")
-
-
 def pq_reconstruction_error(corpus: DataFrame, codebooks: np.ndarray) -> tuple[float, int]:
     """(mean squared PQ reconstruction residual ‖v − decode(encode(v))‖²,
     row count) over (vec_id, e) — one Arrow pass with the codebooks in
@@ -577,10 +506,9 @@ def pq_code_error(
     """(mean squared reconstruction error ‖r − decode(code)‖², row count)
     of COMMITTED codes: the read-back (vec_id, codes) relation joined to
     the batch residuals (vec_id, e) by vec_id, decoded through the
-    codebook gathers in one Arrow pass. This is the stat contract
-    :func:`ivfpq_append_batch` shares with ``ivf_append_batch`` (r11
-    advisor): the number reflects exactly the code bytes serving will
-    scan — a truncated or partial delta commit shows up as a wrong count
+    codebook gathers in one Arrow pass — the append protocol's
+    measure-what-serving-scans contract (r11 advisor): the number
+    reflects exactly the code bytes serving will scan — a truncated or partial delta commit shows up as a wrong count
     or error, not a silently-healthy in-memory measurement."""
     m, ksub, dsub = codebooks.shape
 
@@ -606,114 +534,54 @@ def pq_code_error(
     return (float(row["err"] or 0.0), int(row["n"]))
 
 
-def ivfpq_append_batch(
-    spark,
-    path: str,
-    batch: DataFrame,
-    batch_id: str,
-    retrain_drift: float = 1.5,
-    retrain_mass: float = 0.5,
-) -> dict:
-    """Append new vectors to a PERSISTED IVF-PQ index without retraining
-    either quantizer — the compressed-serving sibling of
-    ``ivf.ivf_append_batch`` (same batch-stamped exactly-once layout).
+#: IVF-PQ (IVFADC): the codebooks quantize coarse RESIDUALS, so the
+#: committed-batch error rescores the read-back codes against the
+#: (persisted) batch residuals. Drift = reconstruction error over the
+#: build baseline — a PQ retrain re-encodes the whole corpus, which is why
+#: the trigger is a tracked number and not a per-batch habit. The codes
+#: are lossy (that is the 32× point), so a retrain reads raw vectors from
+#: the caller's source of truth rather than decoding codes into lossier
+#: ones; ``m``/``ksub`` default to the persisted codebooks' geometry.
+IVFPQ_CODEC = IndexCodec(
+    base_dir="codes",
+    delta_dir="codes_deltas",
+    quantizer_dir="pq",
+    payload="codes",
+    encode=lambda res, cb: pq_encode(res, cb, keep=("list_id",)),
+    batch_error=lambda res, committed, _c, cb: (*pq_code_error(res, committed, cb), None),
+    tree_error=lambda _p, res, _enc, _c, cb: pq_reconstruction_error(
+        res.select("vec_id", "e"), cb
+    ),
+    train=lambda corpus, assigned, centroids, dim, **geometry: train_pq_residual(
+        assigned, centroids, dim, **geometry
+    ),
+    save_quantizer=save_pq,
+    load_quantizer=load_pq,
+    residuals=_residuals,
+    geometry=lambda spark, root: dict(
+        zip(("m", "ksub"), load_pq(spark, f"{root}/pq").shape[:2])
+    ),
+)
 
-    ``batch``: (vec_id, e array<double>). O(batch) work: coarse-assign
-    against the SAVED centroids, residualize, PQ-encode with the SAVED
-    codebooks (one fused Arrow pipeline), commit to
-    ``codes_deltas/batch_id=<id>/list_id=*/`` with mode overwrite
-    (idempotent replay), and record the batch's residual reconstruction
-    error beside the build baseline.
 
-    ``needs_retrain`` trips on (a) reconstruction error >
-    ``retrain_drift`` × baseline (the codebooks no longer fit the data —
-    a PQ retrain means RE-ENCODING the whole corpus, which is exactly why
-    the trigger is a tracked number and not a per-batch habit), or
-    (b) appended mass > ``retrain_mass`` × the trained corpus. Acting on
-    the trigger is one call: :func:`ivfpq_retrain`."""
-    from .ivf import (
-        _assign_to_centroids,
-        _base_and_appended,
-        _commit_seq_for,
-        _drift_ratio,
-        _post_append_stats,
-        _resolve_root,
-        _round_ratio,
-        _stats_rows,
-        _write_stats_row,
-    )
+def save_ivfpq_index(
+    assigned: DataFrame, centroids: DataFrame, codebooks: np.ndarray, path: str
+) -> None:
+    """:func:`ivf.save_index` for IVF-PQ: residual codes (m small ints per
+    vector — the compression is ON DISK too) + centroids + the
+    :func:`train_pq_residual` codebooks. Encode-once/serve-many."""
+    save_index(IVFPQ_CODEC, assigned, centroids, codebooks, path)
 
-    if batch_id == "base":
-        # reserved for the build baseline stats row (r14, advisor) — an
-        # append stamped "base" would clobber the drift baseline
-        raise ValueError(
-            'batch_id "base" is reserved for the build baseline stats row'
-        )
-    root = _resolve_root(spark, path)
-    # validate the baseline BEFORE committing the delta (r10 advisor)
-    stats_before = _stats_rows(spark, root)
-    base, appended_before = _base_and_appended(stats_before, root)
-    if batch.isEmpty():
-        # an empty hive delta dir would break schema inference for every
-        # later delta read (r10 advisor) — skip the commit entirely
-        appended_frac = (
-            appended_before / base["n_vectors"] if base["n_vectors"] else 0.0
-        )
-        return {
-            "batch_id": batch_id,
-            "n_vectors": 0,
-            "mean_sq_err": 0.0,
-            "base_mean_sq_err": base["mean_sq_err"],
-            "drift_ratio": 1.0,
-            "appended_frac": _round_ratio(appended_frac),
-            "needs_retrain": appended_frac > retrain_mass,
-        }
-    # one centroids read serves both the assignment collect and the
-    # residual join; driver-side sort skips orderBy's range-partitioning
-    # sample job (r14, guide §5)
-    centroids = spark.read.parquet(f"{root}/centroids")
-    cent_rows = sorted(centroids.collect(), key=lambda r: r["list_id"])  # bounded-collect: n_list rows
-    cents = np.array([r["centroid"] for r in cent_rows], dtype=np.float64)
-    codebooks = load_pq(spark, f"{root}/pq")
-    assigned = _assign_to_centroids(batch.select("vec_id", "e"), cents)
-    # persisted: the residual relation feeds BOTH the delta write and the
-    # committed-code rescore below (two jobs; one assignment/join pass)
-    res = _residuals(assigned, centroids).persist()
-    try:
-        enc = pq_encode(res, codebooks, keep=("list_id",))
-        enc.repartition("list_id").write.mode("overwrite").partitionBy(
-            "list_id"
-        ).parquet(f"{root}/codes_deltas/batch_id={batch_id}")
-        # measure the COMMITTED batch (read back the delta's code rows and
-        # rescore them against the batch residuals), mirroring
-        # ivf_append_batch's contract: the stat reflects exactly what
-        # serving will scan (r11 advisor); explicit schema (the frame just
-        # written) skips the footer-inference job
-        committed = spark.read.schema(enc.schema).parquet(
-            f"{root}/codes_deltas/batch_id={batch_id}"
-        ).select("vec_id", "codes")
-        batch_err, batch_n = pq_code_error(res, committed, codebooks)
-    finally:
-        res.unpersist()
-    _write_stats_row(
-        spark, root, batch_id, batch_n, batch_err,
-        seq=_commit_seq_for(stats_before, batch_id),
-    )
-    # post-commit ledger state from the pre-commit rows + the stamped row
-    # (identical to a re-read by construction; r13 opt — was a second
-    # stats read+collect per append)
-    appended_n = _post_append_stats(stats_before, batch_id, batch_n)
-    drift = _drift_ratio(batch_err, base["mean_sq_err"])
-    appended_frac = appended_n / base["n_vectors"] if base["n_vectors"] else 0.0
-    return {
-        "batch_id": batch_id,
-        "n_vectors": batch_n,
-        "mean_sq_err": batch_err,
-        "base_mean_sq_err": base["mean_sq_err"],
-        "drift_ratio": _round_ratio(drift),
-        "appended_frac": _round_ratio(appended_frac),
-        "needs_retrain": drift > retrain_drift or appended_frac > retrain_mass,
-    }
+
+def load_ivfpq_index(spark, path: str) -> tuple[DataFrame, DataFrame, np.ndarray]:
+    """:func:`ivf.load_index` for IVF-PQ → (encoded, centroids, codebooks),
+    ready for :func:`ivfpq_search_encoded`."""
+    return load_index(IVFPQ_CODEC, spark, path)
+
+
+def ivfpq_append_batch(spark, path: str, batch: DataFrame, batch_id: str) -> dict:
+    """:func:`ivf.append_batch` for IVF-PQ (``codes_deltas/batch_id=<id>``)."""
+    return append_batch(IVFPQ_CODEC, spark, path, batch, batch_id)
 
 
 def ivfpq_retrain(
@@ -723,66 +591,10 @@ def ivfpq_retrain(
     n_list: int | None = None,
     m: int | None = None,
     ksub: int | None = None,
-    seed: int = 42,
-    sample_cap: int = 4096,
-    prune_old: bool = True,
 ) -> dict:
-    """One-call IVF-PQ retrain/compaction: rebuild BOTH quantizers (fresh
-    k-means centroids + fresh residual codebooks) and re-encode, staged in
-    a new ``gen-NNNNN`` directory and promoted with an atomic ``_CURRENT``
-    pointer swap — the compressed sibling of :func:`ivf.ivf_retrain` and
-    the response to a tripped ``needs_retrain``.
-
-    ``corpus``: the full raw (vec_id, e) relation to index. The
-    compressed index stores only m-byte codes — the raw vectors are NOT
-    recoverable from it (that's the 32× point), so a PQ retrain reads
-    them from the caller's source of truth (the embeddings table /
-    upstream lake) rather than decoding lossy codes into lossier ones.
-    ``n_list``/``m``/``ksub`` default to the current index's geometry.
-
-    Same exactly-once shape as ivf_retrain: complete staged tree (codes +
-    centroids + pq + fresh base stats, NO deltas) before the swap; old
-    generation pruned only after, and only when ``prune_old``."""
-    from .ivf import (
-        _delete_tree,
-        _next_generation,
-        _resolve_root,
-        _write_pointer,
-        build_ivf_index,
-    )
-
-    old_root = _resolve_root(spark, path)
-    old_cb = load_pq(spark, f"{old_root}/pq")
-    if m is None:
-        m = old_cb.shape[0]
-    if ksub is None:
-        ksub = old_cb.shape[1]
-    if n_list is None:
-        n_list = spark.read.parquet(f"{old_root}/centroids").count()
-    dim = old_cb.shape[0] * old_cb.shape[2]
-    assigned, centroids = build_ivf_index(corpus, dim=dim, n_list=n_list, seed=seed)
-    codebooks = train_pq_residual(
-        assigned, centroids, dim, m=m, ksub=ksub, seed=seed, sample_cap=sample_cap
-    )
-    gen = _next_generation(spark, path)
-    err, n = _write_ivfpq_tree(assigned, centroids, codebooks, f"{path}/{gen}")
-    _write_pointer(spark, path, gen)
-    if prune_old:
-        if old_root == path:  # flat pre-generation layout
-            for sub in ("codes", "centroids", "pq", "stats", "codes_deltas"):
-                _delete_tree(spark, f"{path}/{sub}")
-        else:
-            _delete_tree(spark, old_root)
-    # the staged tree's baseline is the stamp _write_ivfpq_tree just
-    # wrote — no need to read the stats tree back (r13 opt, guide §5)
-    return {
-        "generation": gen,
-        "n_vectors": n,
-        "mean_sq_err": err,
-        "n_list": n_list,
-        "m": m,
-        "ksub": ksub,
-    }
+    """:func:`ivf.retrain_index` for IVF-PQ: fresh centroids + residual
+    codebooks over the raw ``corpus`` (vec_id, e); reports ``m``/``ksub``."""
+    return retrain_index(IVFPQ_CODEC, spark, path, corpus, n_list, m=m, ksub=ksub)
 
 
 def ivfpq_search_encoded(
@@ -828,7 +640,7 @@ def ivfpq_search_encoded(
     # unchanged (and fully elementwise after the tiny LUT matmuls, so
     # scores are chunking-independent); the exhaustive twin's brute-force
     # value oracle re-proves the equality.
-    probe_map = collect_probe_map(probe_lists(centroids, queries, n_probe))
+    probe_map = collect_probe_map(probe_lists(centroids, queries, n_probe), "list_id")
 
     n2 = (codebooks**2).sum(2)
 

@@ -112,71 +112,10 @@ def topk(scored: DataFrame, k: int) -> DataFrame:
     return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= k)
 
 
-def grouped_topk_scores(
-    corpus_keyed: DataFrame, probes_keyed: DataFrame, k: int, key: str
-) -> DataFrame:
-    """Candidate scoring for bucketed ANN (IVF lists / LSH buckets): cogroup
-    corpus and probes on *key*, BLAS-score each group in one ``Q @ Eᵀ``, and
-    keep only each group's top-k per query inside the kernel.
-
-    Why this shape: a plain probe×corpus join materializes both vectors on
-    every candidate row (≫100 MB through Arrow at even 2 k×64); cogrouping
-    ships each corpus vector ONCE per key and each query vector once per
-    probed key. Per-group top-k is lossless — every corpus vector belongs to
-    exactly one key, so the global top-k is a subset of the union of
-    per-group top-ks — and shrinks the shuffle into the final global
-    :func:`topk` window to ``n_queries · n_probe · k`` id rows.
-
-    corpus_keyed: (key, vec_id, e); probes_keyed: (key, query_id, qe).
-    """
-
-    def fn(probes_pdf: pd.DataFrame, corpus_pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "query_id": pd.Series([], dtype="int64"),
-                "neighbor_id": pd.Series([], dtype="int64"),
-                "cosine": pd.Series([], dtype="float64"),
-            }
-        )
-        if not len(probes_pdf) or not len(corpus_pdf):
-            return empty
-        qid = probes_pdf["query_id"].to_numpy(dtype=np.int64)
-        nid = corpus_pdf["vec_id"].to_numpy(dtype=np.int64)
-        qm = np.array(probes_pdf["qe"].tolist(), dtype=np.float64)
-        em = np.array(corpus_pdf["e"].tolist(), dtype=np.float64)
-        sims = (qm / np.linalg.norm(qm, axis=1, keepdims=True)) @ (
-            em / np.linalg.norm(em, axis=1, keepdims=True)
-        ).T
-        out_q, out_n, out_c = [], [], []
-        # per-query top-k within the group, ties broken by ascending id —
-        # exactly the order the global window applies (full lexsort: exact
-        # under ties, and negligible next to the matmul).
-        for row, q in enumerate(qid):
-            keep = nid != q
-            s, ids = sims[row, keep], nid[keep]
-            part = np.lexsort((ids, -s))[:k]
-            out_q.append(np.full(len(part), q))
-            out_n.append(ids[part])
-            out_c.append(s[part])
-        if not out_q:
-            return empty
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(out_q),
-                "neighbor_id": np.concatenate(out_n),
-                "cosine": np.concatenate(out_c),
-            }
-        )
-
-    return (
-        probes_keyed.groupBy(key)
-        .cogroup(corpus_keyed.groupBy(key))
-        .applyInPandas(fn, "query_id long, neighbor_id long, cosine double")
-    )
-
-
-def collect_probe_map(probes: DataFrame) -> dict[int, tuple[np.ndarray, np.ndarray]]:
-    """Collect the BOUNDED probe relation (key, query_id, qe) into
+def collect_probe_map(
+    probes: DataFrame, key: str
+) -> dict[int, tuple[np.ndarray, np.ndarray]]:
+    """Collect the BOUNDED probe relation (*key*, query_id, qe) into
     ``{key: (query_ids int64[], query_matrix float64[Q_k, d])}`` for
     closure shipping — the r14 serving shape (guide §2.4/§3.1): the probe
     side is ``n_queries × n_probe`` rows by construction (the serving
@@ -186,13 +125,15 @@ def collect_probe_map(probes: DataFrame) -> dict[int, tuple[np.ndarray, np.ndarr
     PLACE (partition-pruned by the key filter for hive-partitioned
     indexes). Doubles survive the driver round trip bit-exactly, and the
     per-(key, query) scoring arithmetic is row-independent, so scores are
-    unchanged."""
+    unchanged. Fields are read by name: the key and ``query_id`` are
+    both int64, so a positional read would silently swap them under a
+    reordered select."""
     rows = probes.collect()  # bounded-collect: n_queries × n_probe rows
     acc: dict[int, tuple[list, list]] = {}
     for r in rows:
-        ids, vecs = acc.setdefault(int(r[0]), ([], []))
-        ids.append(r[1])
-        vecs.append(r[2])
+        ids, vecs = acc.setdefault(int(r[key]), ([], []))
+        ids.append(r["query_id"])
+        vecs.append(r["qe"])
     return {
         key: (np.array(ids, dtype=np.int64), np.array(vecs, dtype=np.float64))
         for key, (ids, vecs) in acc.items()
@@ -245,9 +186,10 @@ def probed_scan_topk(
 
 
 def raw_topk_scorer(k: int):
-    """Per-group exact-cosine top-k scorer for :func:`probed_scan_topk` —
-    the numpy pipeline of :func:`grouped_topk_scores` verbatim (normalized
-    BLAS matmul, self-excluded, (−score, id) lexsort cut)."""
+    """Per-group exact-cosine top-k scorer for :func:`probed_scan_topk`:
+    normalized BLAS matmul, self-excluded, (−score, id) lexsort cut. The
+    scoring is pinned by the exhaustive twins' value oracles
+    (``scripts/parity_snapshot.py:ANN_EXHAUSTIVE_TWINS``)."""
 
     def scorer(qid: np.ndarray, qm: np.ndarray, _kv: int, corpus_pdf: pd.DataFrame):
         nid = corpus_pdf["vec_id"].to_numpy(dtype=np.int64)
@@ -346,7 +288,7 @@ def ann_topk_lsh(
         "bucket",
         F.explode(F.array(*[F.col("bucket").bitwiseXOR(F.lit(m)) for m in masks])),
     ).select("bucket", "query_id", "qe")
-    probe_map = collect_probe_map(probed)
+    probe_map = collect_probe_map(probed, "bucket")
     return probed_scan_topk(
         c_sig.select("bucket", "vec_id", "e"),
         probe_map,
@@ -548,7 +490,7 @@ def cosine_pairs_lsh(
     other = sig.select("bucket", F.col("vec_id").alias("id_b"), F.col("e").alias("eb"))
 
     # Verification cogroups on the bucket and runs ONE normalized A @ Bᵀ per
-    # bucket (the grouped_topk_scores shape): each vector crosses Arrow once
+    # bucket (normalized BLAS, as in raw_topk_scorer): each vector crosses Arrow once
     # per probed bucket instead of once per candidate PAIR, and the cosine is
     # BLAS instead of a per-element interpreted HOF — the difference between
     # O(candidates·d) lambda evals and a handful of matmuls.

@@ -29,6 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .ivf import IndexCodec, append_batch, load_index, retrain_index, save_index
 from .pq import _MAX_QUERY_BATCH
 from .similarity import topk
 
@@ -178,7 +179,7 @@ def ivf_sq_search(
     from .ivf import probe_lists
     from .similarity import collect_probe_map, probed_scan_topk
 
-    probe_map = collect_probe_map(probe_lists(centroids, queries, n_probe))
+    probe_map = collect_probe_map(probe_lists(centroids, queries, n_probe), "list_id")
     vmin, s = bounds[0], _scale(bounds)
 
     def scorer(q_ids: np.ndarray, q_mat: np.ndarray, _kv: int, codes_pdf: pd.DataFrame):
@@ -311,232 +312,6 @@ def sq_code_error(
     return (float(row["err"] or 0.0), n, clip_frac)
 
 
-def _write_ivfsq_tree(
-    assigned: DataFrame, centroids: DataFrame, bounds: np.ndarray, root: str
-) -> tuple[float, int]:
-    """The IVF+SQ8 trees (codes + centroids + bounds + base stats) into
-    *root*, ``_COMMITTED`` marker last — shared by :func:`save_ivfsq_index`
-    and :func:`ivfsq_retrain`. Returns the baseline
-    ``(mean_sq_err, n_vectors)`` it stamped."""
-    from .ivf import _mark_committed, _write_stats_row
-
-    spark = centroids.sparkSession
-    enc = sq_encode(assigned, bounds, keep=("list_id",))
-    enc.repartition("list_id").write.mode("overwrite").partitionBy(
-        "list_id"
-    ).parquet(f"{root}/codes")
-    centroids.write.mode("overwrite").parquet(f"{root}/centroids")
-    save_sq(spark, bounds, f"{root}/bounds")
-    err, n = sq_reconstruction_error(assigned.select("vec_id", "e"), bounds)
-    _write_stats_row(spark, root, "base", n, err, seq=0)
-    _mark_committed(spark, root)  # LAST: marker-presence ⇒ complete tree
-    return err, n
-
-
-def save_ivfsq_index(
-    assigned: DataFrame, centroids: DataFrame, bounds: np.ndarray, path: str
-) -> None:
-    """Persist the IVF+SQ8 serving layout: SQ codes of the RAW vectors
-    (global bounds) hive-partitioned by ``list_id`` — a probe is a
-    partition-pruned scan of d-byte rows — plus the tiny centroid table,
-    the bounds, and the build-time reconstruction-error baseline that
-    :func:`ivfsq_append_batch` measures drift against. Encode-once/
-    serve-many; (re)initializes the path like its IVF/IVF-PQ siblings
-    (stale deltas/stats/generations/pointer deleted first)."""
-    from .ivf import _COMMIT_MARK, _POINTER, _delete_tree, _list_generations
-
-    spark = centroids.sparkSession
-    for sub in ("codes_deltas", "stats", "codes", "centroids", "bounds"):
-        _delete_tree(spark, f"{path}/{sub}")
-    for gen in _list_generations(spark, path):
-        _delete_tree(spark, f"{path}/{gen}")
-    _delete_tree(spark, f"{path}/{_POINTER}")
-    _delete_tree(spark, f"{path}/{_COMMIT_MARK}")  # stale marker from a prior save
-    _write_ivfsq_tree(assigned, centroids, bounds, path)
-
-
-def load_ivfsq_index(spark, path: str) -> tuple[DataFrame, DataFrame, np.ndarray]:
-    """Load a persisted IVF+SQ8 index → (encoded, centroids, bounds),
-    ready for :func:`ivf_sq_search` (bit-exact round-trip: parquet ints
-    and doubles). Reads from the ACTIVE generation (pointer target after
-    an :func:`ivfsq_retrain`; flat path before one); the code relation is
-    the base codes UNION any appended delta batches — both hive-
-    partitioned on list_id, so a probe still prunes across base AND
-    deltas."""
-    from .ivf import _read_delta_dir, _resolve_root
-
-    root = _resolve_root(spark, path)
-    enc = spark.read.parquet(f"{root}/codes").select("vec_id", "codes", "list_id")
-    deltas = _read_delta_dir(
-        spark, f"{root}/codes_deltas", ("vec_id", "codes", "list_id")
-    )
-    if deltas is not None:
-        enc = enc.unionByName(deltas)
-    centroids = spark.read.parquet(f"{root}/centroids")
-    return enc, centroids, load_sq(spark, f"{root}/bounds")
-
-
-def ivfsq_append_batch(
-    spark,
-    path: str,
-    batch: DataFrame,
-    batch_id: str,
-    max_clip_frac: float = 0.25,
-    retrain_mass: float = 0.5,
-) -> dict:
-    """Append new vectors to a PERSISTED IVF+SQ8 index without
-    retraining — the composite's member of the incremental-index family
-    (``ivf_append_batch`` / ``ivfpq_append_batch``, same batch-stamped
-    exactly-once layout). O(batch): coarse-assign against the SAVED
-    centroids, SQ-encode with the SAVED bounds (clipping out-of-range
-    values, FAISS semantics), commit to
-    ``codes_deltas/batch_id=<id>/list_id=*`` with overwrite-into-own-
-    directory replay idempotence, and record the COMMITTED batch's
-    reconstruction error (read-back rescore) beside the build baseline.
-
-    ``needs_retrain`` trips on (a) ``clip_frac`` > ``max_clip_frac`` —
-    the share of the batch's coordinates falling OUTSIDE the trained
-    per-dim bounds, SQ's calibrated drift signal (the k-means siblings'
-    error-RATIO trigger is structurally wrong here: in-range SQ error is
-    bounded by range/510 per dim by construction, so the ratio explodes
-    on the benign ~2/(n+1) extreme-value exceedances EVERY
-    same-distribution batch carries — measured 17.6× on a same-dist
-    append whose clip_frac was 1.6%, vs ~97% clipped for a genuinely
-    shifted batch) — or (b) appended mass > ``retrain_mass`` × the
-    trained corpus. The ledger's generic drift_ratio column reads high
-    for SQ for the same reason — consult clip_frac for this index type.
-    Acting on the trigger is one :func:`ivfsq_retrain` call — uniquely
-    cheap here: min/max training is one deterministic agg, no k-means."""
-    from .ivf import (
-        _assign_to_centroids,
-        _base_and_appended,
-        _commit_seq_for,
-        _drift_ratio,
-        _post_append_stats,
-        _resolve_root,
-        _round_ratio,
-        _stats_rows,
-        _write_stats_row,
-    )
-
-    if batch_id == "base":
-        # reserved for the build baseline stats row (r14, advisor) — an
-        # append stamped "base" would clobber the drift baseline
-        raise ValueError(
-            'batch_id "base" is reserved for the build baseline stats row'
-        )
-    root = _resolve_root(spark, path)
-    stats_before = _stats_rows(spark, root)
-    base, appended_before = _base_and_appended(stats_before, root)
-    if batch.isEmpty():
-        appended_frac = (
-            appended_before / base["n_vectors"] if base["n_vectors"] else 0.0
-        )
-        return {
-            "batch_id": batch_id,
-            "n_vectors": 0,
-            "mean_sq_err": 0.0,
-            "base_mean_sq_err": base["mean_sq_err"],
-            "drift_ratio": 1.0,
-            "clip_frac": 0.0,
-            "appended_frac": _round_ratio(appended_frac),
-            "needs_retrain": appended_frac > retrain_mass,
-        }
-    # driver-side sort of the bounded centroid rows skips orderBy's
-    # range-partitioning sample job (r14, guide §5)
-    cent_rows = sorted(
-        spark.read.parquet(f"{root}/centroids").collect(),  # bounded-collect: n_list rows
-        key=lambda r: r["list_id"],
-    )
-    cents = np.array([r["centroid"] for r in cent_rows], dtype=np.float64)
-    bounds = load_sq(spark, f"{root}/bounds")
-    assigned = _assign_to_centroids(batch.select("vec_id", "e"), cents)
-    enc = sq_encode(assigned, bounds, keep=("list_id",))
-    enc.repartition("list_id").write.mode("overwrite").partitionBy(
-        "list_id"
-    ).parquet(f"{root}/codes_deltas/batch_id={batch_id}")
-    # explicit schema (the frame just written): no footer-inference job
-    committed = spark.read.schema(enc.schema).parquet(
-        f"{root}/codes_deltas/batch_id={batch_id}"
-    ).select("vec_id", "codes")
-    batch_err, batch_n, clip_frac = sq_code_error(batch, committed, bounds)
-    _write_stats_row(
-        spark, root, batch_id, batch_n, batch_err,
-        seq=_commit_seq_for(stats_before, batch_id),
-    )
-    # post-commit ledger state from the pre-commit rows + the stamped row
-    # (identical to a re-read by construction; r13 opt — was a second
-    # stats read+collect per append)
-    appended_n = _post_append_stats(stats_before, batch_id, batch_n)
-    drift = _drift_ratio(batch_err, base["mean_sq_err"])
-    appended_frac = appended_n / base["n_vectors"] if base["n_vectors"] else 0.0
-    return {
-        "batch_id": batch_id,
-        "n_vectors": batch_n,
-        "mean_sq_err": batch_err,
-        "base_mean_sq_err": base["mean_sq_err"],
-        "drift_ratio": _round_ratio(drift),
-        "clip_frac": _round_ratio(clip_frac),
-        "appended_frac": _round_ratio(appended_frac),
-        "needs_retrain": clip_frac > max_clip_frac or appended_frac > retrain_mass,
-    }
-
-
-def ivfsq_retrain(
-    spark,
-    path: str,
-    corpus: DataFrame,
-    n_list: int | None = None,
-    seed: int = 42,
-    sample_per_list: int = 256,
-    prune_old: bool = True,
-) -> dict:
-    """One-call IVF+SQ8 retrain/compaction: fresh coarse k-means + a
-    fresh DETERMINISTIC min/max bounds pass over the full current corpus,
-    re-encoded and staged in a new ``gen-NNNNN`` tree promoted by the
-    atomic ``_CURRENT`` pointer swap — the composite sibling of
-    ``ivf_retrain`` / ``ivfpq_retrain``, same exactly-once shape
-    (complete staged tree + ``_COMMITTED`` marker before the swap, old
-    generation pruned only after). ``corpus``: the raw (vec_id, e)
-    source of truth — SQ codes reconstruct only to within range/510 per
-    dim, so a retrain reads the lake, not its own codes. Retraining the
-    SCALAR quantizer is exact and cheap (one agg, no iteration) — the
-    codebook-drift risk PQ retrains carry does not exist here."""
-    from .ivf import (
-        _delete_tree,
-        _next_generation,
-        _resolve_root,
-        _write_pointer,
-        build_ivf_index,
-    )
-
-    old_root = _resolve_root(spark, path)
-    if n_list is None:
-        n_list = spark.read.parquet(f"{old_root}/centroids").count()
-    dim = load_sq(spark, f"{old_root}/bounds").shape[1]
-    assigned, centroids = build_ivf_index(
-        corpus, dim=dim, n_list=n_list, seed=seed, sample_per_list=sample_per_list
-    )
-    bounds = train_sq(corpus, dim=dim)
-    gen = _next_generation(spark, path)
-    err, n = _write_ivfsq_tree(assigned, centroids, bounds, f"{path}/{gen}")
-    _write_pointer(spark, path, gen)
-    if prune_old:
-        if old_root == path:  # flat pre-generation layout
-            for sub in ("codes", "centroids", "bounds", "stats", "codes_deltas"):
-                _delete_tree(spark, f"{path}/{sub}")
-        else:
-            _delete_tree(spark, old_root)
-    # the staged tree's baseline is the stamp _write_ivfsq_tree just
-    # wrote — no need to read the stats tree back (r13 opt, guide §5)
-    return {
-        "generation": gen,
-        "n_vectors": n,
-        "mean_sq_err": err,
-        "n_list": n_list,
-    }
-
-
 def save_sq(spark, bounds: np.ndarray, path: str) -> None:
     """Persist the SQ bounds (2 rows of d doubles — tiny) — same
     train-once/serve-many contract as the PQ codebooks."""
@@ -555,3 +330,58 @@ def load_sq(spark, path: str) -> np.ndarray:
     for r in rows:
         out[r.i] = r.vals
     return out
+
+
+#: IVF+SQ8: SQ codes of the RAW vectors against global per-dim bounds.
+#: The trigger is ``clip_frac`` (share of coordinates outside the trained
+#: bounds), not the k-means siblings' error ratio: in-range SQ error is
+#: bounded by range/510 per dim by construction, so the ratio explodes on
+#: the benign ~2/(n+1) extreme-value exceedances every same-distribution
+#: batch carries (measured 17.6× on a same-dist append whose clip_frac was
+#: 1.6%, vs ~97% clipped for a genuinely shifted batch) — the ledger's
+#: drift_ratio column reads high for SQ for the same reason. The codes
+#: reconstruct only to within range/510 per dim, so a retrain reads the
+#: raw corpus, not its own codes; retraining the scalar quantizer is one
+#: deterministic min/max agg, no k-means.
+IVFSQ_CODEC = IndexCodec(
+    base_dir="codes",
+    delta_dir="codes_deltas",
+    quantizer_dir="bounds",
+    payload="codes",
+    encode=lambda vecs, bounds: sq_encode(vecs, bounds, keep=("list_id",)),
+    batch_error=lambda vecs, committed, _c, bounds: sq_code_error(vecs, committed, bounds),
+    tree_error=lambda _p, vecs, _enc, _c, bounds: sq_reconstruction_error(
+        vecs.select("vec_id", "e"), bounds
+    ),
+    train=lambda corpus, assigned, centroids, dim: train_sq(corpus, dim=dim),
+    save_quantizer=save_sq,
+    load_quantizer=load_sq,
+    trigger="clip_frac",
+    trigger_limit=0.25,
+)
+
+
+def save_ivfsq_index(
+    assigned: DataFrame, centroids: DataFrame, bounds: np.ndarray, path: str
+) -> None:
+    """:func:`ivf.save_index` for IVF+SQ8: raw-vector SQ codes + centroids
+    + bounds. Encode-once/serve-many."""
+    save_index(IVFSQ_CODEC, assigned, centroids, bounds, path)
+
+
+def load_ivfsq_index(spark, path: str) -> tuple[DataFrame, DataFrame, np.ndarray]:
+    """:func:`ivf.load_index` for IVF+SQ8 → (encoded, centroids, bounds),
+    ready for :func:`ivf_sq_search` (bit-exact round-trip)."""
+    return load_index(IVFSQ_CODEC, spark, path)
+
+
+def ivfsq_append_batch(spark, path: str, batch: DataFrame, batch_id: str) -> dict:
+    """:func:`ivf.append_batch` for IVF+SQ8 (``codes_deltas/batch_id=<id>``;
+    the result carries ``clip_frac``). Out-of-range values clip (FAISS)."""
+    return append_batch(IVFSQ_CODEC, spark, path, batch, batch_id)
+
+
+def ivfsq_retrain(spark, path: str, corpus: DataFrame, n_list: int | None = None) -> dict:
+    """:func:`ivf.retrain_index` for IVF+SQ8: fresh coarse k-means + a
+    fresh min/max bounds pass over the raw ``corpus`` (vec_id, e)."""
+    return retrain_index(IVFSQ_CODEC, spark, path, corpus, n_list)

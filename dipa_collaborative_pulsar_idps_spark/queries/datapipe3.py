@@ -416,76 +416,76 @@ def clear_pq_serve_cache() -> None:
     _PQ_SERVE_CACHE.clear()
 
 
-#: Persisted-and-appended IVF serving index path per (appId, sf_dir) —
-#: the dense-ANN analogue of the MinHash/TF-IDF incremental index caches:
-#: built once on the even-vec_id half, odd half appended in two
+#: Persisted-and-appended serving index path per (appId, sf_dir, family)
+#: — the dense-ANN analogue of the MinHash/TF-IDF incremental index
+#: caches: built once on the even-vec_id half, odd half appended in two
 #: batch-stamped commits, then served from disk. clear_ivf_inc_cache()
 #: owns the temp-dir removal.
-_IVF_INC_INDEX_CACHE: dict[tuple[str, str], str] = {}
+_INC_INDEX_CACHE: dict[tuple[str, str, str], str] = {}
 
 
-def _incremental_ivf_index(spark: SparkSession, sf_dir: str) -> str:
+def _inc_fixture(emb: DataFrame, family: str) -> tuple:
+    """The incremental fixture's bootstrap, shared with
+    scripts/ann_jobcount.py: the family's quantizers trained on the
+    even-vec_id half of *emb* (IVF-PQ at the serving geometry), and the
+    odd half split into two crawl batches. Returns
+    ``((assigned, centroids, quantizer), b1, b2)``."""
+    from ..functions.ivf import codec_for, train_index
+
+    codec = codec_for(family)
+    geometry = (
+        {"m": SCALE.ivfpq_m, "ksub": SCALE.ivfpq_ksub, "sample_cap": SCALE.pq_sample_cap}
+        if codec.geometry
+        else {}
+    )
+    base = emb.where(F.col("vec_id") % 2 == 0)
+    odd = emb.where(F.col("vec_id") % 2 == 1)
+    trained = train_index(codec, base, 64, SCALE.ivf_n_list, **geometry)
+    return trained, odd.where(F.col("vec_id") % 4 == 1), odd.where(F.col("vec_id") % 4 == 3)
+
+
+def _incremental_index(spark: SparkSession, sf_dir: str, family: str) -> str:
+    """Build the family's index on the even-vec_id half, then append the
+    odd half as two crawl batches — each an idempotent batch-stamped
+    commit against the persisted index. The batches share the base
+    distribution, so the drift trigger stays quiet (pinned in tests); the
+    second batch's MASS trigger reports the doubled corpus as
+    retrain-due. Raw IVF ACTS on it (r11): the retrain folds base + deltas
+    into a fresh generation promoted by atomic pointer swap, so its
+    declared query serves a post-retrain index end-to-end — trigger AND
+    response. IVF-PQ and IVF+SQ8 stay append-only, keeping base+delta
+    serving on the graded surface too."""
     import os
     import tempfile
 
-    from ..functions.ivf import (
-        build_ivf_index,
-        ivf_append_batch,
-        ivf_retrain,
-        save_ivf_index,
-    )
+    from ..functions.ivf import append_batch, codec_for, retrain_index, save_index
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    cached = _IVF_INC_INDEX_CACHE.get(key)
+    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), family)
+    cached = _INC_INDEX_CACHE.get(key)
     if cached is not None:
         return cached
-    emb = _corpus(spark, sf_dir)
-    base = emb.where(F.col("vec_id") % 2 == 0)
-    path = tempfile.mkdtemp(prefix="dipa_collaborative_pulsar_idps_ivf_inc_")
-    assigned, centroids = build_ivf_index(base, dim=64, n_list=SCALE.ivf_n_list)
-    save_ivf_index(assigned, centroids, path)
-    # two appended "crawl" batches — each an idempotent batch-stamped
-    # commit against the persisted index. The batches share the base
-    # distribution so the DRIFT trigger stays quiet (pinned in tests);
-    # the second batch's MASS trigger reports the doubled corpus as
-    # retrain-due, and the fixture ACTS on it (r11): ivf_retrain folds
-    # base + deltas into a fresh generation (new k-means over the full
-    # corpus) promoted by atomic pointer swap, so this declared query
-    # serves a post-retrain index end-to-end — trigger AND response. The
-    # IVF-PQ sibling below stays append-only, keeping delta serving on
-    # the graded surface too.
-    odd = emb.where(F.col("vec_id") % 2 == 1)
-    ivf_append_batch(spark, path, odd.where(F.col("vec_id") % 4 == 1), "b1")
-    stats = ivf_append_batch(spark, path, odd.where(F.col("vec_id") % 4 == 3), "b2")
-    if stats["needs_retrain"]:  # mass trigger: corpus doubled
-        ivf_retrain(spark, path)
-    _IVF_INC_INDEX_CACHE[key] = path
+    codec = codec_for(family)
+    trained, b1, b2 = _inc_fixture(_corpus(spark, sf_dir), family)
+    path = tempfile.mkdtemp(prefix=f"dipa_collaborative_pulsar_idps_{family}_inc_")
+    save_index(codec, *trained, path)
+    append_batch(codec, spark, path, b1, "b1")
+    stats = append_batch(codec, spark, path, b2, "b2")
+    if family == "ivf" and stats["needs_retrain"]:  # mass trigger: corpus doubled
+        retrain_index(codec, spark, path)
+    _INC_INDEX_CACHE[key] = path
     return path
 
 
 def clear_ivf_inc_cache() -> None:
-    """Remove every materialized incremental-index directory (IVF,
-    IVF-PQ, and IVF+SQ8; explicit lifecycle end, same contract as the
-    unpersist clears)."""
+    """Remove every materialized incremental-index directory (explicit
+    lifecycle end, same contract as the unpersist clears)."""
     import shutil
 
-    for path in (
-        list(_IVF_INC_INDEX_CACHE.values())
-        + list(_IVFPQ_INC_INDEX_CACHE.values())
-        + list(_IVFSQ_INC_INDEX_CACHE.values())
-    ):
+    for path in _INC_INDEX_CACHE.values():
         shutil.rmtree(path, ignore_errors=True)
-    _IVF_INC_INDEX_CACHE.clear()
-    _IVFPQ_INC_INDEX_CACHE.clear()
-    _IVFSQ_INC_INDEX_CACHE.clear()
+    _INC_INDEX_CACHE.clear()
     clear_inc_serve_cache()  # loaded handles point into the removed trees
 
-
-#: Same lifecycle as _IVF_INC_INDEX_CACHE, for the compressed layout.
-_IVFPQ_INC_INDEX_CACHE: dict[tuple[str, str], str] = {}
-
-#: Same lifecycle as _IVF_INC_INDEX_CACHE, for the SQ8 composite layout.
-_IVFSQ_INC_INDEX_CACHE: dict[tuple[str, str], str] = {}
 
 #: Memoized LOADED serving handles for the incremental indexes, keyed by
 #: (appId, family, index path) — r13 opt (guide §5: driver round-trips):
@@ -516,68 +516,6 @@ def clear_inc_serve_cache() -> None:
     _INC_SERVE_CACHE.clear()
 
 
-def _incremental_ivfsq_index(spark: SparkSession, sf_dir: str) -> str:
-    """Build the IVF+SQ8 index on the even-vec_id half (coarse centroids
-    + global min/max bounds + raw-vector SQ codes), append the odd half
-    as two crawl batches through `functions/sq.ivfsq_append_batch`
-    (coarse-assign + SQ-encode against the SAVED quantizers, code deltas
-    at ``codes_deltas/batch_id=*/list_id=*`` with idempotent replay,
-    clip-mass drift trigger) — append-only like the IVF-PQ sibling, so
-    the base+delta SERVING path stays on the graded surface (the
-    trigger→retrain→serve loop is graded through the flat-IVF sibling
-    and the family-parameterized streaming sink goldens)."""
-    import os
-    import tempfile
-
-    from ..functions.ivf import build_ivf_index
-    from ..functions.sq import ivfsq_append_batch, save_ivfsq_index, train_sq
-
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    cached = _IVFSQ_INC_INDEX_CACHE.get(key)
-    if cached is not None:
-        return cached
-    emb = _corpus(spark, sf_dir)
-    base = emb.where(F.col("vec_id") % 2 == 0)
-    path = tempfile.mkdtemp(prefix="dipa_collaborative_pulsar_idps_ivfsq_inc_")
-    assigned, centroids = build_ivf_index(base, dim=64, n_list=SCALE.ivf_n_list)
-    bounds = train_sq(base, dim=64)
-    save_ivfsq_index(assigned, centroids, bounds, path)
-    odd = emb.where(F.col("vec_id") % 2 == 1)
-    ivfsq_append_batch(spark, path, odd.where(F.col("vec_id") % 4 == 1), "b1")
-    ivfsq_append_batch(spark, path, odd.where(F.col("vec_id") % 4 == 3), "b2")
-    _IVFSQ_INC_INDEX_CACHE[key] = path
-    return path
-
-
-def _incremental_ivfpq_index(spark: SparkSession, sf_dir: str) -> str:
-    import os
-    import tempfile
-
-    from ..functions.ivf import build_ivf_index
-    from ..functions.pq import (
-        ivfpq_append_batch,
-        save_ivfpq_index,
-        train_pq_residual,
-    )
-
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    cached = _IVFPQ_INC_INDEX_CACHE.get(key)
-    if cached is not None:
-        return cached
-    emb = _corpus(spark, sf_dir)
-    base = emb.where(F.col("vec_id") % 2 == 0)
-    path = tempfile.mkdtemp(prefix="dipa_collaborative_pulsar_idps_ivfpq_inc_")
-    assigned, centroids = build_ivf_index(base, dim=64, n_list=SCALE.ivf_n_list)
-    cb = train_pq_residual(assigned, centroids, dim=64, m=SCALE.ivfpq_m,
-                           ksub=SCALE.ivfpq_ksub, sample_cap=SCALE.pq_sample_cap)
-    save_ivfpq_index(assigned, centroids, cb, path)
-    odd = emb.where(F.col("vec_id") % 2 == 1)
-    ivfpq_append_batch(spark, path, odd.where(F.col("vec_id") % 4 == 1), "b1")
-    ivfpq_append_batch(spark, path, odd.where(F.col("vec_id") % 4 == 3), "b2")
-    _IVFPQ_INC_INDEX_CACHE[key] = path
-    return path
-
-
 @query("ann_index_stats", survey="ext-sim")
 def ann_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The index-health ledger behind the ANN retrain triggers
@@ -605,7 +543,7 @@ def ann_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-class queryable relation instead of log lines."""
     from ..functions.ivf import index_health
 
-    path = _incremental_ivfpq_index(spark, sf_dir)
+    path = _incremental_index(spark, sf_dir, "ivfpq")
     h = index_health(spark, path)
     return h.select(
         "batch_id",
@@ -632,7 +570,7 @@ def ann_topk_ivfpq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     the planted/replay/drift contracts live in tests/test_dedup.py."""
     from ..functions.pq import ivfpq_search_encoded, load_ivfpq_index
 
-    path = _incremental_ivfpq_index(spark, sf_dir)
+    path = _incremental_index(spark, sf_dir, "ivfpq")
     # serve from the session-memoized loaded handles (r13 opt — the
     # per-probe reload re-paid FS checks + footer reads + the codebook
     # collect; a serving process keeps the index open between probes)
@@ -674,7 +612,7 @@ def ann_topk_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     state (ryu/src/deployed_controller/DIPA_Controller.py)."""
     from ..functions.ivf import ivf_search, load_ivf_index
 
-    path = _incremental_ivf_index(spark, sf_dir)
+    path = _incremental_index(spark, sf_dir, "ivf")
     # serve from the session-memoized loaded handles (r13 opt — see
     # _INC_SERVE_CACHE; lazy frames only, pruning untouched)
     assigned, centroids = _inc_serve(
@@ -1154,7 +1092,7 @@ def ann_topk_ivfsq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     view (ryu/src/deployed_controller/DIPA_Controller.py:308-320)."""
     from ..functions.sq import ivf_sq_search, load_ivfsq_index
 
-    path = _incremental_ivfsq_index(spark, sf_dir)
+    path = _incremental_index(spark, sf_dir, "ivfsq")
     # serve from the session-memoized loaded handles (r13 opt — see
     # _INC_SERVE_CACHE; lazy frames only, pruning untouched)
     enc, centroids, bounds = _inc_serve(

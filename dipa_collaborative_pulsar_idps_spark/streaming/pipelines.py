@@ -793,9 +793,6 @@ def incremental_ann_sink(
     dim: int,
     n_list: int = 16,
     family: str = "ivf",
-    retrain_drift: float = 1.5,
-    retrain_mass: float = 0.5,
-    max_clip_frac: float = 0.25,
     m: int = 8,
     ksub: int = 32,
 ):
@@ -804,14 +801,13 @@ def incremental_ann_sink(
     the incremental-index machinery, parameterized over all three index
     families (r12 judge punch #1): each micro-batch of
     (vec_id, e array<double>) is appended to the persisted index through
-    the family's append op — ``ivf`` → `ivf.ivf_append_batch` (raw
-    vectors, drift/mass triggers), ``ivfpq`` → `pq.ivfpq_append_batch`
-    (residual PQ codes, reconstruction-drift/mass), ``ivfsq`` →
-    `sq.ivfsq_append_batch` (SQ8 codes, clip-mass/mass — SQ's calibrated
-    signal) — and a tripped ``needs_retrain`` is ACTED on inside the
-    loop via the family's retrain (fresh generation, atomic pointer
-    swap) while concurrent readers keep a consistent view. The first
-    non-empty batch bootstraps the index (build + save).
+    the shared lifecycle (`ivf.append_batch` over the family's codec —
+    ``ivf``, ``ivfpq`` or ``ivfsq``, each with its own drift trigger and
+    the common mass trigger), and a tripped ``needs_retrain`` is ACTED on
+    inside the loop via `ivf.retrain_index` (fresh generation, atomic
+    pointer swap) while concurrent readers keep a consistent view. The
+    first non-empty batch bootstraps the index (build + save); ``m`` /
+    ``ksub`` are the IVF-PQ bootstrap geometry.
 
     The COMPRESSED families cannot retrain from their own lossy codes,
     so for them the sink also maintains a raw-vector corpus tree at
@@ -850,70 +846,24 @@ def incremental_ann_sink(
     Reference analogue: the controller's continually-refreshed global
     view (ryu/src/deployed_controller/DIPA_Controller.py) — here the
     refresh loop maintains a serving ANN index instead of log state."""
-    if family not in ("ivf", "ivfpq", "ivfsq"):
-        raise ValueError(f"unknown ANN index family: {family!r}")
-    needs_corpus = family in ("ivfpq", "ivfsq")
+    from ..functions.ivf import codec_for
+
+    codec = codec_for(family)
+    needs_corpus = not codec.stores_raw
     corpus_path = f"{index_path}/_corpus"
+    geometry = {"m": m, "ksub": ksub} if codec.geometry else {}
     _fs, _read_small, _write_small = _sink_fs, _sink_read_small, _sink_write_small
-
-    def _bootstrap(batch: DataFrame) -> None:
-        from ..functions.ivf import build_ivf_index, save_ivf_index
-
-        assigned, centroids = build_ivf_index(batch, dim=dim, n_list=n_list)
-        if family == "ivf":
-            save_ivf_index(assigned, centroids, index_path)
-        elif family == "ivfpq":
-            from ..functions.pq import save_ivfpq_index, train_pq_residual
-
-            cb = train_pq_residual(assigned, centroids, dim=dim, m=m, ksub=ksub)
-            save_ivfpq_index(assigned, centroids, cb, index_path)
-        else:
-            from ..functions.sq import save_ivfsq_index, train_sq
-
-            bounds = train_sq(batch, dim=dim)
-            save_ivfsq_index(assigned, centroids, bounds, index_path)
-
-    def _append(spark, batch: DataFrame, bid: str) -> dict:
-        if family == "ivf":
-            from ..functions.ivf import ivf_append_batch
-
-            return ivf_append_batch(
-                spark, index_path, batch, bid,
-                retrain_drift=retrain_drift, retrain_mass=retrain_mass,
-            )
-        if family == "ivfpq":
-            from ..functions.pq import ivfpq_append_batch
-
-            return ivfpq_append_batch(
-                spark, index_path, batch, bid,
-                retrain_drift=retrain_drift, retrain_mass=retrain_mass,
-            )
-        from ..functions.sq import ivfsq_append_batch
-
-        return ivfsq_append_batch(
-            spark, index_path, batch, bid,
-            max_clip_frac=max_clip_frac, retrain_mass=retrain_mass,
-        )
-
-    def _retrain(spark) -> None:
-        if family == "ivf":
-            from ..functions.ivf import ivf_retrain
-
-            ivf_retrain(spark, index_path, n_list=n_list)
-            return
-        corpus = spark.read.parquet(corpus_path).select("vec_id", "e")
-        if family == "ivfpq":
-            from ..functions.pq import ivfpq_retrain
-
-            ivfpq_retrain(spark, index_path, corpus)
-        else:
-            from ..functions.sq import ivfsq_retrain
-
-            ivfsq_retrain(spark, index_path, corpus)
 
     def fn(batch: DataFrame, batch_id: int) -> None:
         from ..functions.dedup import _write_batch_partitions
-        from ..functions.ivf import _is_complete, _resolve_root
+        from ..functions.ivf import (
+            _is_complete,
+            _resolve_root,
+            append_batch,
+            retrain_index,
+            save_index,
+            train_index,
+        )
 
         spark = batch.sparkSession
         fs, jvm = _fs(spark, index_path)
@@ -943,12 +893,13 @@ def incremental_ann_sink(
                 # bootstrap — (re)bootstrap; the id record goes FIRST so
                 # every later crash window resolves unambiguously
                 _write_small(fs, jvm, f"{index_path}/_bootstrap", str(batch_id))
-                _bootstrap(batch)
+                trained = train_index(codec, batch, dim, n_list, **geometry)
+                save_index(codec, *trained, index_path)
                 if needs_corpus:
                     _write_batch_partitions(batch, corpus_path, batch_id)
                 fs.mkdirs(marker)
                 return
-            stats = _append(spark, batch, f"b{batch_id}")
+            stats = append_batch(codec, spark, index_path, batch, f"b{batch_id}")
             if needs_corpus:
                 _write_batch_partitions(batch, corpus_path, batch_id)
             pending = jvm.org.apache.hadoop.fs.Path(
@@ -961,7 +912,12 @@ def incremental_ann_sink(
             # including one a crashed earlier commit left behind
             fs.mkdirs(marker)
             if fs.exists(pending):
-                _retrain(spark)
+                corpus = (
+                    spark.read.parquet(corpus_path).select("vec_id", "e")
+                    if needs_corpus
+                    else None
+                )
+                retrain_index(codec, spark, index_path, corpus, n_list)
                 fs.delete(pending, False)
         finally:
             batch.unpersist()
@@ -975,8 +931,6 @@ def streaming_semantic_dedup_sink(
     dim: int,
     n_list: int = 16,
     threshold: float = 0.95,
-    retrain_drift: float = 1.5,
-    retrain_mass: float = 0.5,
 ):
     """foreachBatch body for ONLINE SEMANTIC DEDUP at ingest — SemDeDup's
     streaming form (the embedding sibling of `streaming_curation`'s
@@ -1127,10 +1081,7 @@ def streaming_semantic_dedup_sink(
             kept = batch.join(
                 within.unionByName(cross).distinct(), "vec_id", "left_anti"
             )
-            stats = ivf_append_batch(
-                spark, index_path, kept, f"b{batch_id}",
-                retrain_drift=retrain_drift, retrain_mass=retrain_mass,
-            )
+            stats = ivf_append_batch(spark, index_path, kept, f"b{batch_id}")
             _write_batch_partitions(kept, kept_path, batch_id)
             pending = jvm.org.apache.hadoop.fs.Path(
                 f"{index_path}/_pending_retrain"

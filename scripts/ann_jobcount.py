@@ -1,10 +1,11 @@
 """Deterministic job-count probe for the ANN index lifecycles.
 
-Runs each lifecycle (save -> append b1 -> append b2 -> retrain/health) for
-the IVF / IVF-PQ / IVF+SQ8 families against a fresh tmp dir, mirroring the
-declared incremental-index builders in queries/datapipe3.py, and prints the
-Spark JOB COUNT per step (statusTracker job ids are monotonically assigned,
-so count deltas are exact and box-independent). This is the measurement
+Runs each lifecycle (save -> append b1 -> append b2 -> retrain -> health) for
+the IVF / IVF-PQ / IVF+SQ8 families against a fresh tmp dir, bootstrapped
+exactly like the declared incremental-index builder in queries/datapipe3.py
+(`_inc_fixture`), and prints the Spark JOB COUNT per step (statusTracker job
+ids are monotonically assigned, so count deltas are exact and
+box-independent). This is the measurement
 behind the r13/r14 lifecycle job trims (guide SS5: each step is a
 driver-blocking round trip; the lifecycle wall time is job count x
 scheduling latency at bench scale).
@@ -23,10 +24,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F  # noqa: E402
-
 from dipa_collaborative_pulsar_idps_spark.queries import clear_all_caches  # noqa: E402
-from dipa_collaborative_pulsar_idps_spark.queries.datapipe3 import _corpus  # noqa: E402
+from dipa_collaborative_pulsar_idps_spark.queries.datapipe3 import (  # noqa: E402
+    _corpus,
+    _inc_fixture,
+)
 from dipa_collaborative_pulsar_idps_spark.session import get_spark  # noqa: E402
 
 
@@ -41,93 +43,42 @@ def main() -> None:
 
     emb = _corpus(spark, sf_dir)
     emb.count()  # warm the corpus persist outside the counted steps
-    base = emb.where(F.col("vec_id") % 2 == 0)
-    odd = emb.where(F.col("vec_id") % 2 == 1)
-    b1 = odd.where(F.col("vec_id") % 4 == 1)
-    b2 = odd.where(F.col("vec_id") % 4 == 3)
 
-    from dipa_collaborative_pulsar_idps_spark.config import SCALE
     from dipa_collaborative_pulsar_idps_spark.functions.ivf import (
-        build_ivf_index,
+        append_batch,
+        codec_for,
         index_health,
-        ivf_append_batch,
-        ivf_retrain,
-        save_ivf_index,
-    )
-    from dipa_collaborative_pulsar_idps_spark.functions.pq import (
-        ivfpq_append_batch,
-        ivfpq_retrain,
-        save_ivfpq_index,
-        train_pq_residual,
-    )
-    from dipa_collaborative_pulsar_idps_spark.functions.sq import (
-        ivfsq_append_batch,
-        ivfsq_retrain,
-        save_ivfsq_index,
-        train_sq,
+        retrain_index,
+        save_index,
     )
 
     out: dict[str, dict] = {}
-
-    def run(family: str, steps: list[tuple[str, callable]]) -> None:
-        rec: dict[str, float | int] = {}
-        total0, t_total = njobs(), time.perf_counter()
-        for label, fn in steps:
-            j0, t0 = njobs(), time.perf_counter()
-            fn()
-            rec[label] = njobs() - j0
-            rec[f"{label}_s"] = round(time.perf_counter() - t0, 2)
-        rec["total_jobs"] = njobs() - total0
-        rec["total_s"] = round(time.perf_counter() - t_total, 2)
-        out[family] = rec
-        print(family, json.dumps(rec), flush=True)
-
-    # --- IVF (the flat-vector family: save -> append x2 -> retrain) ---
-    d = tempfile.mkdtemp(prefix="dipa_jobcount_ivf_")
-    try:
-        assigned, centroids = build_ivf_index(base, dim=64, n_list=SCALE.ivf_n_list)
-        run("ivf", [
-            ("save", lambda: save_ivf_index(assigned, centroids, d)),
-            ("append_b1", lambda: ivf_append_batch(spark, d, b1, "b1")),
-            ("append_b2", lambda: ivf_append_batch(spark, d, b2, "b2")),
-            ("retrain", lambda: ivf_retrain(spark, d)),
-            ("health", lambda: index_health(spark, d).collect()),
-        ])
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-    # --- IVF-PQ (compressed: save -> append x2 -> health) ---
-    d = tempfile.mkdtemp(prefix="dipa_jobcount_ivfpq_")
-    try:
-        assigned, centroids = build_ivf_index(base, dim=64, n_list=SCALE.ivf_n_list)
-        cb = train_pq_residual(
-            assigned, centroids, dim=64, m=SCALE.ivfpq_m, ksub=SCALE.ivfpq_ksub,
-            sample_cap=SCALE.pq_sample_cap,
-        )
-        run("ivfpq", [
-            ("save", lambda: save_ivfpq_index(assigned, centroids, cb, d)),
-            ("append_b1", lambda: ivfpq_append_batch(spark, d, b1, "b1")),
-            ("append_b2", lambda: ivfpq_append_batch(spark, d, b2, "b2")),
-            ("retrain", lambda: ivfpq_retrain(spark, d, emb)),
-            ("health", lambda: index_health(spark, d).collect()),
-        ])
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-    # --- IVF+SQ8 (composite: save -> append x2 -> health) ---
-    d = tempfile.mkdtemp(prefix="dipa_jobcount_ivfsq_")
-    try:
-        assigned, centroids = build_ivf_index(base, dim=64, n_list=SCALE.ivf_n_list)
-        bounds = train_sq(base, dim=64)
-        run("ivfsq", [
-            ("save", lambda: save_ivfsq_index(assigned, centroids, bounds, d)),
-            ("append_b1", lambda: ivfsq_append_batch(spark, d, b1, "b1")),
-            ("append_b2", lambda: ivfsq_append_batch(spark, d, b2, "b2")),
-            ("retrain", lambda: ivfsq_retrain(spark, d, emb)),
-            ("health", lambda: index_health(spark, d).collect()),
-        ])
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    for family in ("ivf", "ivfpq", "ivfsq"):
+        codec = codec_for(family)
+        corpus = None if codec.stores_raw else emb
+        d = tempfile.mkdtemp(prefix=f"dipa_jobcount_{family}_")
+        try:
+            trained, b1, b2 = _inc_fixture(emb, family)  # untimed: the build
+            steps = [
+                ("save", lambda: save_index(codec, *trained, d)),
+                ("append_b1", lambda: append_batch(codec, spark, d, b1, "b1")),
+                ("append_b2", lambda: append_batch(codec, spark, d, b2, "b2")),
+                ("retrain", lambda: retrain_index(codec, spark, d, corpus)),
+                ("health", lambda: index_health(spark, d).collect()),
+            ]
+            rec: dict[str, float | int] = {}
+            total0, t_total = njobs(), time.perf_counter()
+            for label, fn in steps:
+                j0, t0 = njobs(), time.perf_counter()
+                fn()
+                rec[label] = njobs() - j0
+                rec[f"{label}_s"] = round(time.perf_counter() - t0, 2)
+            rec["total_jobs"] = njobs() - total0
+            rec["total_s"] = round(time.perf_counter() - t_total, 2)
+            out[family] = rec
+            print(family, json.dumps(rec), flush=True)
+        finally:
+            shutil.rmtree(d, ignore_errors=True)
 
     print(json.dumps({"sf_dir": sf_dir, "families": out}))
     clear_all_caches()

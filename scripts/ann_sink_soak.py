@@ -11,7 +11,7 @@ retrain with atomic generation promotion) and records, per family:
   path fails the ≤3× bound the tfidf soak uses;
 - generation count vs the mass-trigger's EXACT simulated expectation
   (each fold sets base += appended — corpus grows ~×1.5 per generation
-  at retrain_mass=0.5, with discrete batch overshoot);
+  at RETRAIN_MASS=0.5, with discrete batch overshoot);
 - exactly-once: distinct served vec_ids == rows ingested;
 - post-soak clustered recall@5 vs brute force over everything ingested.
 
@@ -58,9 +58,11 @@ def soak_family(spark, family: str, n_batches: int) -> dict:
 
     from dipa_collaborative_pulsar_idps_spark.functions.ivf import (
         _read_pointer,
+        codec_for,
         ivf_search,
-        load_ivf_index,
+        load_index,
     )
+    from dipa_collaborative_pulsar_idps_spark.functions.sq import ivf_sq_search
     from dipa_collaborative_pulsar_idps_spark.functions.similarity import (
         cosine_scores,
         recall_at_k,
@@ -70,6 +72,7 @@ def soak_family(spark, family: str, n_batches: int) -> dict:
         incremental_ann_sink,
     )
 
+    search_fn = {"ivf": ivf_search, "ivfsq": ivf_sq_search}[family]
     rng = random.Random(11)
     centers = [
         [rng.gauss(0, 1) for _ in range(DIM)] for _ in range(N_CENTERS)
@@ -95,23 +98,9 @@ def soak_family(spark, family: str, n_batches: int) -> dict:
             if b % 20 == 0:
                 print(f"{family} batch {b}/{n_batches} gen={after}", flush=True)
 
-        if family == "ivfsq":
-            from dipa_collaborative_pulsar_idps_spark.functions.sq import (
-                ivf_sq_search,
-                load_ivfsq_index,
-            )
-
-            enc, centroids, bounds = load_ivfsq_index(spark, path)
-            served_ids = enc.select("vec_id")
-            search = lambda q: ivf_sq_search(  # noqa: E731
-                enc, centroids, bounds, q, k=5, n_probe=4
-            )
-        else:
-            assigned, centroids = load_ivf_index(spark, path)
-            served_ids = assigned.select("vec_id")
-            search = lambda q: ivf_search(  # noqa: E731
-                assigned, centroids, q, k=5, n_probe=4
-            )
+        index = load_index(codec_for(family), spark, path)
+        served_ids = index[0].select("vec_id")
+        search = lambda q: search_fn(*index, q, k=5, n_probe=4)  # noqa: E731
 
         ingested = n_batches * BATCH
         n_distinct = served_ids.distinct().count()

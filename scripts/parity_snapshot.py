@@ -638,10 +638,10 @@ def main() -> int:
                 load_ivfsq_index,
             )
             from dipa_collaborative_pulsar_idps_spark.queries.datapipe3 import (
-                _incremental_ivfsq_index,
+                _incremental_index,
             )
 
-            inc_path = _incremental_ivfsq_index(spark, sf_dir)
+            inc_path = _incremental_index(spark, sf_dir, "ivfsq")
             enc_i, cents_i, _b = load_ivfsq_index(spark, inc_path)
             frac = round(ivfsq_scan_fraction(enc_i, cents_i, q, SCALE.ivf_n_probe), 6)
             out[name]["candidate_frac"] = frac

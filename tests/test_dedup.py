@@ -1525,9 +1525,9 @@ def test_ivf_append_batch_incremental(spark, clustered_vectors, tmp_path):
         same delta stamp (row count and search results unchanged, never
         double-appended);
     (3) drift trigger — a batch drawn from a shifted distribution pushes
-        quantization error past retrain_drift × the build baseline and
+        quantization error past the 1.5× drift limit of the build baseline and
         trips needs_retrain; a same-distribution batch does not;
-    (4) mass trigger — appended rows exceeding retrain_mass × the trained
+    (4) mass trigger — appended rows exceeding RETRAIN_MASS × the trained
         corpus trip needs_retrain even at zero drift;
     (5) partition pruning survives deltas — a list filter on the loaded
         union reads only the probed list_id directories."""
@@ -1854,66 +1854,90 @@ def test_ivfpq_retrain_recovers_recall(spark, clustered_vectors, tmp_path):
     assert not (tmp_path / "ivfpq_rt" / "codes").exists()  # old flat pruned
 
 
-def test_append_batch_guards(spark, clustered_vectors, tmp_path):
-    """The r10 advisor guards on the append paths:
-    (a) an EMPTY batch commits nothing (no empty hive dir that would break
+@pytest.mark.parametrize("family", ["ivf", "ivfpq", "ivfsq"])
+def test_append_batch_guards(spark, clustered_vectors, tmp_path, family):
+    """The append guards, through each family's public bindings:
+    (a) the reserved batch_id "base" raises BEFORE anything is written;
+    (b) an EMPTY batch commits nothing (no empty hive dir that would break
         delta schema inference) and reports against existing stats;
-    (b) a missing stats baseline raises a descriptive ValueError BEFORE
+    (c) a missing stats baseline raises a descriptive ValueError BEFORE
         any delta lands (no served-but-unaccounted batch);
-    (c) save_ivf_index over an appended index deletes stale deltas and
-        batch stats — the rebuilt index serves exactly its own rows;
-    (d) a zero build baseline (every vector its own centroid) makes any
-        nonzero batch error INFINITE drift, not ratio-1.0."""
+    (d) a save over an appended index deletes stale deltas and batch
+        stats — the rebuilt index serves exactly its own rows."""
+    import shutil
+
+    from dipa_collaborative_pulsar_idps_spark.functions import ivf, pq, sq
+
+    save, load, append = {
+        "ivf": (ivf.save_ivf_index, ivf.load_ivf_index, ivf.ivf_append_batch),
+        "ivfpq": (pq.save_ivfpq_index, pq.load_ivfpq_index, pq.ivfpq_append_batch),
+        "ivfsq": (sq.save_ivfsq_index, sq.load_ivfsq_index, sq.ivfsq_append_batch),
+    }[family]
+    codec = ivf.codec_for(family)
+    corpus = clustered_vectors
+    base = corpus.where(F.col("vec_id") % 2 == 0)
+    odd = corpus.where(F.col("vec_id") % 2 == 1)
+    geometry = {"m": 8, "ksub": 16} if family == "ivfpq" else {}
+    assigned, centroids, quantizer = ivf.train_index(codec, base, 64, 16, **geometry)
+    built = (assigned, centroids) if quantizer is None else (assigned, centroids, quantizer)
+    path = str(tmp_path / "guards")
+    deltas = tmp_path / "guards" / codec.delta_dir
+    save(*built, path)
+
+    # (a) reserved id: nothing lands, the baseline row is untouched
+    before = ivf.read_index_stats(spark, path)
+    assert before[0]["n_vectors"] == 100
+    with pytest.raises(ValueError, match="reserved"):
+        append(spark, path, odd, "base")
+    assert not deltas.exists()
+    assert ivf.read_index_stats(spark, path) == before
+
+    # (b) empty batch: no delta dir, stats unchanged, load still clean
+    s0 = append(spark, path, odd.where(F.lit(False)), "b_empty")
+    assert s0["n_vectors"] == 0 and not s0["needs_retrain"]
+    assert ("clip_frac" in s0) == (family == "ivfsq")
+    assert not deltas.exists()
+    assert load(spark, path)[0].count() == 100
+    append(spark, path, odd, "b1")  # later real append unaffected
+    assert load(spark, path)[0].count() == 200
+
+    # (c) missing baseline: descriptive error, nothing committed
+    path2 = str(tmp_path / "nostats")
+    save(*built, path2)
+    shutil.rmtree(f"{path2}/stats")
+    with pytest.raises(ValueError, match="stats"):
+        append(spark, path2, odd, "b1")
+    assert not (tmp_path / "nostats" / codec.delta_dir).exists()
+
+    # (d) save over an appended index re-initializes: stale deltas and
+    # batch stats are gone (no duplicate vec_ids, no dead batch mass)
+    save(*built, path)
+    assert not deltas.exists()
+    assert load(spark, path)[0].count() == 100
+    assert ivf.read_index_stats(spark, path)[1] == 0
+
+
+def test_ivf_append_zero_baseline_is_infinite_drift(spark, clustered_vectors, tmp_path):
+    """A zero build baseline (every vector its own centroid) makes any
+    nonzero batch error INFINITE drift, not ratio-1.0."""
     import math
 
     from dipa_collaborative_pulsar_idps_spark.functions.ivf import (
         build_ivf_index,
         ivf_append_batch,
-        load_ivf_index,
         read_index_stats,
         save_ivf_index,
     )
 
-    corpus = clustered_vectors
-    base = corpus.where(F.col("vec_id") % 2 == 0)
-    odd = corpus.where(F.col("vec_id") % 2 == 1)
-    path = str(tmp_path / "ivf_guards")
-    assigned, centroids = build_ivf_index(base, dim=64, n_list=16)
-    save_ivf_index(assigned, centroids, path)
-
-    # (a) empty batch: no delta dir, stats unchanged, load still clean
-    s0 = ivf_append_batch(spark, path, odd.where(F.lit(False)), "b_empty")
-    assert s0["n_vectors"] == 0 and not s0["needs_retrain"]
-    assert not (tmp_path / "ivf_guards" / "deltas").exists()
-    assert load_ivf_index(spark, path)[0].count() == 100
-    ivf_append_batch(spark, path, odd, "b1")  # later real append unaffected
-    assert load_ivf_index(spark, path)[0].count() == 200
-
-    # (b) missing baseline: descriptive error, nothing committed
-    import shutil
-
-    path2 = str(tmp_path / "ivf_nostats")
-    save_ivf_index(assigned, centroids, path2)
-    shutil.rmtree(f"{path2}/stats")
-    with pytest.raises(ValueError, match="stats"):
-        ivf_append_batch(spark, path2, odd, "b1")
-    assert not (tmp_path / "ivf_nostats" / "deltas").exists()
-
-    # (c) save over an appended index re-initializes: stale deltas and
-    # batch stats are gone (no duplicate vec_ids, no dead batch mass)
-    save_ivf_index(assigned, centroids, path)
-    assert load_ivf_index(spark, path)[0].count() == 100
-    base_stats, appended_n = read_index_stats(spark, path)
-    assert appended_n == 0
-
-    # (d) zero baseline -> infinite drift on any nonzero-error batch
-    tiny = corpus.where(F.col("vec_id") < 8)
+    tiny = clustered_vectors.where(F.col("vec_id") < 8)
     t_assigned, t_centroids = build_ivf_index(tiny, dim=64, n_list=8)
-    path3 = str(tmp_path / "ivf_zero")
-    save_ivf_index(t_assigned, t_centroids, path3)
-    b, _ = read_index_stats(spark, path3)
+    path = str(tmp_path / "ivf_zero")
+    save_ivf_index(t_assigned, t_centroids, path)
+    b, _ = read_index_stats(spark, path)
     assert b["mean_sq_err"] == 0.0  # every vector is its own centroid
-    s = ivf_append_batch(spark, path3, corpus.where(F.col("vec_id") >= 190), "bz")
+    s = ivf_append_batch(
+        spark, path, clustered_vectors.where(F.col("vec_id") >= 190), "bz"
+    )
     assert math.isinf(s["drift_ratio"]) and s["needs_retrain"]
 
 

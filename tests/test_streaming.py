@@ -1792,14 +1792,14 @@ def test_streaming_ann_sink_pending_retrain_survives_crash(
     add_chunk(base)
     add_chunk(far)  # drift trigger trips on this batch
 
-    real_retrain = ivf_mod.ivf_retrain
+    real_retrain = ivf_mod.retrain_index
     calls = {"n": 0}
 
     def crashing_retrain(*a, **kw):
         calls["n"] += 1
         raise RuntimeError("simulated crash between marker and retrain")
 
-    monkeypatch.setattr(ivf_mod, "ivf_retrain", crashing_retrain)
+    monkeypatch.setattr(ivf_mod, "retrain_index", crashing_retrain)
     with pytest.raises(Exception):
         run("ckpt1")
     assert calls["n"] == 1
@@ -1811,7 +1811,7 @@ def test_streaming_ann_sink_pending_retrain_survives_crash(
 
     # next commit: a LOW-drift batch whose own stats do NOT trip — the
     # pending flag re-trips the retrain anyway, then clears
-    monkeypatch.setattr(ivf_mod, "ivf_retrain", real_retrain)
+    monkeypatch.setattr(ivf_mod, "retrain_index", real_retrain)
     add_chunk(late)
     run("ckpt2")
     assert _read_pointer(spark, idx) == "gen-00001"
