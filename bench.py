@@ -12,6 +12,8 @@ Hygiene (round 2):
 - every query: its first call reported apart (``first_call_sec``), then
   the median of the REPS - 1 warm repeats recorded (JVM/catalog warmed
   first), so every per-query number means the same thing;
+- every query: its session-memo hits and misses over all its calls, per
+  memo name (``memo_hits`` / ``memo_misses``);
 - "value" stays the HEADLINE total (sum of headline medians) for
   comparability with round 1's headline metric.
 
@@ -29,6 +31,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from dipa_collaborative_pulsar_idps_spark import memo  # noqa: E402
 from dipa_collaborative_pulsar_idps_spark.queries import (  # noqa: E402
     all_queries,
     clear_all_caches,
@@ -417,10 +420,15 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     first_call: dict[str, float] = {}
+    memo_hits: dict[str, dict[str, int]] = {}
+    memo_misses: dict[str, dict[str, int]] = {}
     for name in headline + others:
+        hits0, misses0 = memo.counts()
         first_call[name] = round(run_once(name), 3)
         warm = [run_once(name) for _ in range(REPS - 1)]
         timings[name] = round(statistics.median(warm), 3) if warm else first_call[name]
+        hits1, misses1 = memo.counts()
+        memo_hits[name], memo_misses[name] = dict(hits1 - hits0), dict(misses1 - misses0)
 
     build_timings = {  # warm builds only, like the timings
         n: round(statistics.median(v[1:] or v), 3) for n, v in builds.items() if n in timings
@@ -445,6 +453,8 @@ def main() -> None:
             "queries": timings,
             "build_sec": build_timings,
             "first_call_sec": first_call,
+            "memo_hits": memo_hits,
+            "memo_misses": memo_misses,
             "noise_sentinel_median_s": round(sentinel_median, 3),
             "noise_sentinel_spread": sentinel_spread,
             "sf": sf_val,

@@ -16,8 +16,9 @@ The pandas frame is built with ``dtype=object`` so pandas never coerces
 (no int→float NaN promotion for None cells); the explicit Spark schema
 drives the Arrow cast. When Arrow is disabled on the session (vanilla
 driver sessions before ``ensure_runtime_confs`` runs) or the rows don't
-convert, PySpark's own fallback — or ours — lands on the classic path,
-which is always correct, merely slower.
+convert to Arrow, PySpark's own fallback — or ours — lands on the classic
+path, which verifies every cell against the schema and is merely slower.
+Only conversion errors fall back; anything else raises.
 """
 
 from __future__ import annotations
@@ -37,12 +38,15 @@ def local_rows_df(spark: SparkSession, rows: list, schema) -> DataFrame:
     )
     if not rows:
         return spark.createDataFrame([], struct)
-    try:
-        import pandas as pd
+    import pandas as pd
+    import pyarrow as pa
 
+    try:
         pdf = pd.DataFrame(
             [tuple(r) for r in rows], columns=struct.names, dtype=object
         )
         return spark.createDataFrame(pdf, struct)
-    except Exception:  # exotic row shapes — classic path is always correct
+    except (TypeError, ValueError, pa.ArrowException):
+        # rows Arrow cannot convert: the classic path converts what is
+        # valid and raises on a cell that does not match the schema
         return spark.createDataFrame(rows, struct)

@@ -475,21 +475,6 @@ def pick_grouped_quantile_strategy(
     return "range" if max_group_rows > max_rows_per_group else "window"
 
 
-#: Session-memoized routing decisions (r13): the max-group-size probe is
-#: a full aggregate pass whose ONLY output is the window-vs-range branch
-#: choice, and "the router never changes the answer" — both branches
-#: return identical values (property-tested) — so re-probing the same
-#: (session, caller-key) on every invocation re-measures a known fact.
-#: Memoizing the BRANCH (a string, not any data) is correctness-free by
-#: construction; cleared with the other session caches.
-_ROUTE_MEMO: dict[tuple[str, str], str] = {}
-
-
-def clear_route_memo() -> None:
-    """Forget memoized window/range routing decisions (lifecycle end)."""
-    _ROUTE_MEMO.clear()
-
-
 def grouped_exact_quantiles_auto(
     df: DataFrame,
     group_cols: list[str],
@@ -536,57 +521,52 @@ def grouped_exact_quantiles_auto(
     its output is metadata-scale.
 
     ``memo_key`` (r13): a caller-chosen stable label (e.g. "<query>:
-    <sf_dir>") under which the ROUTING DECISION is memoized per session.
+    <sf_dir>") under which the ROUTING DECISION is memoized per session
+    (``memo(session, ("route", memo_key), ...)``).
     The probe's only output is the branch choice, and both branches are
     value-identical, so repeat invocations skip the probe job (and, in
     the lazy window branch, the then-single-consumer sliver persist)
     with zero correctness exposure. First invocation still probes."""
     from pyspark import StorageLevel
 
+    from ..memo import memo
+
     lazy = persisted_out is not None
-    sc_app = df.sparkSession.sparkContext.applicationId
-    mk = (sc_app, memo_key) if memo_key is not None else None
-    strategy = _ROUTE_MEMO.get(mk) if mk is not None else None
+    vals = None
 
-    if strategy is not None and lazy:
-        if strategy == "range":
-            vals = _grouped_vals(df, group_cols, col).persist(
-                StorageLevel.MEMORY_AND_DISK
-            )  # the range form scans the sliver several times
+    def sliver() -> DataFrame:
+        nonlocal vals
+        vals = _grouped_vals(df, group_cols, col).persist(StorageLevel.MEMORY_AND_DISK)
+        if lazy:
             persisted_out.append(vals)
-            return grouped_exact_quantiles_df(
-                df, group_cols, col, qs, n_parts=n_parts, _vals=vals
-            )
-        # window branch with the probe memoized: the sliver has exactly
-        # ONE consumer (the window pass) — no persist needed at all
-        return grouped_exact_quantiles_window(df, group_cols, col, qs)
+        return vals
 
-    vals = _grouped_vals(df, group_cols, col).persist(StorageLevel.MEMORY_AND_DISK)
-    if lazy:
-        persisted_out.append(vals)
+    def probe() -> str:
+        mx = (
+            sliver()
+            .groupBy("gk")
+            .agg(F.count(F.lit(1)).alias("c"))
+            .agg(F.max("c").alias("mx"))
+            .first()
+            .mx
+        )
+        # no non-null values anywhere: the window form returns the empty long frame
+        return pick_grouped_quantile_strategy(mx or 0, max_rows_per_group)
+
     try:
-        if strategy is None:
-            mx = (
-                vals.groupBy("gk")
-                .agg(F.count(F.lit(1)).alias("c"))
-                .agg(F.max("c").alias("mx"))
-                .first()
-                .mx
-            )
-            if mx is None:  # no non-null values anywhere: empty long frame
-                out = grouped_exact_quantiles_window(
-                    df, group_cols, col, qs, _vals=vals
-                )
-                return out if lazy else out.localCheckpoint(eager=True)
-            strategy = pick_grouped_quantile_strategy(int(mx), max_rows_per_group)
-            if mk is not None:
-                _ROUTE_MEMO[mk] = strategy
+        strategy = (
+            probe() if memo_key is None else memo(df.sparkSession, ("route", memo_key), probe)
+        )
         if strategy == "range":
+            # the range form scans the sliver several times and is
+            # already localCheckpoint(eager)-pinned
             return grouped_exact_quantiles_df(
-                df, group_cols, col, qs, n_parts=n_parts, _vals=vals
-            )  # already localCheckpoint(eager)-pinned by the range form
+                df, group_cols, col, qs, n_parts=n_parts, _vals=sliver() if vals is None else vals
+            )
+        # after a memoized route the window pass is the sliver's one
+        # consumer, so it reads the source directly
         out = grouped_exact_quantiles_window(df, group_cols, col, qs, _vals=vals)
         return out if lazy else out.localCheckpoint(eager=True)
     finally:
-        if not lazy:
+        if not lazy and vals is not None:
             vals.unpersist()

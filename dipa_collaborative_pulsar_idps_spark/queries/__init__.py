@@ -1,52 +1,13 @@
+from .. import memo
 from .registry import REGISTRY, QuerySpec, all_oracles, all_queries, query
 
 
 def clear_all_caches() -> None:
-    """Release every session-memoized persisted frame (shingles, ANN
-    corpus, n-gram profiles, CCNet scores) in one call — the lifecycle
-    hook for long-lived sessions that sweep many sf_dirs (parity/bench
-    harnesses), so per-(appId, sf_dir) caches can't accumulate persisted
-    frames across sweeps. Safe on a stopped session (each per-module
-    clear swallows unpersist errors) and when query modules were never
-    imported (lazy imports)."""
-    from . import (
-        datapipe2,
-        datapipe3,
-        datapipe4,
-        datapipe5,
-        datapipe6,
-        datapipe7,
-        datapipe8,
-        media,
-        relational_ext,
-        relational_ext2,
-        scalars,
-    )
-
-    datapipe2.clear_shingle_cache()
-    datapipe3.clear_corpus_cache()
-    datapipe3.clear_ivf_build_cache()
-    datapipe3.clear_lsh_sig_cache()
-    datapipe3.clear_lsh_index_cache()
-    datapipe3.clear_ivfpq_build_cache()
-    datapipe3.clear_ivfsq_build_cache()
-    datapipe3.clear_pq_serve_cache()
-    datapipe3.clear_ivf_inc_cache()
-    datapipe3.clear_inc_serve_cache()
-    datapipe4.clear_component_cache()
-    datapipe5.clear_gram_cache()
-    datapipe6.clear_score_cache()
-    datapipe7.clear_doc_component_cache()
-    datapipe8.clear_js_dist_cache()
-    datapipe8.clear_tfidf_index_cache()
-    media.clear_media_count_cache()
-    relational_ext.clear_pctl_persists()
-    relational_ext2.clear_median_persists()
-    scalars.clear_variant_persists()
-
-    from ..operators import selection
-
-    selection.clear_route_memo()
+    """Release every session memo (persisted frames, the incremental
+    index directories, routing decisions, table frames) in one call: the
+    lifecycle end for long-lived sessions that sweep many sf_dirs.
+    Safe on a stopped session."""
+    memo.clear()
 
 
 __all__ = [

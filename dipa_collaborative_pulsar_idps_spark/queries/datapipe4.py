@@ -17,55 +17,31 @@ from pyspark.sql import functions as F
 from ..operators.components import connected_components
 from ..operators.rangejoin import interval_join
 from ..config import SCALE
+from ..memo import handles, memo
 from ..tables import Tables
 from .registry import query
 
 
-#: Memoized (node, component) cluster labels over the embedding corpus —
-#: shared by `near_dup_components` and `near_dup_keep_canonical` (both
-#: derive views of the SAME clustering; a production dedup pipeline
-#: materializes labels once and joins against them). The frame is already
-#: executor-materialized by connected_components' final localCheckpoint,
-#: so the cache holds only the reference; `clear_component_cache()` (wired
-#: into queries.clear_all_caches) drops it and the blocks free on GC.
-_COMPONENT_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def clear_component_cache() -> None:
-    """Drop memoized cluster-label frames and the exact-percentile
-    sliver persists (explicit lifecycle end)."""
-    _COMPONENT_CACHE.clear()
-    for _df in _PCTL_PERSISTS:
-        try:
-            _df.unpersist()
-        except Exception:  # session already stopped — nothing to release
-            pass
-    _PCTL_PERSISTS.clear()
-
-
-#: Sliver persists handed back by grouped_exact_quantiles_auto on behalf
-#: of `exact_price_percentiles` — drained per invocation so the selection
-#: can run lazily inside the query's own action (r13).
-_PCTL_PERSISTS: list[DataFrame] = []
-
-
 def _embedding_components(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(node, component) cluster labels over the embedding corpus,
+    memoized per (session, sf_dir): `near_dup_components` and
+    `near_dup_keep_canonical` derive views of the SAME clustering, which a
+    production dedup pipeline materializes once and joins against. The
+    frame is already executor-materialized by connected_components' final
+    localCheckpoint, so the memo holds only the reference."""
     import os
 
     from ..functions.similarity import cosine_pairs_blocked
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    cached = _COMPONENT_CACHE.get(key)
-    if cached is not None:
-        return cached
-    t = Tables(spark, sf_dir)
-    pairs = cosine_pairs_blocked(t.embeddings, threshold=0.4)
-    comp = connected_components(
-        pairs.select(F.col("keep_id").alias("src"), F.col("dup_id").alias("dst")),
-        nodes=t.embeddings.select("vec_id"),
-    )
-    _COMPONENT_CACHE[key] = comp
-    return comp
+    def build() -> DataFrame:
+        t = Tables(spark, sf_dir)
+        pairs = cosine_pairs_blocked(t.embeddings, threshold=0.4)
+        return connected_components(
+            pairs.select(F.col("keep_id").alias("src"), F.col("dup_id").alias("dst")),
+            nodes=t.embeddings.select("vec_id"),
+        )
+
+    return memo(spark, ("components", os.path.abspath(sf_dir)), build)
 
 
 def _dot(a, b):
@@ -469,21 +445,13 @@ def exact_price_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     outgrows a task, as it does at 100 TB."""
     from ..operators.selection import grouped_exact_quantiles_auto
 
-    # drain the previous invocation's sliver persist (owned lifecycle —
-    # lets the selection run lazily inside this query's own action
-    # instead of as an eagerly pinned extra job)
-    for _df in _PCTL_PERSISTS:
-        try:
-            _df.unpersist()
-        except Exception:  # session already stopped — nothing to release
-            pass
-    _PCTL_PERSISTS.clear()
-
     t = Tables(spark, sf_dir)
     qdf = grouped_exact_quantiles_auto(
         t.lineitem, ["l_returnflag"], "l_extendedprice", [0.5, 0.95, 0.99],
         n_parts=32,  # right-sized for the bench corpus; raise with data scale
-        persisted_out=_PCTL_PERSISTS,
+        # the query owns the sliver persist across its own action, so
+        # the selection runs lazily instead of as an eagerly pinned job
+        persisted_out=handles(spark, ("exact_price_percentiles",)),
         memo_key=f"exact_price_percentiles:{sf_dir}",
     )
     return qdf.groupBy("l_returnflag").agg(

@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import SCALE
+from ..memo import memo
 from ..tables import Tables
 from .datapipe import funnel_oracle
 from .registry import query
@@ -20,41 +21,24 @@ from .registry import query
 _BENCH_MOD = 97
 
 
-#: Memoized persisted gram-array frames, keyed by (appId, plan hash, dials):
-#: repeated calls in one session (funnel + standalone query + bench reps)
-#: reuse ONE cached relation instead of leaking a new persist per call;
-#: `clear_gram_cache()` owns the explicit lifecycle end (same contract as
-#: datapipe3.clear_corpus_cache, per the round-2 advisor remedy).
-_GRAM_CACHE: dict[tuple, DataFrame] = {}
-
-
-def clear_gram_cache() -> None:
-    """Unpersist every memoized gram frame (explicit lifecycle end)."""
-    for df in _GRAM_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:  # session already stopped — nothing to release
-            pass
-    _GRAM_CACHE.clear()
-
-
 def _gram_arrays(
     docs: DataFrame, id_col: str, text_col: str, n: int
 ) -> DataFrame:
     """(doc_id, grams array<string>): per-doc distinct n-gram arrays,
-    compute-spread and persisted once per (session, input plan, dials)."""
+    compute-spread and persisted once per (session, input plan, dials):
+    repeated calls in one session (funnel + standalone query + bench
+    reps) reuse ONE cached relation instead of leaking a new persist per
+    call."""
+    return memo(
+        docs.sparkSession,
+        ("grams", docs.semanticHash(), id_col, text_col, n),
+        lambda: _build_gram_arrays(docs, id_col, text_col, n),
+    )
+
+
+def _build_gram_arrays(docs: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     from ..plans.sizing import right_size
 
-    key = (
-        docs.sparkSession.sparkContext.applicationId,
-        docs.semanticHash(),
-        id_col,
-        text_col,
-        n,
-    )
-    cached = _GRAM_CACHE.get(key)
-    if cached is not None:
-        return cached
     toks = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
     gram = "concat_ws(' ', " + ", ".join(
         f"element_at(tokens, i + {j})" for j in range(n)
@@ -70,7 +54,7 @@ def _gram_arrays(
     # inflate reflects the ~n× gram blowup the optimizer can't see. The
     # gram arrays are computed once and persisted — the lineage feeds
     # several consumers (bench set, training explode, training doc list).
-    sh = (
+    return (
         right_size(
             docs.select(F.col(id_col).alias("doc_id"), text_col), "doc_id", inflate=5.0
         )
@@ -78,8 +62,6 @@ def _gram_arrays(
         .select("doc_id", F.expr(grams).alias("grams"))
         .persist()
     )
-    _GRAM_CACHE[key] = sh
-    return sh
 
 
 def _gram_hits(sh: DataFrame, bench_mod: int) -> DataFrame:

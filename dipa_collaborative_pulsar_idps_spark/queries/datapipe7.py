@@ -9,44 +9,33 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..memo import memo
 from ..tables import Tables
 from .registry import query
 
-#: Memoized (node, component) MinHash-LSH cluster labels over the document
-#: corpus — `near_dup_keep_best_quality`'s clustering (same rationale and
-#: lifecycle as datapipe4's embedding-component cache: the labels frame is
-#: executor-materialized by connected_components' final localCheckpoint,
-#: the cache holds the reference, `clear_doc_component_cache()` — wired
-#: into queries.clear_all_caches — drops it and blocks free on GC).
-_DOC_COMPONENT_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def clear_doc_component_cache() -> None:
-    """Drop memoized document cluster-label frames (lifecycle end)."""
-    _DOC_COMPONENT_CACHE.clear()
-
-
 def _doc_components(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(node, component) MinHash-LSH cluster labels over the document
+    corpus, memoized per (session, sf_dir) like datapipe4's embedding
+    components: the labels frame is executor-materialized by
+    connected_components' final localCheckpoint, so the memo holds only
+    the reference."""
     import os
 
     from ..functions.dedup import minhash_near_dup_pairs
     from ..operators.components import connected_components
     from .datapipe2 import _shingles
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    cached = _DOC_COMPONENT_CACHE.get(key)
-    if cached is not None:
-        return cached
-    t = Tables(spark, sf_dir)
-    pairs = minhash_near_dup_pairs(
-        t.documents, threshold=0.8, shingled=_shingles(spark, sf_dir)
-    )
-    comp = connected_components(
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
-        nodes=t.documents.select("doc_id"),
-    )
-    _DOC_COMPONENT_CACHE[key] = comp
-    return comp
+    def build() -> DataFrame:
+        t = Tables(spark, sf_dir)
+        pairs = minhash_near_dup_pairs(
+            t.documents, threshold=0.8, shingled=_shingles(spark, sf_dir)
+        )
+        return connected_components(
+            pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
+            nodes=t.documents.select("doc_id"),
+        )
+
+    return memo(spark, ("doc_components", os.path.abspath(sf_dir)), build)
 
 
 _SAMPLE_K = 20

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import SCALE
+from ..memo import handles, memo
 from ..tables import Tables
 from .registry import query
 
@@ -555,44 +556,23 @@ FROM (
 WHERE rk <= 5
 """
 
-#: Memoized in-session TF-IDF index over the even-doc_id half — the
-#: declared incremental query's stand-in for the PERSISTED inverted index
-#: (save_tfidf_index/load_tfidf_index is the disk form, exercised by the
-#: streaming sink tests). Same lifecycle contract as the other module
-#: caches: `clear_tfidf_index_cache()` owns the unpersist and is wired
-#: into queries.clear_all_caches.
-_TFIDF_INDEX_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame, int]] = {}
-
-
-def clear_tfidf_index_cache() -> None:
-    """Unpersist every memoized TF-IDF index and the probe's handed-back
-    persists (explicit lifecycle end)."""
-    frames = [f for p, d, _n in _TFIDF_INDEX_CACHE.values() for f in (p, d)]
-    for frame in frames + _TFIDF_PROBE_PERSISTS:
-        try:
-            frame.unpersist()
-        except Exception:  # session already stopped — nothing to release
-            pass
-    _TFIDF_INDEX_CACHE.clear()
-    _TFIDF_PROBE_PERSISTS.clear()
-
-
 def _even_half_tfidf_index(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, int]:
+    """(postings, df, n_docs) over the even-doc_id half, persisted and
+    memoized per (session, sf_dir): the incremental query's stand-in for
+    the PERSISTED inverted index (save_tfidf_index/load_tfidf_index is the
+    disk form, exercised by the streaming sink tests)."""
     import os
 
     from ..functions.tfidf import build_tfidf_index_frames
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    cached = _TFIDF_INDEX_CACHE.get(key)
-    if cached is not None:
-        return cached
-    even = Tables(spark, sf_dir).documents.where(F.col("doc_id") % 2 == 0)
-    postings, dfb, n_docs = build_tfidf_index_frames(even)
-    postings, dfb = postings.persist(), dfb.persist()
-    _TFIDF_INDEX_CACHE[key] = (postings, dfb, n_docs)
-    return postings, dfb, n_docs
+    def build() -> tuple[DataFrame, DataFrame, int]:
+        even = Tables(spark, sf_dir).documents.where(F.col("doc_id") % 2 == 0)
+        postings, dfb, n_docs = build_tfidf_index_frames(even)
+        return postings.persist(), dfb.persist(), n_docs
+
+    return memo(spark, ("tfidf_index", os.path.abspath(sf_dir)), build)
 
 
 @query("tfidf_incremental_topk", survey="ext-sim,ext-text", oracle=_TFIDF_INC_ORACLE)
@@ -615,68 +595,38 @@ def tfidf_incremental_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ryu/testing/global_view_and_timing/TestCase_6/timeStamp.py:305)."""
     from ..functions.tfidf import tfidf_probe_topk
 
-    # drain the previous invocation's probe persists up front (same
-    # owned-lifecycle pattern as minhash_lsh_incremental_near_dups)
-    for _df in _TFIDF_PROBE_PERSISTS:
-        try:
-            _df.unpersist()
-        except Exception:  # session already stopped — nothing to release
-            pass
-    _TFIDF_PROBE_PERSISTS.clear()
-
     docs = Tables(spark, sf_dir).documents
     postings, dfb, n_old = _even_half_tfidf_index(spark, sf_dir)
     new = docs.where((F.col("doc_id") % 2 == 1) & (F.col("doc_id") < 100))
     old = docs.where(F.col("doc_id") % 2 == 0)
     return tfidf_probe_topk(
-        new, old, postings, dfb, n_old, k=5, persisted_out=_TFIDF_PROBE_PERSISTS
+        new, old, postings, dfb, n_old, k=5,
+        # only the latest run's probe persists stay live
+        persisted_out=handles(spark, ("tfidf_probe",)),
     )
-
-
-#: Probe persists handed back by tfidf_probe_topk on behalf of the
-#: declared query — drained per invocation, cleared with the index cache.
-_TFIDF_PROBE_PERSISTS: list[DataFrame] = []
-
-
-#: Memoized per-source unigram distribution (tot, p) — p feeds BOTH sides
-#: of the pair self-join (recomputing it re-runs the explode+groupBy per
-#: consumer: measured 2.4 s vs 0.8 s at sf0.1), so it is persisted with
-#: the same owned lifecycle as the other query-module caches:
-#: `clear_js_dist_cache()` (wired into queries.clear_all_caches) does the
-#: unpersist — never a per-call persist with no release path.
-_JS_DIST_CACHE: dict = {}
 
 
 def _source_unigram_dist(spark: SparkSession, sf_dir: str):
+    """Per-source unigram distribution (tot, p), persisted and memoized
+    per (session, sf_dir): p feeds BOTH sides of the pair self-join, and
+    recomputing it re-ran the explode+groupBy per consumer (2.4 s vs
+    0.8 s at sf0.1)."""
     import os
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    cached = _JS_DIST_CACHE.get(key)
-    if cached is not None:
-        return cached
-    t = Tables(spark, sf_dir)
-    toks = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
-    tok = t.documents.select("source", F.explode(toks).alias("tok"))
-    cnt = tok.groupBy("source", "tok").agg(F.count("*").alias("c"))
-    tot = cnt.groupBy("source").agg(F.sum("c").alias("tot")).persist()
-    p = (
-        cnt.join(tot, "source")
-        .select("source", "tok", (F.col("c") * F.lit(1.0) / F.col("tot")).alias("p"))
-        .persist()
-    )
-    _JS_DIST_CACHE[key] = (tot, p)
-    return tot, p
+    def build() -> tuple[DataFrame, DataFrame]:
+        t = Tables(spark, sf_dir)
+        toks = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+        tok = t.documents.select("source", F.explode(toks).alias("tok"))
+        cnt = tok.groupBy("source", "tok").agg(F.count("*").alias("c"))
+        tot = cnt.groupBy("source").agg(F.sum("c").alias("tot")).persist()
+        p = (
+            cnt.join(tot, "source")
+            .select("source", "tok", (F.col("c") * F.lit(1.0) / F.col("tot")).alias("p"))
+            .persist()
+        )
+        return tot, p
 
-
-def clear_js_dist_cache() -> None:
-    """Unpersist the memoized unigram distributions (lifecycle end)."""
-    for tot, p in _JS_DIST_CACHE.values():
-        for df in (tot, p):
-            try:
-                df.unpersist()
-            except Exception:  # session already stopped — nothing to release
-                pass
-    _JS_DIST_CACHE.clear()
+    return memo(spark, ("js_dist", os.path.abspath(sf_dir)), build)
 
 
 _JS_ORACLE = """

@@ -13,59 +13,31 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.multimodal import media_feature_pipeline, synthetic_media
+from ..memo import memo
 from ..tables import Tables
 from .registry import query
-
-
-#: Memoized documents row count per (appId, sf_dir): three declared media
-#: queries each size the synthetic corpus from it, and without the memo
-#: every one paid a full documents scan just for the count (same lifecycle
-#: pattern as datapipe8._JS_DIST_CACHE; ints hold no executor memory, so
-#: clear_media_count_cache only resets the map).
-_DOC_COUNT_CACHE: dict[tuple[str, str], int] = {}
-
-#: Memoized SYNTHETIC MEDIA CORPUS per (appId, sf_dir) — r13: the corpus
-#: is these queries' INPUT TABLE (a production deployment reads encoded
-#: media from storage; the on-the-fly render exists only because the
-#: testdata tree carries no binary blobs), yet every declared media query
-#: re-ran the distributed PPM/WAV ENCODE render per invocation before its
-#: actual decode pipeline. One persisted render per session makes the
-#: input a stable relation, exactly like the disk-backed tables — the
-#: decode/resize/feature operators still execute in full per query.
-#: Deterministic render → bit-identical results.
-_MEDIA_CORPUS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def clear_media_count_cache() -> None:
-    """Reset the memoized corpus-sizing counts and unpersist the rendered
-    media corpus (explicit lifecycle end)."""
-    _DOC_COUNT_CACHE.clear()
-    for df in _MEDIA_CORPUS_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:  # session already stopped — nothing to release
-            pass
-    _MEDIA_CORPUS_CACHE.clear()
 
 
 def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Media corpus scaled like the documents table (¼ of its rows) so the
     query grows with sf; payloads are real encoded PPM/WAV bytes rendered
-    distributed (mapInPandas over spark.range — no driver blobs), rendered
-    once per session (see _MEDIA_CORPUS_CACHE)."""
+    distributed (mapInPandas over spark.range — no driver blobs).
+
+    Rendered once, persisted and memoized per (session, sf_dir): the
+    corpus is these queries' INPUT TABLE (a production deployment reads
+    encoded media from storage; the render exists only because the
+    testdata tree carries no binary blobs), so one render per session
+    makes it a stable relation like the disk-backed tables, and the
+    documents count that sizes it runs once. The decode/resize/feature
+    operators still execute in full per query. Deterministic render →
+    bit-identical results."""
     import os
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    cached = _MEDIA_CORPUS_CACHE.get(key)
-    if cached is not None:
-        return cached
-    n_docs = _DOC_COUNT_CACHE.get(key)
-    if n_docs is None:
+    def build() -> DataFrame:
         n_docs = Tables(spark, sf_dir).documents.count()
-        _DOC_COUNT_CACHE[key] = n_docs
-    corpus = synthetic_media(spark, max(60, n_docs // 4)).persist()
-    _MEDIA_CORPUS_CACHE[key] = corpus
-    return corpus
+        return synthetic_media(spark, max(60, n_docs // 4)).persist()
+
+    return memo(spark, ("media_corpus", os.path.abspath(sf_dir)), build)
 
 
 @query("media_feature_stats", survey="ext-multimodal,K1,K2")

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..memo import handles
 from ..tables import Tables
 from .registry import query
 
@@ -125,15 +126,6 @@ def price_percentiles_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     long-format quantile frame pivots wide and broadcasts back."""
     from ..operators.selection import grouped_exact_quantiles_auto
 
-    # drain the previous invocation's sliver persist (owned lifecycle —
-    # lets the selection run lazily inside this query's own action)
-    for _df in _BRAND_PCTL_PERSISTS:
-        try:
-            _df.unpersist()
-        except Exception:  # session already stopped — nothing to release
-            pass
-    _BRAND_PCTL_PERSISTS.clear()
-
     t = Tables(spark, sf_dir)
     base = t.part.groupBy("p_brand").agg(
         F.min("p_retailprice").alias("min_price"),
@@ -141,7 +133,9 @@ def price_percentiles_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     qdf = grouped_exact_quantiles_auto(
         t.part, ["p_brand"], "p_retailprice", [0.5, 0.9], n_parts=32,
-        persisted_out=_BRAND_PCTL_PERSISTS,
+        # the query owns the sliver persist across its own action, so
+        # the selection runs lazily
+        persisted_out=handles(spark, ("price_percentiles_by_brand",)),
         memo_key=f"price_percentiles_by_brand:{sf_dir}",
     )
     wide = qdf.groupBy("p_brand").agg(
@@ -151,21 +145,6 @@ def price_percentiles_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     return base.join(F.broadcast(wide), "p_brand", "left").select(
         "p_brand", "median_price", "p90_price", "min_price", "max_price"
     )
-
-
-#: Sliver persists handed back by grouped_exact_quantiles_auto on behalf
-#: of `price_percentiles_by_brand` — drained per invocation (r13).
-_BRAND_PCTL_PERSISTS: list[DataFrame] = []
-
-
-def clear_pctl_persists() -> None:
-    """Unpersist the brand-percentile sliver persists (lifecycle end)."""
-    for _df in _BRAND_PCTL_PERSISTS:
-        try:
-            _df.unpersist()
-        except Exception:  # session already stopped — nothing to release
-            pass
-    _BRAND_PCTL_PERSISTS.clear()
 
 
 @query(

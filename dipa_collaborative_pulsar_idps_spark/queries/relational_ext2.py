@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..memo import handles
 from ..tables import Tables
 from .registry import query
 
@@ -195,15 +196,6 @@ def grouped_median_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≥1 non-null value."""
     from ..operators.selection import grouped_exact_quantiles_auto
 
-    # drain the previous invocation's sliver persist (owned lifecycle —
-    # lets the selection run lazily inside this query's own action)
-    for _df in _MEDIAN_PERSISTS:
-        try:
-            _df.unpersist()
-        except Exception:  # session already stopped — nothing to release
-            pass
-    _MEDIAN_PERSISTS.clear()
-
     t = Tables(spark, sf_dir)
     counted = t.events.groupBy("event_type", "value").agg(F.count("*").alias("cnt"))
     modes = counted.groupBy("event_type").agg(
@@ -213,7 +205,9 @@ def grouped_median_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     med = grouped_exact_quantiles_auto(
         t.events, ["event_type"], "value", [0.5], n_parts=32,
-        persisted_out=_MEDIAN_PERSISTS,
+        # the query owns the sliver persist across its own action, so
+        # the selection runs lazily
+        persisted_out=handles(spark, ("grouped_median_mode",)),
         memo_key=f"grouped_median_mode:{sf_dir}",
     ).select("event_type", F.col("value").alias("median_raw"))
     return (
@@ -224,21 +218,6 @@ def grouped_median_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
             "mode_value",
         )
     )
-
-
-#: Sliver persists handed back by grouped_exact_quantiles_auto on behalf
-#: of `grouped_median_mode` — drained per invocation (r13).
-_MEDIAN_PERSISTS: list[DataFrame] = []
-
-
-def clear_median_persists() -> None:
-    """Unpersist the grouped-median sliver persists (lifecycle end)."""
-    for _df in _MEDIAN_PERSISTS:
-        try:
-            _df.unpersist()
-        except Exception:  # session already stopped — nothing to release
-            pass
-    _MEDIAN_PERSISTS.clear()
 
 
 @query(

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..memo import handles
 from ..tables import Tables
 from .registry import query
 
@@ -220,17 +221,11 @@ def variant_props_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     left join, matching PERCENTILE_CONT over zero rows."""
     from ..operators.selection import grouped_exact_quantiles_auto
 
-    # drain the previous invocation's persists (owned lifecycle — r13:
-    # the eager base pin + eagerly pinned selection were the dominant
-    # per-invocation build cost; with the caches owned across the call
-    # everything below runs lazily inside the query's own action)
-    for _df in _VARIANT_PERSISTS:
-        try:
-            _df.unpersist()
-        except Exception:  # session already stopped — nothing to release
-            pass
-    _VARIANT_PERSISTS.clear()
-
+    # the query owns its persists (the parsed variant sliver and the
+    # selection's vals sliver) across its own action, so everything below
+    # runs lazily; an eager base pin plus a pinned selection were the
+    # dominant per-invocation build cost
+    persists = handles(spark, ("variant_props_metrics",))
     t = Tables(spark, sf_dir)
     v = F.try_parse_json("props")
     k = F.try_variant_get(v, "$.k", "int")
@@ -243,7 +238,7 @@ def variant_props_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sliver nests this frame's scan), so the base aggregate and the
     # selection read cached rows at action time — no re-parse.
     kd = t.events.select("event_type", k.alias("ki")).persist()
-    _VARIANT_PERSISTS.append(kd)
+    persists.append(kd)
     base = kd.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.count("ki").alias("n_with_k"),
@@ -255,7 +250,7 @@ def variant_props_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         "kv",
         [0.5],
         n_parts=32,
-        persisted_out=_VARIANT_PERSISTS,
+        persisted_out=persists,
         memo_key=f"variant_props_metrics:{sf_dir}",
     )
     p50 = qdf.groupBy("event_type").agg(
@@ -268,19 +263,3 @@ def variant_props_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sum_k",
         F.round("p50_raw", 4).alias("p50_k"),
     )
-
-
-#: Persists owned on behalf of `variant_props_metrics` (the parsed
-#: variant sliver + the selection's vals sliver) — drained per
-#: invocation (r13).
-_VARIANT_PERSISTS: list[DataFrame] = []
-
-
-def clear_variant_persists() -> None:
-    """Unpersist the variant-metrics persists (lifecycle end)."""
-    for _df in _VARIANT_PERSISTS:
-        try:
-            _df.unpersist()
-        except Exception:  # session already stopped — nothing to release
-            pass
-    _VARIANT_PERSISTS.clear()

@@ -14,12 +14,12 @@ line up.
 from __future__ import annotations
 
 import os
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from .memo import memo
 from .session import ensure_runtime_confs
 
 TABLE_NAMES = (
@@ -46,31 +46,17 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 #: session-independent, no executor memory.
 _SCHEMA_CACHE: dict[str, StructType] = {}
 
-#: Normalized table DataFrame per (session, sf_dir, name). A DataFrame is
-#: bound to its SparkSession, so the outer key is the session itself via
-#: WeakKeyDictionary — entries die with the session, and a frame can never
-#: leak into a different session's plans. Holds only logical plans (no
-#: persist), so there is nothing to unpersist.
-_DF_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], DataFrame]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-def clear_table_cache() -> None:
-    """Drop memoized schemas + per-session table frames (only needed if
-    table files are rewritten in place, which the driver's read-only
-    testdata never is)."""
-    _SCHEMA_CACHE.clear()
-    _DF_CACHE.clear()
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one test table, normalizing types for engine use."""
-    per_session = _DF_CACHE.setdefault(spark, {})
-    key = (os.path.abspath(sf_dir), name)
-    cached = per_session.get(key)
-    if cached is not None:
-        return cached
+    """Load one test table, normalizing types for engine use. The frame
+    is memoized per (session, sf_dir, name): it holds only a logical
+    plan, and reusing it skips the read setup on every query build."""
+    return memo(
+        spark, ("table", os.path.abspath(sf_dir), name), lambda: _read_table(spark, sf_dir, name)
+    )
+
+
+def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ensure_runtime_confs(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
     schema = _SCHEMA_CACHE.get(os.path.abspath(path))
@@ -85,7 +71,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = df.withColumn(
             "ts", F.timestamp_micros(F.expr("ts DIV 1000")).cast("timestamp_ntz")
         )
-    per_session[key] = df
     return df
 
 

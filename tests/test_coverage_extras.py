@@ -852,46 +852,27 @@ def test_char_entropy_kernel_bit_equals_hof_fold(spark, sf_dir):
         )
 
 
-def test_every_module_cache_is_cleared_by_clear_all_caches():
-    """Memo discipline (r14, verdict item 9): every module-level `_*_CACHE`
-    / `_*_PERSISTS` container under queries/ must have a registered
-    clearer that clear_all_caches() invokes — a memo without one would
-    leak persisted frames across bench/parity sweeps and drift toward
-    result-caching. Source-level audit: for each container, some
-    `clear_*` function in its module must reference it, and
-    clear_all_caches' own source must call that module's clearer."""
-    import inspect
+def test_no_module_level_session_containers():
+    """Session state lives in the one memo registry (memo.py), which
+    clear_all_caches releases in one call. A module-level `_*_CACHE`,
+    `_*_PERSISTS` or `_*_MEMO` container under queries/ or operators/, or
+    in tables.py, would be a memo no clear releases. The per-path parquet
+    schema cache is session-independent and stays."""
     import pathlib
     import re
 
-    import dipa_collaborative_pulsar_idps_spark.queries as qpkg
-    from dipa_collaborative_pulsar_idps_spark.queries import clear_all_caches
+    import dipa_collaborative_pulsar_idps_spark as pkg
 
-    hook_src = inspect.getsource(clear_all_caches)
-    audited = 0
-    for py in sorted(pathlib.Path(qpkg.__path__[0]).glob("*.py")):
-        text = py.read_text()
-        names = re.findall(r"^(_[A-Z0-9_]*(?:CACHE|PERSISTS))\s*[:=]", text, re.M)
-        if not names:
-            continue
-        clearers = {
-            m.group(1): m.group(0)
-            for m in re.finditer(r"^def (clear_\w+)\(\) -> None:", text, re.M)
-        }
-        for name in names:
-            owners = [
-                fn
-                for fn in clearers
-                if re.search(
-                    rf"^def {fn}\(\) -> None:.*?(?=^def |\Z)", text, re.M | re.S
-                ).group(0).count(name)
-            ]
-            assert owners, f"{py.stem}.{name} has no clear_* function referencing it"
-            assert any(
-                f"{py.stem}.{fn}()" in hook_src for fn in owners
-            ), f"{py.stem}.{name}: none of its clearers {owners} is called by clear_all_caches"
-            audited += 1
-    assert audited >= 15, f"audit only found {audited} containers — regex broke?"
+    root = pathlib.Path(pkg.__path__[0])
+    files = [root / "tables.py", *sorted((root / "queries").glob("*.py")),
+             *sorted((root / "operators").glob("*.py"))]
+    found = [
+        f"{py.relative_to(root)}:{name}"
+        for py in files
+        for name in re.findall(r"^(_[A-Z0-9_]*(?:CACHE|PERSISTS|MEMO))\s*[:=]", py.read_text(), re.M)
+        if name != "_SCHEMA_CACHE"
+    ]
+    assert len(files) > 20 and not found, found
 
 
 def test_stats_rows_reads_legacy_pre_commit_seq_files(spark, tmp_path):
@@ -952,3 +933,12 @@ def test_collect_probe_map_reads_fields_by_name(spark):
     for key in want:
         np.testing.assert_array_equal(got[key][0], want[key][0])
         np.testing.assert_array_equal(got[key][1], want[key][1])
+
+
+def test_local_rows_df_raises_on_cell_schema_mismatch(spark):
+    """A row whose cell does not match the schema is a caller bug: it
+    raises instead of coming back as a frame."""
+    from dipa_collaborative_pulsar_idps_spark.localdf import local_rows_df
+
+    with pytest.raises((TypeError, ValueError)):
+        local_rows_df(spark, [(1, "not-a-double")], "a long, b double")

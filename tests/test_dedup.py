@@ -390,44 +390,67 @@ def test_ivfpq_refined_serves_from_persisted_index(spark, sf_dir, tmp_path):
 
 
 def test_clear_all_caches_releases_every_memoized_frame(spark):
-    """The registry-level lifecycle hook: after warming the per-module
-    memoization caches, ONE clear_all_caches() call unpersists and empties
-    them all (the long-lived multi-sf_dir session hygiene contract)."""
-    from dipa_collaborative_pulsar_idps_spark.queries import clear_all_caches
-    from dipa_collaborative_pulsar_idps_spark.queries.datapipe3 import (
-        _CORPUS_CACHE,
-        _corpus,
-    )
-    from dipa_collaborative_pulsar_idps_spark.queries.datapipe6 import (
-        _SCORE_CACHE,
-        _doc_scores,
-    )
+    """The lifecycle hook: after warming memos of every kind (the ANN
+    corpus and CCNet scores, a coarse IVF build tuple,
+    exact_price_percentiles' sliver handles and routing decision, one
+    incremental ANN index on disk), ONE
+    clear_all_caches() call unpersists every owned frame, removes the
+    index directory and forgets the route."""
+    import os
 
-    a = _corpus(spark, "/root/testdata/sf0.001")
-    b = _doc_scores(spark, "/root/testdata/sf0.001")
-    assert _CORPUS_CACHE and _SCORE_CACHE
+    from dipa_collaborative_pulsar_idps_spark import memo
+    from dipa_collaborative_pulsar_idps_spark.queries import REGISTRY, all_queries, clear_all_caches
+    from dipa_collaborative_pulsar_idps_spark.queries.datapipe3 import (
+        _corpus,
+        _incremental_index,
+        _ivf_coarse,
+    )
+    from dipa_collaborative_pulsar_idps_spark.queries.datapipe6 import _doc_scores
+
+    sf = "/root/testdata/sf0.001"
+    route = ("route", f"exact_price_percentiles:{sf}")
+    all_queries()
     clear_all_caches()
-    assert not _CORPUS_CACHE and not _SCORE_CACHE
-    assert not a.storageLevel.useMemory and not b.storageLevel.useMemory
+    jsc = spark.sparkContext._jsc
+    persisted_before = jsc.getPersistentRDDs().size()
+
+    a = _corpus(spark, sf)
+    b = _doc_scores(spark, sf)
+    assigned, _centroids = _ivf_coarse(spark, sf, 8)
+    REGISTRY["exact_price_percentiles"].fn(spark, sf).collect()
+    REGISTRY["ann_topk_ivfsq_incremental"].fn(spark, sf).collect()
+    path = _incremental_index(spark, sf, "ivfsq")
+    assert os.path.isdir(path) and a.is_cached and b.is_cached and assigned.is_cached
+    assert memo.memo(spark, route, lambda: pytest.fail("route not memoized")) in ("window", "range")
+    assert jsc.getPersistentRDDs().size() > persisted_before
+
+    clear_all_caches()
+    assert jsc.getPersistentRDDs().size() == persisted_before
+    assert not any(f.storageLevel.useMemory for f in (a, b, assigned))
+    assert not os.path.exists(path)
+    _, misses = memo.counts()
+    REGISTRY["exact_price_percentiles"].fn(spark, sf)  # the builder re-probes
+    assert memo.counts()[1]["route"] == misses["route"] + 1
+    clear_all_caches()
 
 
 def test_ann_corpus_cache_lifecycle(spark):
-    """_corpus memoizes per (session, sf_dir) — repeated query invocations
-    must reuse ONE persisted DataFrame, and clear_corpus_cache unpersists."""
-    from dipa_collaborative_pulsar_idps_spark.queries.datapipe3 import (
-        _CORPUS_CACHE,
-        _corpus,
-        clear_corpus_cache,
-    )
+    """_corpus memoizes per (session, sf_dir): the warm call is a registry
+    hit returning the SAME persisted DataFrame, and clearing unpersists
+    it."""
+    from dipa_collaborative_pulsar_idps_spark import memo
+    from dipa_collaborative_pulsar_idps_spark.queries import clear_all_caches
+    from dipa_collaborative_pulsar_idps_spark.queries.datapipe3 import _corpus
 
-    clear_corpus_cache()
+    clear_all_caches()
     a = _corpus(spark, "/root/testdata/sf0.001")
+    hits, _ = memo.counts()
     b = _corpus(spark, "/root/testdata/sf0.001")
     assert a is b, "corpus re-persisted instead of memoized"
+    assert memo.counts()[0]["corpus"] == hits["corpus"] + 1
     assert a.storageLevel.useMemory
-    assert len(_CORPUS_CACHE) == 1
-    clear_corpus_cache()
-    assert not _CORPUS_CACHE and not a.storageLevel.useMemory
+    clear_all_caches()
+    assert not a.storageLevel.useMemory
 
 
 def test_minhash_signatures_drop_empty_shingles(spark):

@@ -811,9 +811,14 @@ def test_grouped_exact_quantiles_auto_lazy_and_route_memo(spark):
     """r13 optimization contracts of the auto router: (a) the lazy mode
     (persisted_out) returns values identical to the eager default in
     BOTH regimes; (b) memo_key memoizes only the BRANCH — a repeat call
-    skips the probe (no new persist handle in the window branch) and
-    still returns identical values; (c) clear_route_memo forgets it."""
+    is a registry hit that skips the probe (no new persist handle in the
+    window branch) and still returns identical values; (c) clearing the
+    memos forgets it."""
+    import pytest as _pytest
+
+    from dipa_collaborative_pulsar_idps_spark import memo
     from dipa_collaborative_pulsar_idps_spark.operators import selection as sel
+    from dipa_collaborative_pulsar_idps_spark.queries import clear_all_caches
 
     qs = [0.1, 0.5, 0.9]
     small = spark.range(6_000).select(
@@ -844,20 +849,23 @@ def test_grouped_exact_quantiles_auto_lazy_and_route_memo(spark):
         # memoized repeat: window branch hands back NO new persist (the
         # sliver has one consumer), range branch still persists its sliver
         handles2: list = []
-        memo = {
+        hits, _ = memo.counts()
+        warm = {
             (r.g, r.q): r.value
             for r in sel.grouped_exact_quantiles_auto(
                 df_in, ["g"], "v", qs, persisted_out=handles2,
                 memo_key="t:lazy", **kwargs
             ).collect()
         }
-        assert memo == eager
-        branch = sel._ROUTE_MEMO[(spark.sparkContext.applicationId, "t:lazy")]
+        assert warm == eager
+        assert memo.counts()[0]["route"] == hits["route"] + 1
+        branch = memo.memo(spark, ("route", "t:lazy"), lambda: _pytest.fail("route forgotten"))
         assert bool(handles2) == (branch == "range")
         for h in handles + handles2:
             h.unpersist()
-        sel.clear_route_memo()
-    assert not sel._ROUTE_MEMO
+        clear_all_caches()
+        assert memo.memo(spark, ("route", "t:lazy"), lambda: None) is None  # forgotten
+        clear_all_caches()
 
 
 def test_media_ops_degrade_on_corrupt_blobs(spark):
