@@ -10,9 +10,10 @@ Arrow UDF, one argmin matmul per batch. Search: score a query only against
 the vectors in its ``n_probe`` nearest lists — scanned fraction ≈
 n_probe / n_list.
 
-At 100 TB: the centroid table is tiny (broadcast); assignment is one pass;
-the probe join shuffles only on list ids. Lists should be written
-partitioned by list_id so a probe prunes partitions at scan time.
+At 100 TB: the centroid table is tiny; assignment is one pass; a query
+batch is routed to its lists on the driver and nothing is shuffled. Lists
+should be written partitioned by list_id so a probe prunes partitions at
+scan time.
 
 Index lifecycle. A persisted index is written once, appended to
 continually and retrained under serving; the crash-consistent protocol is
@@ -49,10 +50,11 @@ from typing import Callable
 
 import numpy as np
 import pandas as pd
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import cosine_cols, topk
+from .similarity import _cosine_rows, query_batch, raw_scorer, search
 
 #: Pointer file naming the ACTIVE generation directory under an index
 #: root — written by :func:`retrain_index`. An index that has never been
@@ -111,7 +113,7 @@ def _write_pointer(spark, path: str, gen: str) -> None:
         opts = sc._gateway.new_array(rename_opt, 1)
         opts[0] = rename_opt.OVERWRITE
         fc.rename(fs.makeQualified(tmp), qual_cur, opts)
-    except Exception:  # no overwrite-rename on this store — fall back
+    except Py4JJavaError:  # the store refused overwrite-rename: non-atomic fallback
         if fs.exists(cur):
             fs.delete(cur, False)
         fs.rename(tmp, cur)
@@ -267,31 +269,26 @@ def _assign_to_centroids(corpus: DataFrame, cents: np.ndarray) -> DataFrame:
     return corpus.select("vec_id", "e", assign(F.col("e")).alias("list_id"))
 
 
-def probe_lists(centroids: DataFrame, queries: DataFrame, n_probe: int) -> DataFrame:
-    """(list_id, query_id, qe): the ``n_probe`` nearest inverted lists per
-    query by centroid cosine — the coarse-probe relation every IVF-family
-    search (raw :func:`ivf_search`, IVF-PQ's ADC scan, IVF+SQ8) starts
-    from. Both sides broadcast (queries are the bounded serving batch,
-    centroids are n_list rows); ties broken by ascending list_id so the
-    probe set is deterministic."""
-    from pyspark.sql.window import Window
+def centroid_matrix(centroids: DataFrame) -> np.ndarray:
+    """The (n_list, d) centroid matrix, row i = list i, from one bounded
+    collect of the n_list centroid rows. The sort is driver-side, which
+    skips orderBy's range-partitioning sample job."""
+    rows = sorted(centroids.collect(), key=lambda r: r["list_id"])  # bounded-collect: n_list rows
+    if [r["list_id"] for r in rows] != list(range(len(rows))):
+        raise ValueError("centroid list_ids must be 0..n_list-1")
+    return np.array([r["centroid"] for r in rows], dtype=np.float64)
 
-    q_cent = (
-        F.broadcast(queries)
-        .join(F.broadcast(centroids))
-        .select(
-            "query_id",
-            "qe",
-            "list_id",
-            cosine_cols(F.col("qe"), F.col("centroid")).alias("c_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("c_sim"), F.asc("list_id"))
-    return (
-        q_cent.withColumn("pr", F.row_number().over(w))
-        .where(F.col("pr") <= n_probe)
-        .select("list_id", "query_id", "qe")
-    )
+
+def ivf_route(q_mat: np.ndarray, cents: np.ndarray, n_probe: int) -> np.ndarray:
+    """(Q, n_probe) ids of each query's ``n_probe`` nearest inverted lists
+    by centroid cosine, ties broken by ascending list_id: the coarse
+    probe every IVF-family search (raw :func:`ivf_search`, IVF-PQ's ADC
+    scan, IVF+SQ8) starts from. Runs on the driver over the query and
+    centroid matrices, with ``similarity.cosine_cols``' row arithmetic, so
+    the probe sets are the ones a Spark-side ranking gives bit for bit."""
+    n_q, n = len(q_mat), len(cents)
+    sims = _cosine_rows(np.repeat(q_mat, n, axis=0), np.tile(cents, (n_q, 1)))
+    return np.argsort(-sims.reshape(n_q, n), axis=1, kind="stable")[:, :n_probe]
 
 
 def ivf_search(
@@ -304,22 +301,19 @@ def ivf_search(
     """Top-k by cosine, scanning only the n_probe nearest inverted lists.
 
     queries: (query_id, qe array<double>). Output: like similarity.topk.
-
-    r14 serving shape (guide §2.4): the bounded probe relation
-    (n_queries × n_probe rows) is collected and rides the scan kernel's
-    closure — the inverted lists are scanned IN PLACE (partition-pruned
-    by the list filter on a loaded index) instead of cogroup-Exchanged
-    on list_id per probe. The scoring is pinned by the exhaustive twin's
-    value oracle (``scripts/parity_snapshot.py:ANN_EXHAUSTIVE_TWINS``)."""
-    from .similarity import collect_probe_map, probed_scan_topk, raw_topk_scorer
-
-    probe_map = collect_probe_map(probe_lists(centroids, queries, n_probe), "list_id")
-    return probed_scan_topk(
+    The query batch and the centroids are collected once; the lists are
+    scanned in place by ``similarity.search`` (partition-pruned by the
+    list filter on a loaded index)."""
+    cents = centroid_matrix(centroids)
+    q_ids, q_mat = query_batch(queries)
+    return search(
+        raw_scorer,
         assigned.select("list_id", "vec_id", "e"),
-        probe_map,
+        "list_id",
+        q_ids,
+        q_mat,
+        lambda qm: ivf_route(qm, cents, n_probe),
         k,
-        key="list_id",
-        scorer=raw_topk_scorer(k),
     )
 
 
@@ -608,11 +602,9 @@ def _commit_delta(
     codec: IndexCodec, spark, root: str, batch: DataFrame, batch_id: str
 ) -> tuple[float, int, float | None]:
     # one centroids read serves both the assignment collect and the
-    # error/residual join; the sort is driver-side (n_list rows), which
-    # skips orderBy's range-partitioning sample job
+    # error/residual join
     centroids = spark.read.parquet(f"{root}/centroids")
-    cent_rows = sorted(centroids.collect(), key=lambda r: r["list_id"])  # bounded-collect: n_list rows
-    cents = np.array([r["centroid"] for r in cent_rows], dtype=np.float64)
+    cents = centroid_matrix(centroids)
     quantizer = (
         codec.load_quantizer(spark, f"{root}/{codec.quantizer_dir}")
         if codec.quantizer_dir
@@ -719,12 +711,12 @@ def retrain_index(
         corpus = loaded.select("vec_id", "e")
     else:
         old_centroids = spark.read.parquet(f"{old_root}/centroids")
-    cent_rows = old_centroids.collect()  # bounded-collect: n_list rows
+    old_cents = centroid_matrix(old_centroids)
     if n_list is None:
-        n_list = len(cent_rows)
+        n_list = len(old_cents)
     geom = codec.geometry(spark, old_root) if codec.geometry else {}
     geom.update({k: v for k, v in geometry.items() if v is not None})
-    trained = train_index(codec, corpus, len(cent_rows[0]["centroid"]), n_list, **geom)
+    trained = train_index(codec, corpus, old_cents.shape[1], n_list, **geom)
     gen = _next_generation(spark, path)
     err, n = _write_tree(codec, *trained, f"{path}/{gen}")
     _write_pointer(spark, path, gen)

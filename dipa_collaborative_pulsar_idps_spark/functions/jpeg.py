@@ -282,14 +282,8 @@ class _BitReader:
         self.marker = None
 
 
-def _extend(v: int, size: int) -> int:
-    """ITU T.81 EXTEND: map *size*-bit magnitude to signed value."""
-    if size == 0:
-        return 0
-    return v if v >= (1 << (size - 1)) else v - (1 << size) + 1
-
-
-#: EXTEND as tables (hot-loop form): _EXT_HALF[s] = 1 << (s-1),
+#: ITU T.81 EXTEND (a *size*-bit magnitude to its signed value) as tables
+#: (hot-loop form): _EXT_HALF[s] = 1 << (s-1),
 #: _EXT_BIAS[s] = (1 << s) - 1 — `v if v >= HALF[s] else v - BIAS[s]`.
 _EXT_HALF = [0] + [1 << (s - 1) for s in range(1, 17)]
 _EXT_BIAS = [0] + [(1 << s) - 1 for s in range(1, 17)]

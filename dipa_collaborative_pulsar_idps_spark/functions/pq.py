@@ -23,15 +23,13 @@ quantizes ``v − centroid[list_id]``, not the raw vector — the coarse
 quantizer absorbs the between-list spread, so the product quantizer's
 full dynamic range covers only the within-list residual, the standard
 recall lever at fixed m/ksub. Train the composite's codebooks with
-:func:`train_pq_residual`; ADC scoring adds the centroid back per
-(query, list) inside the cogrouped kernel. The flat-PQ path
+:func:`train_pq_residual`; :func:`adc_scorer` adds the centroid back per
+(query, list) inside the scan kernel. The flat-PQ path
 (:func:`pq_search_adc`) stays raw-vector — there is no coarse quantizer
 to take a residual against.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -46,7 +44,7 @@ from .ivf import (
     retrain_index,
     save_index,
 )
-from .similarity import topk
+from .similarity import flat_keyed, flat_route, query_batch, search, topk
 
 #: Hard bound on the driver-side query batch for the ADC scan — queries are
 #: the small serving-side input by construction (same bound as IVF training).
@@ -332,6 +330,46 @@ def pq_reconstruct(codebooks: np.ndarray, codes: np.ndarray) -> np.ndarray:
     return out
 
 
+def adc_scorer(codebooks: np.ndarray, cents: np.ndarray | None = None):
+    """``similarity.search`` scorer over PQ codes: the ADC scan, cosine
+    computed entirely from code gathers against the reconstruction v̂.
+
+    Per probed group a (Q, m, ksub) lookup table of query-subvector ·
+    codeword dot products is built, and a code row's score is m gathers:
+
+        q·v̂   = q·c + Σⱼ lut[j, codeⱼ]
+        ‖v̂‖² = ‖c‖² + 2·Σⱼ cl[j, codeⱼ] + Σⱼ n2[j, codeⱼ]
+
+    with c = ``cents[list_id]`` for RESIDUAL codes (IVFADC, r11: v̂ =
+    c + r̂, cl[j, code] = c_subⱼ · codewordⱼ) and c = 0 for flat PQ,
+    where every c term is an exact zero and the sums reduce to the plain
+    ADC identity cos(q, v̂) = Σ lut / (‖q‖·sqrt(Σ n2)) (pinned by
+    tests/test_dedup.py::test_pq_adc_equals_reconstructed_cosine). The
+    arithmetic is elementwise after the small LUT matmuls, so scores do
+    not depend on how the scan chunks the rows."""
+    m, ksub, dsub = codebooks.shape
+    n2 = (codebooks**2).sum(2)
+
+    def score(qm: np.ndarray, lid: int, pdf: pd.DataFrame):
+        c = np.zeros(m * dsub) if cents is None else cents[lid]
+        qn = np.sqrt((qm**2).sum(1))
+        codes = np.array(pdf["codes"].tolist(), dtype=np.int64)
+        lut = np.stack(
+            [qm[:, j * dsub : (j + 1) * dsub] @ codebooks[j].T for j in range(m)],
+            axis=1,
+        )
+        cl = np.stack([c[j * dsub : (j + 1) * dsub] @ codebooks[j].T for j in range(m)])
+        ip = np.repeat((qm @ c)[:, None], len(codes), axis=1)
+        vn2 = np.full(len(codes), float(c @ c))
+        for j in range(m):
+            ip += lut[:, j, :][:, codes[:, j]]
+            vn2 += 2.0 * cl[j][codes[:, j]] + n2[j][codes[:, j]]
+        cos = ip / np.maximum(qn[:, None] * np.sqrt(np.maximum(vn2, 0.0))[None, :], 1e-12)
+        return pdf["vec_id"].to_numpy(dtype=np.int64), cos
+
+    return score
+
+
 def pq_search_adc(
     encoded: DataFrame,
     codebooks: np.ndarray,
@@ -339,108 +377,21 @@ def pq_search_adc(
     k: int = 5,
     rotate: np.ndarray | None = None,
 ) -> DataFrame:
-    """ADC top-k scan: approximate cosine between each query and every
-    encoded vector, computed entirely from code gathers.
-
-    cos(q, v̂) = (Σ_j LUT_ip[j, code_j]) / (‖q‖ · sqrt(Σ_j n2[j, code_j]))
-    where v̂ is the reconstruction — exact cosine against the DEQUANTIZED
-    vector, never materializing it (the identity is pinned by
-    tests/test_dedup.py::test_pq_adc_equals_reconstructed_cosine).
-
-    queries: (query_id, qe). Collected to the driver under a hard
+    """Flat ADC top-k scan (:func:`adc_scorer`) over encoded (vec_id,
+    codes). queries: (query_id, qe), collected under a hard
     ``_MAX_QUERY_BATCH`` bound (the serving batch is the small side by
-    construction); each corpus partition emits only its per-partition
-    top-k per query, then ``topk`` merges globally.
+    construction).
 
     ``rotate`` (r13 opt): an optional (d, d) rotation applied to the
     collected query matrix on the driver — ``q_mat @ R``, the exact
     numpy product :func:`rotate_vectors` computes inside its Arrow UDF,
-    so results are bit-identical. The serving batch is bounded and
-    collected here anyway; rotating it through a distributed Python-UDF
-    pass cost a whole extra worker round-trip per probe (guide §4 — the
-    boundary crossing, not the matmul, was the cost).
+    so results are bit-identical without a Python-worker pass.
     """
-    m, ksub, dsub = codebooks.shape
-    q_rows = queries.limit(_MAX_QUERY_BATCH + 1).collect()  # bounded-collect: serving batch ≤ _MAX_QUERY_BATCH, enforced below
-    if len(q_rows) > _MAX_QUERY_BATCH:
-        raise ValueError(
-            f"query batch exceeds {_MAX_QUERY_BATCH}; chunk the serving batch"
-        )
-    if not q_rows:  # empty serving batch (e.g. chunked_search on an empty set)
-        return queries.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine double, rk int"
-        )
-    q_ids = np.array([r.query_id for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r.qe for r in q_rows], dtype=np.float64)  # (Q, d)
-    if rotate is not None:
+    q_ids, q_mat = query_batch(queries, _MAX_QUERY_BATCH)
+    if rotate is not None and len(q_ids):
         q_mat = q_mat @ np.asarray(rotate, dtype=np.float64)
-    q_norm = np.sqrt((q_mat**2).sum(1))
-    # (Q, m, ksub) inner-product LUT + (m, ksub) codeword squared norms
-    lut = np.stack(
-        [q_mat[:, j * dsub : (j + 1) * dsub] @ codebooks[j].T for j in range(m)],
-        axis=1,
-    )
-    n2 = (codebooks**2).sum(2)
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            codes = np.array(pdf["codes"].tolist(), dtype=np.int64)  # (B, m)
-            ip = np.zeros((len(q_ids), len(codes)))
-            vn2 = np.zeros(len(codes))
-            for j in range(m):
-                ip += lut[:, j, :][:, codes[:, j]]
-                vn2 += n2[j][codes[:, j]]
-            denom = np.maximum(q_norm[:, None] * np.sqrt(vn2)[None, :], 1e-12)
-            cos = ip / denom
-            vec_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            out_q, out_n, out_c = [], [], []
-            # self-excluded, tie-broken by ascending id — the same order the
-            # global topk window applies, so the per-partition cut is exact.
-            for row, q in enumerate(q_ids):
-                keep = vec_ids != q
-                s, ids = cos[row, keep], vec_ids[keep]
-                part = np.lexsort((ids, -s))[:k]
-                out_q.append(np.full(len(part), q))
-                out_n.append(ids[part])
-                out_c.append(s[part])
-            if not out_q:
-                continue
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "cosine": np.concatenate(out_c),
-                }
-            )
-
-    return topk(
-        encoded.mapInPandas(
-            scan, "query_id long, neighbor_id long, cosine double"
-        ),
-        k,
-    )
-
-
-def pq_search_adc_chunked(
-    encoded: DataFrame,
-    codebooks: np.ndarray,
-    queries: DataFrame,
-    k: int = 5,
-    chunk_size: int = _MAX_QUERY_BATCH,
-) -> DataFrame:
-    """ADC serving for query sets LARGER than ``_MAX_QUERY_BATCH``: the
-    chunking driver around :func:`pq_search_adc` (bounded batches through
-    ``similarity.chunked_search``, per-chunk top-k unioned — exact because
-    chunk query sets are disjoint). Each chunk rescans the code column
-    (m bytes/row); persist ``encoded`` before calling when serving many
-    chunks so the scan is a cache read."""
-    from .similarity import chunked_search
-
-    chunk_size = min(chunk_size, _MAX_QUERY_BATCH)
-    return chunked_search(
-        queries, lambda q: pq_search_adc(encoded, codebooks, q, k), chunk_size
+    return search(
+        adc_scorer(codebooks), flat_keyed(encoded, "codes"), "key", q_ids, q_mat, flat_route, k
     )
 
 
@@ -607,90 +558,46 @@ def ivfpq_search_encoded(
 ) -> DataFrame:
     """IVF-PQ ADC scan over a PRE-encoded corpus (vec_id, codes, list_id)
     — the serving half of the index: no raw-vector column anywhere, no
-    per-batch encode pass. Scans the probed lists in place like
-    ivf_search (probe map in the kernel closure), but the kernel gathers
-    from the per-query PQ lookup table instead of BLAS-ing raw vectors.
+    per-batch encode pass. Probes like :func:`ivf.ivf_search` and scores
+    the residual codes with :func:`adc_scorer` (the centroid matrix rides
+    the kernel closure). The query batch and the centroids are collected
+    once."""
+    from .ivf import centroid_matrix, ivf_route
 
-    IVFADC (r11): codes are RESIDUAL codes, so the reconstruction is
-    v̂ = c + r̂ with c = centroid[list_id]. Per (query, list) the kernel
-    adds the q·c term and the per-list codeword cross table
-    cl[j, code] = c_subⱼ · codewordⱼ back into the LUT algebra:
-
-        q·v̂   = q·c + Σⱼ lut[j, codeⱼ]
-        ‖v̂‖² = ‖c‖² + 2·Σⱼ cl[j, codeⱼ] + Σⱼ n2[j, codeⱼ]
-
-    The centroid matrix rides the kernel closure (n_list·d doubles —
-    bounded by construction), so the per-list terms cost one small matmul
-    per Arrow group, not a join."""
-    m, ksub, dsub = codebooks.shape
-
-    from .ivf import probe_lists
-    from .similarity import collect_probe_map, probed_scan_topk
-
-    cent_rows = sorted(centroids.collect(), key=lambda r: r["list_id"])  # bounded-collect: n_list rows
-    n_lists = max(r["list_id"] for r in cent_rows) + 1
-    cents = np.zeros((n_lists, len(cent_rows[0]["centroid"])), dtype=np.float64)
-    for r in cent_rows:
-        cents[r["list_id"]] = r["centroid"]
-
-    # r14 serving shape (guide §2.4): the bounded probe relation rides the
-    # ADC kernel's closure — the code relation is scanned in place
-    # (partition-pruned by the list filter on a loaded index) instead of
-    # cogroup-Exchanged on list_id per probe. Per-(list, query) algebra is
-    # unchanged (and fully elementwise after the tiny LUT matmuls, so
-    # scores are chunking-independent); the exhaustive twin's brute-force
-    # value oracle re-proves the equality.
-    probe_map = collect_probe_map(probe_lists(centroids, queries, n_probe), "list_id")
-
-    n2 = (codebooks**2).sum(2)
-
-    def scorer(qid: np.ndarray, qm: np.ndarray, lid: int, codes_pdf: pd.DataFrame):
-        c = cents[lid]  # (d,)
-        qn = np.sqrt((qm**2).sum(1))
-        codes = np.array(codes_pdf["codes"].tolist(), dtype=np.int64)
-        nid = codes_pdf["vec_id"].to_numpy(dtype=np.int64)
-        lut = np.stack(
-            [qm[:, j * dsub : (j + 1) * dsub] @ codebooks[j].T for j in range(m)],
-            axis=1,
-        )
-        # per-list constants: q·c per probing query, c·codeword cross LUT,
-        # and ‖c‖² — the residual-decomposition terms
-        qc = qm @ c  # (Q,)
-        cl = np.stack(
-            [c[j * dsub : (j + 1) * dsub] @ codebooks[j].T for j in range(m)]
-        )  # (m, ksub)
-        c2 = float(c @ c)
-        ip = np.repeat(qc[:, None], len(codes), axis=1)
-        vn2 = np.full(len(codes), c2)
-        for j in range(m):
-            ip += lut[:, j, :][:, codes[:, j]]
-            vn2 += 2.0 * cl[j][codes[:, j]] + n2[j][codes[:, j]]
-        cos = ip / np.maximum(qn[:, None] * np.sqrt(np.maximum(vn2, 0.0))[None, :], 1e-12)
-        out_q, out_n, out_c = [], [], []
-        for row, q in enumerate(qid):
-            keep = nid != q
-            s, ids = cos[row, keep], nid[keep]
-            part = np.lexsort((ids, -s))[:k]
-            out_q.append(np.full(len(part), q))
-            out_n.append(ids[part])
-            out_c.append(s[part])
-        if not out_q:
-            return None
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(out_q),
-                "neighbor_id": np.concatenate(out_n),
-                "cosine": np.concatenate(out_c),
-            }
-        )
-
-    return probed_scan_topk(
+    cents = centroid_matrix(centroids)
+    q_ids, q_mat = query_batch(queries)
+    return search(
+        adc_scorer(codebooks, cents),
         enc.select("list_id", "vec_id", "codes"),
-        probe_map,
+        "list_id",
+        q_ids,
+        q_mat,
+        lambda qm: ivf_route(qm, cents, n_probe),
         k,
-        key="list_id",
-        scorer=scorer,
     )
+
+
+def refine_exact(
+    cand: DataFrame, corpus: DataFrame, queries: DataFrame, k: int
+) -> DataFrame:
+    """Exact re-ranking (FAISS ``IndexRefineFlat``): the bounded candidate
+    set (query_id, neighbor_id) is rescored against the RAW vectors of
+    ``corpus`` (vec_id, e) and cut back to top-k. Its cost is independent
+    of corpus size: one broadcast-hash join of the tiny candidate set
+    against the corpus scan (no shuffle of the big side) and an exact
+    cosine per candidate row."""
+    from .similarity import cosine_cols
+
+    cand = cand.select("query_id", "neighbor_id")
+    fetched = corpus.join(
+        F.broadcast(cand), corpus["vec_id"] == cand["neighbor_id"]
+    ).select("query_id", "neighbor_id", "e")
+    rescored = fetched.join(F.broadcast(queries), "query_id").select(
+        "query_id",
+        "neighbor_id",
+        cosine_cols(F.col("qe"), F.col("e")).alias("cosine"),
+    )
+    return topk(rescored, k)
 
 
 def ivfpq_search_encoded_refined(
@@ -703,40 +610,24 @@ def ivfpq_search_encoded_refined(
     n_probe: int = 4,
     refine_factor: int = 4,
 ) -> DataFrame:
-    """IVFADC + exact re-ranking (FAISS ``IndexRefineFlat``): the ADC scan
-    over-fetches ``k · refine_factor`` candidates per query, then that
-    bounded candidate set (n_queries · k · refine_factor id rows) is
-    exactly rescored against the RAW vectors and cut back to top-k.
+    """IVFADC + exact re-ranking: the ADC scan over-fetches ``k ·
+    refine_factor`` candidates per query, then :func:`refine_exact`
+    rescores them against the raw vectors.
 
     Why this is the production serving shape: PQ scores are lossy — at
     fixed (m, ksub) the quantization error reorders near-tied true
     neighbors inside the probed lists, which is exactly the loss refine
     recovers (coarse-probe misses it cannot: a true neighbor in an
     unprobed list never reaches the candidate set — raise ``n_probe``
-    for that). The refine cost is independent of corpus size: one
-    broadcast-hash join of the tiny candidate set against the corpus
-    scan (no shuffle of the big side) + an exact cosine per candidate
-    row, all JVM-side whole-stage codegen.
+    for that).
 
     ``corpus``: (vec_id, e) — the raw vectors, which the (lossy) index
     cannot reconstruct; in a lake deployment this is the embeddings
-    table the index was built from, partition-prunable by vec_id.
-    Pattern source: FAISS ``IndexRefineFlat`` (public), re-expressed as
-    broadcast-hash join + codegen cosine + window top-k."""
-    from .similarity import cosine_cols
-
+    table the index was built from, partition-prunable by vec_id."""
     cand = ivfpq_search_encoded(
         enc, centroids, codebooks, queries, k=k * refine_factor, n_probe=n_probe
-    ).select("query_id", "neighbor_id")
-    fetched = corpus.join(
-        F.broadcast(cand), corpus["vec_id"] == cand["neighbor_id"]
-    ).select("query_id", "neighbor_id", "e")
-    rescored = fetched.join(F.broadcast(queries), "query_id").select(
-        "query_id",
-        "neighbor_id",
-        cosine_cols(F.col("qe"), F.col("e")).alias("cosine"),
     )
-    return topk(rescored, k)
+    return refine_exact(cand, corpus, queries, k)
 
 
 def ivfpq_search_refined(

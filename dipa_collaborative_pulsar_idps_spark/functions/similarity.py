@@ -33,14 +33,19 @@ def as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
 
 
+def _cosine_rows(av: np.ndarray, bv: np.ndarray) -> np.ndarray:
+    """Cosine of each row pair of two (n, d) float64 matrices."""
+    num = np.einsum("ij,ij->i", av, bv)
+    den = np.linalg.norm(av, axis=1) * np.linalg.norm(bv, axis=1)
+    return num / den
+
+
 def _cosine_kernel(a: pd.Series, b: pd.Series) -> pd.Series:
     if not len(a):
         return pd.Series([], dtype="float64")
     av = np.array(a.tolist(), dtype=np.float64)
     bv = np.array(b.tolist(), dtype=np.float64)
-    num = np.einsum("ij,ij->i", av, bv)
-    den = np.linalg.norm(av, axis=1) * np.linalg.norm(bv, axis=1)
-    return pd.Series(num / den)
+    return pd.Series(_cosine_rows(av, bv))
 
 
 def cosine_cols(a, b):
@@ -72,150 +77,129 @@ def cosine_scores(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     )
 
 
-def chunked_search(queries: DataFrame, search_fn, chunk_size: int = 4096) -> DataFrame:
-    """Serve an arbitrarily large query set through a bounded-batch search
-    function without caller-side plumbing: stream the query rows to the
-    driver (``toLocalIterator`` — one partition resident at a time), slice
-    into ≤ ``chunk_size`` batches, run ``search_fn(chunk_df)`` per batch,
-    and union the per-chunk results. Per-query top-k is chunk-local AND
-    globally exact because chunk query sets are disjoint — the union IS
-    the full answer, no re-ranking needed.
-
-    ``search_fn`` is any (queries: DataFrame) -> DataFrame search — the
-    PQ ADC scan (whose LUT is built from a driver-collected batch and
-    therefore needs the bound), or the LSH/IVF paths when their broadcast
-    query side should be kept small. Driver memory is O(chunk_size) query
-    rows plus each chunk's closure state; the corpus-side cost is one scan
-    per chunk, so persist the corpus/codes frame across chunks when
-    serving many."""
-    spark = queries.sparkSession
-    schema = queries.schema
-    out, buf = None, []
-
-    def flush(buf):
-        nonlocal out
-        res = search_fn(spark.createDataFrame(buf, schema))
-        out = res if out is None else out.unionByName(res)
-
-    for row in queries.toLocalIterator():  # bounded: ≤ chunk_size rows buffered
-        buf.append(row)
-        if len(buf) >= chunk_size:
-            flush(buf)
-            buf = []
-    if buf or out is None:
-        flush(buf)
-    return out
-
-
 def topk(scored: DataFrame, k: int) -> DataFrame:
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= k)
 
 
-def collect_probe_map(
-    probes: DataFrame, key: str
-) -> dict[int, tuple[np.ndarray, np.ndarray]]:
-    """Collect the BOUNDED probe relation (*key*, query_id, qe) into
-    ``{key: (query_ids int64[], query_matrix float64[Q_k, d])}`` for
-    closure shipping — the r14 serving shape (guide §2.4/§3.1): the probe
-    side is ``n_queries × n_probe`` rows by construction (the serving
-    batch), so instead of COGROUPING it with the corpus on the key — an
-    Exchange of the whole code/vector relation per probe — the tiny probe
-    map rides the scan kernel's closure and the corpus is scanned IN
-    PLACE (partition-pruned by the key filter for hive-partitioned
-    indexes). Doubles survive the driver round trip bit-exactly, and the
-    per-(key, query) scoring arithmetic is row-independent, so scores are
-    unchanged. Fields are read by name: the key and ``query_id`` are
-    both int64, so a positional read would silently swap them under a
-    reordered select."""
-    rows = probes.collect()  # bounded-collect: n_queries × n_probe rows
-    acc: dict[int, tuple[list, list]] = {}
-    for r in rows:
-        ids, vecs = acc.setdefault(int(r[key]), ([], []))
-        ids.append(r["query_id"])
-        vecs.append(r["qe"])
-    return {
-        key: (np.array(ids, dtype=np.int64), np.array(vecs, dtype=np.float64))
-        for key, (ids, vecs) in acc.items()
-    }
+def query_batch(
+    queries: DataFrame, bound: int | None = None
+) -> tuple[np.ndarray, np.ndarray]:
+    """(query ids int64[Q], query matrix float64[Q, d]) of a (query_id, qe)
+    serving batch, in one bounded collect. With ``bound``, a batch of more
+    than ``bound`` rows is refused (at most ``bound + 1`` rows are read).
+    Doubles survive the driver round trip bit-exactly."""
+    src = queries if bound is None else queries.limit(bound + 1)
+    rows = src.select("query_id", "qe").collect()  # bounded-collect: the serving batch
+    if bound is not None and len(rows) > bound:
+        raise ValueError(f"query batch exceeds {bound}; chunk the serving batch")
+    q_ids = np.array([r["query_id"] for r in rows], dtype=np.int64)
+    return q_ids, np.array([r["qe"] for r in rows], dtype=np.float64)
 
 
-def probed_scan_topk(
-    corpus_keyed: DataFrame,
-    probe_map: dict[int, tuple[np.ndarray, np.ndarray]],
-    k: int,
-    key: str,
+def _signature(mat: np.ndarray, planes: np.ndarray) -> np.ndarray:
+    """Hyperplane bucket of each row: bit j set where row · plane_j > 0."""
+    return ((mat @ planes.T) > 0) @ (1 << np.arange(len(planes)))
+
+
+def lsh_route(q_mat: np.ndarray, n_planes: int, probe_radius: int) -> np.ndarray:
+    """(Q, n_masks) buckets each query probes: its own signature XOR every
+    multi-probe mask (up to *probe_radius* flipped bits)."""
+    planes = np.array(_planes(q_mat.shape[1], n_planes), dtype=np.float64)
+    masks = np.array(_probe_masks(n_planes, probe_radius))
+    return _signature(q_mat, planes)[:, None] ^ masks[None, :]
+
+
+def flat_route(q_mat: np.ndarray) -> np.ndarray:
+    """The route of a flat scan: every query probes key 0, the constant
+    key column of :func:`flat_keyed`."""
+    return np.zeros((len(q_mat), 1), dtype=np.int64)
+
+
+def flat_keyed(encoded: DataFrame, payload: str) -> DataFrame:
+    """(key = 0, vec_id, *payload*): a whole relation as one key."""
+    return encoded.select(F.lit(0).alias("key"), "vec_id", payload)
+
+
+def _cut(qid: np.ndarray, nid: np.ndarray, sims: np.ndarray, k: int) -> pd.DataFrame:
+    """Per-query top-k of one scored group, self-match excluded, in the
+    (score DESC, id ASC) order of the final :func:`topk` window."""
+    out_q, out_n, out_c = [], [], []
+    for row, q in enumerate(qid):
+        keep = nid != q
+        s, ids = sims[row, keep], nid[keep]
+        part = np.lexsort((ids, -s))[:k]
+        out_q.append(np.full(len(part), q))
+        out_n.append(ids[part])
+        out_c.append(s[part])
+    return pd.DataFrame(
+        {
+            "query_id": np.concatenate(out_q),
+            "neighbor_id": np.concatenate(out_n),
+            "cosine": np.concatenate(out_c),
+        }
+    )
+
+
+def search(
     scorer,
+    keyed: DataFrame,
+    key: str,
+    q_ids: np.ndarray,
+    q_mat: np.ndarray,
+    route,
+    k: int,
 ) -> DataFrame:
-    """Top-k candidate scoring WITHOUT the cogroup exchange: filter
-    ``corpus_keyed`` to the probed keys (partition pruning on
-    hive-partitioned list/code relations), ``mapInPandas`` over it with
-    the probe map in the closure, and score each batch's per-key groups
-    with ``scorer(query_ids, query_matrix, key_value, group_pdf) ->
-    DataFrame(query_id, neighbor_id, cosine)``. Each group emits only its
-    per-group top-k (lossless: top-k of a union is the top-k of per-part
-    top-ks under the same (cosine DESC, neighbor_id ASC) order the global
-    :func:`topk` window applies), so the final window merges
-    ``n_probe · k``-scale id rows per query."""
-    spark = corpus_keyed.sparkSession
-    if not probe_map:
-        return spark.createDataFrame(
+    """Top-k neighbors of a query batch: the one serving path of every ANN
+    family (IVF, IVF-PQ, IVF+SQ8, LSH, flat PQ/OPQ and SQ). Output like
+    :func:`topk`.
+
+    The route runs on the driver: ``route(q_mat)`` gives the (Q, r) keys
+    each query probes (``ivf.ivf_route``, :func:`lsh_route`,
+    :func:`flat_route`). Each key's probing queries ride the scan kernel's
+    closure, and ``keyed`` (*key*, vec_id, payload) is scanned in place:
+    filtered to the probed keys (partition pruning on a hive-partitioned
+    index) and ``mapInPandas``-ed, with no exchange of the index relation.
+    ``scorer(q_mat, key_value, group_pdf) -> (neighbor ids, (Q_k, n)
+    scores)`` scores one key's rows of a batch; the group then keeps only
+    its per-query top-k (:func:`_cut`). That is lossless, because the
+    top-k of a union is the top-k of its parts' top-ks under the same
+    order, so the final window merges ``r · k``-scale rows per query."""
+    probes: dict[int, tuple[np.ndarray, np.ndarray]] = {}
+    if len(q_ids):
+        keys = route(q_mat)
+        for kv in np.unique(keys):
+            hit = (keys == kv).any(axis=1)
+            probes[int(kv)] = (q_ids[hit], q_mat[hit])
+    if not probes:
+        return keyed.sparkSession.createDataFrame(
             [], "query_id long, neighbor_id long, cosine double, rk int"
         )
-    keys = sorted(probe_map)
 
     def scan(batches):
         for pdf in batches:
-            if not len(pdf):
-                continue
             outs = []
             for kv, grp in pdf.groupby(key, sort=False):
-                probe = probe_map.get(int(kv))
-                if probe is None:  # key not probed (filter already dropped it)
-                    continue
-                res = scorer(probe[0], probe[1], int(kv), grp)
-                if res is not None and len(res):
-                    outs.append(res)
+                qid, qm = probes[int(kv)]
+                outs.append(_cut(qid, *scorer(qm, int(kv), grp), k))
             if outs:
                 yield pd.concat(outs, ignore_index=True)
 
-    scored = corpus_keyed.where(F.col(key).isin(keys)).mapInPandas(
+    scored = keyed.where(F.col(key).isin(sorted(probes))).mapInPandas(
         scan, "query_id long, neighbor_id long, cosine double"
     )
     return topk(scored, k)
 
 
-def raw_topk_scorer(k: int):
-    """Per-group exact-cosine top-k scorer for :func:`probed_scan_topk`:
-    normalized BLAS matmul, self-excluded, (−score, id) lexsort cut. The
-    scoring is pinned by the exhaustive twins' value oracles
+def raw_scorer(qm: np.ndarray, _kv: int, pdf: pd.DataFrame):
+    """:func:`search` scorer over raw vectors ``e``: exact cosine by one
+    normalized BLAS matmul. Pinned by the exhaustive twins' value oracles
     (``scripts/parity_snapshot.py:ANN_EXHAUSTIVE_TWINS``)."""
-
-    def scorer(qid: np.ndarray, qm: np.ndarray, _kv: int, corpus_pdf: pd.DataFrame):
-        nid = corpus_pdf["vec_id"].to_numpy(dtype=np.int64)
-        em = np.array(corpus_pdf["e"].tolist(), dtype=np.float64)
-        sims = (qm / np.linalg.norm(qm, axis=1, keepdims=True)) @ (
-            em / np.linalg.norm(em, axis=1, keepdims=True)
-        ).T
-        out_q, out_n, out_c = [], [], []
-        for row, q in enumerate(qid):
-            keep = nid != q
-            s, ids = sims[row, keep], nid[keep]
-            part = np.lexsort((ids, -s))[:k]
-            out_q.append(np.full(len(part), q))
-            out_n.append(ids[part])
-            out_c.append(s[part])
-        if not out_q:
-            return None
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(out_q),
-                "neighbor_id": np.concatenate(out_n),
-                "cosine": np.concatenate(out_c),
-            }
-        )
-
-    return scorer
+    em = np.array(pdf["e"].tolist(), dtype=np.float64)
+    sims = (qm / np.linalg.norm(qm, axis=1, keepdims=True)) @ (
+        em / np.linalg.norm(em, axis=1, keepdims=True)
+    ).T
+    return pdf["vec_id"].to_numpy(dtype=np.int64), sims
 
 
 def hyperplane_signature(df: DataFrame, vec_col: str, dim: int, n_planes: int = 8) -> DataFrame:
@@ -227,8 +211,7 @@ def hyperplane_signature(df: DataFrame, vec_col: str, dim: int, n_planes: int = 
         if not len(v):
             return pd.Series([], dtype="int32")
         mat = np.array(v.tolist(), dtype=np.float64)  # (n, d)
-        bits = (mat @ planes.T) > 0  # (n, P) — all planes in one matmul
-        return pd.Series((bits @ (1 << np.arange(n_planes))).astype("int32"))
+        return pd.Series(_signature(mat, planes).astype("int32"))
 
     return df.withColumn("bucket", sig(F.col(vec_col)))
 
@@ -266,35 +249,23 @@ def ann_topk_lsh(
     persisted) corpus signature frame — the production 'index once, probe
     many' shape; it must be ``hyperplane_signature(corpus, "e", dim,
     n_planes)`` for the same corpus/geometry (bit-identical by
-    construction: the signature is a deterministic function).
+    construction: the signature is a deterministic function). The query
+    batch is collected once and routed on the driver (:func:`lsh_route`).
     """
     c_sig = (
         corpus_sig
         if corpus_sig is not None
         else hyperplane_signature(corpus, "e", dim, n_planes)
     )
-    q_sig = hyperplane_signature(
-        queries.withColumnRenamed("qe", "qe").withColumn("e", F.col("qe")), "e", dim, n_planes
-    ).drop("e")
-    masks = _probe_masks(n_planes, probe_radius)
-    # Probe masks are distinct and every corpus vector lives in exactly one
-    # bucket, so (query, probe_bucket) pairs are already unique — no
-    # distinct() needed. r14 serving shape: the bounded probe relation
-    # (n_queries × masks rows) is collected and rides the scan kernel's
-    # closure — the bucketed corpus signature is scanned in place instead
-    # of cogroup-Exchanged on the bucket per probe (scoring arithmetic
-    # unchanged; the exhaustive configuration's value oracle re-proves it).
-    probed = q_sig.withColumn(
-        "bucket",
-        F.explode(F.array(*[F.col("bucket").bitwiseXOR(F.lit(m)) for m in masks])),
-    ).select("bucket", "query_id", "qe")
-    probe_map = collect_probe_map(probed, "bucket")
-    return probed_scan_topk(
+    q_ids, q_mat = query_batch(queries)
+    return search(
+        raw_scorer,
         c_sig.select("bucket", "vec_id", "e"),
-        probe_map,
+        "bucket",
+        q_ids,
+        q_mat,
+        lambda qm: lsh_route(qm, n_planes, probe_radius),
         k,
-        key="bucket",
-        scorer=raw_topk_scorer(k),
     )
 
 
@@ -490,7 +461,7 @@ def cosine_pairs_lsh(
     other = sig.select("bucket", F.col("vec_id").alias("id_b"), F.col("e").alias("eb"))
 
     # Verification cogroups on the bucket and runs ONE normalized A @ Bᵀ per
-    # bucket (normalized BLAS, as in raw_topk_scorer): each vector crosses Arrow once
+    # bucket (normalized BLAS, as in raw_scorer): each vector crosses Arrow once
     # per probed bucket instead of once per candidate PAIR, and the cosine is
     # BLAS instead of a per-element interpreted HOF — the difference between
     # O(candidates·d) lambda evals and a handful of matmuls.

@@ -22,8 +22,6 @@ kernel and the SQL oracle quantize identically bit-for-bit.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -31,7 +29,7 @@ from pyspark.sql import functions as F
 
 from .ivf import IndexCodec, append_batch, load_index, retrain_index, save_index
 from .pq import _MAX_QUERY_BATCH
-from .similarity import topk
+from .similarity import flat_keyed, flat_route, query_batch, search
 
 _LEVELS = 255  # uint8 code range [0, 255]
 
@@ -83,63 +81,35 @@ def sq_reconstruct(bounds: np.ndarray, codes: np.ndarray) -> np.ndarray:
     return bounds[0] + codes.astype(np.float64) / _LEVELS * _scale(bounds)
 
 
+def sq_scorer(bounds: np.ndarray):
+    """``similarity.search`` scorer over SQ codes: exact cosine between
+    each query and every DEQUANTIZED vector (the same
+    score-the-reconstruction contract as the ADC scan, pinned bit-level by
+    the oracle), one transient B×d float block per scanned group."""
+    vmin, s = bounds[0], _scale(bounds)
+
+    def score(qm: np.ndarray, _kv: int, pdf: pd.DataFrame):
+        q_unit = qm / np.maximum(np.linalg.norm(qm, axis=1, keepdims=True), 1e-12)
+        codes = np.array(pdf["codes"].tolist(), dtype=np.float64)
+        recon = vmin + codes / _LEVELS * s
+        norms = np.maximum(np.linalg.norm(recon, axis=1), 1e-12)
+        return pdf["vec_id"].to_numpy(dtype=np.int64), q_unit @ (recon / norms[:, None]).T
+
+    return score
+
+
 def sq_search(
     encoded: DataFrame,
     bounds: np.ndarray,
     queries: DataFrame,
     k: int = 5,
 ) -> DataFrame:
-    """Top-k scan over SQ codes: exact cosine between each query and every
-    DEQUANTIZED vector (the same score-the-reconstruction contract as the
-    ADC scan, pinned bit-level by the oracle). queries: (query_id, qe),
-    bounded like the ADC serving batch; each corpus partition dequantizes
-    its codes batch-at-a-time and emits only per-partition top-k."""
-    q_rows = queries.limit(_MAX_QUERY_BATCH + 1).collect()  # bounded-collect: serving batch ≤ _MAX_QUERY_BATCH
-    if len(q_rows) > _MAX_QUERY_BATCH:
-        raise ValueError(
-            f"query batch exceeds {_MAX_QUERY_BATCH}; chunk the serving batch"
-        )
-    if not q_rows:
-        return queries.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine double, rk int"
-        )
-    q_ids = np.array([r.query_id for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r.qe for r in q_rows], dtype=np.float64)
-    q_unit = q_mat / np.maximum(
-        np.linalg.norm(q_mat, axis=1, keepdims=True), 1e-12
-    )
-    vmin, s = bounds[0], _scale(bounds)
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            codes = np.array(pdf["codes"].tolist(), dtype=np.float64)
-            recon = vmin + codes / _LEVELS * s  # (B, d) — transient, per batch
-            norms = np.maximum(np.linalg.norm(recon, axis=1), 1e-12)
-            cos = q_unit @ (recon / norms[:, None]).T
-            vec_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            out_q, out_n, out_c = [], [], []
-            for row, q in enumerate(q_ids):
-                keep = vec_ids != q
-                sc, ids = cos[row, keep], vec_ids[keep]
-                part = np.lexsort((ids, -sc))[:k]
-                out_q.append(np.full(len(part), q))
-                out_n.append(ids[part])
-                out_c.append(sc[part])
-            if not out_q:
-                continue
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "cosine": np.concatenate(out_c),
-                }
-            )
-
-    return topk(
-        encoded.mapInPandas(scan, "query_id long, neighbor_id long, cosine double"),
-        k,
+    """Flat top-k scan over SQ codes (:func:`sq_scorer`). queries:
+    (query_id, qe), collected under the ADC serving batch's
+    ``_MAX_QUERY_BATCH`` bound."""
+    q_ids, q_mat = query_batch(queries, _MAX_QUERY_BATCH)
+    return search(
+        sq_scorer(bounds), flat_keyed(encoded, "codes"), "key", q_ids, q_mat, flat_route, k
     )
 
 
@@ -164,59 +134,23 @@ def ivf_sq_search(
     ``encoded``: (vec_id, codes, list_id) — RAW vectors SQ-encoded against
     the GLOBAL corpus bounds (``sq_encode(assigned, bounds,
     keep=("list_id",))``), NOT residuals: with every list probed the scan
-    then equals the flat :func:`sq_search` exactly, which makes the
-    exhaustive certifier carry the same full DuckDB value oracle the flat
-    SQ8 query has (queries/datapipe3.py::_SQ_TOPK_ORACLE) — unique among
-    sub-linear ANN paths. Scoring is the same dequantize-then-exact-cosine
-    contract as :func:`sq_search`.
+    then equals the flat :func:`sq_search` exactly (same
+    :func:`sq_scorer`), which makes the exhaustive certifier carry the
+    same full DuckDB value oracle the flat SQ8 query has
+    (queries/datapipe3.py::_SQ_TOPK_ORACLE) — unique among sub-linear ANN
+    paths. The query batch and the centroids are collected once."""
+    from .ivf import centroid_matrix, ivf_route
 
-    r14 serving shape (guide §2.4): the bounded probe relation is
-    collected and rides the scan kernel's closure — the code relation is
-    scanned in place (partition-pruned by the list filter on a loaded
-    index) instead of cogroup-Exchanged on list_id per probe; the numpy
-    pipeline is :func:`sq_search`'s verbatim, so the exhaustive
-    certifier's flat-SQ8 value oracle re-proves the equality."""
-    from .ivf import probe_lists
-    from .similarity import collect_probe_map, probed_scan_topk
-
-    probe_map = collect_probe_map(probe_lists(centroids, queries, n_probe), "list_id")
-    vmin, s = bounds[0], _scale(bounds)
-
-    def scorer(q_ids: np.ndarray, q_mat: np.ndarray, _kv: int, codes_pdf: pd.DataFrame):
-        # identical numpy pipeline to sq_search's scan — the exhaustive
-        # certifier (all lists probed) must equal flat SQ8 bit-for-bit
-        q_unit = q_mat / np.maximum(
-            np.linalg.norm(q_mat, axis=1, keepdims=True), 1e-12
-        )
-        codes = np.array(codes_pdf["codes"].tolist(), dtype=np.float64)
-        recon = vmin + codes / _LEVELS * s  # (B, d) — transient, per group
-        norms = np.maximum(np.linalg.norm(recon, axis=1), 1e-12)
-        cos = q_unit @ (recon / norms[:, None]).T
-        vec_ids = codes_pdf["vec_id"].to_numpy(dtype=np.int64)
-        out_q, out_n, out_c = [], [], []
-        for row, q in enumerate(q_ids):
-            keep = vec_ids != q
-            sc, ids = cos[row, keep], vec_ids[keep]
-            part = np.lexsort((ids, -sc))[:k]
-            out_q.append(np.full(len(part), q))
-            out_n.append(ids[part])
-            out_c.append(sc[part])
-        if not out_q:
-            return None
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(out_q),
-                "neighbor_id": np.concatenate(out_n),
-                "cosine": np.concatenate(out_c),
-            }
-        )
-
-    return probed_scan_topk(
+    cents = centroid_matrix(centroids)
+    q_ids, q_mat = query_batch(queries)
+    return search(
+        sq_scorer(bounds),
         encoded.select("list_id", "vec_id", "codes"),
-        probe_map,
+        "list_id",
+        q_ids,
+        q_mat,
+        lambda qm: ivf_route(qm, cents, n_probe),
         k,
-        key="list_id",
-        scorer=scorer,
     )
 
 
@@ -226,20 +160,22 @@ def ivfsq_scan_fraction(
     """The measured candidate fraction of an IVF+SQ probe: rows the probed
     lists actually hold / (n_queries × corpus) — the sub-linear claim as a
     number, recorded in PARITY beside the recall floors (the banded-dial
-    convention). One groupBy count + one broadcast join; exact."""
-    from .ivf import probe_lists
+    convention). The probes come from the serving router
+    (:func:`ivf.ivf_route`); the list sizes from one groupBy count. Exact."""
+    from .ivf import centroid_matrix, ivf_route
 
-    sizes = encoded.groupBy("list_id").agg(F.count("*").alias("n_rows"))
-    probes = probe_lists(centroids, queries, n_probe).select("list_id", "query_id")
-    row = (
-        probes.join(F.broadcast(sizes), "list_id")
-        .agg(F.sum("n_rows").alias("scanned"), F.countDistinct("query_id").alias("nq"))
-        .collect()[0]  # bounded-collect: one scalar row
-    )
-    total = encoded.count()
-    if not row["nq"] or not total:
+    cents = centroid_matrix(centroids)
+    _q_ids, q_mat = query_batch(queries)
+    sizes = np.zeros(len(cents), dtype=np.int64)
+    for r in encoded.groupBy("list_id").count().collect():  # bounded-collect: n_list rows
+        sizes[r["list_id"]] = r["count"]
+    if not len(q_mat):
         return 0.0
-    return float(row["scanned"]) / (float(row["nq"]) * float(total))
+    scanned = sizes[ivf_route(q_mat, cents, n_probe)].sum(axis=1)
+    n_q = int((scanned > 0).sum())  # a query whose probed lists are all empty is not counted
+    if not n_q:
+        return 0.0
+    return float(scanned.sum()) / (float(n_q) * float(sizes.sum()))
 
 
 def sq_reconstruction_error(corpus: DataFrame, bounds: np.ndarray) -> tuple[float, int]:

@@ -39,7 +39,3 @@ def assert_no_python_udf(df: DataFrame) -> None:
     """Hot-path queries must stay JVM-side (no row-at-a-time Python)."""
     txt = plan_text(df)
     assert "BatchEvalPython" not in txt, f"row-at-a-time Python UDF in plan!\n{txt}"
-
-
-def codegen_stage_count(df: DataFrame) -> int:
-    return plan_text(df).count("WholeStageCodegen")

@@ -5,17 +5,50 @@ oracle (candidates are exact-verified; recall at threshold 0.8 is
 sf0.01 match implies a driver match). SimHash/ANN are genuinely
 non-SQL-expressible (xxhash64/hyperplane families) → rows-only checks +
 property tests in tests/test_dedup.py.
+
+The 17 ``ann_topk_*`` queries are rows of one table (:data:`_ANN_QUERIES`)
+served by one builder over ``similarity.search``. Each row names the
+memoized index handles it serves from (the keyed relation plus its
+driver-side arrays: centroid matrix, codebooks or bounds), a scorer and
+the probe width. The query batch is memoized beside the corpus and routed
+on the driver, so once the memos are warm an ANN builder runs no Spark
+job: it only assembles the lazy scan (pinned by
+tests/test_plans.py::test_warm_ann_builders_run_no_spark_job).
 """
 
 from __future__ import annotations
 
 import os
+from typing import Callable, NamedTuple
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.dedup import minhash_near_dup_pairs, simhash_hex_portable, simhash_oracle_sql
-from ..functions.similarity import ann_topk_lsh, as_double
+from ..functions.ivf import centroid_matrix, codec_for, ivf_route, load_index
+from ..functions.pq import (
+    _residuals,
+    adc_scorer,
+    pq_encode,
+    random_rotation,
+    refine_exact,
+    rotate_vectors,
+    train_opq,
+    train_pq,
+    train_pq_residual,
+)
+from ..functions.similarity import (
+    as_double,
+    flat_keyed,
+    flat_route,
+    hyperplane_signature,
+    lsh_route,
+    query_batch,
+    raw_scorer,
+    search,
+)
+from ..functions.sq import sq_scorer
 from ..config import SCALE
 from ..memo import handles, memo
 from ..tables import Tables
@@ -166,18 +199,35 @@ def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return memo(spark, ("corpus", os.path.abspath(sf_dir)), build)
 
 
+def _queries(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ANN serving batch: the first 50 corpus vectors as (query_id, qe)."""
+    return _corpus(spark, sf_dir).where(F.col("vec_id") < 50).select(
+        F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
+    )
+
+
+def _query_batch(spark: SparkSession, sf_dir: str) -> tuple:
+    """(query ids, query matrix) of :func:`_queries`, collected once per
+    (session, sf_dir): the batch every ANN query routes on the driver."""
+    return memo(
+        spark,
+        ("ann_queries", os.path.abspath(sf_dir)),
+        lambda: query_batch(_queries(spark, sf_dir)),
+    )
+
+
 def _ivf_coarse(spark: SparkSession, sf_dir: str, n_list: int) -> tuple:
-    """(assigned persisted, centroids) for the deterministic coarse IVF
-    build over the shared corpus at ``n_list`` lists, memoized per
-    (session, sf_dir, n_list): the raw IVF, IVF-PQ and IVF+SQ8 serving
-    queries share the n_list=16 build and the IVF / IVF-PQ certifiers the
-    n_list=8 one, where each used to train its own (seeded k-means, so
-    the shared build is bit-identical)."""
+    """(assigned persisted, centroids, centroid matrix) for the
+    deterministic coarse IVF build over the shared corpus at ``n_list``
+    lists, memoized per (session, sf_dir, n_list): the raw IVF, IVF-PQ and
+    IVF+SQ8 serving queries share the n_list=16 build and the IVF / IVF-PQ
+    certifiers the n_list=8 one, where each used to train its own (seeded
+    k-means, so the shared build is bit-identical)."""
     from ..functions.ivf import build_ivf_index
 
     def build() -> tuple:
         assigned, centroids = build_ivf_index(_corpus(spark, sf_dir), dim=64, n_list=n_list)
-        return assigned.persist(), centroids
+        return assigned.persist(), centroids, centroid_matrix(centroids)
 
     return memo(spark, ("ivf_coarse", os.path.abspath(sf_dir), n_list), build)
 
@@ -215,10 +265,9 @@ def _ivfpq_build(spark: SparkSession, sf_dir: str) -> tuple:
     `save_ivfpq_index` materializes on disk ('encode once, serve many');
     without it every probe re-ran the corpus encode Arrow pass.
     Deterministic encode → bit-identical results."""
-    from ..functions.pq import _residuals, pq_encode, train_pq_residual
 
     def build() -> tuple:
-        assigned, centroids = _ivf_coarse(spark, sf_dir, SCALE.ivf_n_list)
+        assigned, centroids, _cents = _ivf_coarse(spark, sf_dir, SCALE.ivf_n_list)
         cb = train_pq_residual(
             assigned, centroids, dim=64, m=SCALE.ivfpq_m, ksub=SCALE.ivfpq_ksub,
             sample_cap=SCALE.pq_sample_cap,
@@ -242,7 +291,7 @@ def _ivfsq_build(spark: SparkSession, sf_dir: str) -> tuple:
 
     def build() -> tuple:
         emb = _corpus(spark, sf_dir)
-        assigned, centroids = _ivf_coarse(spark, sf_dir, SCALE.ivf_n_list)
+        assigned, centroids, _cents = _ivf_coarse(spark, sf_dir, SCALE.ivf_n_list)
         bounds = train_sq(emb, dim=64)
         return sq_encode(assigned, bounds, keep=("list_id",)).persist(), centroids, bounds
 
@@ -255,7 +304,7 @@ def _inc_fixture(emb: DataFrame, family: str) -> tuple:
     even-vec_id half of *emb* (IVF-PQ at the serving geometry), and the
     odd half split into two crawl batches. Returns
     ``((assigned, centroids, quantizer), b1, b2)``."""
-    from ..functions.ivf import codec_for, train_index
+    from ..functions.ivf import train_index
 
     codec = codec_for(family)
     geometry = (
@@ -286,7 +335,7 @@ def _incremental_index(spark: SparkSession, sf_dir: str, family: str) -> str:
     import shutil
     import tempfile
 
-    from ..functions.ivf import append_batch, codec_for, retrain_index, save_index
+    from ..functions.ivf import append_batch, retrain_index, save_index
 
     def build() -> str:
         codec = codec_for(family)
@@ -345,165 +394,187 @@ def ann_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("ann_topk_ivfpq_incremental", survey="ext-sim")
-def ann_topk_ivfpq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Continual-ingest COMPRESSED ANN — the IVF-PQ serving sibling of
-    `ann_topk_ivfpq_neighbors`: index built (coarse centroids + residual
-    PQ codebooks + IVFADC codes) on the even-vec_id half, odd half
-    appended as two crawl batches through `functions/pq.ivfpq_append_batch`
-    (coarse-assign + residualize + PQ-encode against the SAVED quantizers,
-    code deltas
-    at ``codes_deltas/batch_id=*/list_id=*`` with idempotent replay,
-    reconstruction-error drift + mass retrain triggers), then served
-    from the persisted base+delta code union — no raw-vector column
-    anywhere at serving time. Rows-only by design; recall-after-appends
-    vs the oracle-checked exhaustive twin rides the PARITY_r* gate, and
-    the planted/replay/drift contracts live in tests/test_dedup.py.
+class _Index(NamedTuple):
+    """What a declared ANN query serves from: the keyed relation the scan
+    reads, its key column, the driver-side router ``(q_mat, n_probe) ->
+    keys``, the PQ codebooks or SQ bounds, the coarse centroid matrix
+    (a residual PQ index scores against it) and an optional query
+    rotation (OPQ)."""
 
-    Once its memoized build exists, constructing the DataFrame runs two
-    bounded collects: the n_list centroid rows and the probe map
-    (`collect_probe_map`, one row per query and probed list), both
-    shipped with the scan. Spark runs each as one job per broadcast or
-    exchange stage of its plan."""
-    from ..functions.pq import ivfpq_search_encoded, load_ivfpq_index
+    keyed: DataFrame
+    key: str
+    route: Callable
+    quantizer: np.ndarray | None = None
+    cents: np.ndarray | None = None
+    rotate: np.ndarray | None = None
 
-    path = _incremental_index(spark, sf_dir, "ivfpq")
-    # serve from session-memoized loaded handles: a per-probe reload
-    # re-paid FS checks, footer reads and the codebook collect, while a
-    # serving process keeps the index open between probes. The handles
-    # are lazy disk scans plus driver-side arrays, so probe-time
-    # partition pruning is untouched.
-    enc, centroids, cb = memo(
-        spark, ("inc_serve", "ivfpq", path), lambda: load_ivfpq_index(spark, path)
+
+def _ivf_index(rows: DataFrame, payload: str, cents: np.ndarray, quantizer=None) -> _Index:
+    return _Index(
+        rows.select("list_id", "vec_id", payload),
+        "list_id",
+        lambda q_mat, n_probe: ivf_route(q_mat, cents, n_probe),
+        quantizer,
+        cents,
     )
+
+
+def _flat_index(enc: DataFrame, quantizer: np.ndarray, rotate=None) -> _Index:
+    return _Index(
+        flat_keyed(enc, "codes"), "key", lambda q_mat, _n: flat_route(q_mat), quantizer, rotate=rotate
+    )
+
+
+def _coarse_handles(n_list: int):
+    """The shared coarse IVF build at *n_list* lists, raw vectors scored."""
+
+    def handles(spark: SparkSession, sf_dir: str) -> _Index:
+        assigned, _centroids, cents = _ivf_coarse(spark, sf_dir, n_list)
+        return _ivf_index(assigned, "e", cents)
+
+    return handles
+
+
+def _inc_handles(family: str):
+    """The family's persisted incremental index (`_incremental_index`),
+    served from session-memoized loaded handles: a per-probe reload
+    re-paid FS checks, footer reads and the quantizer collect, while a
+    serving process keeps the index open between probes. The handles are
+    lazy disk scans plus driver-side arrays (the centroid matrix among
+    them), so probe-time partition pruning is untouched."""
+
+    def handles(spark: SparkSession, sf_dir: str) -> _Index:
+        codec = codec_for(family)
+        path = _incremental_index(spark, sf_dir, family)
+
+        def load() -> tuple:
+            rows, centroids, *quantizer = load_index(codec, spark, path)
+            return (rows, centroid_matrix(centroids), *quantizer)
+
+        rows, cents, *quantizer = memo(spark, ("inc_serve", family, path), load)
+        return _ivf_index(rows, codec.payload, cents, *quantizer)
+
+    return handles
+
+
+def _lsh_handles(n_planes: int):
+    """The hyperplane-signature corpus at *n_planes*, memoized per
+    (session, sf_dir, n_planes): the bucket assignment is the LSH index,
+    which production computes once at ingest (`save_lsh_index`-style);
+    recomputing it per probe re-ran the signature Arrow pass over the
+    corpus. Seeded planes → bit-identical. ``n_probe`` is the
+    multi-probe radius."""
+
+    def handles(spark: SparkSession, sf_dir: str) -> _Index:
+        sig = memo(
+            spark,
+            ("lsh_sig", os.path.abspath(sf_dir), n_planes),
+            lambda: hyperplane_signature(_corpus(spark, sf_dir), "e", 64, n_planes).persist(),
+        )
+        return _Index(
+            sig.select("bucket", "vec_id", "e"),
+            "bucket",
+            lambda q_mat, radius: lsh_route(q_mat, n_planes, radius),
+        )
+
+    return handles
+
+
+def _ivfpq_handles(spark: SparkSession, sf_dir: str) -> _Index:
+    """The shared `_ivfpq_build`: probes scan its memoized ENCODED relation
+    (r13 opt — the build step no longer re-encodes per query batch)."""
+    _assigned, _centroids, cb, enc = _ivfpq_build(spark, sf_dir)
+    return _ivf_index(enc, "codes", _ivf_coarse(spark, sf_dir, SCALE.ivf_n_list)[2], cb)
+
+
+def _ivfpq_exh_handles(spark: SparkSession, sf_dir: str) -> _Index:
+    """ksub == corpus size over the shared n_list=8 coarse build, encoded
+    once into the memo (r13 opt)."""
     emb = _corpus(spark, sf_dir)
-    q = emb.where(F.col("vec_id") < 50).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
-    )
-    return ivfpq_search_encoded(
-        enc, centroids, cb, q, k=5, n_probe=SCALE.ivf_n_probe
-    ).select("query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rk")
+    assigned, centroids, cents = _ivf_coarse(spark, sf_dir, 8)
+
+    def build() -> tuple:
+        n = emb.count()
+        cb = train_pq_residual(assigned, centroids, dim=64, m=SCALE.ivfpq_m, ksub=n, sample_cap=n)
+        return pq_encode(_residuals(assigned, centroids), cb, keep=("list_id",)).persist(), cb
+
+    enc, cb = memo(spark, ("ivfpq_exh", os.path.abspath(sf_dir)), build)
+    return _ivf_index(enc, "codes", cents, cb)
 
 
-@query("ann_topk_ivf_incremental", survey="ext-sim")
-def ann_topk_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Continual-ingest dense ANN: the IVF serving index is BUILT on the
-    even-vec_id half, then the odd half arrives as two crawl batches
-    appended through `functions/ivf.ivf_append_batch` — assign-to-saved-
-    centroids only (O(batch) Arrow pass), hive-partitioned delta commits
-    (``deltas/batch_id=*/list_id=*``, overwrite-into-own-directory =
-    idempotent replay), assignment-drift stats against the build baseline
-    with a ``needs_retrain`` trigger. The second append's MASS trigger
-    fires (corpus doubled) and the fixture ACTS on it through
-    `functions/ivf.ivf_retrain` (r11): base + deltas folded into a fresh
-    ``gen-*`` generation, promoted by atomic ``_CURRENT`` pointer swap —
-    so this query serves the POST-RETRAIN index (the full
-    trigger→retrain→serve loop, not just the trigger). Rows-only by
-    design (k-means is iterative); recall vs the oracle-checked
-    exhaustive twin is recorded in PARITY_r*.json, and the planted-truth/
-    idempotence/drift/recall-recovery contracts live in
-    tests/test_dedup.py.
-
-    Mirrors `minhash_lsh_incremental_near_dups` (text twin); closes the
-    round-9 design gap: dense serving indexes were batch-built only.
-
-    Reference analogue: the controller's continually-updated global-view
-    state (ryu/src/deployed_controller/DIPA_Controller.py).
-
-    Once its memoized build exists, constructing the DataFrame runs one
-    bounded collect: the probe map (`collect_probe_map`, one row per query
-    and probed list or bucket), pulled to the driver and shipped with the
-    scan. Spark runs it as one job per broadcast or exchange stage of the
-    probe plan."""
-    from ..functions.ivf import ivf_search, load_ivf_index
-
-    path = _incremental_index(spark, sf_dir, "ivf")
-    # memoized loaded handles, as in ann_topk_ivfpq_incremental
-    assigned, centroids = memo(
-        spark, ("inc_serve", "ivf", path), lambda: load_ivf_index(spark, path)
-    )
-    emb = _corpus(spark, sf_dir)
-    q = emb.where(F.col("vec_id") < 50).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
-    )
-    return ivf_search(
-        assigned, centroids, q, k=5, n_probe=SCALE.ivf_n_probe
-    ).select("query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rk")
+def _ivfsq_handles(spark: SparkSession, sf_dir: str) -> _Index:
+    enc, _centroids, bounds = _ivfsq_build(spark, sf_dir)
+    return _ivf_index(enc, "codes", _ivf_coarse(spark, sf_dir, SCALE.ivf_n_list)[2], bounds)
 
 
-@query("ann_topk_ivf_neighbors", survey="ext-sim")
-def ann_topk_ivf_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF (k-means inverted lists, seeded/deterministic) top-5 neighbors
-    for the first 50 query vectors, probing 4 of 16 lists (~25% scan).
-    No SQL oracle (approximate + iterative k-means); recall vs the exact
-    baseline asserted in tests/test_dedup.py. Serves from the shared
-    session-memoized coarse build (r13 opt — production trains once and
-    serves many; rebuilding per invocation re-ran training + the
-    assignment Arrow pass on every call).
-
-    Once its memoized build exists, constructing the DataFrame runs one
-    bounded collect: the probe map (`collect_probe_map`, one row per query
-    and probed list or bucket), pulled to the driver and shipped with the
-    scan. Spark runs it as one job per broadcast or exchange stage of the
-    probe plan."""
-    from ..functions.ivf import ivf_search
-
-    emb = _corpus(spark, sf_dir)
-    q = emb.where(F.col("vec_id") < 50).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
-    )
-    assigned, centroids = _ivf_coarse(spark, sf_dir, SCALE.ivf_n_list)
-    return ivf_search(assigned, centroids, q, k=5, n_probe=SCALE.ivf_n_probe).select(
-        "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rk"
-    )
+def _sq_handles(spark: SparkSession, sf_dir: str) -> _Index:
+    """The flat scan over the shared `_ivfsq_build` codes (r13 opt): its
+    bounds are the same full-corpus `train_sq(emb)` and its codes the same
+    `sq_encode` output, so the scan is bit-identical to re-training and
+    re-encoding per invocation."""
+    enc, _centroids, bounds = _ivfsq_build(spark, sf_dir)
+    return _flat_index(enc, bounds)
 
 
-def _lsh_corpus_sig(spark: SparkSession, sf_dir: str, n_planes: int) -> DataFrame:
-    """The hyperplane-signature corpus, memoized per (session, sf_dir,
-    n_planes): the bucket assignment is the LSH index, which production
-    computes once at ingest (`save_lsh_index`-style); recomputing it per
-    probe re-ran the signature Arrow pass over the corpus. Seeded planes
-    → bit-identical."""
-    from ..functions.similarity import hyperplane_signature
+def _flat_pq_handles(name: str, train):
+    """A flat PQ index trained by ``train(emb) -> (codebooks, rotation or
+    None)`` and encoded ONCE per (session, sf_dir) under memo *name*,
+    like production (save_pq / save_opq is the disk form); every build is
+    deterministic. A rotation is applied to the driver-side query matrix
+    (r13 opt — bit-identical `q @ R`, one less Python-worker round trip)."""
 
-    return memo(
-        spark,
-        ("lsh_sig", os.path.abspath(sf_dir), n_planes),
-        lambda: hyperplane_signature(_corpus(spark, sf_dir), "e", 64, n_planes).persist(),
-    )
+    def handles(spark: SparkSession, sf_dir: str) -> _Index:
+        emb = _corpus(spark, sf_dir)
+
+        def build() -> tuple:
+            cb, rot = train(emb)
+            src = emb if rot is None else rotate_vectors(emb, rot)
+            return pq_encode(src, cb).persist(), cb, rot
+
+        enc, cb, rot = memo(spark, (name, os.path.abspath(sf_dir)), build)
+        return _flat_index(enc, cb, rot)
+
+    return handles
 
 
-@query("ann_topk_lsh_neighbors", survey="ext-sim")
-def ann_topk_lsh_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate top-5 cosine neighbors for the first 50 query vectors via
-    8 random hyperplanes + multi-probe radius 2. No SQL oracle (approximate
-    by design); recall vs the exact baseline is asserted in tests. Probes
-    the session-memoized corpus signature (r13 opt — the bucket index is
-    computed once, like the persisted-index production path).
+def _train_pq(emb: DataFrame) -> tuple:
+    return train_pq(emb, dim=64, m=SCALE.pq_m, ksub=SCALE.pq_ksub, sample_cap=SCALE.pq_sample_cap), None
 
-    Once its memoized build exists, constructing the DataFrame runs one
-    bounded collect: the probe map (`collect_probe_map`, one row per query
-    and probed list or bucket), pulled to the driver and shipped with the
-    scan. Spark runs it as one job per broadcast or exchange stage of the
-    probe plan."""
-    emb = _corpus(spark, sf_dir)
-    q = emb.where(F.col("vec_id") < 50).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
-    )
-    return ann_topk_lsh(
-        emb, q, dim=64, k=5, n_planes=SCALE.ann_n_planes,
-        probe_radius=SCALE.ann_probe_radius,
-        corpus_sig=_lsh_corpus_sig(spark, sf_dir, SCALE.ann_n_planes),
-    ).select(
-        "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rk"
-    )
+
+def _train_pq_exh(emb: DataFrame) -> tuple:
+    n = emb.count()
+    return train_pq(emb, dim=64, m=SCALE.pq_m, ksub=n, sample_cap=n), None
+
+
+def _train_opq(emb: DataFrame) -> tuple:
+    # the expensive part: k-means × Procrustes iterations
+    rot, cb = train_opq(emb, dim=64, m=SCALE.pq_m, ksub=SCALE.pq_ksub, sample_cap=SCALE.pq_sample_cap)
+    return cb, rot
+
+
+def _train_opq_exh(emb: DataFrame) -> tuple:
+    rot = random_rotation(64, seed=7)
+    n = emb.count()
+    return train_pq(rotate_vectors(emb, rot), dim=64, m=SCALE.pq_m, ksub=n, sample_cap=n), rot
+
+
+def _raw(_ix: _Index):
+    return raw_scorer
+
+
+def _adc(ix: _Index):
+    return adc_scorer(ix.quantizer, ix.cents)
+
+
+def _sq(ix: _Index):
+    return sq_scorer(ix.quantizer)
 
 
 # Exhaustive-parameter ANN companions: with every list/bucket probed the
 # approximate machinery must return EXACTLY the brute-force top-k, so the
-# same code paths (centroid ranking, probe join, candidate scoring, top-k)
-# get a full value-level oracle — the deterministic check the approximate
-# configurations above cannot have.
+# same code paths (centroid ranking, probe routing, candidate scoring,
+# top-k) get a full value-level oracle — the deterministic check the
+# approximate configurations cannot have.
 _BRUTE_TOPK_ORACLE = """
 WITH v AS (
     SELECT vec_id, LIST_TRANSFORM(embedding, x -> CAST(x AS DOUBLE)) AS e
@@ -523,265 +594,6 @@ WITH v AS (
 SELECT query_id, neighbor_id, ROUND(cosine, 6) AS cosine, rk
 FROM scored WHERE rk <= 5
 """
-
-
-@query("ann_topk_ivf_exhaustive", survey="ext-sim", oracle=_BRUTE_TOPK_ORACLE)
-def ann_topk_ivf_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF search with n_probe == n_list: every inverted list is probed, so
-    the result must equal brute force exactly — certifies the IVF machinery
-    against the SQL oracle (the n_probe<n_list production path keeps its
-    recall test). Shares the session-memoized n_list=8 build with the
-    IVF-PQ exhaustive certifier (r13 opt; deterministic build →
-    bit-identical, and the oracle re-proves it).
-
-    Once its memoized build exists, constructing the DataFrame runs one
-    bounded collect: the probe map (`collect_probe_map`, one row per query
-    and probed list or bucket), pulled to the driver and shipped with the
-    scan. Spark runs it as one job per broadcast or exchange stage of the
-    probe plan."""
-    from ..functions.ivf import ivf_search
-
-    emb = _corpus(spark, sf_dir)
-    q = emb.where(F.col("vec_id") < 50).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
-    )
-    assigned, centroids = _ivf_coarse(spark, sf_dir, 8)
-    return ivf_search(assigned, centroids, q, k=5, n_probe=8).select(
-        "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rk"
-    )
-
-
-@query("ann_topk_lsh_exhaustive", survey="ext-sim", oracle=_BRUTE_TOPK_ORACLE)
-def ann_topk_lsh_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hyperplane LSH with probe_radius == n_planes: all 2^n buckets probed
-    → candidates are the whole corpus and the result equals brute force —
-    the oracle-checkable configuration of the LSH path. Probes the
-    session-memoized n_planes=4 corpus signature (r13 opt; the oracle
-    re-proves bit-identity).
-
-    Once its memoized build exists, constructing the DataFrame runs one
-    bounded collect: the probe map (`collect_probe_map`, one row per query
-    and probed list or bucket), pulled to the driver and shipped with the
-    scan. Spark runs it as one job per broadcast or exchange stage of the
-    probe plan."""
-    emb = _corpus(spark, sf_dir)
-    q = emb.where(F.col("vec_id") < 50).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
-    )
-    return ann_topk_lsh(
-        emb, q, dim=64, k=5, n_planes=4, probe_radius=4,
-        corpus_sig=_lsh_corpus_sig(spark, sf_dir, 4),
-    ).select(
-        "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rk"
-    )
-
-
-@query("ann_topk_pq_neighbors", survey="ext-sim")
-def ann_topk_pq_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ADC top-5 for the first 50 query vectors:
-    m=8 subspaces × 16 codewords → 8-byte codes (32× compression over
-    float32), scored by LUT gathers without decoding the corpus
-    (functions/pq.py). No SQL oracle (k-means codebooks are iterative);
-    recall vs brute force and the ADC≡reconstructed-cosine identity are
-    asserted in tests/test_dedup.py; the exhaustive twin below carries the
-    full value oracle."""
-    from ..functions.pq import pq_encode, pq_search_adc, train_pq
-
-    emb = _corpus(spark, sf_dir)
-    q = emb.where(F.col("vec_id") < 50).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
-    )
-
-    def build() -> tuple:
-        cb = train_pq(
-            emb, dim=64, m=SCALE.pq_m, ksub=SCALE.pq_ksub,
-            sample_cap=SCALE.pq_sample_cap,
-        )
-        return (pq_encode(emb, cb).persist(), cb)
-
-    # trained and encoded once per (session, sf_dir), like production
-    # (save_pq is the disk form); every build is deterministic
-    enc, cb = memo(spark, ("pq", os.path.abspath(sf_dir)), build)
-    return pq_search_adc(enc, cb, q, k=5).select(
-        "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rk"
-    )
-
-
-@query("ann_topk_pq_exhaustive", survey="ext-sim", oracle=_BRUTE_TOPK_ORACLE)
-def ann_topk_pq_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ with ksub == corpus size, trained on the full corpus: k-means++
-    seeds every distinct vector as its own codeword and Lloyd fixes them
-    (singleton clusters), so reconstruction is bit-exact and the ADC scan
-    must return EXACTLY the brute-force top-k — the full value-level
-    oracle for the encode→LUT→scan machinery (same certifier pattern as
-    the IVF/LSH exhaustive twins). Certifier-only config: training
-    collects the whole (small) corpus here; the production path above
-    keeps the bounded sample cap."""
-    from ..functions.pq import pq_encode, pq_search_adc, train_pq
-
-    emb = _corpus(spark, sf_dir)
-    q = emb.where(F.col("vec_id") < 50).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
-    )
-
-    def build() -> tuple:
-        n = emb.count()
-        cb = train_pq(emb, dim=64, m=SCALE.pq_m, ksub=n, sample_cap=n)
-        return (pq_encode(emb, cb).persist(), cb)
-
-    enc, cb = memo(spark, ("pq_exh", os.path.abspath(sf_dir)), build)
-    return pq_search_adc(enc, cb, q, k=5).select(
-        "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rk"
-    )
-
-
-@query("ann_topk_ivfpq_neighbors", survey="ext-sim")
-def ann_topk_ivfpq_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ (the billion-scale serving layout): probe 4 of 16 inverted
-    lists, ADC-score only their 8-byte codes — ~25% scan fraction AND 32×
-    row compression multiply. No SQL oracle (two iterative quantizers);
-    recall T in tests/test_dedup.py; the exhaustive twin below is the
-    value oracle. Residual-encoded (FAISS IVFADC, r11): the PQ quantizes
-    v − centroid[list_id], concentrating codeword range on within-list
-    structure — the standard recall lever at fixed m/ksub.
-
-    Once its memoized build exists, constructing the DataFrame runs two
-    bounded collects: the n_list centroid rows and the probe map
-    (`collect_probe_map`, one row per query and probed list), both
-    shipped with the scan. Spark runs each as one job per broadcast or
-    exchange stage of its plan."""
-    from ..functions.pq import ivfpq_search_encoded
-
-    emb = _corpus(spark, sf_dir)
-    q = emb.where(F.col("vec_id") < 50).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
-    )
-    # session-memoized build (shared with the refined twin): probes scan
-    # the memoized ENCODED relation (r13 opt — ivfpq_search re-encoded
-    # the corpus per invocation; save_ivfpq_index is the disk form of
-    # this 'encode once, serve many' shape)
-    _assigned, centroids, cb, enc = _ivfpq_build(spark, sf_dir)
-    return ivfpq_search_encoded(
-        enc, centroids, cb, q, k=5, n_probe=SCALE.ivf_n_probe
-    ).select("query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rk")
-
-
-@query("ann_topk_ivfpq_exhaustive", survey="ext-sim", oracle=_BRUTE_TOPK_ORACLE)
-def ann_topk_ivfpq_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ with every list probed AND ksub == corpus size: the coarse
-    probe covers everything and RESIDUAL reconstruction is bit-exact
-    (every residual is its own codeword), so the composed IVFADC path —
-    probe ranking, residual decomposition q·c + q·r̂ / ‖c+r̂‖, cogrouped
-    ADC kernel, top-k merge — must equal brute force: the full value
-    oracle for the r11 residual-encoding change. The n_list=8 coarse
-    build is the shared session memo (r13 opt — also serves
-    `ann_topk_ivf_exhaustive`).
-
-    Once its memoized build exists, constructing the DataFrame runs two
-    bounded collects: the n_list centroid rows and the probe map
-    (`collect_probe_map`, one row per query and probed list), both
-    shipped with the scan. Spark runs each as one job per broadcast or
-    exchange stage of its plan."""
-    from ..functions.pq import (
-        _residuals,
-        ivfpq_search_encoded,
-        pq_encode,
-        train_pq_residual,
-    )
-
-    emb = _corpus(spark, sf_dir)
-    q = emb.where(F.col("vec_id") < 50).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
-    )
-
-    def build() -> tuple:
-        assigned, centroids = _ivf_coarse(spark, sf_dir, 8)
-        n = emb.count()
-        cb = train_pq_residual(
-            assigned, centroids, dim=64, m=SCALE.ivfpq_m, ksub=n, sample_cap=n
-        )
-        # encode once into the serve memo (r13 opt): ivfpq_search re-ran
-        # this corpus Arrow pass per invocation; the oracle re-proves
-        # bit-identity of the encoded serving path
-        enc = pq_encode(
-            _residuals(assigned, centroids), cb, keep=("list_id",)
-        ).persist()
-        return (enc, centroids, cb)
-
-    enc, centroids, cb = memo(spark, ("ivfpq_exh", os.path.abspath(sf_dir)), build)
-    return ivfpq_search_encoded(enc, centroids, cb, q, k=5, n_probe=8).select(
-        "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rk"
-    )
-
-
-@query("ann_topk_ivfpq_refined", survey="ext-sim")
-def ann_topk_ivfpq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ + exact re-ranking (FAISS IndexRefineFlat, r11): same index
-    geometry as `ann_topk_ivfpq_neighbors`, but the ADC scan over-fetches
-    top-20 (k·4) per query and the bounded candidate set is rescored
-    EXACTLY against the raw vectors (broadcast join, codegen cosine) —
-    recovering the PQ fine-ranking loss inside the probed lists, the
-    measured gap between IVF-PQ and raw IVF at the same n_probe. No SQL
-    oracle (two iterative quantizers); recall floors ride the PARITY gate
-    vs `ann_topk_ivfpq_exhaustive`, the refined≡brute-force certifier
-    (all lists probed + candidate set covering the corpus → exact
-    equality) is pinned in tests/test_dedup.py.
-
-    Once its memoized build exists, constructing the DataFrame runs two
-    bounded collects: the n_list centroid rows and the probe map
-    (`collect_probe_map`, one row per query and probed list), both
-    shipped with the scan. Spark runs each as one job per broadcast or
-    exchange stage of its plan."""
-    from ..functions.pq import ivfpq_search_encoded_refined
-
-    emb = _corpus(spark, sf_dir)
-    q = emb.where(F.col("vec_id") < 50).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
-    )
-    # shared build; ADC scans the memoized ENCODED relation (r13 opt —
-    # ivfpq_search_refined re-encoded the corpus per invocation) and the
-    # refine fetch rescans the memoized raw corpus
-    _assigned, centroids, cb, enc = _ivfpq_build(spark, sf_dir)
-    return ivfpq_search_encoded_refined(
-        enc, centroids, cb, emb, q, k=5, n_probe=SCALE.ivf_n_probe,
-        refine_factor=4,
-    ).select("query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rk")
-
-
-@query("ann_topk_opq_neighbors", survey="ext-sim")
-def ann_topk_opq_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OPQ (Ge et al. CVPR'13 / FAISS OPQMatrix, r11): a learned orthogonal
-    rotation redistributes variance across the PQ subspaces before
-    encoding — the standard flat-PQ fidelity lever when raw vectors aren't
-    kept for refine. Rotation preserves cosine, so the UNCHANGED ADC
-    machinery serves it over pre-rotated corpus + queries at the same
-    m=8/ksub=32 geometry as `ann_topk_pq_neighbors`. No SQL oracle
-    (iterative k-means × Procrustes); recall floors ride the PARITY gate
-    vs the exhaustive twin below; orthonormality/distortion/recall
-    contracts in tests/test_dedup.py."""
-    from ..functions.pq import pq_encode, pq_search_adc, rotate_vectors, train_opq
-
-    emb = _corpus(spark, sf_dir)
-    q = emb.where(F.col("vec_id") < 50).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
-    )
-
-    def build() -> tuple:
-        # the expensive part: k-means × Procrustes iterations + corpus
-        # re-encode — trained ONCE per (session, sf_dir), like production
-        # (save_opq is the disk form); serving below is the ADC scan only
-        rot, cb = train_opq(
-            emb, dim=64, m=SCALE.pq_m, ksub=SCALE.pq_ksub,
-            sample_cap=SCALE.pq_sample_cap,
-        )
-        return (pq_encode(rotate_vectors(emb, rot), cb).persist(), cb, rot)
-
-    enc, cb, rot = memo(spark, ("opq", os.path.abspath(sf_dir)), build)
-    # query rotation applied driver-side to the collected serving batch
-    # (r13 opt — bit-identical `q @ R`, one less Python-worker round-trip)
-    return pq_search_adc(enc, cb, q, k=5, rotate=rot).select(
-        "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rk"
-    )
 
 
 #: SQ8 is fully deterministic (min/max training, no k-means), so the whole
@@ -822,37 +634,225 @@ FROM scored WHERE rk <= 5
 """
 
 
-@query("ann_topk_sq_neighbors", survey="ext-sim", oracle=_SQ_TOPK_ORACLE)
-def ann_topk_sq_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scalar quantization (FAISS IndexScalarQuantizer QT_8bit, r11): each
+class _AnnQuery(NamedTuple):
+    name: str
+    handles: Callable[[SparkSession, str], _Index]
+    scorer: Callable[[_Index], Callable]
+    n_probe: int | None
+    doc: str
+    oracle: str | None = None
+    refine: int = 1  # > 1: over-fetch k·refine by ADC, re-rank exactly
+
+
+#: Every declared ANN query serves top-5 for the first 50 corpus vectors
+#: (the oracles cut at ``rk <= 5``).
+_K = 5
+
+_ANN_QUERIES = [
+    _AnnQuery(
+        "ann_topk_ivfpq_incremental",
+        _inc_handles("ivfpq"),
+        _adc,
+        SCALE.ivf_n_probe,
+        """Continual-ingest COMPRESSED ANN — the IVF-PQ serving sibling of
+    `ann_topk_ivfpq_neighbors`: index built (coarse centroids + residual
+    PQ codebooks + IVFADC codes) on the even-vec_id half, odd half
+    appended as two crawl batches through `functions/pq.ivfpq_append_batch`
+    (coarse-assign + residualize + PQ-encode against the SAVED quantizers,
+    code deltas
+    at ``codes_deltas/batch_id=*/list_id=*`` with idempotent replay,
+    reconstruction-error drift + mass retrain triggers), then served
+    from the persisted base+delta code union — no raw-vector column
+    anywhere at serving time. Rows-only by design; recall-after-appends
+    vs the oracle-checked exhaustive twin rides the PARITY_r* gate, and
+    the planted/replay/drift contracts live in tests/test_dedup.py.""",
+    ),
+    _AnnQuery(
+        "ann_topk_ivf_incremental",
+        _inc_handles("ivf"),
+        _raw,
+        SCALE.ivf_n_probe,
+        """Continual-ingest dense ANN: the IVF serving index is BUILT on the
+    even-vec_id half, then the odd half arrives as two crawl batches
+    appended through `functions/ivf.ivf_append_batch` — assign-to-saved-
+    centroids only (O(batch) Arrow pass), hive-partitioned delta commits
+    (``deltas/batch_id=*/list_id=*``, overwrite-into-own-directory =
+    idempotent replay), assignment-drift stats against the build baseline
+    with a ``needs_retrain`` trigger. The second append's MASS trigger
+    fires (corpus doubled) and the fixture ACTS on it through
+    `functions/ivf.ivf_retrain` (r11): base + deltas folded into a fresh
+    ``gen-*`` generation, promoted by atomic ``_CURRENT`` pointer swap —
+    so this query serves the POST-RETRAIN index (the full
+    trigger→retrain→serve loop, not just the trigger). Rows-only by
+    design (k-means is iterative); recall vs the oracle-checked
+    exhaustive twin is recorded in PARITY_r*.json, and the planted-truth/
+    idempotence/drift/recall-recovery contracts live in
+    tests/test_dedup.py.
+
+    Mirrors `minhash_lsh_incremental_near_dups` (text twin); closes the
+    round-9 design gap: dense serving indexes were batch-built only.
+
+    Reference analogue: the controller's continually-updated global-view
+    state (ryu/src/deployed_controller/DIPA_Controller.py).""",
+    ),
+    _AnnQuery(
+        "ann_topk_ivf_neighbors",
+        _coarse_handles(SCALE.ivf_n_list),
+        _raw,
+        SCALE.ivf_n_probe,
+        """IVF (k-means inverted lists, seeded/deterministic) top-5 neighbors
+    for the first 50 query vectors, probing 4 of 16 lists (~25% scan).
+    No SQL oracle (approximate + iterative k-means); recall vs the exact
+    baseline asserted in tests/test_dedup.py. Serves from the shared
+    session-memoized coarse build (r13 opt — production trains once and
+    serves many; rebuilding per invocation re-ran training + the
+    assignment Arrow pass on every call).""",
+    ),
+    _AnnQuery(
+        "ann_topk_lsh_neighbors",
+        _lsh_handles(SCALE.ann_n_planes),
+        _raw,
+        SCALE.ann_probe_radius,
+        """Approximate top-5 cosine neighbors for the first 50 query vectors via
+    8 random hyperplanes + multi-probe radius 2. No SQL oracle (approximate
+    by design); recall vs the exact baseline is asserted in tests. Probes
+    the session-memoized corpus signature (r13 opt — the bucket index is
+    computed once, like the persisted-index production path).""",
+    ),
+    _AnnQuery(
+        "ann_topk_ivf_exhaustive",
+        _coarse_handles(8),
+        _raw,
+        8,
+        """IVF search with n_probe == n_list: every inverted list is probed, so
+    the result must equal brute force exactly — certifies the IVF machinery
+    against the SQL oracle (the n_probe<n_list production path keeps its
+    recall test). Shares the session-memoized n_list=8 build with the
+    IVF-PQ exhaustive certifier (r13 opt; deterministic build →
+    bit-identical, and the oracle re-proves it).""",
+        _BRUTE_TOPK_ORACLE,
+    ),
+    _AnnQuery(
+        "ann_topk_lsh_exhaustive",
+        _lsh_handles(4),
+        _raw,
+        4,
+        """Hyperplane LSH with probe_radius == n_planes: all 2^n buckets probed
+    → candidates are the whole corpus and the result equals brute force —
+    the oracle-checkable configuration of the LSH path. Probes the
+    session-memoized n_planes=4 corpus signature (r13 opt; the oracle
+    re-proves bit-identity).""",
+        _BRUTE_TOPK_ORACLE,
+    ),
+    _AnnQuery(
+        "ann_topk_pq_neighbors",
+        _flat_pq_handles("pq", _train_pq),
+        _adc,
+        None,
+        """Product-quantization ADC top-5 for the first 50 query vectors:
+    m=8 subspaces × 16 codewords → 8-byte codes (32× compression over
+    float32), scored by LUT gathers without decoding the corpus
+    (functions/pq.py). No SQL oracle (k-means codebooks are iterative);
+    recall vs brute force and the ADC≡reconstructed-cosine identity are
+    asserted in tests/test_dedup.py; the exhaustive twin below carries the
+    full value oracle.""",
+    ),
+    _AnnQuery(
+        "ann_topk_pq_exhaustive",
+        _flat_pq_handles("pq_exh", _train_pq_exh),
+        _adc,
+        None,
+        """PQ with ksub == corpus size, trained on the full corpus: k-means++
+    seeds every distinct vector as its own codeword and Lloyd fixes them
+    (singleton clusters), so reconstruction is bit-exact and the ADC scan
+    must return EXACTLY the brute-force top-k — the full value-level
+    oracle for the encode→LUT→scan machinery (same certifier pattern as
+    the IVF/LSH exhaustive twins). Certifier-only config: training
+    collects the whole (small) corpus here; the production path above
+    keeps the bounded sample cap.""",
+        _BRUTE_TOPK_ORACLE,
+    ),
+    _AnnQuery(
+        "ann_topk_ivfpq_neighbors",
+        _ivfpq_handles,
+        _adc,
+        SCALE.ivf_n_probe,
+        """IVF-PQ (the billion-scale serving layout): probe 4 of 16 inverted
+    lists, ADC-score only their 8-byte codes — ~25% scan fraction AND 32×
+    row compression multiply. No SQL oracle (two iterative quantizers);
+    recall T in tests/test_dedup.py; the exhaustive twin below is the
+    value oracle. Residual-encoded (FAISS IVFADC, r11): the PQ quantizes
+    v − centroid[list_id], concentrating codeword range on within-list
+    structure — the standard recall lever at fixed m/ksub.""",
+    ),
+    _AnnQuery(
+        "ann_topk_ivfpq_exhaustive",
+        _ivfpq_exh_handles,
+        _adc,
+        8,
+        """IVF-PQ with every list probed AND ksub == corpus size: the coarse
+    probe covers everything and RESIDUAL reconstruction is bit-exact
+    (every residual is its own codeword), so the composed IVFADC path —
+    probe ranking, residual decomposition q·c + q·r̂ / ‖c+r̂‖, ADC
+    kernel, top-k merge — must equal brute force: the full value
+    oracle for the r11 residual-encoding change. The n_list=8 coarse
+    build is the shared session memo (r13 opt — also serves
+    `ann_topk_ivf_exhaustive`).""",
+        _BRUTE_TOPK_ORACLE,
+    ),
+    _AnnQuery(
+        "ann_topk_ivfpq_refined",
+        _ivfpq_handles,
+        _adc,
+        SCALE.ivf_n_probe,
+        """IVF-PQ + exact re-ranking (FAISS IndexRefineFlat, r11): same index
+    geometry as `ann_topk_ivfpq_neighbors`, but the ADC scan over-fetches
+    top-20 (k·4) per query and the bounded candidate set is rescored
+    EXACTLY against the raw vectors (broadcast join, codegen cosine) —
+    recovering the PQ fine-ranking loss inside the probed lists, the
+    measured gap between IVF-PQ and raw IVF at the same n_probe. No SQL
+    oracle (two iterative quantizers); recall floors ride the PARITY gate
+    vs `ann_topk_ivfpq_exhaustive`, the refined≡brute-force certifier
+    (all lists probed + candidate set covering the corpus → exact
+    equality) is pinned in tests/test_dedup.py.""",
+        refine=4,
+    ),
+    _AnnQuery(
+        "ann_topk_opq_neighbors",
+        _flat_pq_handles("opq", _train_opq),
+        _adc,
+        None,
+        """OPQ (Ge et al. CVPR'13 / FAISS OPQMatrix, r11): a learned orthogonal
+    rotation redistributes variance across the PQ subspaces before
+    encoding — the standard flat-PQ fidelity lever when raw vectors aren't
+    kept for refine. Rotation preserves cosine, so the UNCHANGED ADC
+    machinery serves it over pre-rotated corpus + queries at the same
+    m=8/ksub=32 geometry as `ann_topk_pq_neighbors`. No SQL oracle
+    (iterative k-means × Procrustes); recall floors ride the PARITY gate
+    vs the exhaustive twin below; orthonormality/distortion/recall
+    contracts in tests/test_dedup.py.""",
+    ),
+    _AnnQuery(
+        "ann_topk_sq_neighbors",
+        _sq_handles,
+        _sq,
+        None,
+        """Scalar quantization (FAISS IndexScalarQuantizer QT_8bit, r11): each
     dimension linearly quantized to uint8 against per-dim [min,max] bounds
     — the production point between Flat (1×, exact) and PQ (32×, lossy
     ranking): 8× compression at near-exact recall (0.988 vs brute force at
     sf0.01). Training is ONE deterministic distributed agg (no k-means),
     so unlike every other ANN path the production query itself carries a
     full DuckDB value oracle — the SQL mirrors functions/sq.py's
-    floor(x+0.5) rounding bit-for-bit.
-
-    r13 opt: serves from the shared `_ivfsq_build` memo — its bounds are
-    the same full-corpus `train_sq(emb)` and its codes the same
-    `sq_encode` output (the coarse `list_id` column is projected away),
-    so the flat scan is bit-identical to re-training/re-encoding per
-    invocation; the full value oracle re-proves it."""
-    from ..functions.sq import sq_search
-
-    emb = _corpus(spark, sf_dir)
-    q = emb.where(F.col("vec_id") < 50).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
-    )
-    enc, _centroids, bounds = _ivfsq_build(spark, sf_dir)
-    return sq_search(enc.select("vec_id", "codes"), bounds, q, k=5).select(
-        "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rk"
-    )
-
-
-@query("ann_topk_ivfsq_neighbors", survey="ext-sim")
-def ann_topk_ivfsq_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF+SQ8 composite (FAISS ``IVF,SQ8``, r12 — the last structural
+    floor(x+0.5) rounding bit-for-bit.""",
+        _SQ_TOPK_ORACLE,
+    ),
+    _AnnQuery(
+        "ann_topk_ivfsq_neighbors",
+        _ivfsq_handles,
+        _sq,
+        SCALE.ivf_n_probe,
+        """IVF+SQ8 composite (FAISS ``IVF,SQ8``, r12 — the last structural
     gap in the ANN family): coarse-probe 4 of 16 inverted lists, then
     dequantize-and-exact-cosine only THEIR SQ codes — ~25% scan fraction
     at 8× row compression AND near-exact ranking (SQ8's per-dim error is
@@ -863,28 +863,14 @@ def ann_topk_ivfsq_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-means); the exhaustive twin below carries the FULL value oracle —
     with every list probed the composite must equal flat SQ8, which is
     itself SQL-expressible — and clustered/corpus recall floors + the
-    measured scan fraction ride PARITY_r12.
-
-    Once its memoized build exists, constructing the DataFrame runs one
-    bounded collect: the probe map (`collect_probe_map`, one row per query
-    and probed list or bucket), pulled to the driver and shipped with the
-    scan. Spark runs it as one job per broadcast or exchange stage of the
-    probe plan."""
-    from ..functions.sq import ivf_sq_search
-
-    emb = _corpus(spark, sf_dir)
-    q = emb.where(F.col("vec_id") < 50).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
-    )
-    enc, centroids, bounds = _ivfsq_build(spark, sf_dir)
-    return ivf_sq_search(
-        enc, centroids, bounds, q, k=5, n_probe=SCALE.ivf_n_probe
-    ).select("query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rk")
-
-
-@query("ann_topk_ivfsq_exhaustive", survey="ext-sim", oracle=_SQ_TOPK_ORACLE)
-def ann_topk_ivfsq_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF+SQ8 with every list probed: the coarse probe covers the whole
+    measured scan fraction ride PARITY_r12.""",
+    ),
+    _AnnQuery(
+        "ann_topk_ivfsq_exhaustive",
+        _ivfsq_handles,
+        _sq,
+        SCALE.ivf_n_list,
+        """IVF+SQ8 with every list probed: the coarse probe covers the whole
     corpus and SQ scoring is deterministic, so the composite must equal
     the flat SQ8 scan EXACTLY — and flat SQ8 is fully SQL-expressible
     (deterministic min/max training), so this certifier carries the same
@@ -893,28 +879,15 @@ def ann_topk_ivfsq_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
     exhaustive twin certifies only the brute-force equality). SAME build
     as the production query (no degenerate certifier geometry needed —
     SQ has no k-means to collapse), so this also pins that the production
-    path's loss is coarse-probe misses alone.
-
-    Once its memoized build exists, constructing the DataFrame runs one
-    bounded collect: the probe map (`collect_probe_map`, one row per query
-    and probed list or bucket), pulled to the driver and shipped with the
-    scan. Spark runs it as one job per broadcast or exchange stage of the
-    probe plan."""
-    from ..functions.sq import ivf_sq_search
-
-    emb = _corpus(spark, sf_dir)
-    q = emb.where(F.col("vec_id") < 50).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
-    )
-    enc, centroids, bounds = _ivfsq_build(spark, sf_dir)
-    return ivf_sq_search(
-        enc, centroids, bounds, q, k=5, n_probe=SCALE.ivf_n_list
-    ).select("query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rk")
-
-
-@query("ann_topk_ivfsq_incremental", survey="ext-sim")
-def ann_topk_ivfsq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Continual-ingest IVF+SQ8 (r13 — closes the last asymmetry in the
+    path's loss is coarse-probe misses alone.""",
+        _SQ_TOPK_ORACLE,
+    ),
+    _AnnQuery(
+        "ann_topk_ivfsq_incremental",
+        _inc_handles("ivfsq"),
+        _sq,
+        SCALE.ivf_n_probe,
+        """Continual-ingest IVF+SQ8 (r13 — closes the last asymmetry in the
     incremental-index family): the composite serving index is BUILT on
     the even-vec_id half (coarse centroids + global SQ bounds + codes),
     the odd half arrives as two crawl batches appended through
@@ -930,56 +903,47 @@ def ann_topk_ivfsq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_dedup.py and the streaming sink goldens.
 
     Reference analogue: the controller's continually-refreshed global
-    view (ryu/src/deployed_controller/DIPA_Controller.py:308-320).
-
-    Once its memoized build exists, constructing the DataFrame runs one
-    bounded collect: the probe map (`collect_probe_map`, one row per query
-    and probed list or bucket), pulled to the driver and shipped with the
-    scan. Spark runs it as one job per broadcast or exchange stage of the
-    probe plan."""
-    from ..functions.sq import ivf_sq_search, load_ivfsq_index
-
-    path = _incremental_index(spark, sf_dir, "ivfsq")
-    # memoized loaded handles, as in ann_topk_ivfpq_incremental
-    enc, centroids, bounds = memo(
-        spark, ("inc_serve", "ivfsq", path), lambda: load_ivfsq_index(spark, path)
-    )
-    emb = _corpus(spark, sf_dir)
-    q = emb.where(F.col("vec_id") < 50).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
-    )
-    return ivf_sq_search(
-        enc, centroids, bounds, q, k=5, n_probe=SCALE.ivf_n_probe
-    ).select("query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rk")
-
-
-@query("ann_topk_opq_exhaustive", survey="ext-sim", oracle=_BRUTE_TOPK_ORACLE)
-def ann_topk_opq_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The rotated serving path under a full value oracle: a DETERMINISTIC
+    view (ryu/src/deployed_controller/DIPA_Controller.py:308-320).""",
+    ),
+    _AnnQuery(
+        "ann_topk_opq_exhaustive",
+        _flat_pq_handles("opq_exh", _train_opq_exh),
+        _adc,
+        None,
+        """The rotated serving path under a full value oracle: a DETERMINISTIC
     data-independent orthogonal rotation (QR of a seeded Gaussian) + ksub
     == corpus size. One codeword per rotated point makes reconstruction of
     the ROTATED corpus bit-exact, and rotation preserves cosine — so the
     rotated ADC scan must equal brute-force top-k on the RAW vectors: the
     value-level certifier for rotate_vectors + the rotated encode/LUT/scan
     composition (the learned-R production path above differs only in where
-    R comes from)."""
-    from ..functions.pq import pq_encode, pq_search_adc, random_rotation, rotate_vectors, train_pq
+    R comes from).""",
+        _BRUTE_TOPK_ORACLE,
+    ),
+]
 
-    emb = _corpus(spark, sf_dir)
-    q = emb.where(F.col("vec_id") < 50).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
-    )
-    rot = random_rotation(64, seed=7)
 
-    def build() -> tuple:
-        emb_rot = rotate_vectors(emb, rot)
-        n = emb.count()
-        cb = train_pq(emb_rot, dim=64, m=SCALE.pq_m, ksub=n, sample_cap=n)
-        return (pq_encode(emb_rot, cb).persist(), cb)
+def _ann_builder(spec: _AnnQuery):
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        ix = spec.handles(spark, sf_dir)
+        q_ids, q_mat = _query_batch(spark, sf_dir)
+        if ix.rotate is not None:
+            q_mat = q_mat @ ix.rotate
+        out = search(
+            spec.scorer(ix),
+            ix.keyed,
+            ix.key,
+            q_ids,
+            q_mat,
+            lambda qm: ix.route(qm, spec.n_probe),
+            _K * spec.refine,
+        )
+        if spec.refine > 1:
+            out = refine_exact(out, _corpus(spark, sf_dir), _queries(spark, sf_dir), _K)
+        return out.select("query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rk")
 
-    enc, cb = memo(spark, ("opq_exh", os.path.abspath(sf_dir)), build)
-    # query rotation applied driver-side to the collected serving batch
-    # (r13 opt — bit-identical `q @ R`, one less Python-worker round-trip)
-    return pq_search_adc(enc, cb, q, k=5, rotate=rot).select(
-        "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rk"
-    )
+    return build
+
+
+for _spec in _ANN_QUERIES:
+    query(_spec.name, survey="ext-sim", oracle=_spec.oracle, doc=_spec.doc)(_ann_builder(_spec))

@@ -68,17 +68,3 @@ def json_lines_stream(
     if max_files_per_trigger is not None:
         r = r.option("maxFilesPerTrigger", max_files_per_trigger)
     return r.json(path)
-
-
-def csv_stream(
-    spark: SparkSession,
-    path: str,
-    schema: StructType,
-    header: bool = False,
-    max_files_per_trigger: int | None = 1,
-) -> DataFrame:
-    """CSV stream with a declared schema (header optional, never inferred)."""
-    r = spark.readStream.schema(schema).option("header", str(header).lower())
-    if max_files_per_trigger is not None:
-        r = r.option("maxFilesPerTrigger", max_files_per_trigger)
-    return r.csv(path)

@@ -170,12 +170,6 @@ class MitigationSink:
             actions.unpersist()
 
 
-def console_report(df: DataFrame, title: str, n: int = 20) -> None:
-    """A9: formatted console report sink (TestCase_5/timeStamp.py:282-323)."""
-    print(f"==== {title} ====")
-    df.show(n, truncate=False)
-
-
 class SummarySink:
     """Streaming materialized-view maintenance: a foreachBatch sink that
     folds each micro-batch into a persisted mergeable summary

@@ -15,7 +15,7 @@ from dataclasses import dataclass
 
 import duckdb
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from .tables import TABLE_NAMES
 
@@ -128,25 +128,3 @@ def compare_query(
         diff = [(a, b) for a, b in zip(sc, oc) if a != b][:3]
         return ParityResult(name, False, f"value mismatch, first diffs: {diff}")
     return ParityResult(name, True, f"{len(s_rows)} rows")
-
-
-def run_parity(
-    spark: SparkSession, sf_dir: str, names: list[str] | None = None
-) -> list[ParityResult]:
-    from .queries import REGISTRY
-    from .queries.registry import _load_all
-
-    _load_all()
-    con = duckdb_connection(sf_dir)
-    results = []
-    for qname, spec in REGISTRY.items():
-        if names and qname not in names:
-            continue
-        if spec.oracle is None:
-            continue
-        try:
-            df = spec.fn(spark, sf_dir)
-            results.append(compare_query(qname, df, con, spec.oracle))
-        except Exception as e:  # noqa: BLE001 - harness reports, not raises
-            results.append(ParityResult(qname, False, f"EXCEPTION: {e}"))
-    return results

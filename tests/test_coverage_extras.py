@@ -913,28 +913,6 @@ def test_stats_rows_reads_legacy_pre_commit_seq_files(spark, tmp_path):
     assert health[1]["appended_frac"] == 0.4
 
 
-def test_collect_probe_map_reads_fields_by_name(spark):
-    """collect_probe_map reads the key, query_id and qe fields by name: the
-    key and query_id are both int64, so a positional read would silently
-    swap them under a reordered select. A probe relation selected as
-    (query_id, qe, list_id) must give the same map."""
-    import numpy as np
-
-    from dipa_collaborative_pulsar_idps_spark.functions.similarity import collect_probe_map
-
-    probes = spark.createDataFrame(
-        [(3, 10, [1.0, 0.0]), (3, 11, [0.0, 1.0]), (5, 10, [0.5, 0.5])],
-        "list_id long, query_id long, qe array<double>",
-    )
-    want = collect_probe_map(probes, "list_id")
-    got = collect_probe_map(probes.select("query_id", "qe", "list_id"), "list_id")
-    assert sorted(want) == sorted(got) == [3, 5]
-    assert sorted(want[3][0].tolist()) == [10, 11]
-    for key in want:
-        np.testing.assert_array_equal(got[key][0], want[key][0])
-        np.testing.assert_array_equal(got[key][1], want[key][1])
-
-
 def test_local_rows_df_raises_on_cell_schema_mismatch(spark):
     """A row whose cell does not match the schema is a caller bug: it
     raises instead of coming back as a frame."""

@@ -416,7 +416,7 @@ def test_clear_all_caches_releases_every_memoized_frame(spark):
 
     a = _corpus(spark, sf)
     b = _doc_scores(spark, sf)
-    assigned, _centroids = _ivf_coarse(spark, sf, 8)
+    assigned, _centroids, _cents = _ivf_coarse(spark, sf, 8)
     REGISTRY["exact_price_percentiles"].fn(spark, sf).collect()
     REGISTRY["ann_topk_ivfsq_incremental"].fn(spark, sf).collect()
     path = _incremental_index(spark, sf, "ivfsq")
@@ -1066,103 +1066,14 @@ def test_banded_ngram_is_verified_subset_of_exact(spark, sf_dir):
         assert abs(j - exact[k]) < 1e-12
 
 
-def test_pq_chunked_serving_matches_manual_chunks(spark, sf_dir):
-    """Serving 4× the ADC query-batch bound through the chunking driver
-    must return EXACTLY what 4 manual bounded calls return (disjoint
-    query sets ⇒ per-chunk top-k union is the global answer), while the
-    unchunked entry point still refuses the oversized batch loudly."""
-    import pytest as _pytest
-
+def test_pq_search_bounds_the_query_batch(spark, sf_dir):
+    """The flat ADC scan collects its serving batch under
+    ``_MAX_QUERY_BATCH``: an empty batch returns an empty, correctly-typed
+    result, and a batch one row over the bound is refused loudly."""
     from dipa_collaborative_pulsar_idps_spark.functions.pq import (
         _MAX_QUERY_BATCH,
         pq_encode,
         pq_search_adc,
-        pq_search_adc_chunked,
-        train_pq,
-    )
-    from dipa_collaborative_pulsar_idps_spark.queries.datapipe3 import _corpus
-
-    emb = _corpus(spark, sf_dir)
-    cb = train_pq(emb, dim=64, m=8, ksub=16)
-    enc = pq_encode(emb, cb).persist()
-    n_q = 4 * _MAX_QUERY_BATCH
-    queries = (
-        spark.range(n_q)
-        .select(F.col("id").alias("query_id"), F.pmod("id", F.lit(500)).alias("vec_id"))
-        .join(emb, "vec_id")
-        .select("query_id", F.col("e").alias("qe"))
-    ).persist()
-
-    with _pytest.raises(ValueError, match="chunk the serving batch"):
-        pq_search_adc(enc, cb, queries, k=3).collect()
-
-    def key(rows):
-        return {(r.query_id, r.rk): (r.neighbor_id, round(r.cosine, 12)) for r in rows}
-
-    got = key(pq_search_adc_chunked(enc, cb, queries, k=3).collect())
-    want = {}
-    for c in range(4):
-        lo, hi = c * _MAX_QUERY_BATCH, (c + 1) * _MAX_QUERY_BATCH
-        chunk = queries.where((F.col("query_id") >= lo) & (F.col("query_id") < hi))
-        want.update(key(pq_search_adc(enc, cb, chunk, k=3).collect()))
-    enc.unpersist()
-    queries.unpersist()
-    assert len(got) == n_q * 3
-    assert got == want
-
-
-def test_chunked_search_generic_over_lsh_and_ivf(spark, sf_dir):
-    """chunked_search is search-function-agnostic: slicing the query set
-    through the hyperplane-LSH and IVF paths returns exactly the
-    one-shot result (disjoint chunks ⇒ union of per-chunk top-k is the
-    global answer for any per-query search)."""
-    from dipa_collaborative_pulsar_idps_spark.functions.ivf import (
-        build_ivf_index,
-        ivf_search,
-    )
-    from dipa_collaborative_pulsar_idps_spark.functions.similarity import (
-        ann_topk_lsh,
-        chunked_search,
-    )
-    from dipa_collaborative_pulsar_idps_spark.queries.datapipe3 import _corpus
-
-    corpus = _corpus(spark, sf_dir)
-    queries = corpus.where(F.col("vec_id") < 48).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
-    )
-
-    def key(rows):
-        return {(r.query_id, r.rk): r.neighbor_id for r in rows}
-
-    one = key(ann_topk_lsh(corpus, queries, dim=64, k=3).collect())
-    many = key(
-        chunked_search(
-            queries, lambda q: ann_topk_lsh(corpus, q, dim=64, k=3), chunk_size=16
-        ).collect()
-    )
-    assert one == many and len(one) >= 48
-
-    assigned, centroids = build_ivf_index(corpus, dim=64, n_list=8)
-    assigned = assigned.persist()
-    one_ivf = key(ivf_search(assigned, centroids, queries, k=3).collect())
-    many_ivf = key(
-        chunked_search(
-            queries,
-            lambda q: ivf_search(assigned, centroids, q, k=3),
-            chunk_size=16,
-        ).collect()
-    )
-    assigned.unpersist()
-    assert one_ivf == many_ivf and len(one_ivf) >= 48
-
-
-def test_pq_and_chunked_search_handle_empty_query_set(spark, sf_dir):
-    """An empty serving batch returns an empty, correctly-typed result —
-    both directly and through the chunked driver's empty flush."""
-    from dipa_collaborative_pulsar_idps_spark.functions.pq import (
-        pq_encode,
-        pq_search_adc,
-        pq_search_adc_chunked,
         train_pq,
     )
     from dipa_collaborative_pulsar_idps_spark.queries.datapipe3 import _corpus
@@ -1173,10 +1084,17 @@ def test_pq_and_chunked_search_handle_empty_query_set(spark, sf_dir):
     empty = emb.where(F.lit(False)).select(
         F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
     )
-    for fn in (pq_search_adc, pq_search_adc_chunked):
-        out = fn(enc, cb, empty, 3)
-        assert out.columns == ["query_id", "neighbor_id", "cosine", "rk"]
-        assert out.count() == 0
+    out = pq_search_adc(enc, cb, empty, 3)
+    assert out.columns == ["query_id", "neighbor_id", "cosine", "rk"]
+    assert out.count() == 0
+    over = (
+        spark.range(_MAX_QUERY_BATCH + 1)
+        .select(F.col("id").alias("query_id"), F.pmod("id", F.lit(500)).alias("vec_id"))
+        .join(emb, "vec_id")
+        .select("query_id", F.col("e").alias("qe"))
+    )
+    with pytest.raises(ValueError, match="chunk the serving batch"):
+        pq_search_adc(enc, cb, over, k=3)
 
 
 def test_duplicate_substring_spans_planted(spark, tmp_path):

@@ -330,6 +330,29 @@ def test_no_declared_plan_runs_single_buffer_percentile(spark, sf_dir):
     assert not offenders, f"single-buffer percentile in: {offenders}"
 
 
+def test_warm_ann_builders_run_no_spark_job(spark, sf_dir):
+    """After one cold call has built its memos, building each of the 17
+    ``ann_topk_*`` DataFrames runs no Spark job: the query batch, the
+    centroid matrices and the quantizers are driver-side memos, and the
+    route is computed on the driver. Jobs are counted in a statusTracker
+    job group around the builder. Placed after the full-surface plan
+    sweep above, whose builds usually leave the memos warm already."""
+    names = [n for n in REGISTRY if n.startswith("ann_topk_")]
+    assert len(names) == 17
+    sc = spark.sparkContext
+    jobs = {}
+    for name in names:
+        REGISTRY[name].fn(spark, sf_dir)  # builds any memo still cold
+        group = f"warm:{name}"
+        sc.setJobGroup(group, name)
+        try:
+            REGISTRY[name].fn(spark, sf_dir)
+        finally:
+            sc.setJobGroup("idle", "")
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs == dict.fromkeys(names, 0)
+
+
 def test_weighted_sample_is_map_side_filter(spark, sf_dir):
     """weighted_doc_sample must stay one broadcast 1-row total + a
     map-side filter: no shuffle join, and the scan prunes to the two
