@@ -248,10 +248,11 @@ def run_streaming_bench(spark) -> dict:
     # first checkpoint: size it to state volume, not core count. Recorded
     # in the artifact for comparability.
     from dipa_collaborative_pulsar_idps_spark.session import (
+        N_STATE_SHARDS,
         streaming_shuffle_partitions,
     )
 
-    n_parts = streaming_shuffle_partitions(64)  # engine default (r11): shards/8
+    n_parts = streaming_shuffle_partitions(N_STATE_SHARDS)  # engine default (r11): shards/8
     saved_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
     out["streaming_shuffle_partitions"] = n_parts
     saved = {k: spark.conf.get(k, None) for k in ROCKSDB_STATE_CONF}

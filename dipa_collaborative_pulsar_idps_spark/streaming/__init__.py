@@ -1,16 +1,9 @@
 from .replay import replay_stream, write_replay_chunks
-from .state import (
-    alert_state_machine,
-    alert_state_machine_tws,
-    counter_delta_stream,
-    make_alert_processor,
-)
+from .state import alert_state_machine, counter_delta_stream
 
 __all__ = [
     "replay_stream",
     "write_replay_chunks",
     "counter_delta_stream",
     "alert_state_machine",
-    "alert_state_machine_tws",
-    "make_alert_processor",
 ]

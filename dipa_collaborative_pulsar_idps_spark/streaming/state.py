@@ -1,9 +1,14 @@
 """Custom stateful streaming operators (SURVEY.md §2 C1-C3, I2-I8, I16).
 
 These are the only operators in the engine that genuinely need
-``applyInPandasWithState`` — everything else is built-in. Both keep state
-bounded via GroupStateTimeout (the analogue of the reference's flow
-idle_timeout=60 s eviction, DIPA_Controller.py:222,225).
+``applyInPandasWithState`` — everything else is built-in. All four
+(:func:`counter_delta_stream`, :func:`alert_state_machine`,
+:func:`pushback_dedupe_stream`, :func:`heavy_hitters_stream`) run on one
+scaffold, :func:`_sharded_state`, under ``GroupStateTimeout.NoTimeout``.
+The first three bound their state with an EVENT-TIME TTL applied inside
+the shard (the analogue of the reference's flow idle_timeout=60 s
+eviction, DIPA_Controller.py:222,225); the heavy-hitter summary is bounded
+by construction.
 
 Scale: state lives in the per-partition state store (RocksDB-capable),
 keyed by the REAL flow key — fixing the reference's positional-index state
@@ -12,7 +17,7 @@ bug (DIPA_Controller.py:462, see SURVEY.md §7 watch list).
 
 from __future__ import annotations
 
-from collections.abc import Iterable
+from collections.abc import Callable, Iterable
 from typing import Any
 
 import numpy as np
@@ -22,6 +27,65 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..config import DEFAULT, DetectionConfig
+from ..session import N_STATE_SHARDS
+
+
+def _sharded_state(
+    df: DataFrame,
+    shard_cols: list[str],
+    n_shards: int,
+    state_fields: list[str],
+    out_schema: str,
+    step: Callable[[Any, pd.DataFrame, dict], pd.DataFrame | None],
+    ttl: tuple[str, int | None] | None = None,
+) -> DataFrame:
+    """The one ``applyInPandasWithState`` scaffold of this module.
+
+    Throughput design: ``applyInPandasWithState`` pays a Python invocation
+    per state GROUP per batch — with one group per flow (8k flows/poll,
+    the reference's saturation point) that overhead alone blows the 2 s
+    poll budget. So the group key is a hash SHARD,
+    ``pmod(xxhash64(shard_cols), n_shards)``, and each shard's state holds
+    its keys' fields as parallel arrays, one per ``state_fields`` entry
+    ("name element_type"; the first is the key).
+
+    Per shard and batch the scaffold unpacks the arrays into
+    ``smap = {key: [field, ...]}`` and concatenates the shard's chunks.
+    With ``ttl = (ts_col, idle_timeout_ms)`` it then prunes every key
+    whose LAST field (``last_seen_us``) is older than the batch's newest
+    ``ts_col`` minus the timeout. ``step(shard, rows, smap)`` updates
+    ``smap`` in place and returns the output frame, or None to emit
+    nothing; the scaffold repacks ``smap`` into the same arrays.
+
+    The TTL runs on event time, never ProcessingTimeTimeout, which re-arms
+    forever and keeps Trigger.AvailableNow scheduling batches.
+    """
+    state_schema = ", ".join(f"{n} array<{t}>" for n, t in map(str.split, state_fields))
+    width = len(state_fields) - 1
+    ts_col, idle_timeout_ms = ttl or (None, None)
+
+    def fn(
+        key: tuple[Any, ...], pdfs: Iterable[pd.DataFrame], state: GroupState
+    ) -> Iterable[pd.DataFrame]:
+        smap = {k_: v for k_, *v in zip(*state.get)} if state.exists else {}
+        chunks = list(pdfs)
+        rows = chunks[0] if len(chunks) == 1 else pd.concat(chunks)
+        if idle_timeout_ms and smap:
+            horizon = int(rows[ts_col].astype("int64").max()) // 1000 - idle_timeout_ms * 1000
+            for k_ in [k_ for k_, v in smap.items() if v[-1] < horizon]:
+                del smap[k_]
+        out = step(key[0], rows, smap)
+        state.update((list(smap), *([v[i] for v in smap.values()] for i in range(width))))
+        if out is not None:
+            yield out
+
+    shard = F.pmod(F.xxhash64(*shard_cols), F.lit(n_shards)).alias("__shard")
+    return (
+        df.withColumn("__shard", shard)
+        .groupBy("__shard")
+        .applyInPandasWithState(fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout)
+    )
+
 
 # ---------------------------------------------------------------------------
 # C1-C3: cumulative-counter → delta with reset detection, streaming form.
@@ -33,126 +97,64 @@ from ..config import DEFAULT, DetectionConfig
 _FLOW_SEP = "\x1f"
 
 
-def _delta_batch(
-    rows: pd.DataFrame,
-    key_cols: list[str],
-    counter_col: str,
-    ts_col: str,
-    prev_map: dict,
-    seen_map: dict,
-    idle_timeout_ms: int | None,
-    sep: str = _FLOW_SEP,
-) -> tuple[pd.DataFrame, dict, list]:
-    """One micro-batch of the per-flow counter-delta kernel, shared by the
-    sharded `applyInPandasWithState` form and the transformWithState twin:
-    vectorized per-flow shift deltas with reset detection, seeded from and
-    updating ``prev_map``/``seen_map`` (mutated in place). Returns
-    (output rows, {flow: (counter, last_seen_us)} updates, evicted flows).
-    """
-    flow = rows[key_cols[0]].astype(str)
-    for c in key_cols[1:]:
-        flow = flow + sep + rows[c].astype(str)
-    rows = rows.assign(__flow=flow).sort_values(["__flow", ts_col])
-    evicted: list = []
-    if idle_timeout_ms and seen_map:
-        # evict BEFORE computing deltas: a flow idle past the timeout
-        # re-installed (reference idle_timeout=60 s) — its old counter
-        # must not seed the new delta.
-        batch_max_us = int(rows[ts_col].astype("int64").max() // 1000)
-        horizon = batch_max_us - idle_timeout_ms * 1000
-        for k_ in [k_ for k_, u in seen_map.items() if u < horizon]:
-            del prev_map[k_], seen_map[k_]
-            evicted.append(k_)
-    vals = rows[counter_col].to_numpy(dtype="int64")
-    prev = rows.groupby("__flow", sort=False)[counter_col].shift(1)
-    first_mask = prev.isna().to_numpy()
-    seed = rows["__flow"].map(prev_map).fillna(0).to_numpy(dtype="int64")
-    prev = prev.fillna(0).to_numpy(dtype="int64")
-    prev[first_mask] = seed[first_mask]  # carry state across batches
-    deltas = vals - prev
-    deltas = np.where(deltas < 0, vals, deltas)  # reset detection
-    # update per-flow state: last counter + last event-time seen
-    us = (rows[ts_col].astype("int64") // 1000).to_numpy()  # ns → µs
-    tail = rows.assign(__v=vals, __us=us).groupby("__flow", sort=False).tail(1)
-    updates = {
-        f: (int(v), int(u))
-        for f, v, u in zip(tail["__flow"], tail["__v"], tail["__us"])
-    }
-    prev_map.update({f: v for f, (v, _) in updates.items()})
-    seen_map.update({f: u for f, (_, u) in updates.items()})
-    out = pd.DataFrame({c: rows[c].astype(str).values for c in key_cols})
-    out[ts_col] = rows[ts_col].values
-    out[counter_col] = vals
-    out["delta"] = deltas
-    return out, updates, evicted
-
-
 def counter_delta_stream(
     df: DataFrame,
     key_cols: list[str],
     counter_col: str = "packet_count",
     ts_col: str = "poll_ts",
     idle_timeout_ms: int | None = None,
-    n_shards: int = 64,
 ) -> DataFrame:
-    """Streaming per-key counter deltas, SHARDED state.
+    """Streaming per-key counter deltas, SHARDED state (:func:`_sharded_state`,
+    :data:`N_STATE_SHARDS` shards, each holding its flows' last counter and
+    last event time).
 
     Output schema: key_cols + (poll_ts timestamp, counter long, delta long).
 
-    Throughput design: ``applyInPandasWithState`` pays a Python invocation
-    per state GROUP per batch — with one group per flow (8k flows/poll,
-    the reference's saturation point) that overhead alone blows the 2 s
-    poll budget. So the state key is a hash SHARD of the flow key
-    (``n_shards`` Python calls per batch, not n_flows) and each shard's
-    state holds the per-flow last-counter map as parallel arrays; the
-    per-flow delta is a vectorized pandas groupby+shift inside the shard.
-    Same semantics, ~n_flows/n_shards× less invocation overhead.
-
-    Per-flow TTL eviction (I2) happens INSIDE the shard using EVENT time:
-    entries whose last poll is older than ``idle_timeout_ms`` behind the
-    shard's newest event are pruned each batch — matching the reference's
-    data-driven flow idle timeout, and safe under Trigger.AvailableNow
-    (no ProcessingTimeTimeout, which would re-arm forever and keep
-    AvailableNow scheduling batches). State size is bounded by live flows;
-    the shard rows themselves are bounded by ``n_shards``.
+    The per-flow delta is a vectorized pandas groupby+shift inside the
+    shard, seeded from the flow's last counter in state. Per-flow TTL
+    eviction (I2) uses EVENT time and runs BEFORE the deltas: a flow idle
+    past ``idle_timeout_ms`` re-installed (reference idle_timeout=60 s),
+    so its old counter must not seed the new delta. State size is bounded
+    by live flows.
     """
     out_schema = (
         ", ".join(f"{c} string" for c in key_cols)
         + f", {ts_col} timestamp, {counter_col} long, delta long"
     )
-    state_schema = "flow_keys array<string>, last_counters array<long>, last_seen_us array<long>"
-    sep = _FLOW_SEP
 
-    def fn(
-        key: tuple[Any, ...], pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            ks, vs, seen = state.get
-            prev_map = dict(zip(ks, vs))
-            seen_map = dict(zip(ks, seen))
-        else:
-            prev_map, seen_map = {}, {}
-        chunks = list(pdfs)
-        rows = chunks[0] if len(chunks) == 1 else pd.concat(chunks)
-        out, _, _ = _delta_batch(
-            rows, key_cols, counter_col, ts_col, prev_map, seen_map,
-            idle_timeout_ms, sep,
-        )
-        state.update(
-            (list(prev_map.keys()), list(prev_map.values()), [seen_map[k_] for k_ in prev_map])
-        )
-        yield out
+    def step(shard: Any, rows: pd.DataFrame, smap: dict) -> pd.DataFrame:
+        flow = rows[key_cols[0]].astype(str)
+        for c in key_cols[1:]:
+            flow = flow + _FLOW_SEP + rows[c].astype(str)
+        rows = rows.assign(__flow=flow).sort_values(["__flow", ts_col])
+        vals = rows[counter_col].to_numpy(dtype="int64")
+        prev = rows.groupby("__flow", sort=False)[counter_col].shift(1)
+        first_mask = prev.isna().to_numpy()
+        last = {f: v[0] for f, v in smap.items()}
+        seed = rows["__flow"].map(last).fillna(0).to_numpy(dtype="int64")
+        prev = prev.fillna(0).to_numpy(dtype="int64")
+        prev[first_mask] = seed[first_mask]  # carry state across batches
+        deltas = vals - prev
+        deltas = np.where(deltas < 0, vals, deltas)  # reset detection
+        # update per-flow state: last counter + last event-time seen
+        us = (rows[ts_col].astype("int64") // 1000).to_numpy()  # ns → µs
+        tail = rows.assign(__v=vals, __us=us).groupby("__flow", sort=False).tail(1)
+        for f, v, u in zip(tail["__flow"], tail["__v"], tail["__us"]):
+            smap[f] = [int(v), int(u)]
+        out = pd.DataFrame({c: rows[c].astype(str).values for c in key_cols})
+        out[ts_col] = rows[ts_col].values
+        out[counter_col] = vals
+        out["delta"] = deltas
+        return out
 
-    shard = F.pmod(F.xxhash64(*key_cols), F.lit(n_shards)).alias("__shard")
-    return (
-        df.withColumn("__shard", shard)
-        .groupBy("__shard")
-        .applyInPandasWithState(
-            fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-        )
+    return _sharded_state(
+        df,
+        key_cols,
+        N_STATE_SHARDS,
+        ["flow_keys string", "last_counters long", "last_seen_us long"],
+        out_schema,
+        step,
+        (ts_col, idle_timeout_ms),
     )
 
 
@@ -188,15 +190,12 @@ def _advance_lifecycle(
     escalate_at: int,
 ) -> list[tuple[str, Any, int]]:
     """Advance one key's lifecycle state ``st = [streak, calm, alerted,
-    escalated]`` (mutated in place) through ONE maximal run of ``ln``
-    consecutive polls of the same hotness; ``ts_run`` holds the run's
-    timestamps. Returns the transition events fired inside the run.
-
-    This is THE lifecycle arithmetic — the sharded machine and the
-    transformWithState twin both call it, so every lifecycle golden/
-    property test certifies both forms' semantics."""
-    # st may carry extra fields past [3] (the sharded form appends
-    # last_seen_us); only the lifecycle quadruple is read/written here
+    escalated, last_seen_us]`` (mutated in place) through ONE maximal run
+    of ``ln`` consecutive polls of the same hotness; ``ts_run`` holds the
+    run's timestamps. Returns the transition events fired inside the run:
+    the lifecycle arithmetic of :func:`alert_state_machine`."""
+    # only the lifecycle quadruple is read/written here; the machine
+    # stamps last_seen_us at [4]
     streak, calm, alerted, escalated = st[0], st[1], st[2], st[3]
     events: list[tuple[str, Any, int]] = []
     if is_hot:
@@ -227,7 +226,6 @@ def alert_state_machine(
     ts_col: str = "poll_ts",
     cfg: DetectionConfig = DEFAULT,
     idle_timeout_ms: int | None = None,
-    n_shards: int = 64,
     emit_state_size: bool = False,
 ) -> DataFrame:
     """Per-source alert lifecycle: suspected → ALERT after
@@ -236,55 +234,33 @@ def alert_state_machine(
     ``cfg.escalate_persist`` further hot polls; ALERT/ESCALATE → CLEAR after
     ``cfg.calm_count`` calm polls. Output: (key, event, event_ts, streak).
 
-    SHARDED state, same design as :func:`counter_delta_stream`: the group
-    key is a hash shard (``n_shards`` Python invocations per batch, not
-    n_keys) and each shard holds its keys' lifecycle tuples as parallel
-    arrays. Inside the shard the poll timeline is run-length segmented
-    (consecutive hot / calm runs per key); transitions are emitted with
-    O(1) arithmetic per RUN — the crossing position of sustained /
-    escalate / calm thresholds — so cost scales with state changes, not
-    polls. ``idle_timeout_ms`` is an EVENT-TIME TTL applied inside the
-    shard (entries idle past the horizon are pruned before processing) —
-    never ProcessingTimeTimeout, which re-arms forever and hangs
-    Trigger.AvailableNow harnesses.
+    SHARDED state (:func:`_sharded_state`, :data:`N_STATE_SHARDS` shards,
+    each holding its keys' lifecycle tuples). Inside the shard the poll
+    timeline is run-length segmented (consecutive hot / calm runs per
+    key); transitions are emitted with O(1) arithmetic per RUN — the
+    crossing position of sustained / escalate / calm thresholds — so cost
+    scales with state changes, not polls. ``idle_timeout_ms`` is an
+    EVENT-TIME TTL (entries idle past the horizon are pruned before
+    processing).
 
     ``emit_state_size=True`` adds one observability row per shard per
     batch — (``__shard=<n>``, event=``STATE_SIZE``, batch max ts,
     streak=tracked keys AFTER TTL pruning) — so soak tests/monitors can
     assert the state stays bounded instead of trusting the TTL. The
     sharded layout makes the engine-level ``numRowsTotal`` metric read
-    n_shards regardless of key count; this probe is the honest signal.
+    the shard count regardless of key count; this probe is the honest
+    signal.
     """
     out_schema = f"{key_col} string, event string, event_ts timestamp, streak int"
-    state_schema = (
-        "keys array<string>, streaks array<int>, calms array<int>, "
-        "alerteds array<boolean>, escalateds array<boolean>, last_seen_us array<long>"
-    )
     sustained, calm_needed = cfg.sustained_count, cfg.calm_count
     escalate_at = cfg.sustained_count + cfg.escalate_persist
 
-    def fn(
-        key: tuple[Any, ...], pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            ks, st_, ca, al, es, seen = state.get
-            smap = {k_: [st_[i], ca[i], al[i], es[i], seen[i]] for i, k_ in enumerate(ks)}
-        else:
-            smap = {}
-        chunks = list(pdfs)
-        rows = chunks[0] if len(chunks) == 1 else pd.concat(chunks)
+    def step(shard: Any, rows: pd.DataFrame, smap: dict) -> pd.DataFrame | None:
         rows = rows.sort_values([key_col, ts_col])
         keys_a = rows[key_col].astype(str).to_numpy(dtype=object)
         hot_a = rows[hot_col].to_numpy(dtype=bool)
         ts_a = rows[ts_col].to_numpy()
         us_a = rows[ts_col].astype("int64").to_numpy() // 1000  # ns → µs
-        if idle_timeout_ms and smap:
-            horizon = int(us_a.max()) - idle_timeout_ms * 1000
-            for k_ in [k_ for k_, v in smap.items() if v[4] < horizon]:
-                del smap[k_]
         starts, lengths = _runs(keys_a, hot_a)
         events: list[tuple[str, str, Any, int]] = []
         for s, ln in zip(starts, lengths):
@@ -298,243 +274,29 @@ def alert_state_machine(
             st[4] = int(us_a[s + ln - 1])
             smap[k_] = st
         if emit_state_size:
-            events.append((f"__shard={key[0]}", "STATE_SIZE", ts_a.max(), len(smap)))
-        state.update(
-            (
-                list(smap.keys()),
-                [v[0] for v in smap.values()],
-                [v[1] for v in smap.values()],
-                [v[2] for v in smap.values()],
-                [v[3] for v in smap.values()],
-                [v[4] for v in smap.values()],
-            )
+            events.append((f"__shard={shard}", "STATE_SIZE", ts_a.max(), len(smap)))
+        if not events:
+            return None
+        return pd.DataFrame(
+            {
+                key_col: [e[0] for e in events],
+                "event": [e[1] for e in events],
+                "event_ts": [e[2] for e in events],
+                "streak": [int(e[3]) for e in events],
+            }
         )
-        if events:
-            yield pd.DataFrame(
-                {
-                    key_col: [e[0] for e in events],
-                    "event": [e[1] for e in events],
-                    "event_ts": [e[2] for e in events],
-                    "streak": [int(e[3]) for e in events],
-                }
-            )
 
-    shard = F.pmod(F.xxhash64(key_col), F.lit(n_shards)).alias("__shard")
-    return (
-        df.withColumn("__shard", shard)
-        .groupBy("__shard")
-        .applyInPandasWithState(fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout)
-    )
-
-
-# ---------------------------------------------------------------------------
-# I16 on Spark 4's transformWithState API: the forward-looking twin of
-# alert_state_machine. State lives PER KEY in the native state store
-# (RocksDB required by the API), not in sharded Python dicts — the layout
-# production Spark is converging on for custom stateful operators.
-# ---------------------------------------------------------------------------
-
-
-def make_alert_processor(
-    key_col: str = "src",
-    hot_col: str = "hot",
-    ts_col: str = "poll_ts",
-    cfg: DetectionConfig = DEFAULT,
-    state_ttl_ms: int | None = None,
-):
-    """Build the StatefulProcessor behind :func:`alert_state_machine_tws`.
-    Exposed separately so tests can drive it WIRE-FREE against a fake
-    handle (the protobuf state protocol is absent in the sandbox)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    sustained, calm_needed = cfg.sustained_count, cfg.calm_count
-    escalate_at = cfg.sustained_count + cfg.escalate_persist
-
-    class _AlertProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._st = handle.getValueState(
-                "alert",
-                "streak int, calm int, alerted boolean, escalated boolean",
-                ttlDurationMs=state_ttl_ms,
-            )
-
-        def handleInputRows(self, key, rows, timer_values):
-            chunks = list(rows)
-            pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks)
-            pdf = pdf.sort_values(ts_col)
-            hot_a = pdf[hot_col].to_numpy(dtype=bool)
-            ts_a = pdf[ts_col].to_numpy()
-            st = list(self._st.get()) if self._st.exists() else [0, 0, False, False]
-            # ONE key here, so runs segment purely on the hot flag; the
-            # transition arithmetic is the SHARED kernel
-            starts, lengths = _runs(np.zeros(len(hot_a)), hot_a)
-            events: list[tuple[str, Any, int]] = []
-            for s, ln in zip(starts, lengths):
-                events.extend(
-                    _advance_lifecycle(
-                        st, bool(hot_a[s]), int(ln), ts_a[s : s + ln],
-                        sustained, calm_needed, escalate_at,
-                    )
-                )
-            self._st.update(tuple(st))
-            if events:
-                yield pd.DataFrame(
-                    {
-                        key_col: [str(key[0])] * len(events),
-                        "event": [e[0] for e in events],
-                        "event_ts": [e[1] for e in events],
-                        "streak": [int(e[2]) for e in events],
-                    }
-                )
-
-        def close(self) -> None:
-            pass
-
-    return _AlertProcessor()
-
-
-def alert_state_machine_tws(
-    df: DataFrame,
-    key_col: str = "src",
-    hot_col: str = "hot",
-    ts_col: str = "poll_ts",
-    cfg: DetectionConfig = DEFAULT,
-    state_ttl_ms: int | None = None,
-) -> DataFrame:
-    """Identical lifecycle semantics to :func:`alert_state_machine`
-    (suspected → ALERT → ESCALATE → CLEAR, same thresholds, same
-    transition-only emission; equivalence is pytest-certified), expressed
-    on ``transformWithStateInPandas`` (Spark 4 structured-streaming
-    stateful v2):
-
-    - ONE ValueState tuple per key in the native store — the engine never
-      serializes parallel arrays through GroupState, and RocksDB holds
-      key-level entries (the ``numRowsTotal`` metric reads true key
-      counts when ``trackTotalNumberOfRows`` is on; the engine's default
-      ``ROCKSDB_STATE_CONF`` trades that metric for write throughput —
-      r10 soak — so audit key counts via the State Data Source
-      (``streaming/stateview.py``) or re-enable tracking per session);
-    - TTL is the API's built-in per-state ``ttlDurationMs``
-      (processing-time — the state-hygiene clock a production cluster
-      actually runs; the sharded form's event-time TTL remains the
-      replay-deterministic variant);
-    - REQUIRES the RocksDB state store provider
-      (``session.enable_rocksdb_state``) — a transformWithState query on
-      the default HDFS provider fails at start by Spark's own contract —
-      AND the ``protobuf`` package in the Python environment (the TWS
-      state protocol is protobuf-framed; absent in this sandbox, so the
-      wire tests skip-gate on it exactly like the Pulsar-jar tests,
-      while the processor itself is certified wire-free against a fake
-      handle and shares :func:`_advance_lifecycle` with the fully-tested
-      sharded machine).
-
-    Trade-off vs the sharded form: per-key handler invocations cost more
-    Python dispatch per batch at huge key counts (the sharded form
-    amortizes to ``n_shards`` calls), but state layout, TTL, timers and
-    metrics are native.
-    """
-    out_schema = f"{key_col} string, event string, event_ts timestamp, streak int"
-    # Spark rejects TTL state registration unless the query runs in
-    # processing-time mode (STATEFUL_PROCESSOR_INCORRECT_TIME_MODE_TO_
-    # ASSIGN_TTL), so the time mode follows the TTL parameter.
-    time_mode = "processingTime" if state_ttl_ms is not None else "None"
-    return df.groupBy(key_col).transformWithStateInPandas(
-        make_alert_processor(key_col, hot_col, ts_col, cfg, state_ttl_ms),
+    return _sharded_state(
+        df,
+        [key_col],
+        N_STATE_SHARDS,
+        [
+            "keys string", "streaks int", "calms int",
+            "alerteds boolean", "escalateds boolean", "last_seen_us long",
+        ],
         out_schema,
-        "append",
-        time_mode,
-    )
-
-
-def make_delta_processor(
-    key_cols: list[str] | None = None,
-    counter_col: str = "packet_count",
-    ts_col: str = "poll_ts",
-    idle_timeout_ms: int | None = None,
-):
-    """Build the StatefulProcessor behind :func:`counter_delta_tws`.
-    Exposed separately so tests can drive it WIRE-FREE against a fake
-    handle (the TWS protobuf protocol is absent in this sandbox), exactly
-    like :func:`make_alert_processor`."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    kc = key_cols or ["src"]
-
-    class _DeltaProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            # native MapState: one entry PER FLOW inside each shard's
-            # state — RocksDB stores and iterates entries individually,
-            # so per-flow updates/evictions don't rewrite the whole
-            # shard blob the way the sharded form's parallel arrays do.
-            self._flows = handle.getMapState(
-                "flows", "flow string", "last_counter long, last_seen_us long"
-            )
-
-        def handleInputRows(self, key, rows, timer_values):
-            chunks = list(rows)
-            pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks)
-            prev_map: dict = {}
-            seen_map: dict = {}
-            if self._flows.exists():
-                for k_, v in self._flows.iterator():
-                    prev_map[k_[0]] = v[0]
-                    seen_map[k_[0]] = v[1]
-            out, updates, evicted = _delta_batch(
-                pdf, kc, counter_col, ts_col, prev_map, seen_map, idle_timeout_ms
-            )
-            for f in evicted:
-                self._flows.removeKey((f,))
-            for f, (v, u) in updates.items():
-                self._flows.updateValue((f,), (v, u))
-            yield out
-
-        def close(self) -> None:
-            pass
-
-    return _DeltaProcessor()
-
-
-def counter_delta_tws(
-    df: DataFrame,
-    key_cols: list[str],
-    counter_col: str = "packet_count",
-    ts_col: str = "poll_ts",
-    idle_timeout_ms: int | None = None,
-    n_shards: int = 64,
-) -> DataFrame:
-    """:func:`counter_delta_stream` on Spark 4's ``transformWithState``
-    API — IDENTICAL semantics (same `_delta_batch` kernel, same shard
-    fan-in), different state layout: per-flow entries live in a native
-    ``MapState`` instead of parallel arrays serialized as one shard
-    tuple. RocksDB then stores each flow as its own key-value entry, so
-    a shard touching 3 of its 10k flows rewrites 3 entries (plus their
-    changelog records), not one 10k-wide blob — and the State Data
-    Source reads per-flow rows directly (`streaming/stateview.py`).
-
-    Requires the RocksDB provider + protobuf like
-    :func:`alert_state_machine_tws` (wire tests gate on it; the
-    processor itself is certified wire-free against a fake MapState
-    handle, and the kernel is the fully-tested `_delta_batch`)."""
-    out_schema = (
-        ", ".join(f"{c} string" for c in key_cols)
-        + f", {ts_col} timestamp, {counter_col} long, delta long"
-    )
-    shard = F.pmod(F.xxhash64(*key_cols), F.lit(n_shards)).alias("__shard")
-    return (
-        df.withColumn("__shard", shard)
-        .groupBy("__shard")
-        .transformWithStateInPandas(
-            make_delta_processor(key_cols, counter_col, ts_col, idle_timeout_ms),
-            out_schema,
-            "append",
-            "None",
-        )
+        step,
+        (ts_col, idle_timeout_ms),
     )
 
 
@@ -552,7 +314,6 @@ def pushback_dedupe_stream(
     ts_col: str = "poll_ts",
     sustain: int = 5,
     idle_timeout_ms: int | None = None,
-    n_shards: int = 64,
 ) -> DataFrame:
     """Input: one row per (key, poll) carrying the poll's pushback set as an
     array column. Emits (key, sent_ts, members, streak) exactly once per
@@ -560,33 +321,16 @@ def pushback_dedupe_stream(
     consecutive polls. A changed set resets the streak; after a send, the
     same set never re-sent until it changes and re-sustains.
 
-    SHARDED state (see :func:`counter_delta_stream`): one Python call per
-    hash shard per batch; per-key (sig, streak, sent) tuples held as
-    parallel arrays in the shard. The poll timeline is run-length
-    segmented on (key, canonical-set signature); a send is the O(1)
-    crossing position of ``sustain`` within a run — no per-row loop.
-    ``idle_timeout_ms`` = event-time TTL inside the shard (never
-    ProcessingTimeTimeout — see alert_state_machine).
+    SHARDED state (:func:`_sharded_state`, :data:`N_STATE_SHARDS` shards):
+    per-key (sig, streak, sent) tuples held as parallel arrays in the
+    shard. The poll timeline is run-length segmented on (key,
+    canonical-set signature); a send is the O(1) crossing position of
+    ``sustain`` within a run — no per-row loop. ``idle_timeout_ms`` =
+    event-time TTL inside the shard.
     """
     out_schema = f"{key_col} string, sent_ts timestamp, members array<string>, streak int"
-    state_schema = (
-        "keys array<string>, sigs array<string>, streaks array<int>, "
-        "sents array<boolean>, last_seen_us array<long>"
-    )
 
-    def fn(
-        key: tuple[Any, ...], pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            ks, sg, st_, sn, seen = state.get
-            smap = {k_: [sg[i], st_[i], sn[i], seen[i]] for i, k_ in enumerate(ks)}
-        else:
-            smap = {}
-        chunks = list(pdfs)
-        rows = chunks[0] if len(chunks) == 1 else pd.concat(chunks)
+    def step(shard: Any, rows: pd.DataFrame, smap: dict) -> pd.DataFrame | None:
         rows = rows.sort_values([key_col, ts_col])
         keys_a = rows[key_col].astype(str).to_numpy(dtype=object)
         ts_a = rows[ts_col].to_numpy()
@@ -597,10 +341,6 @@ def pushback_dedupe_stream(
             canon = sorted(set(m))
             mem_canon[i] = canon
             sig_a[i] = "\x1f".join(canon)
-        if idle_timeout_ms and smap:
-            horizon = int(us_a.max()) - idle_timeout_ms * 1000
-            for k_ in [k_ for k_, v in smap.items() if v[3] < horizon]:
-                del smap[k_]
         starts, lengths = _runs(keys_a, sig_a)
         fired: list[tuple[str, Any, list, int]] = []
         for s, ln in zip(starts, lengths):
@@ -615,30 +355,25 @@ def pushback_dedupe_stream(
                 sent = True
                 fired.append((k_, ts_a[s + p - 1], mem_canon[s], start + p))
             smap[k_] = [sig_a[s], int(start + ln), bool(sent), int(us_a[s + ln - 1])]
-        state.update(
-            (
-                list(smap.keys()),
-                [v[0] for v in smap.values()],
-                [v[1] for v in smap.values()],
-                [v[2] for v in smap.values()],
-                [v[3] for v in smap.values()],
-            )
+        if not fired:
+            return None
+        return pd.DataFrame(
+            {
+                key_col: [f[0] for f in fired],
+                "sent_ts": [f[1] for f in fired],
+                "members": [f[2] for f in fired],
+                "streak": [int(f[3]) for f in fired],
+            }
         )
-        if fired:
-            yield pd.DataFrame(
-                {
-                    key_col: [f[0] for f in fired],
-                    "sent_ts": [f[1] for f in fired],
-                    "members": [f[2] for f in fired],
-                    "streak": [int(f[3]) for f in fired],
-                }
-            )
 
-    shard = F.pmod(F.xxhash64(key_col), F.lit(n_shards)).alias("__shard")
-    return (
-        df.withColumn("__shard", shard)
-        .groupBy("__shard")
-        .applyInPandasWithState(fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout)
+    return _sharded_state(
+        df,
+        [key_col],
+        N_STATE_SHARDS,
+        ["keys string", "sigs string", "streaks int", "sents boolean", "last_seen_us long"],
+        out_schema,
+        step,
+        (ts_col, idle_timeout_ms),
     )
 
 
@@ -652,63 +387,41 @@ def heavy_hitters_stream(
     unbounded stream (the streaming twin of
     `operators/heavyhitters.heavy_hitters_exact`).
 
-    Values are SHARDED BY VALUE HASH, so every occurrence of a value
-    lands in the same shard and each shard maintains one SpaceSaving
-    summary of ≤ ``m`` counters — state is O(m · n_shards) FOREVER,
-    regardless of stream length or value cardinality (no watermark
-    needed: the summary itself is the bounded structure, unlike dedup
-    state). Each batch the shard re-emits its current candidate set as
-    (value, est_count, err_bound): est overestimates the true count by at
-    most err_bound (the count the entry inherited at its last eviction) —
-    the standard SpaceSaving guarantee, which also means any value with
-    true frequency > batch_total/m so far is present.
+    Values are SHARDED BY VALUE HASH (:func:`_sharded_state`), so every
+    occurrence of a value lands in the same shard and each shard
+    maintains one SpaceSaving summary of ≤ ``m`` counters — state is
+    O(m · n_shards) FOREVER, regardless of stream length or value
+    cardinality (no watermark or TTL needed: the summary itself is the
+    bounded structure, unlike dedup state). Each batch the shard re-emits
+    its current candidate set as (value, est_count, err_bound): est
+    overestimates the true count by at most err_bound (the count the
+    entry inherited at its last eviction) — the standard SpaceSaving
+    guarantee, which also means any value with true frequency >
+    batch_total/m so far is present.
 
     Append-mode emission of per-batch snapshots: downstream takes the
     latest batch (or maxes over time) for a live top-k board.
     """
     out_schema = f"{col} string, est_count long, err_bound long"
-    state_schema = "vals array<string>, counts array<long>, errs array<long>"
 
-    def fn(
-        key: tuple[Any, ...], pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            vs, cs, es = state.get
-            counts = dict(zip(vs, cs))
-            errs = dict(zip(vs, es))
-        else:
-            counts, errs = {}, {}
-        for pdf in pdfs:
-            for v in pdf[col]:
-                if v in counts:
-                    counts[v] += 1
-                elif len(counts) < m:
-                    counts[v] = 1
-                    errs[v] = 0
-                else:
-                    mk = min(counts, key=counts.get)
-                    mv = counts.pop(mk)
-                    errs.pop(mk)
-                    counts[v] = mv + 1
-                    errs[v] = mv  # overestimate bound inherited on eviction
-        keys = list(counts.keys())
-        state.update((keys, [counts[k2] for k2 in keys], [errs[k2] for k2 in keys]))
-        yield pd.DataFrame(
+    def step(shard: Any, rows: pd.DataFrame, smap: dict) -> pd.DataFrame:
+        for v in rows[col]:
+            entry = smap.get(v)
+            if entry is not None:
+                entry[0] += 1
+            elif len(smap) < m:
+                smap[v] = [1, 0]
+            else:
+                mv = smap.pop(min(smap, key=lambda k2: smap[k2][0]))[0]
+                smap[v] = [mv + 1, mv]  # overestimate bound inherited on eviction
+        return pd.DataFrame(
             {
-                col: keys,
-                "est_count": [counts[k2] for k2 in keys],
-                "err_bound": [errs[k2] for k2 in keys],
+                col: list(smap),
+                "est_count": [e[0] for e in smap.values()],
+                "err_bound": [e[1] for e in smap.values()],
             }
         )
 
-    shard = F.pmod(F.xxhash64(F.col(col)), F.lit(n_shards)).alias("__shard")
-    return (
-        df.withColumn("__shard", shard)
-        .groupBy("__shard")
-        .applyInPandasWithState(
-            fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-        )
+    return _sharded_state(
+        df, [col], n_shards, ["vals string", "counts long", "errs long"], out_schema, step
     )

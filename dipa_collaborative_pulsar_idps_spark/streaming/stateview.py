@@ -57,10 +57,10 @@ def unpack_sharded_state(
     `streaming/state.py`) back to one row per TRACKED KEY.
 
     *value_fields* names the array columns inside the state tuple, first
-    one being the key array (e.g. ``("keys", "prevs", "last_seen_us")``
-    for the counter-delta machine). Output: (shard, key, <field>...)
-    with the arrays zipped positionally — exactly the rows the operator
-    would see on its next ``state.get``."""
+    one being the key array (e.g. ``("flow_keys", "last_counters",
+    "last_seen_us")`` for the counter-delta machine). Output: (shard,
+    key, <field>...) with the arrays zipped positionally — exactly the
+    rows the operator would see on its next ``state.get``."""
     key_f, *rest = value_fields
     # applyInPandasWithState wraps the user tuple one level down
     # (value.groupState.<field>); other stateful operators put fields

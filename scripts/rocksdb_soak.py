@@ -84,16 +84,19 @@ VARIANTS: dict[str, dict[str, str]] = {
 
 def _factory_variants() -> dict[str, dict[str, str]]:
     """The ENGINE-DEFAULT streaming path (r11, judge punch #4): conf built
-    from session.py's own constants — streaming_shuffle_partitions(64)
-    and ROCKSDB_STATE_CONF — so the soak certifies what
+    from session.py's own constants — streaming_shuffle_partitions(
+    N_STATE_SHARDS) and ROCKSDB_STATE_CONF — so the soak certifies what
     `get_streaming_spark()` actually hands a user, not a hand-copied
     twin of it."""
     from dipa_collaborative_pulsar_idps_spark.session import (
+        N_STATE_SHARDS,
         ROCKSDB_STATE_CONF,
         streaming_shuffle_partitions,
     )
 
-    shuffle = {"spark.sql.shuffle.partitions": str(streaming_shuffle_partitions(64))}
+    shuffle = {
+        "spark.sql.shuffle.partitions": str(streaming_shuffle_partitions(N_STATE_SHARDS))
+    }
     return {
         "factory_default": dict(shuffle),
         "factory_rocksdb": {**ROCKSDB_STATE_CONF, **shuffle},

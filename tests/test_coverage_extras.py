@@ -47,213 +47,6 @@ def test_alert_escalation_lifecycle(spark, replay_dir):
     assert got == [("ALERT", 5), ("ESCALATE", 9), ("CLEAR", 5)]
 
 
-#: transformWithState's Python state protocol is protobuf-framed; the
-#: sandbox has no protobuf package, so the WIRE tests gate on it (the
-#: processor's semantics are certified wire-free below + via the shared
-#: _advance_lifecycle kernel that the fully-tested sharded machine runs).
-import importlib.util
-
-try:  # find_spec raises if the 'google' namespace itself is absent
-    _HAS_PROTOBUF = importlib.util.find_spec("google.protobuf") is not None
-except ModuleNotFoundError:
-    _HAS_PROTOBUF = False
-needs_tws_wire = pytest.mark.skipif(
-    not _HAS_PROTOBUF,
-    reason="transformWithState wire needs the protobuf package "
-    "(absent in this sandbox; processor certified wire-free instead)",
-)
-
-
-@pytest.fixture()
-def rocksdb_state(spark):
-    """transformWithState requires the RocksDB provider; set it for the
-    test and restore after (queries read the conf at start)."""
-    from dipa_collaborative_pulsar_idps_spark.session import ROCKSDB_STATE_CONF
-
-    saved = {k: spark.conf.get(k, None) for k in ROCKSDB_STATE_CONF}
-    for k, v in ROCKSDB_STATE_CONF.items():
-        spark.conf.set(k, v)
-    yield
-    for k, v in saved.items():
-        if v is None:
-            spark.conf.unset(k)
-        else:
-            spark.conf.set(k, v)
-
-
-class _FakeValueState:
-    def __init__(self):
-        self._v = None
-
-    def exists(self):
-        return self._v is not None
-
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = tuple(v)
-
-    def clear(self):
-        self._v = None
-
-
-class _FakeHandle:
-    """Stands in for StatefulProcessorHandle: per-name ValueState only —
-    exactly the surface the alert processor uses."""
-
-    def __init__(self):
-        self.states = {}
-        self.ttls = {}
-
-    def getValueState(self, name, schema, ttlDurationMs=None):
-        self.ttls[name] = ttlDurationMs
-        return self.states.setdefault(name, _FakeValueState())
-
-
-def test_alert_tws_processor_wire_free_lifecycle():
-    """Drive the transformWithState processor DIRECTLY (no Spark wire,
-    no protobuf): the exact lifecycle golden across three separate
-    handleInputRows calls (state surviving 'batches'), matching the
-    sharded machine's certified sequence."""
-    import pandas as pd
-
-    from dipa_collaborative_pulsar_idps_spark.streaming.state import (
-        make_alert_processor,
-    )
-
-    proc = make_alert_processor()
-    proc.init(_FakeHandle())
-
-    def batch(rows):
-        pdf = pd.DataFrame(rows, columns=["poll_ts", "src", "hot"])
-        out = list(proc.handleInputRows(("h1",), iter([pdf]), None))
-        return [
-            (r.event, int(r.streak)) for o in out for r in o.itertuples()
-        ]
-
-    mk = lambda i: T0 + dt.timedelta(seconds=3 * i)
-    # batch 1: 4 hot polls — below sustained threshold, no events
-    assert batch([(mk(i), "h1", True) for i in range(4)]) == []
-    # batch 2: 8 more hot — ALERT fires at streak 5, ESCALATE at 9
-    assert batch([(mk(4 + i), "h1", True) for i in range(8)]) == [
-        ("ALERT", 5),
-        ("ESCALATE", 9),
-    ]
-    # batch 3: 6 calm — CLEAR after 5
-    assert batch([(mk(12 + i), "h1", False) for i in range(6)]) == [("CLEAR", 5)]
-    # back to hot: lifecycle restarts cleanly after CLEAR
-    assert batch([(mk(18 + i), "h1", True) for i in range(5)]) == [("ALERT", 5)]
-
-
-def test_alert_tws_processor_forwards_ttl_to_state_registration():
-    """state_ttl_ms must reach the ValueState registration (and default to
-    None = no TTL) — paired with the processing-time time-mode switch in
-    alert_state_machine_tws, without which Spark rejects TTL registration
-    (STATEFUL_PROCESSOR_INCORRECT_TIME_MODE_TO_ASSIGN_TTL)."""
-    from dipa_collaborative_pulsar_idps_spark.streaming.state import (
-        make_alert_processor,
-    )
-
-    h = _FakeHandle()
-    make_alert_processor(state_ttl_ms=3_600_000).init(h)
-    assert h.ttls == {"alert": 3_600_000}
-    h2 = _FakeHandle()
-    make_alert_processor().init(h2)
-    assert h2.ttls == {"alert": None}
-
-
-@needs_tws_wire
-def test_alert_tws_ttl_runs_in_processing_time_mode(spark, replay_dir, rocksdb_state):
-    """A TTL'd alert_state_machine_tws must START (time mode follows the
-    TTL parameter — with timeMode 'None' Spark rejects the TTL state
-    registration at query start) and, with a TTL far above the test's
-    wall-clock, reproduce the exact lifecycle golden."""
-    from dipa_collaborative_pulsar_idps_spark.streaming.state import (
-        alert_state_machine_tws,
-    )
-
-    rows = [(T0 + dt.timedelta(seconds=3 * i), "h1", True) for i in range(12)]
-    rows += [(T0 + dt.timedelta(seconds=3 * (12 + i)), "h1", False) for i in range(6)]
-    spark.createDataFrame(rows, ["poll_ts", "src", "hot"]).coalesce(1).write.mode(
-        "append"
-    ).parquet(replay_dir)
-    stream = replay_stream(spark, replay_dir, "poll_ts timestamp, src string, hot boolean")
-    run_to_memory(
-        alert_state_machine_tws(stream, state_ttl_ms=3_600_000), "tws_ttl_out"
-    )
-    got = [
-        (r.event, r.streak)
-        for r in spark.sql("SELECT * FROM tws_ttl_out ORDER BY event_ts").collect()
-    ]
-    assert got == [("ALERT", 5), ("ESCALATE", 9), ("CLEAR", 5)]
-
-
-@needs_tws_wire
-def test_alert_tws_lifecycle(spark, replay_dir, rocksdb_state):
-    """The transformWithState twin reproduces the exact lifecycle golden:
-    hot×12 → ALERT at streak 5, ESCALATE at streak 9, CLEAR after 5 calm
-    polls — per-key ValueState in the native RocksDB store."""
-    from dipa_collaborative_pulsar_idps_spark.streaming.state import (
-        alert_state_machine_tws,
-    )
-
-    rows = [(T0 + dt.timedelta(seconds=3 * i), "h1", True) for i in range(12)]
-    rows += [(T0 + dt.timedelta(seconds=3 * (12 + i)), "h1", False) for i in range(6)]
-    spark.createDataFrame(rows, ["poll_ts", "src", "hot"]).coalesce(1).write.mode(
-        "append"
-    ).parquet(replay_dir)
-    stream = replay_stream(spark, replay_dir, "poll_ts timestamp, src string, hot boolean")
-    run_to_memory(alert_state_machine_tws(stream), "tws_out")
-    got = [
-        (r.event, r.streak)
-        for r in spark.sql("SELECT * FROM tws_out ORDER BY event_ts").collect()
-    ]
-    assert got == [("ALERT", 5), ("ESCALATE", 9), ("CLEAR", 5)]
-
-
-@needs_tws_wire
-def test_alert_tws_equivalent_to_sharded_machine(spark, replay_dir, rocksdb_state):
-    """Property: on a multi-key multi-batch workload (state crossing
-    micro-batch boundaries), the transformWithState twin emits EXACTLY
-    the sharded machine's events — same keys, kinds, timestamps and
-    streak counts."""
-    import random
-
-    from dipa_collaborative_pulsar_idps_spark.streaming.state import (
-        alert_state_machine,
-        alert_state_machine_tws,
-    )
-
-    rng = random.Random(42)
-    poll = 0
-    for _ in range(3):  # 3 appended files -> state spans batches
-        rows = []
-        for i in range(8):  # 8 polls per batch
-            for k in range(12):  # 12 keys with per-key hot biases
-                rows.append(
-                    (
-                        T0 + dt.timedelta(seconds=3 * poll + i * 3),
-                        f"h{k}",
-                        rng.random() < (0.25 + 0.06 * k),
-                    )
-                )
-            poll += 1
-        spark.createDataFrame(rows, ["poll_ts", "src", "hot"]).coalesce(1).write.mode(
-            "append"
-        ).parquet(replay_dir)
-    schema = "poll_ts timestamp, src string, hot boolean"
-    run_to_memory(
-        alert_state_machine(replay_stream(spark, replay_dir, schema)), "eq_shard"
-    )
-    run_to_memory(
-        alert_state_machine_tws(replay_stream(spark, replay_dir, schema)), "eq_tws"
-    )
-    a = sorted(map(tuple, spark.sql("SELECT src, event, event_ts, streak FROM eq_shard").collect()))
-    b = sorted(map(tuple, spark.sql("SELECT src, event, event_ts, streak FROM eq_tws").collect()))
-    assert a and a == b
-
-
 def test_latch_change_detection_stream(spark, replay_dir):
     """I7: CNC change-detect — emit only on change of value per key
     (streaming dropDuplicates as the latch)."""
@@ -406,121 +199,6 @@ def test_weighted_exact_k_sample_matches_independent_reimpl(spark):
     assert all(n == min(_WEK_K, len(per_lang[lg])) for lg, n in by_lang.items())
 
 
-class _FakeMapState:
-    def __init__(self):
-        self.m = {}
-
-    def exists(self):
-        return bool(self.m)
-
-    def iterator(self):
-        return iter(list(self.m.items()))
-
-    def containsKey(self, k):
-        return k in self.m
-
-    def getValue(self, k):
-        return self.m.get(k)
-
-    def updateValue(self, k, v):
-        self.m[k] = tuple(v)
-
-    def removeKey(self, k):
-        self.m.pop(k, None)
-
-    def clear(self):
-        self.m.clear()
-
-
-class _FakeMapHandle:
-    def __init__(self):
-        self.maps = {}
-
-    def getMapState(self, name, key_schema, value_schema, ttlDurationMs=None):
-        return self.maps.setdefault(name, _FakeMapState())
-
-
-def test_delta_tws_processor_wire_free_matches_kernel():
-    """Drive the transformWithState counter-delta processor directly (no
-    Spark wire): cross-batch carry, reset detection, and event-time TTL
-    eviction — per-flow entries mutated individually in the MapState."""
-    import pandas as pd
-
-    from dipa_collaborative_pulsar_idps_spark.streaming.state import (
-        make_delta_processor,
-    )
-
-    proc = make_delta_processor(["src"], "packet_count", "poll_ts",
-                                idle_timeout_ms=60_000)
-    h = _FakeMapHandle()
-    proc.init(h)
-
-    def batch(rows):
-        pdf = pd.DataFrame(rows, columns=["src", "poll_ts", "packet_count"])
-        out = list(proc.handleInputRows((7,), iter([pdf]), None))
-        return [
-            (r.src, int(r.packet_count), int(r.delta))
-            for o in out
-            for r in o.itertuples()
-        ]
-
-    mk = lambda s: T0 + dt.timedelta(seconds=s)
-    # batch 1: two flows, first sight -> delta = raw counter
-    assert sorted(batch([("a", mk(0), 100), ("b", mk(0), 50)])) == [
-        ("a", 100, 100),
-        ("b", 50, 50),
-    ]
-    us0 = int(T0.replace(tzinfo=dt.timezone.utc).timestamp()) * 1_000_000
-    assert h.maps["flows"].m == {("a",): (100, us0), ("b",): (50, us0)}
-    # batch 2: carry for a; b RESETS (40 < 50 -> delta = raw)
-    assert sorted(batch([("a", mk(3), 160), ("b", mk(3), 40)])) == [
-        ("a", 160, 60),
-        ("b", 40, 40),
-    ]
-    # keep 'a' warm at t=30 so the TTL horizon separates the flows
-    assert batch([("a", mk(30), 170)]) == [("a", 170, 10)]
-    # batch at t=70: horizon = 10 s -> 'b' (last seen t=3) evicted,
-    # 'a' (t=30) survives and seeds the delta from state
-    out3 = batch([("a", mk(70), 200)])
-    assert out3 == [("a", 200, 30)]
-    assert ("b",) not in h.maps["flows"].m  # TTL-evicted entry removed
-    assert ("a",) in h.maps["flows"].m
-    # b reappears -> fresh flow, delta = raw counter
-    assert batch([("b", mk(73), 75)]) == [("b", 75, 75)]
-
-
-@needs_tws_wire
-def test_counter_delta_tws_matches_sharded_machine(spark, replay_dir, rocksdb_state):
-    """Wire test (protobuf-gated): the MapState twin emits exactly the
-    sharded machine's deltas on a multi-batch replay."""
-    from dipa_collaborative_pulsar_idps_spark.streaming.state import (
-        counter_delta_stream,
-        counter_delta_tws,
-    )
-
-    rows = [
-        (f"10.0.0.{i % 5}", T0 + dt.timedelta(seconds=3 * j), 100 * (i % 5) + 10 * j)
-        for j in range(6)
-        for i in range(5)
-    ]
-    for lo, hi in ((0, 10), (10, 20), (20, 30)):
-        spark.createDataFrame(
-            rows[lo:hi], "src string, poll_ts timestamp, packet_count long"
-        ).coalesce(1).write.mode("append").parquet(replay_dir)
-    schema = "src string, poll_ts timestamp, packet_count long"
-    run_to_memory(
-        counter_delta_stream(replay_stream(spark, replay_dir, schema), ["src"]),
-        "cd_shard",
-    )
-    run_to_memory(
-        counter_delta_tws(replay_stream(spark, replay_dir, schema), ["src"]),
-        "cd_tws",
-    )
-    a = sorted(map(tuple, spark.table("cd_shard").collect()))
-    b = sorted(map(tuple, spark.table("cd_tws").collect()))
-    assert a and a == b
-
-
 def test_coverage_doc_names_every_registry_query():
     """COVERAGE.md is the auditor's map and must never drift from the
     declared surface: every name in queries/registry.py appears verbatim
@@ -539,6 +217,27 @@ def test_coverage_doc_names_every_registry_query():
     ).read()
     missing = sorted(n for n in REGISTRY if n not in doc)
     assert not missing, f"COVERAGE.md is missing registry queries: {missing}"
+
+
+def test_ensure_runtime_confs_skips_a_refused_conf(spark, monkeypatch):
+    """A conf the session refuses to change (static SQL conf, Spark core
+    conf) is skipped; the settable confs around it are still applied."""
+    from pyspark.errors import AnalysisException
+
+    from dipa_collaborative_pulsar_idps_spark import session
+
+    refused = {"spark.sql.warehouse.dir": "/nonexistent-warehouse", "spark.executor.cores": "7"}
+    s = spark.newSession()
+    for k, v in refused.items():
+        with pytest.raises(AnalysisException):
+            s.conf.set(k, v)
+    s.conf.set("spark.sql.shuffle.partitions", "3")
+    monkeypatch.setattr(
+        session, "RUNTIME_CONFS", {**refused, "spark.sql.shuffle.partitions": "5"}
+    )
+    session.ensure_runtime_confs(s)
+    assert s.conf.get("spark.sql.shuffle.partitions") == "5"
+    assert s.conf.get("spark.sql.warehouse.dir") != "/nonexistent-warehouse"
 
 
 def test_streaming_session_factory_defaults():
@@ -706,7 +405,7 @@ def test_streaming_factory_isolates_existing_session(spark):
     from dipa_collaborative_pulsar_idps_spark.session import get_streaming_spark
 
     before = spark.conf.get("spark.sql.shuffle.partitions")
-    streaming = get_streaming_spark(n_state_shards=64)
+    streaming = get_streaming_spark()
     try:
         assert streaming.conf.get("spark.sql.shuffle.partitions") == "8"
         assert spark.conf.get("spark.sql.shuffle.partitions") == before

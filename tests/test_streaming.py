@@ -3,6 +3,7 @@ ground truth — alert set must equal planted bot set)."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -36,6 +37,32 @@ def replay_dir():
     shutil.rmtree(d, ignore_errors=True)
 
 
+_RATES = "src string, poll_ts timestamp, pkt_rate double, hot boolean"
+
+
+def _run_alerts_per_rates_batch(spark, q1, stage_dir, name):
+    """Run ep1_alerts over the rates stage so that each alert micro-batch
+    reads exactly the files one rates batch wrote. The stage's
+    `_spark_metadata` log lists them per batch (a version line, then one
+    line per file). Every poll carries the same flows, so every rates
+    batch writes the same number of files, and the file source takes the
+    oldest files first."""
+    log = os.path.join(stage_dir, "_spark_metadata")
+    files_per_batch = []
+    for b in sorted((f for f in os.listdir(log) if f.isdigit()), key=int):
+        with open(os.path.join(log, b)) as fh:
+            files_per_batch.append(len(fh.read().splitlines()) - 1)
+    assert len(set(files_per_batch)) == 1, f"rates batches wrote {files_per_batch} files"
+    rates = (
+        spark.readStream.schema(_RATES)
+        .option("maxFilesPerTrigger", files_per_batch[0])
+        .parquet(stage_dir)
+    )
+    q2 = run_to_memory(ep1_alerts(rates), name)
+    ran = [len([p for p in q.recentProgress if p["numInputRows"] > 0]) for q in (q1, q2)]
+    assert ran == [len(files_per_batch)] * 2, f"rates/alerts batches {ran}"
+
+
 def test_ep1_detects_planted_bots(spark, replay_dir):
     """EP1 end-to-end over a replayed poll stream (two chained queries, as in
     production): exactly the planted bots alert; the counter reset does not
@@ -57,11 +84,8 @@ def test_ep1_detects_planted_bots(spark, replay_dir):
     )
     q1.awaitTermination()
 
-    # stage 2: hysteresis over the rate log
-    rates = replay_stream(
-        spark, stage_dir, "src string, poll_ts timestamp, pkt_rate double, hot boolean"
-    )
-    run_to_memory(ep1_alerts(rates), "ep1_alerts_out")
+    # stage 2: hysteresis over the rate log, one rates batch per trigger
+    _run_alerts_per_rates_batch(spark, q1, stage_dir, "ep1_alerts_out")
     got = {
         r.src
         for r in spark.sql("SELECT src FROM ep1_alerts_out WHERE event='ALERT'").collect()
@@ -644,11 +668,8 @@ def test_accuracy_matrix_detects_all_planted_bots(spark, replay_dir, n_flows, n_
             .start()
         )
         q1.awaitTermination()
-        rates = replay_stream(
-            spark, stage_dir, "src string, poll_ts timestamp, pkt_rate double, hot boolean"
-        )
         out = f"mx_alerts_{n_flows}_{n_bots}"
-        run_to_memory(ep1_alerts(rates), out)
+        _run_alerts_per_rates_batch(spark, q1, stage_dir, out)
         detected = {
             r.src for r in spark.sql(f"SELECT src FROM {out} WHERE event='ALERT'").collect()
         }
