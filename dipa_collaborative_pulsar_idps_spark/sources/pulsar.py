@@ -17,6 +17,8 @@ micro-batches + checkpointing natively.
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -25,23 +27,30 @@ class ConnectorUnavailable(RuntimeError):
     pass
 
 
+#: What a missing streaming format raises: an unknown provider gives
+#: ``DATA_SOURCE_NOT_FOUND`` (a ``SparkClassNotFoundException``, which
+#: reaches Python as a ``Py4JJavaError``); a built-in name whose jar is not
+#: deployed (``kafka``) gives an ``AnalysisException`` "Failed to find data
+#: source".
+_MISSING_FORMAT = (
+    "Failed to find data source",
+    "DATA_SOURCE_NOT_FOUND",
+    "ClassNotFoundException",
+)
+
+
 def _has_format(spark: SparkSession, fmt: str) -> bool:
+    """Whether streaming format *fmt* resolves on this session. An
+    option-less load of a present format either raises nothing
+    (``pulsarlite``, ``rate``) or a Spark error about the missing options
+    (``IllegalArgumentException`` "'path' is not specified" for ``text``,
+    as a connector raises for ``service.url``); an error that names no
+    missing class means the format is there and the real load will report
+    what is wrong."""
     try:
         spark.readStream.format(fmt).load()
-    except Exception as e:  # noqa: BLE001
-        detail = str(e)
-        je = getattr(e, "java_exception", None)
-        if je is not None:
-            try:
-                detail += je.toString()
-            except Exception:  # pragma: no cover
-                pass
-        missing = (
-            "Failed to find data source",
-            "DATA_SOURCE_NOT_FOUND",
-            "ClassNotFoundException",
-        )
-        return not any(m in detail for m in missing)
+    except (CapturedException, Py4JJavaError) as e:
+        return not any(m in str(e) for m in _MISSING_FORMAT)
     return True
 
 

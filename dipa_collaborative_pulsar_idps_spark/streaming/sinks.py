@@ -15,8 +15,13 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..localdf import local_rows_df
+
 #: An action application function: receives ONLY actions not yet applied.
 ActionFn = Callable[[list], None]
+
+#: The ledger's columns (``bucket`` is the hive partition column).
+_LEDGER_SCHEMA = "__key string, bucket int"
 
 
 #: Sentinel for NULL key fields — concat_ws silently DROPS nulls, so without
@@ -29,29 +34,46 @@ class MitigationSink:
     """foreachBatch sink with idempotency-key dedup.
 
     Applied keys persist as parquet under ``ledger_path`` (the analogue of
-    the switch's installed-rule table); a replayed micro-batch joins
-    anti-style against the ledger, so each (action, target) fires once.
+    the switch's installed-rule table), so each (action, target) fires
+    once across replays and restarts. Keys are null-safe (every key column
+    is coalesced to a sentinel before the concat, which drops nulls), and
+    a key that appears twice in one batch is applied once.
 
-    Ledger hygiene at scale:
-    - keys are null-safe (every key column coalesced to a sentinel before
-      concat — concat_ws drops nulls);
-    - the ledger is hive-partitioned by a key-hash BUCKET: each batch reads
-      only the buckets its actions touch (partition-pruned scan), not the
-      whole history;
-    - every ``compact_every`` appends per bucket, that bucket is rewritten
-      to one file (dynamic partition overwrite — other buckets untouched),
-      so file count stays O(n_buckets), not O(batches).
+    Ledger layout: hive-partitioned by a key-hash bucket
+    (``bucket=<b>/``, one column ``__key``). Every ``compact_every``
+    appends per bucket, that bucket is rewritten to one file (dynamic
+    partition overwrite, other buckets untouched), so the file count
+    stays O(n_buckets), not O(batches). The on-disk ledger is the source
+    of truth; the sink assumes it is the ledger's ONLY writer while it
+    runs (the per-bucket append counts and the driver key set below rely
+    on it).
 
-    Two application paths:
+    Which mode takes which path:
     - ``apply_fn`` (driver-side, for small action sets — the common IDPS
-      case: mitigations are human-scale): capped at ``max_driver_rows`` new
-      rows per batch, failing LOUDLY past it rather than silently OOMing
-      the driver on a hot batch;
-    - ``apply_partition_fn`` (executor-side via ``foreachPartition``): each
-      task applies its own slice; nothing lands on the driver, so action
-      volume is unbounded. Same effective-exactly-once contract: the
-      ledger write follows application, so a mid-batch failure replays the
-      whole batch and the anti-join suppresses already-ledgered keys.
+      case: mitigations are human-scale). The set of applied keys lives
+      in the sink instance (one string per ledgered action), loaded once
+      from the ledger by one schema-pinned read (no job when there is no
+      ledger). A call is one collect of the batch's distinct-key action
+      rows, a driver-side filter against the key set,
+      ``apply_fn(new_rows)`` and one single-task ledger append; the key
+      set grows only after that append returns. The batch is read once
+      and the ledger is not re-read. Driver memory: the driver holds the
+      whole applied key set, which never shrinks, and a call collects at
+      most ``max_driver_rows + len(keys) + 1`` full action rows, so a
+      replayed batch of K already-applied actions brings up to K rows to
+      the driver. Both grow with the ledger, so this path suits ledgers
+      of human-scale size. A batch with more than ``max_driver_rows`` new
+      actions raises before ``apply_fn`` and writes nothing.
+    - ``apply_partition_fn`` (executor-side via ``foreachPartition``) and
+      the ledger-only mode (neither fn): the batch is deduped on its key
+      and anti-joined against the buckets it touches (partition-pruned
+      read); each task applies its own slice and nothing lands on the
+      driver, so action volume is unbounded.
+
+    Both paths ledger after applying, so a mid-batch failure replays the
+    whole batch and the ledger suppresses what was already recorded
+    (at-least-once application, effectively once on replay). Either path
+    reads a ledger the other wrote.
     """
 
     def __init__(
@@ -75,6 +97,7 @@ class MitigationSink:
         self.compact_every = compact_every
         self.applied_batches: list[int] = []
         self._appends_per_bucket: dict[int, int] = {}
+        self._keys: set[str] | None = None  # apply_fn path: applied keys
 
     def _key(self):
         return F.concat_ws(
@@ -84,27 +107,31 @@ class MitigationSink:
     def _bucket_dir(self, b: int) -> str:
         return os.path.join(self.ledger_path, f"bucket={b}")
 
-    def _ledger_buckets(self, spark, buckets: list[int]):
-        """Read only the touched buckets (pruned by the hive layout).
-
-        Existence goes through the Hadoop FileSystem API: an os.path
-        check sees nothing on HDFS/S3A, which would silently treat the
-        whole ledger as absent and REPLAY already-applied side effects —
-        the exactly-once contract's worst failure mode.
-        """
+    def _exists(self, spark, path: str) -> bool:
+        """Existence through the Hadoop FileSystem API: an os.path check
+        sees nothing on HDFS/S3A, which would silently treat the ledger as
+        absent and REPLAY already-applied side effects — the exactly-once
+        contract's worst failure mode."""
         jvm = spark._jvm
-        root = jvm.org.apache.hadoop.fs.Path(self.ledger_path)
-        fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-        present = [
-            b
-            for b in buckets
-            if fs.exists(jvm.org.apache.hadoop.fs.Path(self._bucket_dir(b)))
-        ]
+        p = jvm.org.apache.hadoop.fs.Path(path)
+        return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)
+
+    def _ledger_buckets(self, spark, buckets: list[int]):
+        """Read only the touched buckets (pruned by the hive layout)."""
+        present = [b for b in buckets if self._exists(spark, self._bucket_dir(b))]
         if not present:
             return None
         return spark.read.option("basePath", self.ledger_path).parquet(
             *[self._bucket_dir(b) for b in present]
         )
+
+    def _applied_keys(self, spark) -> set[str]:
+        if self._keys is None:
+            self._keys = set()
+            if self._exists(spark, self.ledger_path):
+                ledger = spark.read.schema(_LEDGER_SCHEMA).parquet(self.ledger_path)
+                self._keys.update(r[0] for r in ledger.select("__key").collect())
+        return self._keys
 
     def _compact(self, spark, bucket: int) -> None:
         bdir = self._bucket_dir(bucket)
@@ -120,52 +147,67 @@ class MitigationSink:
         )
         self._appends_per_bucket[bucket] = 1
 
+    def _after_append(self, spark, batch_id: int, buckets) -> None:
+        self.applied_batches.append(batch_id)
+        for b in buckets:
+            self._appends_per_bucket[b] = self._appends_per_bucket.get(b, 0) + 1
+            if self._appends_per_bucket[b] >= self.compact_every:
+                self._compact(spark, b)
+
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         actions = batch_df.withColumn("__key", self._key()).withColumn(
             "bucket", F.pmod(F.xxhash64(F.col("__key")), F.lit(self.n_buckets)).cast("int")
-        )
+        ).dropDuplicates(["__key"])
+        if self.apply_fn is not None:
+            self._apply_on_driver(actions, batch_id)
+        else:
+            self._apply_distributed(actions, batch_id)
+
+    def _apply_on_driver(self, actions: DataFrame, batch_id: int) -> None:
+        spark = actions.sparkSession
+        keys = self._applied_keys(spark)
+        # distinct keys, so hitting the limit means more than
+        # max_driver_rows of them are new
+        limit = self.max_driver_rows + len(keys) + 1
+        rows = actions.limit(limit).collect()
+        new = [r for r in rows if r["__key"] not in keys]
+        if len(new) > self.max_driver_rows:
+            raise RuntimeError(
+                f"MitigationSink: batch {batch_id} has {len(new)} or more new "
+                f"actions, above max_driver_rows={self.max_driver_rows} for the "
+                "driver-side apply_fn path — pass apply_partition_fn to apply "
+                "large action sets on the executors instead"
+            )
+        if not new:
+            return
+        self.apply_fn(new)  # side effect: rule install / QoS
+        local_rows_df(
+            spark, [(r["__key"], r["bucket"]) for r in new], _LEDGER_SCHEMA
+        ).coalesce(1).write.mode("append").partitionBy("bucket").parquet(self.ledger_path)
+        keys.update(r["__key"] for r in new)
+        self._after_append(spark, batch_id, {r["bucket"] for r in new})
+
+    def _apply_distributed(self, actions: DataFrame, batch_id: int) -> None:
+        spark = actions.sparkSession
         touched = [int(r[0]) for r in actions.select("bucket").distinct().collect()]
         ledger = self._ledger_buckets(spark, touched)
         if ledger is not None:
-            actions = actions.join(
-                ledger.select("__key"), "__key", "left_anti"
-            )
-        # The only full-batch driver materialization below is the apply_fn
-        # path, and it is CAPPED: per-bucket counts (≤ n_buckets rows) decide
-        # emptiness and compaction, and the ledger write is a distributed
-        # DataFrame write — never routed through the driver.
+            actions = actions.join(ledger.select("__key"), "__key", "left_anti")
+        # the touched buckets (≤ n_buckets rows) decide emptiness and
+        # compaction; the ledger write is a distributed DataFrame write —
+        # nothing of the batch is routed through the driver
         actions = actions.persist()
         try:
-            bucket_counts = {
-                int(r["bucket"]): int(r["n"])
-                for r in actions.groupBy("bucket").agg(F.count("*").alias("n")).collect()
-            }
-            n_new = sum(bucket_counts.values())
-            if n_new == 0:
+            buckets = [int(r[0]) for r in actions.select("bucket").distinct().collect()]
+            if not buckets:
                 return
-            if self.apply_fn is not None:
-                if n_new > self.max_driver_rows:
-                    raise RuntimeError(
-                        f"MitigationSink: batch {batch_id} has {n_new} new actions, "
-                        f"above max_driver_rows={self.max_driver_rows} for the "
-                        "driver-side apply_fn path — pass apply_partition_fn to "
-                        "apply large action sets on the executors instead"
-                    )
-                self.apply_fn(actions.collect())  # side effect: rule install / QoS
-            elif self.apply_partition_fn is not None:
+            if self.apply_partition_fn is not None:
                 fn = self.apply_partition_fn
-                # executor-side application: each task applies its own slice,
-                # nothing lands on the driver
                 actions.foreachPartition(lambda rows: fn(list(rows)))
             actions.select("__key", "bucket").write.mode("append").partitionBy(
                 "bucket"
             ).parquet(self.ledger_path)
-            self.applied_batches.append(batch_id)
-            for b in bucket_counts:
-                self._appends_per_bucket[b] = self._appends_per_bucket.get(b, 0) + 1
-                if self._appends_per_bucket[b] >= self.compact_every:
-                    self._compact(spark, b)
+            self._after_append(spark, batch_id, buckets)
         finally:
             actions.unpersist()
 

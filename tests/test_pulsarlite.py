@@ -16,6 +16,8 @@ from pyspark.sql import functions as F
 
 from dipa_collaborative_pulsar_idps_spark.sources import pulsarlite
 from dipa_collaborative_pulsar_idps_spark.sources.pulsar import (
+    ConnectorUnavailable,
+    _has_format,
     pulsar_backfill_reader,
     pulsar_sink_writer,
     pulsar_source_reader,
@@ -42,6 +44,29 @@ def _drain(df, tmp_path, name):
     )
     q.awaitTermination()
     return df.sparkSession.table(name).collect()
+
+
+def test_has_format_false_for_missing_format(spark):
+    """An unknown streaming provider (DATA_SOURCE_NOT_FOUND from the JVM)
+    reads as absent, and the source builder says so by name."""
+    assert not _has_format(spark, "no_such_stream_format")
+    with pytest.raises(ConnectorUnavailable, match="no_such_stream_format"):
+        pulsar_source_reader(spark, "pulsar://x", "t", fmt="no_such_stream_format")
+
+
+def test_has_format_true_for_optionless_pulsarlite_load(spark, broker):
+    """An option-less load of the registered loopback format raises
+    nothing, so the format reads as present."""
+    assert _has_format(spark, "pulsarlite")
+
+
+@pytest.mark.parametrize("fmt", ["text", "socket"])
+def test_has_format_true_when_optionless_load_raises(spark, fmt):
+    """A present format whose option-less load raises (``text``:
+    IllegalArgumentException "'path' is not specified"; ``socket``:
+    AnalysisException asking for a host) reads as present, the way a real
+    connector that requires ``service.url`` must."""
+    assert _has_format(spark, fmt)
 
 
 def test_consume_seeded_topic_earliest(spark, broker, tmp_path):

@@ -130,9 +130,15 @@ def test_mitigation_sink_driver_cap_fails_loudly(spark, tmpdirs):
     assert len(applied) == 20
 
 
+def _ledger_keys(spark, path):
+    return [r["__key"] for r in spark.read.parquet(path).collect()]
+
+
 def test_mitigation_sink_foreach_partition_path(spark, tmpdirs, tmp_path):
     """apply_partition_fn applies on the executors (no driver collect, no
-    row cap) with the same idempotency contract across replays."""
+    row cap) with the same idempotency contract across replays; a key that
+    appears three times in the batch, spread over partitions, is applied
+    and ledgered once."""
     ledger, _, _ = tmpdirs
     out = tmp_path / "applied"
     out.mkdir()
@@ -154,8 +160,9 @@ def test_mitigation_sink_foreach_partition_path(spark, tmpdirs, tmp_path):
         max_driver_rows=1,  # must be irrelevant on this path
     )
     b = spark.createDataFrame(
-        [("BLOCK", f"10.0.0.{i}") for i in range(50)], ["action", "ip"]
-    )
+        [("BLOCK", f"10.0.0.{i}") for i in range(50)] + [("BLOCK", "10.0.0.7")] * 2,
+        ["action", "ip"],
+    ).repartition(4)
     sink(b, 0)
 
     def applied_keys():
@@ -165,10 +172,116 @@ def test_mitigation_sink_foreach_partition_path(spark, tmpdirs, tmp_path):
         return keys
 
     assert len(applied_keys()) == 50 and len(set(applied_keys())) == 50
+    assert len(_ledger_keys(spark, f"{ledger}/ledger")) == 50
     sink(b, 1)  # at-least-once replay → anti-join suppresses everything
     assert len(applied_keys()) == 50
     with pytest.raises(ValueError, match="not both"):
         MitigationSink(f"{ledger}/l2", ["k"], apply_fn=print, apply_partition_fn=print)
+
+
+def test_mitigation_sink_dedupes_within_batch_driver_path(spark, tmpdirs):
+    """A key that appears twice in ONE micro-batch is applied once and
+    ledgered once on the driver-side apply_fn path."""
+    ledger, _, _ = tmpdirs
+    applied = []
+    sink = MitigationSink(
+        ledger_path=f"{ledger}/ledger",
+        key_cols=["action", "ip"],
+        apply_fn=applied.extend,
+    )
+    b = spark.createDataFrame(
+        [("BLOCK", "10.7.7.7"), ("BLOCK", "10.7.7.7"), ("BLOCK", "10.7.7.8")],
+        ["action", "ip"],
+    )
+    sink(b, 0)
+    assert sorted(r["ip"] for r in applied) == ["10.7.7.7", "10.7.7.8"]
+    assert sorted(_ledger_keys(spark, f"{ledger}/ledger")) == [
+        "BLOCK§10.7.7.7",
+        "BLOCK§10.7.7.8",
+    ]
+
+
+def test_mitigation_sink_dedupes_within_batch_ledger_only(spark, tmpdirs):
+    """The ledger-only mode (neither fn) also ledgers an in-batch
+    duplicate key once."""
+    ledger, _, _ = tmpdirs
+    sink = MitigationSink(f"{ledger}/ledger", ["action", "ip"])
+    b = spark.createDataFrame(
+        [("BLOCK", "10.7.7.7")] * 3 + [("BLOCK", "10.7.7.8")], ["action", "ip"]
+    ).repartition(4)
+    sink(b, 0)
+    assert sorted(_ledger_keys(spark, f"{ledger}/ledger")) == [
+        "BLOCK§10.7.7.7",
+        "BLOCK§10.7.7.8",
+    ]
+
+
+def test_mitigation_sink_driver_path_job_count(spark, tmpdirs):
+    """With a ledger on disk and the key set warm, a driver-side call is
+    one collect of the batch plus one ledger append: at most 3 Spark jobs
+    when it applies a new action, at most 2 for a pure replay (the ledger
+    is not re-read). Jobs are counted in a statusTracker job group."""
+    ledger, _, _ = tmpdirs
+    applied = []
+    sink = MitigationSink(f"{ledger}/ledger", ["action", "ip"], apply_fn=applied.extend)
+    sink(spark.createDataFrame([("BLOCK", "192.0.2.1")], ["action", "ip"]), 0)
+    wave = spark.createDataFrame(
+        [("BLOCK", f"10.0.{i // 250}.{i % 250}") for i in range(500)], ["action", "ip"]
+    )
+    sc = spark.sparkContext
+
+    def jobs(df, batch_id):
+        group = f"mitigation_sink:{batch_id}"
+        sc.setJobGroup(group, group)
+        try:
+            sink(df, batch_id)
+        finally:
+            sc.setJobGroup("idle", "")
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs(wave, 1) <= 3
+    assert len(applied) == 501
+    assert jobs(wave, 2) <= 2
+    assert len(applied) == 501
+
+
+@pytest.mark.parametrize("writer", ["distributed", "driver"])
+def test_mitigation_ledger_shared_between_paths(spark, tmpdirs, writer):
+    """A ledger written by one path is read by a fresh instance of the
+    other: replays are suppressed both ways, and the on-disk layout
+    (``bucket=<b>/`` directories, one ``__key`` column) is the same."""
+    import glob
+
+    ledger, _, _ = tmpdirs
+    path = f"{ledger}/ledger"
+    b = spark.createDataFrame(
+        [("BLOCK", f"10.0.0.{i}") for i in range(6)], ["action", "ip"]
+    )
+    applied = []
+
+    def driver_sink():
+        return MitigationSink(path, ["action", "ip"], apply_fn=applied.extend)
+
+    def distributed_sink():  # ledger-only mode: the distributed path
+        return MitigationSink(path, ["action", "ip"])
+
+    first, second = (
+        (distributed_sink, driver_sink)
+        if writer == "distributed"
+        else (driver_sink, distributed_sink)
+    )
+    first()(b, 0)
+    assert glob.glob(f"{path}/bucket=*/*.parquet")
+    assert spark.read.parquet(path).columns == ["__key", "bucket"]
+    n_applied = len(applied)
+    second()(b, 1)  # replay through a fresh instance of the other path
+    assert len(applied) == n_applied
+    assert len(_ledger_keys(spark, path)) == 6
+    new = spark.createDataFrame([("BLOCK", "10.0.0.99")], ["action", "ip"])
+    second()(new, 2)
+    assert sorted(_ledger_keys(spark, path)) == sorted(
+        [f"BLOCK§10.0.0.{i}" for i in range(6)] + ["BLOCK§10.0.0.99"]
+    )
 
 
 def test_watermark_drops_late_rows(spark, tmpdirs):

@@ -206,12 +206,10 @@ def test_ep3_packet_admission(spark):
     assert all(r.priority == 10 and r.idle_timeout == 60 for r in out)
 
 
-def test_stream_stream_alert_context_join(spark, replay_dir):
+def test_stream_stream_alert_context_join(spark, replay_dir, tmp_path):
     """Watermarked stream-stream interval join: each alert picks up exactly
     the rate rows for its source within the 60 s lookback — result equals
     the same join run in batch."""
-    import tempfile
-
     from pyspark.sql.types import (
         BooleanType,
         DoubleType,
@@ -258,8 +256,8 @@ def test_stream_stream_alert_context_join(spark, replay_dir):
     rates_df = spark.createDataFrame(rate_rows, rates_schema)
     alerts_df = spark.createDataFrame(alert_rows, alerts_schema)
 
-    rdir = tempfile.mkdtemp(prefix="dipa_ss_rates_")
-    adir = tempfile.mkdtemp(prefix="dipa_ss_alerts_")
+    rdir = str(tmp_path / "rates")
+    adir = str(tmp_path / "alerts")
     write_replay_chunks(rates_df, rdir, n_chunks=4, order_col="poll_ts")
     write_replay_chunks(alerts_df, adir, n_chunks=2, order_col="alert_ts")
     r_stream = spark.readStream.schema(rates_schema).option(
@@ -289,14 +287,12 @@ def test_stream_stream_alert_context_join(spark, replay_dir):
     assert not any(s == "10.0.0.9" for s, _, _ in got)
 
 
-def test_stream_stream_alert_context_outer_join(spark, replay_dir):
+def test_stream_stream_alert_context_outer_join(spark, replay_dir, tmp_path):
     """LEFT-OUTER watermarked stream-stream join: alerts WITH rate
     evidence emit the same rows as the inner form; an alert whose source
     the poller never saw emits exactly ONE NULL-padded row — and only
     after the watermark passes its alert_ts (forced here by a late flush
     row on both streams)."""
-    import tempfile
-
     from pyspark.sql.types import (
         BooleanType,
         DoubleType,
@@ -348,8 +344,8 @@ def test_stream_stream_alert_context_outer_join(spark, replay_dir):
     rates_df = spark.createDataFrame(rate_rows, rates_schema)
     alerts_df = spark.createDataFrame(alert_rows, alerts_schema)
 
-    rdir = tempfile.mkdtemp(prefix="dipa_sso_rates_")
-    adir = tempfile.mkdtemp(prefix="dipa_sso_alerts_")
+    rdir = str(tmp_path / "rates")
+    adir = str(tmp_path / "alerts")
     write_replay_chunks(rates_df, rdir, n_chunks=4, order_col="poll_ts")
     write_replay_chunks(alerts_df, adir, n_chunks=3, order_col="alert_ts")
     r_stream = spark.readStream.schema(rates_schema).option(
