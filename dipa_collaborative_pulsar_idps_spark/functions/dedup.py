@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..storage import _write_batch_partitions
+
 # Mersenne prime 2^31-1: modulus for the linear permutation family.
 # 31-bit space keeps a*h+b < 2^62 — no long overflow under ANSI mode
 # (a, h < 2^31), while 2^31 hash values are ample for MinHash collisions.
@@ -256,22 +258,6 @@ def save_lsh_index(
         [(num_perm, bands, rows_per_band, shingle_n, seed)],
         "num_perm int, bands int, rows_per_band int, shingle_n int, seed int",
     ).write.mode("overwrite").parquet(f"{path}/meta")
-
-
-def _write_batch_partitions(
-    df: DataFrame, path: str, ingest_batch: int, partition_cols=("ingest_batch",)
-) -> None:
-    """Write *df* stamped with its ingest batch, dynamically overwriting
-    ONLY that batch's partitions: a deterministic recompute replayed after
-    a mid-commit crash lands byte-equivalent in the same place, never
-    appends a duplicate. Other batches' partitions are untouched."""
-    (
-        df.withColumn("ingest_batch", F.lit(ingest_batch))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*partition_cols)
-        .parquet(path)
-    )
 
 
 def append_to_lsh_index(

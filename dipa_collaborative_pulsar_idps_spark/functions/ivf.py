@@ -54,6 +54,7 @@ from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..storage import _exists, _fs_path, _read_text, _write_text
 from .similarity import _cosine_rows, query_batch, raw_scorer, search
 
 #: Pointer file naming the ACTIVE generation directory under an index
@@ -70,18 +71,9 @@ _POINTER = "_CURRENT"
 _COMMIT_MARK = "_COMMITTED"
 
 
-def _hadoop_fs(spark, path: str):
-    """(FileSystem, Path) for *path* through Hadoop's FS API — works on
-    HDFS/S3/local alike (same move as _read_delta_dir)."""
-    jvm = spark.sparkContext._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    return fs, jpath
-
-
 def _delete_tree(spark, path: str) -> None:
     """Recursive delete, no-op when absent."""
-    fs, jpath = _hadoop_fs(spark, path)
+    fs, jpath = _fs_path(spark, path)
     if fs.exists(jpath):
         fs.delete(jpath, True)
 
@@ -95,13 +87,9 @@ def _write_pointer(spark, path: str, gen: str) -> None:
     steps loses the pointer, which the completeness-CHECKED recovery rule
     in :func:`_resolve_root` (latest ``_COMMITTED`` generation, else the
     flat root) makes safely recoverable (r11 advisor)."""
-    fs, cur = _hadoop_fs(spark, f"{path}/{_POINTER}")
-    _, tmp = _hadoop_fs(spark, f"{path}/{_POINTER}.tmp")
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(gen.encode("utf-8")))
-    finally:
-        out.close()
+    _write_text(spark, f"{path}/{_POINTER}.tmp", gen)
+    fs, cur = _fs_path(spark, f"{path}/{_POINTER}")
+    _, tmp = _fs_path(spark, f"{path}/{_POINTER}.tmp")
     sc = spark.sparkContext
     try:
         jvm = sc._jvm
@@ -120,26 +108,13 @@ def _write_pointer(spark, path: str, gen: str) -> None:
 
 
 def _read_pointer(spark, path: str) -> str | None:
-    fs, cur = _hadoop_fs(spark, f"{path}/{_POINTER}")
-    if not fs.exists(cur):
-        return None
-    stream = fs.open(cur)
-    try:
-        # commons-io ships with Spark; py4j can't read into a Python-side
-        # byte buffer (arrays pass by value), so let the JVM drain it
-        jvm = spark.sparkContext._jvm
-        text = jvm.org.apache.commons.io.IOUtils.toString(
-            stream, jvm.java.nio.charset.StandardCharsets.UTF_8
-        )
-        return text.strip() or None
-    finally:
-        stream.close()
+    return _read_text(spark, f"{path}/{_POINTER}")
 
 
 def _list_generations(spark, path: str) -> list[str]:
     """Existing ``gen-NNNNN`` directory names under *path*, sorted (zero-
     padded → lexicographic == numeric)."""
-    fs, root = _hadoop_fs(spark, path)
+    fs, root = _fs_path(spark, path)
     if not fs.exists(root):
         return []
     return sorted(
@@ -152,13 +127,12 @@ def _list_generations(spark, path: str) -> list[str]:
 def _mark_committed(spark, root: str) -> None:
     """Write the empty ``_COMMITTED`` marker — the LAST step of a tree
     write, so marker-presence ⇒ the whole tree landed."""
-    fs, mark = _hadoop_fs(spark, f"{root}/{_COMMIT_MARK}")
+    fs, mark = _fs_path(spark, f"{root}/{_COMMIT_MARK}")
     fs.create(mark, True).close()
 
 
 def _is_complete(spark, root: str) -> bool:
-    fs, mark = _hadoop_fs(spark, f"{root}/{_COMMIT_MARK}")
-    return bool(fs.exists(mark))
+    return _exists(spark, f"{root}/{_COMMIT_MARK}")
 
 
 def _resolve_root(spark, path: str) -> str:
@@ -183,10 +157,8 @@ def _resolve_root(spark, path: str) -> str:
     for g in reversed(gens):
         if _is_complete(spark, f"{path}/{g}"):
             return f"{path}/{g}"
-    fs, _ = _hadoop_fs(spark, path)
     for g in reversed(gens):  # legacy (unmarked) trees: stats row was last
-        _, base = _hadoop_fs(spark, f"{path}/{g}/stats/batch_id=base")
-        if fs.exists(base):
+        if _exists(spark, f"{path}/{g}/stats/batch_id=base"):
             return f"{path}/{g}"
     return path
 
@@ -322,8 +294,7 @@ def _read_delta_dir(spark, root: str, cols: tuple[str, ...]) -> DataFrame | None
     ever appended. Existence is checked through Hadoop's FileSystem API
     (not os.path), so the layout works unchanged on HDFS/S3 at cluster
     scale."""
-    fs, jpath = _hadoop_fs(spark, root)
-    if not fs.exists(jpath):
+    if not _exists(spark, root):
         return None
     return spark.read.parquet(root).select(*cols)
 
@@ -343,8 +314,7 @@ def _stats_rows(spark, path: str) -> list:
     tree exists). Read with the explicit stats schema so rows written
     before the ``commit_seq`` column coexist with new ones (they read a
     NULL commit_seq) without paying mergeSchema's footer-merge job."""
-    fs, stats_path = _hadoop_fs(spark, f"{path}/stats")
-    if not fs.exists(stats_path):
+    if not _exists(spark, f"{path}/stats"):
         return []
     return spark.read.schema(_STATS_SCHEMA).parquet(f"{path}/stats").collect()  # bounded-collect: one row per committed batch
 
@@ -740,7 +710,7 @@ def _ivf_tree_error(
     # empty-corpus guard: a partitioned write of an empty frame lands only
     # _SUCCESS (no list_id=* directories), and reading that back raises
     # AnalysisException — there is nothing serving could scan
-    fs, lists_path = _hadoop_fs(spark, base_path)
+    fs, lists_path = _fs_path(spark, base_path)
     if not any(
         st.isDirectory() and st.getPath().getName().startswith("list_id=")
         for st in fs.listStatus(lists_path)

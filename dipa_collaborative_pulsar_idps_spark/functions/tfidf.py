@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..storage import _write_batch_partitions
+
 DEFAULT_N_BUCKETS = 64
 
 
@@ -54,8 +56,6 @@ def _tokens(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
 def _write_index_batch(
     tf: DataFrame, n_docs: int, path: str, ingest_batch: int, n_buckets: int
 ) -> None:
-    from .dedup import _write_batch_partitions
-
     spark = tf.sparkSession
     postings = tf.withColumn(
         "tb", F.pmod(F.xxhash64("t"), F.lit(n_buckets)).cast("int")

@@ -80,12 +80,16 @@ def counts() -> tuple[Counter[str], Counter[str]]:
     return _HITS.copy(), _MISSES.copy()
 
 
-def _release(value: Any, release: Callable[[Any], None] | None) -> None:
+def _release(value: Any, release: Callable[[Any], None] | None = None) -> None:
+    """Release *value* through *release*, or unpersist every cached frame
+    in it (tuples and lists walked) — best-effort, so a stopped session
+    never turns a cleanup into an error. The index sinks release their
+    per-batch handles through it too."""
     if release is not None:
         release(value)
     elif isinstance(value, (tuple, list)):
         for item in value:
-            _release(item, None)
+            _release(item)
     elif getattr(value, "is_cached", False):
         try:
             value.unpersist()

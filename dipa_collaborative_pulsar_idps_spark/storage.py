@@ -11,6 +11,13 @@ Partition-count hygiene: date × dpid at 7 switches is ~2.6 k directories
 per year — comfortably under the small-files cliff. Do NOT partition by
 high-cardinality keys (ipv4_src would create millions of dirs); those
 belong in row-group sort order, not the directory tree.
+
+The module also holds the Hadoop FileSystem primitives every persisted
+index, ledger and sink in the package goes through (:func:`_fs_path`,
+:func:`_exists`, :func:`_read_text`, :func:`_write_text`), so HDFS, S3A
+and local paths behave alike, and the batch-stamped dynamic-overwrite
+write the exactly-once sinks and indexes share
+(:func:`_write_batch_partitions`).
 """
 
 from __future__ import annotations
@@ -256,11 +263,8 @@ def delete_docs(
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     # dynamic overwrite writes nothing for a lang with zero survivors —
     # clear those dirs explicitly or the deleted rows would resurrect
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
     for lang in set(touched) - set(survivors):
-        p = jvm.org.apache.hadoop.fs.Path(f"{path}/lang={lang}")
-        fs = p.getFileSystem(hconf)
+        fs, p = _fs_path(spark, f"{path}/lang={lang}")
         if fs.exists(p):
             fs.delete(p, True)
     return n_deleted
@@ -422,3 +426,66 @@ def write_zordered(
             spark.conf.unset(sample_key)
         else:
             spark.conf.set(sample_key, prev)
+
+
+# ---------------------------------------------------------------------------
+# Hadoop FileSystem primitives and the batch-stamped write. An os.path check
+# sees nothing on HDFS/S3A, which would silently treat a ledger or an index
+# as absent and replay side effects that were already applied.
+# ---------------------------------------------------------------------------
+
+
+def _fs_path(spark, path: str):
+    """(FileSystem, Path) for *path* through Hadoop's FS API."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+def _exists(spark, path: str) -> bool:
+    fs, p = _fs_path(spark, path)
+    return bool(fs.exists(p))
+
+
+def _read_text(spark, path: str) -> str | None:
+    """The stripped UTF-8 text of a small file; None when it is absent or
+    blank."""
+    fs, p = _fs_path(spark, path)
+    if not fs.exists(p):
+        return None
+    stream = fs.open(p)
+    try:
+        # commons-io ships with Spark; py4j can't read into a Python-side
+        # byte buffer (arrays pass by value), so let the JVM drain it
+        jvm = spark._jvm
+        text = jvm.org.apache.commons.io.IOUtils.toString(
+            stream, jvm.java.nio.charset.StandardCharsets.UTF_8
+        )
+        return text.strip() or None
+    finally:
+        stream.close()
+
+
+def _write_text(spark, path: str, text: str) -> None:
+    """Create (or overwrite) *path* holding *text* as UTF-8."""
+    fs, p = _fs_path(spark, path)
+    out = fs.create(p, True)
+    try:
+        out.write(bytearray(text.encode("utf-8")))
+    finally:
+        out.close()
+
+
+def _write_batch_partitions(
+    df: DataFrame, path: str, ingest_batch: int, partition_cols=("ingest_batch",)
+) -> None:
+    """Write *df* stamped with its ingest batch, dynamically overwriting
+    ONLY that batch's partitions: a deterministic recompute replayed after
+    a mid-commit crash lands byte-equivalent in the same place, never
+    appends a duplicate. Other batches' partitions are untouched."""
+    (
+        df.withColumn("ingest_batch", F.lit(ingest_batch))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_cols)
+        .parquet(path)
+    )

@@ -1,9 +1,21 @@
-"""End-to-end pipeline compositions — the Spark equivalents of the
-reference's three entry points (SURVEY.md §3 EP1/EP2/EP3).
+"""Streaming pipeline compositions and the index sinks.
 
-Each function takes streaming (or batch — the operators are mode-agnostic
-where possible) DataFrames and returns the transformed DataFrame; the caller
-picks the sink (memory for tests, Pulsar/parquet/foreachBatch in prod).
+The compositions are the Spark equivalents of the reference's three entry
+points (SURVEY.md §3 EP1/EP2/EP3) plus the engine's other streaming
+operators: the stream-stream alert join, the EP4 global view, and the
+document curation, decontamination, window-dedup, sessionization and
+quality-gate streams. Each takes streaming (or batch — the operators are
+mode-agnostic where possible) DataFrames and returns the transformed
+DataFrame; the caller picks the sink (memory for tests,
+Pulsar/parquet/foreachBatch in prod).
+
+The index sinks are foreachBatch bodies that keep a persisted index beside
+the stream and process only each micro-batch's delta: near-dup detection
+(:func:`incremental_dedup_sink`), lexical retrieval
+(:func:`incremental_tfidf_sink`), dense-ANN index maintenance
+(:func:`incremental_ann_sink`) and online semantic dedup
+(:func:`streaming_semantic_dedup_sink`). All four run on one exactly-once
+commit protocol, :func:`_exactly_once`.
 """
 
 from __future__ import annotations
@@ -13,6 +25,8 @@ from pyspark.sql import functions as F
 
 from ..config import DEFAULT, DetectionConfig
 from ..functions.parsing import parse_alert, protocol_classifier
+from ..memo import _release
+from ..storage import _exists, _fs_path, _read_text, _write_batch_partitions, _write_text
 from .state import alert_state_machine, counter_delta_stream
 
 # ---------------------------------------------------------------------------
@@ -471,6 +485,71 @@ def streaming_session_counts(
     )
 
 
+def streaming_quality_gate(docs: DataFrame, min_score: float = 0.0) -> DataFrame:
+    """Model-based quality filter for an unbounded document stream: keep
+    docs whose hashed-linear classifier score clears *min_score*. Pure
+    stateless map work (functions/classifier.hashed_linear_score_expr) —
+    no watermark, no state store, composes in front of
+    `streaming_curation`'s dedup the way CCNet/RefinedWeb pipelines gate
+    before expensive stages. Token-less docs score NULL and are dropped."""
+    from ..functions.classifier import hashed_linear_score_expr
+
+    score = hashed_linear_score_expr("text")
+    return docs.withColumn("quality_score", score).where(
+        F.col("quality_score") >= min_score
+    )
+
+
+# ---------------------------------------------------------------------------
+# Index sinks: foreachBatch bodies that keep a persisted index beside the
+# stream and process only each micro-batch's delta, on one exactly-once
+# commit protocol (_exactly_once).
+# ---------------------------------------------------------------------------
+
+
+def _exactly_once(index_path: str, body, mark_empty: bool = False):
+    """The foreachBatch body every index sink below runs: the commit
+    protocol that turns checkpointing's at-least-once micro-batches into
+    exactly-once output (SURVEY.md I12), around the sink's
+    ``body(batch, batch_id, persisted_out)``.
+
+    A batch whose marker ``{index_path}/_batches/<id>`` exists was fully
+    committed, and its replay is a no-op. With *mark_empty* (the ANN
+    sinks), an empty batch is marked and ``body`` does not run; without it
+    (the dedup and TF-IDF sinks) no emptiness job runs and ``body``
+    processes every batch. Otherwise the batch is persisted and ``body``
+    runs. Every write ``body`` makes is stamped with the batch id and
+    overwrites only that batch's partitions
+    (``storage._write_batch_partitions``, the index appends), so a replay
+    after a crash anywhere before the marker recomputes the same content
+    into the same place instead of appending a duplicate. The marker is
+    written when ``body`` returns; a step ``body`` returns runs after the
+    marker (the ANN retrain, which a replay must not repeat). The batch and
+    every handle ``body`` put in ``persisted_out`` are unpersisted at the
+    end, also on failure, so no cached block outlives its batch. The
+    existence checks go through the Hadoop FileSystem API (``storage``), so
+    the protocol holds on HDFS and S3A."""
+
+    def fn(batch: DataFrame, batch_id: int) -> None:
+        fs, marker = _fs_path(batch.sparkSession, f"{index_path}/_batches/{batch_id}")
+        if fs.exists(marker):
+            return  # completed batch replayed after restart — no-op
+        if mark_empty and batch.isEmpty():
+            fs.mkdirs(marker)
+            return
+        batch = batch.persist()
+        persisted_out: list = []
+        try:
+            after = body(batch, batch_id, persisted_out)
+            fs.mkdirs(marker)
+            if after is not None:
+                after()
+        finally:
+            _release([batch, *persisted_out])
+
+    return fn
+
+
 def _read_stamped_corpus(spark, corpus_path: str, batch: DataFrame, batch_id: int):
     """Read the batch-stamped corpus store with an EXPLICIT schema
     (batch.schema + the ingest_batch partition column), excluding the
@@ -488,16 +567,43 @@ def _read_stamped_corpus(spark, corpus_path: str, batch: DataFrame, batch_id: in
     schema = StructType(
         list(batch.schema.fields) + [StructField("ingest_batch", IntegerType())]
     )
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(corpus_path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
+    if not _exists(spark, corpus_path):
         return spark.createDataFrame([], schema)
     return (
         spark.read.schema(schema)
         .parquet(corpus_path)
         .where(F.col("ingest_batch") != batch_id)
     )
+
+
+def _probe_then_index(index_path, corpus_path, out_path, *, probe, bootstrap, append, save):
+    """The dedup / TF-IDF sink body over :func:`_exactly_once`. With an
+    index on disk (its ``meta`` table), ``probe(batch, batch_id, old,
+    persisted_out)`` scores the batch against the index and ``old``, the
+    corpus so far; the first batch runs ``bootstrap(batch, persisted_out)``,
+    within-batch only. Write order: the output partitions at *out_path*,
+    the index (``append(batch, batch_id)`` or ``save(batch, batch_id)``),
+    the batch's corpus rows, then the marker.
+
+    ``probe`` excludes the batch's own index partitions, and ``old``
+    excludes its corpus partitions: on a mid-commit replay they already
+    hold the batch, which would put a document on both sides of the probe.
+    A crash on the bootstrap batch between the index and the corpus write
+    replays into ``probe`` with an empty ``old``, the correct recovery."""
+
+    def body(batch: DataFrame, batch_id: int, persisted_out: list) -> None:
+        spark = batch.sparkSession
+        has_index = _exists(spark, f"{index_path}/meta")
+        if has_index:
+            old = _read_stamped_corpus(spark, corpus_path, batch, batch_id)
+            out = probe(batch, batch_id, old, persisted_out)
+        else:
+            out = bootstrap(batch, persisted_out)
+        _write_batch_partitions(out, out_path, batch_id)
+        (append if has_index else save)(batch, batch_id)
+        _write_batch_partitions(batch, corpus_path, batch_id)
+
+    return _exactly_once(index_path, body)
 
 
 def incremental_dedup_sink(
@@ -522,16 +628,7 @@ def incremental_dedup_sink(
 
     Wire it as ``stream.writeStream.foreachBatch(fn)`` with a checkpoint;
     the first batch bootstraps the index (within-batch pairs only).
-
-    Delivery contract — exactly-once, including mid-commit crashes:
-    every write is stamped with the batch id and DYNAMIC-OVERWRITES only
-    that batch's partitions (pairs, index band entries, corpus rows), so
-    a replay after a crash anywhere in the commit sequence recomputes the
-    same deterministic content into the same partitions instead of
-    appending duplicates; the batch marker (written last) short-circuits
-    replays of fully-committed batches. Existence checks go through the
-    Hadoop FileSystem API so the loop is HDFS/S3A-correct, not
-    local-path-only.
+    Delivery is exactly-once (:func:`_exactly_once`).
 
     100 TB shape: the index is band-partitioned parquet (append = new
     files per band, no rewrite); the corpus store is the verification doc
@@ -544,93 +641,58 @@ def incremental_dedup_sink(
         load_lsh_index,
         minhash_near_dup_pairs,
         save_lsh_index,
+        shingle_sets,
     )
 
-    def _fs(spark, path: str):
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        return p.getFileSystem(spark._jsc.hadoopConfiguration()), jvm
-
-    def fn(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        fs, jvm = _fs(spark, index_path)
-        marker = jvm.org.apache.hadoop.fs.Path(
-            f"{index_path}/_batches/{batch_id}"
+    def probe(batch, batch_id, old, persisted_out):
+        index, meta = load_lsh_index(batch.sparkSession, index_path)
+        return incremental_near_dup_pairs(
+            batch,
+            old,
+            index.where(F.col("ingest_batch") != batch_id),  # partition-pruned
+            id_col=id_col,
+            text_col=text_col,
+            threshold=threshold,
+            num_perm=meta["num_perm"],
+            bands=meta["bands"],
+            rows_per_band=meta["rows_per_band"],
+            shingle_n=meta["shingle_n"],
+            seed=meta["seed"],
+            persisted_out=persisted_out,
         )
-        if fs.exists(marker):
-            return  # completed batch replayed after restart — no-op
-        batch = batch.persist()
-        # incremental_near_dup_pairs' internal persists are handed back
-        # through this list; the pairs write below materializes the
-        # result, after which the finally releases them — per-batch
-        # lifecycle, no cached-block accumulation across the stream.
-        batch_persists: list = []
-        try:
-            has_index = fs.exists(
-                jvm.org.apache.hadoop.fs.Path(f"{index_path}/meta")
-            )
-            if has_index:
-                index, meta = load_lsh_index(spark, index_path)
-                # Exclude THIS batch's own partitions from both the index
-                # and the corpus: on a mid-commit crash replay they already
-                # contain the batch (violating the disjoint-ids contract —
-                # the doc would sit on both sides of the verify union and
-                # duplicate its pairs). The filter prunes on the partition
-                # column, so the normal path reads nothing extra.
-                index = index.where(F.col("ingest_batch") != batch_id)
-                # The corpus write commits AFTER the index meta: a crash on
-                # the bootstrap batch between those two writes leaves meta
-                # present with a missing (or _temporary-only) corpus path,
-                # and the replay lands here. An empty corpus is the correct
-                # recovery (the index filter above already removed the
-                # half-committed batch) — _read_stamped_corpus's explicit
-                # schema keeps that replay from dying on inference.
-                old = _read_stamped_corpus(spark, corpus_path, batch, batch_id)
-                pairs = incremental_near_dup_pairs(
-                    batch,
-                    old,
-                    index,
-                    id_col=id_col,
-                    text_col=text_col,
-                    threshold=threshold,
-                    num_perm=meta["num_perm"],
-                    bands=meta["bands"],
-                    rows_per_band=meta["rows_per_band"],
-                    shingle_n=meta["shingle_n"],
-                    seed=meta["seed"],
-                    persisted_out=batch_persists,
-                )
-            else:
-                pairs = minhash_near_dup_pairs(
-                    batch, id_col, text_col, threshold, num_perm, bands, rows_per_band
-                )
-            from ..functions.dedup import _write_batch_partitions
 
-            _write_batch_partitions(pairs, pairs_path, batch_id)
-            if has_index:
-                append_to_lsh_index(batch, index_path, batch_id, id_col, text_col)
-            else:
-                save_lsh_index(
-                    batch,
-                    index_path,
-                    id_col,
-                    text_col,
-                    num_perm=num_perm,
-                    bands=bands,
-                    rows_per_band=rows_per_band,
-                    ingest_batch=batch_id,
-                )
-            _write_batch_partitions(batch, corpus_path, batch_id)
-            fs.mkdirs(marker)
-        finally:
-            batch.unpersist()
-            for h in batch_persists:
-                try:
-                    h.unpersist()
-                except Exception:  # session tearing down — nothing to release
-                    pass
+    def bootstrap(batch, persisted_out):
+        # the shingle frame is persisted here, not inside
+        # minhash_near_dup_pairs, so the scaffold can release it
+        shingled = shingle_sets(batch, id_col, text_col).persist()
+        persisted_out.append(shingled)
+        return minhash_near_dup_pairs(
+            batch, id_col, text_col, threshold, num_perm, bands, rows_per_band, shingled
+        )
 
-    return fn
+    def save(batch, batch_id):
+        save_lsh_index(
+            batch,
+            index_path,
+            id_col,
+            text_col,
+            num_perm=num_perm,
+            bands=bands,
+            rows_per_band=rows_per_band,
+            ingest_batch=batch_id,
+        )
+
+    return _probe_then_index(
+        index_path,
+        corpus_path,
+        pairs_path,
+        probe=probe,
+        bootstrap=bootstrap,
+        append=lambda batch, batch_id: append_to_lsh_index(
+            batch, index_path, batch_id, id_col, text_col
+        ),
+        save=save,
+    )
 
 
 def incremental_tfidf_sink(
@@ -653,18 +715,14 @@ def incremental_tfidf_sink(
     corpus store. Probe scores use the CURRENT global (df, N) maintained
     incrementally in the index's df/stats tables, so every batch's output
     equals the batch operator `tfidf_topk` run over the corpus-so-far —
-    the equivalence the pytest contract pins.
-
-    Delivery contract — exactly-once, same mechanics as the dedup loop:
-    every write is batch-stamped and dynamic-overwrites only that batch's
-    partitions; the batch marker (written last) short-circuits replays of
-    fully-committed batches; replay-filters exclude the crashing batch's
-    own half-committed partitions from the index, df, stats, and corpus
-    reads. Existence checks go through the Hadoop FileSystem API.
+    the equivalence the pytest contract pins. Delivery is exactly-once
+    (:func:`_exactly_once`); the probe excludes the batch's own postings,
+    df and stats partitions.
 
     Reference analogue: the per-flow update-topic publication loop
     (ryu/testing/global_view_and_timing/TestCase_6/timeStamp.py:305)."""
-    from ..functions.dedup import _write_batch_partitions
+    from functools import partial
+
     from ..functions.tfidf import (
         append_to_tfidf_index,
         load_tfidf_index,
@@ -672,119 +730,131 @@ def incremental_tfidf_sink(
         tfidf_probe_topk,
     )
 
-    def _fs(spark, path: str):
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        return p.getFileSystem(spark._jsc.hadoopConfiguration()), jvm
+    topk = partial(
+        tfidf_probe_topk, k=k, id_col=id_col, text_col=text_col, max_df_frac=max_df_frac
+    )
 
-    def fn(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        fs, jvm = _fs(spark, index_path)
-        marker = jvm.org.apache.hadoop.fs.Path(f"{index_path}/_batches/{batch_id}")
-        if fs.exists(marker):
-            return  # completed batch replayed after restart — no-op
-        batch = batch.persist()
-        batch_persists: list = []
-        try:
-            has_index = fs.exists(jvm.org.apache.hadoop.fs.Path(f"{index_path}/meta"))
-            if has_index:
-                postings, df_b, stats, meta = load_tfidf_index(spark, index_path)
-                # exclude THIS batch's own partitions everywhere: a
-                # mid-commit crash replay must not see the half-committed
-                # batch on the corpus side (partition-pruned filters)
-                postings = postings.where(F.col("ingest_batch") != batch_id)
-                df_b = df_b.where(F.col("ingest_batch") != batch_id)
-                stats = stats.where(F.col("ingest_batch") != batch_id)
-                n_old = (stats.agg(F.sum("n_docs")).collect()[0][0]) or 0  # bounded-collect: one scalar
-                old = _read_stamped_corpus(spark, corpus_path, batch, batch_id)
-                results = tfidf_probe_topk(
-                    batch,
-                    old,
-                    postings,
-                    df_b,
-                    n_old,
-                    k=k,
-                    id_col=id_col,
-                    text_col=text_col,
-                    n_buckets=meta["n_buckets"],
-                    max_df_frac=max_df_frac,
-                    persisted_out=batch_persists,
-                )
-            else:
-                # bootstrap: no corpus yet — within-batch retrieval only
-                # (empty old side; df/N come entirely from the batch)
-                empty_postings = spark.createDataFrame(
-                    [], "doc_id long, t string, tf long, tb int, ingest_batch int"
-                )
-                empty_df = spark.createDataFrame(
-                    [], "t string, df long, ingest_batch int"
-                )
-                results = tfidf_probe_topk(
-                    batch,
-                    spark.createDataFrame([], batch.schema),
-                    empty_postings,
-                    empty_df,
-                    0,
-                    k=k,
-                    id_col=id_col,
-                    text_col=text_col,
-                    n_buckets=n_buckets,
-                    max_df_frac=max_df_frac,
-                    persisted_out=batch_persists,
-                )
-            _write_batch_partitions(results, results_path, batch_id)
-            if has_index:
-                append_to_tfidf_index(batch, index_path, batch_id, id_col, text_col)
-            else:
-                save_tfidf_index(
-                    batch,
-                    index_path,
-                    id_col,
-                    text_col,
-                    n_buckets=n_buckets,
-                    ingest_batch=batch_id,
-                )
-            _write_batch_partitions(batch, corpus_path, batch_id)
-            fs.mkdirs(marker)
-        finally:
-            batch.unpersist()
-            for h in batch_persists:
-                try:
-                    h.unpersist()
-                except Exception:  # session tearing down — nothing to release
-                    pass
-
-    return fn
-
-
-def _sink_fs(spark, path: str):
-    """(FileSystem, jvm) for the exactly-once sinks' marker/record files —
-    Hadoop FS API, so HDFS/S3/local behave alike."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), jvm
-
-
-def _sink_read_small(fs, jvm, path: str) -> str | None:
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    if not fs.exists(p):
-        return None
-    stream = fs.open(p)
-    try:  # py4j can't fill Python byte buffers — drain JVM-side
-        text = jvm.org.apache.commons.io.IOUtils.toString(
-            stream, jvm.java.nio.charset.StandardCharsets.UTF_8
+    def probe(batch, batch_id, old, persisted_out):
+        postings, df_b, stats, meta = load_tfidf_index(batch.sparkSession, index_path)
+        prior = F.col("ingest_batch") != batch_id  # partition-pruned
+        n_old = stats.where(prior).agg(F.sum("n_docs")).collect()[0][0] or 0  # bounded-collect: one scalar
+        return topk(
+            batch,
+            old,
+            postings.where(prior),
+            df_b.where(prior),
+            n_old,
+            n_buckets=meta["n_buckets"],
+            persisted_out=persisted_out,
         )
-        return text.strip() or None
-    finally:
-        stream.close()
+
+    def bootstrap(batch, persisted_out):
+        # no corpus yet: within-batch retrieval only (df and N come
+        # entirely from the batch)
+        spark = batch.sparkSession
+        return topk(
+            batch,
+            spark.createDataFrame([], batch.schema),
+            spark.createDataFrame([], "doc_id long, t string, tf long, tb int, ingest_batch int"),
+            spark.createDataFrame([], "t string, df long, ingest_batch int"),
+            0,
+            n_buckets=n_buckets,
+            persisted_out=persisted_out,
+        )
+
+    return _probe_then_index(
+        index_path,
+        corpus_path,
+        results_path,
+        probe=probe,
+        bootstrap=bootstrap,
+        append=lambda batch, batch_id: append_to_tfidf_index(
+            batch, index_path, batch_id, id_col, text_col
+        ),
+        save=lambda batch, batch_id: save_tfidf_index(
+            batch, index_path, id_col, text_col, n_buckets=n_buckets, ingest_batch=batch_id
+        ),
+    )
 
 
-def _sink_write_small(fs, jvm, path: str, text: str) -> None:
-    out = fs.create(jvm.org.apache.hadoop.fs.Path(path), True)
-    try:
-        out.write(bytearray(text.encode("utf-8")))
-    finally:
-        out.close()
+def _ann_protocol(index_path, codec, n_list, *, bootstrap, append, reland=None):
+    """The dense-ANN sink body over :func:`_exactly_once`, for a persisted
+    index of *codec*'s family at *index_path*; the batch is its
+    (vec_id, e) columns. A sink supplies its steps:
+    ``bootstrap(batch, batch_id)`` builds and saves the index from the
+    first non-empty batch, ``append(batch, batch_id, root)`` appends to the
+    active generation at *root* and returns ``ivf.append_batch``'s stats,
+    and ``reland(batch, batch_id)`` rewrites the sink's own output for a
+    batch whose bootstrap committed but whose marker was lost.
+
+    On top of the scaffold (which marks an empty batch and does nothing
+    else):
+    - a compressed family (its codes cannot be retrained from) keeps each
+      raw batch at ``{index_path}/_corpus/ingest_batch=<id>`` after the
+      step, the corpus its in-loop retrain reads; raw IVF holds the
+      vectors itself;
+    - the bootstrap records its batch id at ``{index_path}/_bootstrap``
+      BEFORE building, so a crash after the save but before the marker
+      replays into ``reland`` instead of appending the batch a second time,
+      and a crash mid-save replays into a clean re-bootstrap (the save
+      re-initialises the path);
+    - legacy adoption: an index without a ``_bootstrap`` record is appended
+      to only if its tree is complete and a batch marker committed; a
+      complete tree with no committed marker is indistinguishable from a
+      crashed bootstrap and is re-bootstrapped;
+    - a tripped ``needs_retrain`` persists ``{index_path}/_pending_retrain``
+      BEFORE the marker, since the batch-local drift signal cannot be
+      recomputed from later batches. The marker comes next (the append is
+      replay-idempotent; the fold is not, and replay-appending a folded
+      batch would double its vectors); then any pending flag, including one
+      a crashed earlier commit left, is acted on by ``ivf.retrain_index``
+      (fresh generation, atomic pointer swap) and cleared."""
+    corpus_path = None if codec.stores_raw else f"{index_path}/_corpus"
+
+    def body(batch: DataFrame, batch_id: int, persisted_out: list):
+        from ..functions import ivf  # late-bound: retrain_index is looked up per call
+
+        spark = batch.sparkSession
+        root = ivf._resolve_root(spark, index_path)
+        complete = ivf._is_complete(spark, root)
+        boot = _read_text(spark, f"{index_path}/_bootstrap")
+
+        def any_committed() -> bool:
+            fs, markers = _fs_path(spark, f"{index_path}/_batches")
+            return fs.exists(markers) and len(fs.listStatus(markers)) > 0
+
+        stats = None
+        if complete and boot == str(batch_id):
+            if reland is not None:
+                reland(batch, batch_id)
+        elif not (complete and (boot is not None or any_committed())):
+            # no index, a mid-save crash, or a legacy crashed bootstrap
+            _write_text(spark, f"{index_path}/_bootstrap", str(batch_id))
+            bootstrap(batch, batch_id)
+        else:
+            stats = append(batch, batch_id, root)
+        if corpus_path is not None:
+            _write_batch_partitions(batch, corpus_path, batch_id)
+        if stats is None:
+            return None
+        fs, pending = _fs_path(spark, f"{index_path}/_pending_retrain")
+        if stats["needs_retrain"]:
+            fs.create(pending, True).close()
+
+        def retrain() -> None:
+            if fs.exists(pending):
+                corpus = (
+                    spark.read.parquet(corpus_path).select("vec_id", "e")
+                    if corpus_path is not None
+                    else None
+                )
+                ivf.retrain_index(codec, spark, index_path, corpus, n_list)
+                fs.delete(pending, False)
+
+        return retrain
+
+    fn = _exactly_once(index_path, body, mark_empty=True)
+    return lambda batch, batch_id: fn(batch.select("vec_id", "e"), batch_id)
 
 
 def incremental_ann_sink(
@@ -799,130 +869,32 @@ def incremental_ann_sink(
     """foreachBatch body for STREAMING dense-ANN index maintenance — the
     embedding twin of `incremental_tfidf_sink` and the in-loop driver of
     the incremental-index machinery, parameterized over all three index
-    families (r12 judge punch #1): each micro-batch of
-    (vec_id, e array<double>) is appended to the persisted index through
-    the shared lifecycle (`ivf.append_batch` over the family's codec —
-    ``ivf``, ``ivfpq`` or ``ivfsq``, each with its own drift trigger and
-    the common mass trigger), and a tripped ``needs_retrain`` is ACTED on
-    inside the loop via `ivf.retrain_index` (fresh generation, atomic
-    pointer swap) while concurrent readers keep a consistent view. The
-    first non-empty batch bootstraps the index (build + save); ``m`` /
-    ``ksub`` are the IVF-PQ bootstrap geometry.
-
-    The COMPRESSED families cannot retrain from their own lossy codes,
-    so for them the sink also maintains a raw-vector corpus tree at
-    ``{index_path}/_corpus/ingest_batch=*`` (dynamic-overwrite per batch
-    — the same idempotent layout as the tfidf sink's corpus) that the
-    in-loop retrain reads as its source of truth; plain ``ivf`` skips it
-    (the index itself holds the raw vectors — no double storage).
-
-    Delivery contract — exactly-once across restarts, in four layers:
-    (1) a fully-committed batch leaves a marker at
-    ``{index_path}/_batches/<id>`` and replays no-op; (2) a mid-commit
-    crash replays the append, whose delta write overwrites the batch's
-    OWN directory and whose stats row keeps its original commit_seq
-    slot — idempotent by construction; (3) the BOOTSTRAP batch records
-    its id at ``{index_path}/_bootstrap`` BEFORE building (r12 advisor):
-    a crash after the save completed but before the batch marker landed
-    replays into the short-circuit branch (bootstrap id == this batch)
-    instead of the append path — the one window that previously could
-    double the bootstrap vectors — while a crash mid-save replays into a
-    clean re-bootstrap (save re-initializes the path); (4) a tripped
-    trigger persists a ``{index_path}/_pending_retrain`` flag BEFORE the
-    batch marker and clears it only after the retrain commits (r12
-    advisor): the batch-local drift component of the trigger is not
-    recomputable from later batches, so a retrain lost to a crash
-    between marker and fold now re-trips on the next commit instead of
-    silently dropping. The marker still precedes the retrain itself —
-    the fold absorbs the batch, and replay-appending it afterwards would
-    double its vectors.
-
-    Legacy adoption: an index written by the pre-family sink has no
-    ``_bootstrap`` record; if its tree is complete and at least one
-    batch marker committed, it is adopted and appended to — a complete
-    tree with NO committed batch marker is indistinguishable from that
-    sink's crashed bootstrap and is re-bootstrapped (advisor remedy).
+    families: each micro-batch of (vec_id, e array<double>) is appended
+    to the persisted index through the shared lifecycle
+    (`ivf.append_batch` over the family's codec — ``ivf``, ``ivfpq`` or
+    ``ivfsq``, each with its own drift trigger and the common mass
+    trigger), and a tripped ``needs_retrain`` is ACTED on inside the loop
+    via `ivf.retrain_index` while concurrent readers keep a consistent
+    view. The first non-empty batch bootstraps the index (build + save);
+    ``m`` / ``ksub`` are the IVF-PQ bootstrap geometry. The compressed
+    families also keep a raw-vector corpus tree for their retrain.
+    Delivery is exactly-once (:func:`_ann_protocol`).
 
     Reference analogue: the controller's continually-refreshed global
     view (ryu/src/deployed_controller/DIPA_Controller.py) — here the
     refresh loop maintains a serving ANN index instead of log state."""
-    from ..functions.ivf import codec_for
+    from ..functions.ivf import append_batch, codec_for, save_index, train_index
 
     codec = codec_for(family)
-    needs_corpus = not codec.stores_raw
-    corpus_path = f"{index_path}/_corpus"
     geometry = {"m": m, "ksub": ksub} if codec.geometry else {}
-    _fs, _read_small, _write_small = _sink_fs, _sink_read_small, _sink_write_small
 
-    def fn(batch: DataFrame, batch_id: int) -> None:
-        from ..functions.dedup import _write_batch_partitions
-        from ..functions.ivf import (
-            _is_complete,
-            _resolve_root,
-            append_batch,
-            retrain_index,
-            save_index,
-            train_index,
-        )
+    def bootstrap(batch, batch_id):
+        save_index(codec, *train_index(codec, batch, dim, n_list, **geometry), index_path)
 
-        spark = batch.sparkSession
-        fs, jvm = _fs(spark, index_path)
-        marker = jvm.org.apache.hadoop.fs.Path(f"{index_path}/_batches/{batch_id}")
-        if fs.exists(marker):
-            return  # completed batch replayed after restart — no-op
-        if batch.isEmpty():
-            fs.mkdirs(marker)
-            return
-        batch = batch.select("vec_id", "e").persist()
-        try:
-            root = _resolve_root(spark, index_path)
-            complete = _is_complete(spark, root)
-            boot = _read_small(fs, jvm, f"{index_path}/_bootstrap")
-            if complete and boot == str(batch_id):
-                # this batch's own bootstrap committed but crashed before
-                # its marker: the index already holds its vectors — only
-                # re-land the (idempotent) corpus copy and mark
-                if needs_corpus:
-                    _write_batch_partitions(batch, corpus_path, batch_id)
-                fs.mkdirs(marker)
-                return
-            batches = jvm.org.apache.hadoop.fs.Path(f"{index_path}/_batches")
-            any_committed = fs.exists(batches) and len(fs.listStatus(batches)) > 0
-            if not (complete and (boot is not None or any_committed)):
-                # no index, a mid-save crash, or a legacy crashed
-                # bootstrap — (re)bootstrap; the id record goes FIRST so
-                # every later crash window resolves unambiguously
-                _write_small(fs, jvm, f"{index_path}/_bootstrap", str(batch_id))
-                trained = train_index(codec, batch, dim, n_list, **geometry)
-                save_index(codec, *trained, index_path)
-                if needs_corpus:
-                    _write_batch_partitions(batch, corpus_path, batch_id)
-                fs.mkdirs(marker)
-                return
-            stats = append_batch(codec, spark, index_path, batch, f"b{batch_id}")
-            if needs_corpus:
-                _write_batch_partitions(batch, corpus_path, batch_id)
-            pending = jvm.org.apache.hadoop.fs.Path(
-                f"{index_path}/_pending_retrain"
-            )
-            if stats["needs_retrain"]:
-                fs.create(pending, True).close()  # flag BEFORE marker
-            # marker next (the append above is replay-idempotent; the
-            # fold below is not), THEN act on any pending trigger —
-            # including one a crashed earlier commit left behind
-            fs.mkdirs(marker)
-            if fs.exists(pending):
-                corpus = (
-                    spark.read.parquet(corpus_path).select("vec_id", "e")
-                    if needs_corpus
-                    else None
-                )
-                retrain_index(codec, spark, index_path, corpus, n_list)
-                fs.delete(pending, False)
-        finally:
-            batch.unpersist()
+    def append(batch, batch_id, root):
+        return append_batch(codec, batch.sparkSession, index_path, batch, f"b{batch_id}")
 
-    return fn
+    return _ann_protocol(index_path, codec, n_list, bootstrap=bootstrap, append=append)
 
 
 def streaming_semantic_dedup_sink(
@@ -952,162 +924,91 @@ def streaming_semantic_dedup_sink(
     an argmin centroid — the pytest contract); the drop rule is the
     PAIRWISE SemDeDup rule, not transitive closure.
 
-    Exactly-once — the `incremental_ann_sink` contract verbatim (batch
-    marker / `_bootstrap` id record / `_pending_retrain` flag), with one
-    addition: the cross-batch probe structurally EXCLUDES the batch's
-    OWN delta partition from the index scan (partition-pruned, never
-    listed as input), so a replay after a crash mid-append (the batch's
-    delta already on disk) can neither match rows against themselves
-    and empty the kept set, nor race the overwrite of the directory its
-    own lineage reads. Drops are then a deterministic function of
-    (batch, saved quantizer, prior index) on every replay; vec_ids are
-    assumed unique across batches (the ingest contract every sink here
-    shares).
+    Delivery is exactly-once (:func:`_ann_protocol`). The cross-batch
+    probe structurally EXCLUDES the batch's OWN delta partition from the
+    index scan, so a replay after a crash mid-append can neither match
+    rows against themselves and empty the kept set, nor race the
+    overwrite of the directory its own lineage reads. Drops are then a
+    deterministic function of (batch, saved quantizer, prior index) on
+    every replay; vec_ids are assumed unique across batches (the ingest
+    contract every sink here shares).
 
     Reference analogue: first-seen admission against the continually-
     refreshed global view (ryu/src/deployed_controller/
     DIPA_Controller.py) — here admission is semantic novelty."""
+    from ..functions.ivf import IVF_CODEC
+
     kept_path = f"{index_path}/_kept"
 
-    def _drop_ids(spark, batch: DataFrame, cents) -> DataFrame:
-        """Within-batch dup ids: cluster-scoped pairwise rule on the
-        batch itself, assigned to the SAVED centroids."""
-        from ..functions.ivf import _assign_to_centroids
+    def dup_ids(assigned: DataFrame) -> DataFrame:
+        """Within-batch dup ids: the cluster-scoped pairwise rule."""
         from ..functions.similarity import semantic_dedup_pairs
 
-        assigned = _assign_to_centroids(batch.select("vec_id", "e"), cents)
         return (
             semantic_dedup_pairs(assigned, threshold=threshold)
             .select(F.col("dup_id").alias("vec_id"))
             .distinct()
         )
 
-    def fn(batch: DataFrame, batch_id: int) -> None:
+    def bootstrap(batch, batch_id):
+        # within-batch dedup with the batch's own k-means: the index is
+        # born already deduped
+        from ..functions.ivf import build_ivf_index, save_ivf_index
+
+        assigned, cents = build_ivf_index(batch, dim=dim, n_list=n_list)
+        drops = dup_ids(assigned)
+        save_ivf_index(
+            assigned.join(drops, "vec_id", "left_anti").select("vec_id", "e", "list_id"),
+            cents,
+            index_path,
+        )
+        _write_batch_partitions(batch.join(drops, "vec_id", "left_anti"), kept_path, batch_id)
+
+    def reland(batch, batch_id):
+        # the index already holds the deduped batch (the build is
+        # deterministic): recompute the kept set from it
+        from ..functions.ivf import load_ivf_index
+
+        assigned, _ = load_ivf_index(batch.sparkSession, index_path)
+        kept = batch.join(assigned.select("vec_id"), "vec_id", "left_semi")
+        _write_batch_partitions(kept, kept_path, batch_id)
+
+    def append(batch, batch_id, root):
         import numpy as np
 
-        from ..functions.dedup import _write_batch_partitions
-        from ..functions.ivf import (
-            _is_complete,
-            _resolve_root,
-            build_ivf_index,
-            ivf_append_batch,
-            ivf_retrain,
-            ivf_search,
-            load_ivf_index,
-            save_ivf_index,
-        )
-        from ..functions.similarity import semantic_dedup_pairs
+        from ..functions.ivf import _assign_to_centroids, ivf_append_batch, ivf_search
 
         spark = batch.sparkSession
-        fs, jvm = _sink_fs(spark, index_path)
-        marker = jvm.org.apache.hadoop.fs.Path(f"{index_path}/_batches/{batch_id}")
-        if fs.exists(marker):
-            return  # completed batch replayed after restart — no-op
-        if batch.isEmpty():
-            fs.mkdirs(marker)
-            return
-        batch = batch.select("vec_id", "e").persist()
-        try:
-            root = _resolve_root(spark, index_path)
-            complete = _is_complete(spark, root)
-            boot = _sink_read_small(fs, jvm, f"{index_path}/_bootstrap")
-            if complete and boot == str(batch_id):
-                # crashed bootstrap after save: the index already holds
-                # the deduped batch — recompute the kept set (the build
-                # is deterministic) only to re-land the output tree
-                assigned, _ = load_ivf_index(spark, index_path)
-                kept = batch.join(
-                    assigned.select("vec_id"), "vec_id", "left_semi"
-                )
-                _write_batch_partitions(kept, kept_path, batch_id)
-                fs.mkdirs(marker)
-                return
-            batches = jvm.org.apache.hadoop.fs.Path(f"{index_path}/_batches")
-            any_committed = fs.exists(batches) and len(fs.listStatus(batches)) > 0
-            if not (complete and (boot is not None or any_committed)):
-                # bootstrap: within-batch dedup with the batch's own
-                # k-means, then the index is born already-deduped
-                _sink_write_small(
-                    fs, jvm, f"{index_path}/_bootstrap", str(batch_id)
-                )
-                assigned0, cents0 = build_ivf_index(batch, dim=dim, n_list=n_list)
-                drops = (
-                    semantic_dedup_pairs(assigned0, threshold=threshold)
-                    .select(F.col("dup_id").alias("vec_id"))
-                    .distinct()
-                )
-                kept_assigned = assigned0.join(drops, "vec_id", "left_anti")
-                save_ivf_index(
-                    kept_assigned.select("vec_id", "e", "list_id"),
-                    cents0,
-                    index_path,
-                )
-                kept = batch.join(drops, "vec_id", "left_anti")
-                _write_batch_partitions(kept, kept_path, batch_id)
-                fs.mkdirs(marker)
-                return
-            cent_rows = (
-                spark.read.parquet(f"{root}/centroids").orderBy("list_id").collect()  # bounded-collect: n_list rows
+        cent_rows = (
+            spark.read.parquet(f"{root}/centroids").orderBy("list_id").collect()  # bounded-collect: n_list rows
+        )
+        cents = np.array([r["centroid"] for r in cent_rows], dtype=np.float64)
+        within = dup_ids(_assign_to_centroids(batch, cents))
+        # self-exclusion is STRUCTURAL: the probe reads base lists + every
+        # delta EXCEPT this batch's own partition (its rows are this
+        # batch's prior kept set — matching against them on a replay would
+        # empty the kept set, and reading the directory the append below
+        # overwrites races the overwrite; the partition filter prunes it
+        # from the scan entirely)
+        existing = spark.read.parquet(f"{root}/lists").select("vec_id", "e", "list_id")
+        if _exists(spark, f"{root}/deltas"):
+            existing = existing.unionByName(
+                spark.read.parquet(f"{root}/deltas")
+                .where(F.col("batch_id") != f"b{batch_id}")
+                .select("vec_id", "e", "list_id")
             )
-            cents = np.array([r["centroid"] for r in cent_rows], dtype=np.float64)
-            within = _drop_ids(spark, batch, cents)
-            # self-exclusion is STRUCTURAL: the probe reads base lists +
-            # every delta EXCEPT this batch's own partition (its rows are
-            # this batch's prior kept set — matching against them on a
-            # replay would empty the kept set, and reading the directory
-            # the append below overwrites races the overwrite; the
-            # partition filter prunes it from the scan entirely). vec_ids
-            # are unique across batches by the sink's ingest contract.
-            centroids_df = spark.read.parquet(f"{root}/centroids")
-            existing = spark.read.parquet(f"{root}/lists").select(
-                "vec_id", "e", "list_id"
-            )
-            deltas_dir = jvm.org.apache.hadoop.fs.Path(f"{root}/deltas")
-            if fs.exists(deltas_dir):
-                existing = existing.unionByName(
-                    spark.read.parquet(f"{root}/deltas")
-                    .where(F.col("batch_id") != f"b{batch_id}")
-                    .select("vec_id", "e", "list_id")
-                )
-            q = batch.select(
-                F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
-            )
-            cross = (
-                ivf_search(existing, centroids_df, q, k=1, n_probe=1)
-                .where(F.col("cosine") >= threshold)
-                .select(F.col("query_id").alias("vec_id"))
-                .distinct()
-            )
-            kept = batch.join(
-                within.unionByName(cross).distinct(), "vec_id", "left_anti"
-            )
-            stats = ivf_append_batch(spark, index_path, kept, f"b{batch_id}")
-            _write_batch_partitions(kept, kept_path, batch_id)
-            pending = jvm.org.apache.hadoop.fs.Path(
-                f"{index_path}/_pending_retrain"
-            )
-            if stats["needs_retrain"]:
-                fs.create(pending, True).close()  # flag BEFORE marker
-            fs.mkdirs(marker)
-            if fs.exists(pending):
-                ivf_retrain(spark, index_path, n_list=n_list)
-                fs.delete(pending, False)
-        finally:
-            batch.unpersist()
+        q = batch.select(F.col("vec_id").alias("query_id"), F.col("e").alias("qe"))
+        cross = (
+            ivf_search(existing, spark.read.parquet(f"{root}/centroids"), q, k=1, n_probe=1)
+            .where(F.col("cosine") >= threshold)
+            .select(F.col("query_id").alias("vec_id"))
+            .distinct()
+        )
+        kept = batch.join(within.unionByName(cross).distinct(), "vec_id", "left_anti")
+        stats = ivf_append_batch(spark, index_path, kept, f"b{batch_id}")
+        _write_batch_partitions(kept, kept_path, batch_id)
+        return stats
 
-    return fn
-
-
-def streaming_quality_gate(docs: DataFrame, min_score: float = 0.0) -> DataFrame:
-    """Model-based quality filter for an unbounded document stream: keep
-    docs whose hashed-linear classifier score clears *min_score*. Pure
-    stateless map work (functions/classifier.hashed_linear_score_expr) —
-    no watermark, no state store, composes in front of
-    `streaming_curation`'s dedup the way CCNet/RefinedWeb pipelines gate
-    before expensive stages. Token-less docs score NULL and are dropped."""
-    from ..functions.classifier import hashed_linear_score_expr
-
-    score = hashed_linear_score_expr("text")
-    return docs.withColumn("quality_score", score).where(
-        F.col("quality_score") >= min_score
+    return _ann_protocol(
+        index_path, IVF_CODEC, n_list, bootstrap=bootstrap, append=append, reland=reland
     )

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..localdf import local_rows_df
+from ..storage import _exists, _fs_path
 
 #: An action application function: receives ONLY actions not yet applied.
 ActionFn = Callable[[list], None]
@@ -107,18 +108,9 @@ class MitigationSink:
     def _bucket_dir(self, b: int) -> str:
         return os.path.join(self.ledger_path, f"bucket={b}")
 
-    def _exists(self, spark, path: str) -> bool:
-        """Existence through the Hadoop FileSystem API: an os.path check
-        sees nothing on HDFS/S3A, which would silently treat the ledger as
-        absent and REPLAY already-applied side effects — the exactly-once
-        contract's worst failure mode."""
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)
-
     def _ledger_buckets(self, spark, buckets: list[int]):
         """Read only the touched buckets (pruned by the hive layout)."""
-        present = [b for b in buckets if self._exists(spark, self._bucket_dir(b))]
+        present = [b for b in buckets if _exists(spark, self._bucket_dir(b))]
         if not present:
             return None
         return spark.read.option("basePath", self.ledger_path).parquet(
@@ -128,7 +120,7 @@ class MitigationSink:
     def _applied_keys(self, spark) -> set[str]:
         if self._keys is None:
             self._keys = set()
-            if self._exists(spark, self.ledger_path):
+            if _exists(spark, self.ledger_path):
                 ledger = spark.read.schema(_LEDGER_SCHEMA).parquet(self.ledger_path)
                 self._keys.update(r[0] for r in ledger.select("__key").collect())
         return self._keys
@@ -253,13 +245,8 @@ class SummarySink:
         self.measure = measure
         self.retain = retain
 
-    def _fs(self, spark):
-        jvm = spark._jvm
-        path = jvm.org.apache.hadoop.fs.Path(self.summary_path)
-        return path.getFileSystem(spark._jsc.hadoopConfiguration()), path, jvm
-
     def _versions(self, spark) -> list[int]:
-        fs, path, _ = self._fs(spark)
+        fs, path = _fs_path(spark, self.summary_path)
         if not fs.exists(path):
             return []
         out = []
@@ -311,11 +298,9 @@ class SummarySink:
         merged = merge_summaries(self._snapshot(spark, prior[-1]), part) if prior else part
         merged.write.mode("overwrite").parquet(f"{self.summary_path}/v={batch_id}")
         if len(prior) > self.retain:
-            fs, _, jvm = self._fs(spark)
             for v in prior[: -self.retain]:
-                fs.delete(
-                    jvm.org.apache.hadoop.fs.Path(f"{self.summary_path}/v={v}"), True
-                )
+                fs, path = _fs_path(spark, f"{self.summary_path}/v={v}")
+                fs.delete(path, True)
 
 
 def upsert_lake_sink(

@@ -574,6 +574,29 @@ def test_no_module_level_session_containers():
     assert len(files) > 20 and not found, found
 
 
+def test_filesystem_lookup_and_batch_marker_live_in_one_place():
+    """The Hadoop FileSystem lookup is written once (storage._fs_path) and
+    the exactly-once batch marker path once (the index sinks' scaffold,
+    streaming.pipelines._exactly_once). A second `getFileSystem(` or
+    `_batches/` anywhere in the package is a copied protocol."""
+    import inspect
+    import pathlib
+
+    import dipa_collaborative_pulsar_idps_spark as pkg
+    from dipa_collaborative_pulsar_idps_spark import storage
+    from dipa_collaborative_pulsar_idps_spark.streaming import pipelines
+
+    root = pathlib.Path(pkg.__path__[0])
+    sources = {py.relative_to(root): py.read_text() for py in sorted(root.rglob("*.py"))}
+    for needle, owner in (
+        ("getFileSystem(", storage._fs_path),
+        ("_batches/", pipelines._exactly_once),
+    ):
+        found = {str(p): s.count(needle) for p, s in sources.items() if needle in s}
+        owned = inspect.getsource(owner).count(needle)
+        assert owned >= 1 and sum(found.values()) == owned, (needle, found)
+
+
 def test_stats_rows_reads_legacy_pre_commit_seq_files(spark, tmp_path):
     """r13 swapped mergeSchema for the explicit _STATS_SCHEMA on stats
     reads, relying on Spark null-filling commit_seq for files written by

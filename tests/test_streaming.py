@@ -904,8 +904,9 @@ def test_streaming_incremental_dedup_reports_each_pair_once(spark, tmp_path):
     """Continual-crawl loop: replay a planted corpus in 3 micro-batches
     through incremental_dedup_sink; the pairs parquet must equal the
     full-batch LSH result (each pair reported exactly once, when its later
-    member arrives), and a second run of the SAME stream (fresh checkpoint,
-    same index) must add nothing (batch markers skip completed work)."""
+    member arrives), no call may leave a cached RDD behind, and a second
+    run of the SAME stream (fresh checkpoint, same index) must add nothing
+    (batch markers skip completed work)."""
     import random as _random
 
     from dipa_collaborative_pulsar_idps_spark.functions.dedup import (
@@ -940,6 +941,7 @@ def test_streaming_incremental_dedup_reports_each_pair_once(spark, tmp_path):
     fn = incremental_dedup_sink(
         index_path=paths["idx"], corpus_path=paths["corpus"], pairs_path=paths["pairs"]
     )
+    cached_before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
 
     def run(ckpt: str) -> None:
         q = (
@@ -952,6 +954,9 @@ def test_streaming_incremental_dedup_reports_each_pair_once(spark, tmp_path):
         q.awaitTermination()
 
     run("ckpt1")
+    # the bootstrap and append calls leak no cached RDDs
+    cached_after = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+    assert cached_after <= cached_before, f"sink leaked cached RDDs: {cached_after - cached_before}"
     want = {
         (r.doc_a, r.doc_b, round(r.jaccard, 9))
         for r in minhash_near_dup_pairs(docs, threshold=0.8).collect()
@@ -1066,6 +1071,7 @@ def test_streaming_incremental_tfidf_mid_commit_replay_is_idempotent(spark, tmp_
         results_path=paths["results"],
         k=3,
     )
+    cached_before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
     fn(half_a, 0)
     fn(half_b, 1)
 
@@ -1086,6 +1092,10 @@ def test_streaming_incremental_tfidf_mid_commit_replay_is_idempotent(spark, tmp_
     shutil.rmtree(f"{paths['idx']}/_batches/1")
     fn(half_b, 1)
     assert counts() == before
+    # the sink owns the persist lifecycle of the batch and its probe's
+    # handles: no cached RDD outlives a call
+    cached_after = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+    assert cached_after <= cached_before, f"sink leaked cached RDDs: {cached_after - cached_before}"
 
 
 def test_streaming_incremental_dedup_mid_commit_replay_is_idempotent(spark, tmp_path):
@@ -1477,6 +1487,7 @@ def test_streaming_incremental_ann_sink_drift_retrain_and_replay(spark, tmp_path
 
     idx = str(tmp_path / "ann_idx")
     fn = incremental_ann_sink(index_path=idx, dim=64, n_list=16)
+    cached_before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
 
     def run(ckpt: str) -> None:
         q = (
@@ -1524,6 +1535,9 @@ def test_streaming_incremental_ann_sink_drift_retrain_and_replay(spark, tmp_path
     run("ckpt3")
     assert _read_pointer(spark, idx) == "gen-00001"  # no second generation
     assert load_ivf_index(spark, idx)[0].count() == 150
+    # bootstrap, append, replay and retrain calls leak no cached RDDs
+    cached_after = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+    assert cached_after <= cached_before, f"sink leaked cached RDDs: {cached_after - cached_before}"
 
 
 def _ann_stream_runner(spark, tmp_path, fn, replay_dir):
@@ -1566,13 +1580,16 @@ def test_streaming_ann_sink_bootstrap_crash_replay(spark, tmp_path):
         committed batch marker) — re-bootstraps instead of appending;
     (3) an EMPTY first batch precedes the bootstrap — its committed
         marker must not fool the replay of the crashed bootstrap batch
-        into the append path (the hole a bare any-marker gate leaves)."""
+        into the append path (the hole a bare any-marker gate leaves).
+    Shape 1 also runs through streaming_semantic_dedup_sink, whose
+    replay must re-land the `_kept` output from the saved index."""
     import os
     import time as _time
 
     from dipa_collaborative_pulsar_idps_spark.functions.ivf import load_ivf_index
     from dipa_collaborative_pulsar_idps_spark.streaming.pipelines import (
         incremental_ann_sink,
+        streaming_semantic_dedup_sink,
     )
 
     rows = _clustered_vectors(7)
@@ -1596,6 +1613,28 @@ def test_streaming_ann_sink_bootstrap_crash_replay(spark, tmp_path):
     assert assigned.count() == 200
     assert assigned.select("vec_id").distinct().count() == 200
     assert not os.path.exists(f"{idx}/deltas")  # short-circuit, not append
+
+    # (1) through the semantic sink: the crash also lost the `_kept`
+    # output, which the replay recomputes from the saved (deduped) index
+    sem_idx = str(tmp_path / "idx_sem")
+    fn_sem = streaming_semantic_dedup_sink(index_path=sem_idx, dim=64, n_list=16)
+    run_sem = _ann_stream_runner(spark, tmp_path, fn_sem, replay_dir)
+    run_sem("ckpt_s1")
+
+    def kept0():
+        kept = spark.read.parquet(f"{sem_idx}/_kept").where("ingest_batch = 0")
+        return {r.vec_id for r in kept.select("vec_id").collect()}
+
+    want_kept = kept0()
+    assert 0 < len(want_kept) < 200  # the default threshold drops cluster mates
+    shutil.rmtree(f"{sem_idx}/_batches")
+    shutil.rmtree(f"{sem_idx}/_kept")
+    run_sem("ckpt_s2")
+    assert kept0() == want_kept
+    assigned_sem, _ = load_ivf_index(spark, sem_idx)
+    assert assigned_sem.count() == len(want_kept)
+    assert assigned_sem.select("vec_id").distinct().count() == len(want_kept)
+    assert not os.path.exists(f"{sem_idx}/deltas")
 
     # (2) legacy crashed bootstrap: no _bootstrap record, no marker —
     # the replay re-bootstraps (save re-initializes) instead of doubling
