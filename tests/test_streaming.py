@@ -900,6 +900,11 @@ def test_streaming_session_window_matches_batch_islands(spark, replay_dir):
     assert len(got) == 3, got
 
 
+def _cached_rdd_ids(spark) -> set:
+    """Ids of the RDDs the JVM holds cached (a sink must not add any)."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
 def test_streaming_incremental_dedup_reports_each_pair_once(spark, tmp_path):
     """Continual-crawl loop: replay a planted corpus in 3 micro-batches
     through incremental_dedup_sink; the pairs parquet must equal the
@@ -941,7 +946,7 @@ def test_streaming_incremental_dedup_reports_each_pair_once(spark, tmp_path):
     fn = incremental_dedup_sink(
         index_path=paths["idx"], corpus_path=paths["corpus"], pairs_path=paths["pairs"]
     )
-    cached_before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+    cached_before = _cached_rdd_ids(spark)
 
     def run(ckpt: str) -> None:
         q = (
@@ -955,7 +960,7 @@ def test_streaming_incremental_dedup_reports_each_pair_once(spark, tmp_path):
 
     run("ckpt1")
     # the bootstrap and append calls leak no cached RDDs
-    cached_after = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+    cached_after = _cached_rdd_ids(spark)
     assert cached_after <= cached_before, f"sink leaked cached RDDs: {cached_after - cached_before}"
     want = {
         (r.doc_a, r.doc_b, round(r.jaccard, 9))
@@ -1071,7 +1076,7 @@ def test_streaming_incremental_tfidf_mid_commit_replay_is_idempotent(spark, tmp_
         results_path=paths["results"],
         k=3,
     )
-    cached_before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+    cached_before = _cached_rdd_ids(spark)
     fn(half_a, 0)
     fn(half_b, 1)
 
@@ -1094,7 +1099,7 @@ def test_streaming_incremental_tfidf_mid_commit_replay_is_idempotent(spark, tmp_
     assert counts() == before
     # the sink owns the persist lifecycle of the batch and its probe's
     # handles: no cached RDD outlives a call
-    cached_after = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+    cached_after = _cached_rdd_ids(spark)
     assert cached_after <= cached_before, f"sink leaked cached RDDs: {cached_after - cached_before}"
 
 
@@ -1487,7 +1492,7 @@ def test_streaming_incremental_ann_sink_drift_retrain_and_replay(spark, tmp_path
 
     idx = str(tmp_path / "ann_idx")
     fn = incremental_ann_sink(index_path=idx, dim=64, n_list=16)
-    cached_before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+    cached_before = _cached_rdd_ids(spark)
 
     def run(ckpt: str) -> None:
         q = (
@@ -1536,7 +1541,7 @@ def test_streaming_incremental_ann_sink_drift_retrain_and_replay(spark, tmp_path
     assert _read_pointer(spark, idx) == "gen-00001"  # no second generation
     assert load_ivf_index(spark, idx)[0].count() == 150
     # bootstrap, append, replay and retrain calls leak no cached RDDs
-    cached_after = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+    cached_after = _cached_rdd_ids(spark)
     assert cached_after <= cached_before, f"sink leaked cached RDDs: {cached_after - cached_before}"
 
 
