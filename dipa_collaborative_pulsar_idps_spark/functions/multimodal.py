@@ -697,7 +697,7 @@ def _safe_features(kernel, payload: bytes) -> np.ndarray:
         return _video_features_stub(payload)
 
 
-def extract_features(media: DataFrame, batch_hint: int = 64) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """payload → fixed-dim feature vector via Arrow-batched mapInPandas.
 
     Output: (media_id, media_type, feature array<double>, n_bytes int).
@@ -705,9 +705,7 @@ def extract_features(media: DataFrame, batch_hint: int = 64) -> DataFrame:
     PIL preferred when importable), audio (PCM16 WAV), and video
     (PPM streams, animated GIF, AVI/MJPEG — streamed per-frame stats);
     only opaque containers with no in-repo demuxer (h264-in-mp4/mkv,
-    non-MJPEG AVI) degrade to the marked deterministic stub. Partitioning
-    note: repartition upstream so each task holds O(batch_hint) blobs —
-    binary columns dominate memory, not row count."""
+    non-MJPEG AVI) degrade to the marked deterministic stub."""
     out_schema = "media_id string, media_type string, feature array<double>, n_bytes int"
     kernels = {"image": image_features, "audio": audio_features, "video": video_features}
 
@@ -750,7 +748,7 @@ def dhash64(img: np.ndarray) -> int:
     return h - (1 << 64) if h >= 1 << 63 else h
 
 
-def image_dhash(media: DataFrame, batch_hint: int = 64) -> DataFrame:
+def image_dhash(media: DataFrame) -> DataFrame:
     """(media_id, dhash bigint) for the IMAGE rows of a media frame —
     Arrow-batched mapInPandas over the real PPM/BMP/PNG decoders (PIL-gated
     formats raise through the same honest gate as the feature kernels).
@@ -838,7 +836,7 @@ def audio_fingerprint(payload: bytes) -> int:
     return crossings * rate // (2 * max(len(s) - 1, 1))
 
 
-def audio_fingerprints(media: DataFrame, batch_hint: int = 64) -> DataFrame:
+def audio_fingerprints(media: DataFrame) -> DataFrame:
     """(media_id, freq_hz bigint) for the AUDIO rows — the audio twin of
     :func:`image_dhash`: one Arrow decode pass, then dedup/clustering is
     plain JVM work over small integers."""

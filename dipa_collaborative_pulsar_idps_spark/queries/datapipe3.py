@@ -299,8 +299,8 @@ def _ivfsq_build(spark: SparkSession, sf_dir: str) -> tuple:
 
 
 def _inc_fixture(emb: DataFrame, family: str) -> tuple:
-    """The incremental fixture's bootstrap, shared with
-    scripts/ann_jobcount.py: the family's quantizers trained on the
+    """The incremental fixture's bootstrap, shared with ``bench.py
+    --lifecycle``: the family's quantizers trained on the
     even-vec_id half of *emb* (IVF-PQ at the serving geometry), and the
     odd half split into two crawl batches. Returns
     ``((assigned, centroids, quantizer), b1, b2)``."""

@@ -507,19 +507,18 @@ def streaming_quality_gate(docs: DataFrame, min_score: float = 0.0) -> DataFrame
 # ---------------------------------------------------------------------------
 
 
-def _exactly_once(index_path: str, body, mark_empty: bool = False):
+def _exactly_once(index_path: str, body):
     """The foreachBatch body every index sink below runs: the commit
     protocol that turns checkpointing's at-least-once micro-batches into
     exactly-once output (SURVEY.md I12), around the sink's
     ``body(batch, batch_id, persisted_out)``.
 
     A batch whose marker ``{index_path}/_batches/<id>`` exists was fully
-    committed, and its replay is a no-op. With *mark_empty* (the ANN
-    sinks), an empty batch is marked and ``body`` does not run; without it
-    (the dedup and TF-IDF sinks) no emptiness job runs and ``body``
-    processes every batch. Otherwise the batch is persisted and ``body``
-    runs. Every write ``body`` makes is stamped with the batch id and
-    overwrites only that batch's partitions
+    committed, and its replay is a no-op. An empty batch is marked after
+    one emptiness job and ``body`` does not run, so it writes no empty
+    partition and cannot bootstrap an index from nothing. Otherwise the
+    batch is persisted and ``body`` runs. Every write ``body`` makes is
+    stamped with the batch id and overwrites only that batch's partitions
     (``storage._write_batch_partitions``, the index appends), so a replay
     after a crash anywhere before the marker recomputes the same content
     into the same place instead of appending a duplicate. The marker is
@@ -534,7 +533,7 @@ def _exactly_once(index_path: str, body, mark_empty: bool = False):
         fs, marker = _fs_path(batch.sparkSession, f"{index_path}/_batches/{batch_id}")
         if fs.exists(marker):
             return  # completed batch replayed after restart — no-op
-        if mark_empty and batch.isEmpty():
+        if batch.isEmpty():
             fs.mkdirs(marker)
             return
         batch = batch.persist()
@@ -580,10 +579,10 @@ def _probe_then_index(index_path, corpus_path, out_path, *, probe, bootstrap, ap
     """The dedup / TF-IDF sink body over :func:`_exactly_once`. With an
     index on disk (its ``meta`` table), ``probe(batch, batch_id, old,
     persisted_out)`` scores the batch against the index and ``old``, the
-    corpus so far; the first batch runs ``bootstrap(batch, persisted_out)``,
-    within-batch only. Write order: the output partitions at *out_path*,
-    the index (``append(batch, batch_id)`` or ``save(batch, batch_id)``),
-    the batch's corpus rows, then the marker.
+    corpus so far; the first non-empty batch runs ``bootstrap(batch,
+    persisted_out)``, within-batch only. Write order: the output
+    partitions at *out_path*, the index (``append(batch, batch_id)`` or
+    ``save(batch, batch_id)``), the batch's corpus rows, then the marker.
 
     ``probe`` excludes the batch's own index partitions, and ``old``
     excludes its corpus partitions: on a mid-commit replay they already
@@ -627,7 +626,8 @@ def incremental_dedup_sink(
     exactly once — when its LATER member arrives.
 
     Wire it as ``stream.writeStream.foreachBatch(fn)`` with a checkpoint;
-    the first batch bootstraps the index (within-batch pairs only).
+    the first non-empty batch bootstraps the index (within-batch pairs
+    only).
     Delivery is exactly-once (:func:`_exactly_once`).
 
     100 TB shape: the index is band-partitioned parquet (append = new
@@ -853,7 +853,7 @@ def _ann_protocol(index_path, codec, n_list, *, bootstrap, append, reland=None):
 
         return retrain
 
-    fn = _exactly_once(index_path, body, mark_empty=True)
+    fn = _exactly_once(index_path, body)
     return lambda batch, batch_id: fn(batch.select("vec_id", "e"), batch_id)
 
 

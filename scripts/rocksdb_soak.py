@@ -5,11 +5,12 @@ Round-10 punch #1: both r9 bench artifacts read the RocksDB
 alert-machine p95 above the 2 s poll budget (quiet 2062 ms, driver
 3366 ms) while the r8 twins (1519/1387 ms) and the r9 non-RocksDB twin
 (1281 ms) were inside. The box oscillates ±2.5×, so this script first
-runs the established noise sentinel (5× `suspected_bots`, bench.py
-protocol: quiet median ≈ 0.6 s), then times the EXACT bench workload
-(6 polls × 100k keys, first batch excluded) 3× per variant and reports
-the median p95 — separating box noise from a real conf problem, and
-sweeping the public RocksDB state-store levers:
+runs bench.py's noise sentinel (`bench.noise_sentinel`: quiet median
+≈ 0.6 s), then times bench.py's own alert-machine workload
+(`bench.write_alert_data` / `alert_stream` / `measure`: 6 polls × 100k
+keys, first batch excluded) 3× per variant and reports the median
+p95 — separating box noise from a real conf problem, and sweeping the
+public RocksDB state-store levers:
 
 - changelog checkpointing on/off (full-snapshot upload vs delta);
 - trackTotalNumberOfRows off (skips the get-per-put bookkeeping read —
@@ -33,11 +34,19 @@ import shutil
 import statistics
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F  # noqa: E402
+from bench import (  # noqa: E402
+    alert_stream,
+    measure,
+    noise_sentinel,
+    session_conf,
+    spine_stream,
+    warm_up,
+    write_alert_data,
+    write_spine_data,
+)
 
 ROCKS = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 PREFIX = "spark.sql.streaming.stateStore"
@@ -106,114 +115,6 @@ def _factory_variants() -> dict[str, dict[str, str]]:
 VARIANTS.update(_factory_variants())
 
 
-def _steady(progress):
-    ps = [p for p in progress if p["numInputRows"] > 0]
-    return ps[1:] if len(ps) > 1 else ps
-
-
-def _breakdown(steady) -> dict:
-    """Mean of the engine's own per-batch duration + state-operator
-    timings across steady batches — where the milliseconds go."""
-    out: dict[str, float] = {}
-    for key in ("addBatch", "getBatch", "latestOffset", "queryPlanning",
-                "walCommit", "commitOffsets", "triggerExecution"):
-        vals = [p["durationMs"].get(key, 0) for p in steady if "durationMs" in p]
-        if vals:
-            out[f"durationMs.{key}"] = round(statistics.mean(vals), 1)
-    so_keys = ("allUpdatesTimeMs", "commitTimeMs", "allRemovalsTimeMs",
-               "numRowsTotal", "numRowsUpdated")
-    for key in so_keys:
-        vals = [
-            p["stateOperators"][0].get(key, 0)
-            for p in steady
-            if p.get("stateOperators")
-        ]
-        if vals:
-            out[f"state.{key}"] = round(statistics.mean(vals), 1)
-    return out
-
-
-def _gen_alert_data(spark, d: str) -> None:
-    for b in range(6):
-        batch = spark.range(100_000).select(
-            F.col("id").cast("string").alias("src"),
-            F.timestamp_micros(
-                F.lit(1704067200000000) + F.lit(b * 2_000_000) + F.col("id")
-            ).alias("poll_ts"),
-            (F.col("id") % 10 == 0).alias("hot"),
-        )
-        batch.coalesce(4).write.mode("append").parquet(d)
-
-
-def _gen_spine_data(spark, d: str) -> None:
-    for b in range(4):
-        batch = spark.range(50_000).select(
-            (F.col("id") % 8_000).cast("string").alias("src"),
-            F.timestamp_micros(
-                F.lit(1704067200000000) + F.lit(b * 2_000_000) + F.col("id")
-            ).alias("poll_ts"),
-            (F.lit(b) * 100 + F.col("id") % 7).alias("packet_count"),
-        )
-        batch.coalesce(4).write.mode("append").parquet(d)
-
-
-def _measure(stream_df, ckpt: str) -> dict:
-    q = (
-        stream_df.writeStream.format("noop")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
-    st = _steady(q.recentProgress)
-    rows = sum(p["numInputRows"] for p in st)
-    ms = sum(p["batchDuration"] for p in st)
-    durs = sorted(p["batchDuration"] for p in st)
-    return {
-        "rows_per_sec": round(rows / (ms / 1000.0), 1) if ms else 0.0,
-        "p95_batch_ms": durs[min(len(durs) - 1, int(0.95 * len(durs)))] if durs else 0,
-        "batch_ms": [p["batchDuration"] for p in st],
-        "breakdown": _breakdown(st),
-    }
-
-
-def run_alert(spark, data_dir: str) -> dict:
-    from dipa_collaborative_pulsar_idps_spark.streaming.replay import replay_stream
-    from dipa_collaborative_pulsar_idps_spark.streaming.state import (
-        alert_state_machine,
-    )
-
-    ckpt = tempfile.mkdtemp(prefix="soak_ckpt_")
-    try:
-        stream = replay_stream(
-            spark, data_dir, "src string, poll_ts timestamp, hot boolean"
-        )
-        events = alert_state_machine(stream, "src", "hot", "poll_ts")
-        return _measure(events, ckpt)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-
-def run_spine(spark, data_dir: str) -> dict:
-    from dipa_collaborative_pulsar_idps_spark.streaming.replay import replay_stream
-    from dipa_collaborative_pulsar_idps_spark.streaming.state import (
-        counter_delta_stream,
-    )
-
-    ckpt = tempfile.mkdtemp(prefix="soak_ckpt_")
-    try:
-        stream = replay_stream(
-            spark, data_dir, "src string, poll_ts timestamp, packet_count long"
-        )
-        deltas = counter_delta_stream(stream, ["src"], "packet_count", "poll_ts")
-        rates = deltas.select(
-            "src", "poll_ts", (F.col("delta") / 2.0).alias("pkt_rate")
-        ).where(F.col("pkt_rate") > 25.0)
-        return _measure(rates, ckpt)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-
 def main() -> int:
     out_path = sys.argv[1] if len(sys.argv) > 1 else "SOAK_r10.json"
     variants = dict(VARIANTS)
@@ -230,67 +131,45 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("WARN")
 
-    # --- noise sentinel (bench.py protocol: 5× suspected_bots) ---
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from dipa_collaborative_pulsar_idps_spark.queries import REGISTRY
-    from dipa_collaborative_pulsar_idps_spark.queries.registry import _load_all
-
-    _load_all()
-    fn = REGISTRY["suspected_bots"].fn
-    fn(spark, sf_dir).count()  # warmup (table load, codegen)
-    sent = []
-    for _ in range(5):
-        t0 = time.time()
-        fn(spark, sf_dir).count()
-        sent.append(time.time() - t0)
-    sentinel_median = statistics.median(sent)
-    sentinel_spread = round((max(sent) - min(sent)) / sentinel_median, 3)
+    warm_up(spark, sf_dir)
+    sentinel_median, sentinel_spread = noise_sentinel(spark, sf_dir)
     print(f"sentinel median={sentinel_median:.3f}s spread={sentinel_spread}",
           flush=True)
 
     alert_dir = tempfile.mkdtemp(prefix="soak_alert_data_")
     spine_dir = tempfile.mkdtemp(prefix="soak_spine_data_")
-    _gen_alert_data(spark, alert_dir)
-    _gen_spine_data(spark, spine_dir)
+    write_alert_data(spark, alert_dir)
+    write_spine_data(spark, spine_dir)
 
-    saved: dict[str, str | None] = {}
-    all_keys = {k for conf in VARIANTS.values() for k in conf}
-    for k in all_keys:
-        saved[k] = spark.conf.get(k, None)
+    def run(stream, data_dir: str) -> dict:
+        ckpt = tempfile.mkdtemp(prefix="soak_ckpt_")
+        try:
+            return measure(stream(spark, data_dir), ckpt)
+        finally:
+            shutil.rmtree(ckpt, ignore_errors=True)
 
     results: dict[str, dict] = {}
     try:
         for name, conf in variants.items():
-            for k in all_keys:  # reset to defaults, then apply the variant
-                if saved[k] is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, saved[k])
-            for k, v in conf.items():
-                spark.conf.set(k, v)
-            runs = [run_alert(spark, alert_dir) for _ in range(3)]
-            p95s = sorted(r["p95_batch_ms"] for r in runs)
-            results[name] = {
-                "alert_p95_batch_ms_median": p95s[1],
-                "alert_p95_batch_ms_runs": [r["p95_batch_ms"] for r in runs],
-                "alert_keys_per_sec_median": statistics.median(
-                    r["rows_per_sec"] for r in runs
-                ),
-                "alert_batch_ms_runs": [r["batch_ms"] for r in runs],
-                "alert_breakdown": runs[1]["breakdown"],
-            }
-            # spine breakdown (punch #5) on the two providers that matter
-            if name in ("hdfs", "rocksdb_changelog"):
-                srun = run_spine(spark, spine_dir)
-                results[name]["spine"] = srun
+            with session_conf(spark, conf):
+                runs = [run(alert_stream, alert_dir) for _ in range(3)]
+                p95s = sorted(r["p95_batch_ms"] for r in runs)
+                results[name] = {
+                    "alert_p95_batch_ms_median": p95s[1],
+                    "alert_p95_batch_ms_runs": [r["p95_batch_ms"] for r in runs],
+                    "alert_keys_per_sec_median": statistics.median(
+                        r["rows_per_sec"] for r in runs
+                    ),
+                    "alert_batch_ms_runs": [r["batch_ms"] for r in runs],
+                    "alert_breakdown": runs[1]["breakdown"],
+                }
+                # spine breakdown (punch #5) on the two providers that matter
+                if name in ("hdfs", "rocksdb_changelog"):
+                    results[name]["spine"] = run(spine_stream, spine_dir)
             print(name, json.dumps({k: v for k, v in results[name].items()
                                     if not k.endswith("_runs")}), flush=True)
     finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
         shutil.rmtree(alert_dir, ignore_errors=True)
         shutil.rmtree(spine_dir, ignore_errors=True)
 

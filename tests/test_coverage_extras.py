@@ -642,3 +642,50 @@ def test_local_rows_df_raises_on_cell_schema_mismatch(spark):
 
     with pytest.raises((TypeError, ValueError)):
         local_rows_df(spark, [(1, "not-a-double")], "a long, b double")
+
+
+def test_bench_profile_shape_of_an_ann_query(spark, sf_dir):
+    """bench.py's per-query layer profile, measured the way the bench loop
+    measures (``bench.measure_query``) on ``ann_topk_ivf_neighbors``:
+    build and exec each carry every StatusReader stage field; the warm
+    build runs no Spark job (the query batch, centroids and route are
+    driver-side memos); the exec runs at least one, and its shuffle stays
+    small."""
+    import bench
+    from perfbench.common import STAGE_KEYS, StatusReader
+
+    from dipa_collaborative_pulsar_idps_spark.queries import REGISTRY
+    from dipa_collaborative_pulsar_idps_spark.queries.registry import _load_all
+
+    _load_all()
+    rec = bench.measure_query(
+        spark, StatusReader(spark), REGISTRY["ann_topk_ivf_neighbors"].fn, sf_dir, reps=2
+    )
+    for side in ("build", "exec"):
+        assert set(STAGE_KEYS) <= set(rec[side]), side
+    assert rec["build"]["jobs"] == 0
+    assert rec["exec"]["jobs"] >= 1
+    # measured at sf0.001 on local[8]: 4,335 bytes written and 4,335 read
+    # per warm call. The bound leaves 4x headroom for partitioning and
+    # row-size drift; shuffling the index or the corpus would move far
+    # more (the index is scanned in place).
+    measured = 8_670
+    shuffled = rec["exec"]["shuffle_read_bytes"] + rec["exec"]["shuffle_write_bytes"]
+    assert shuffled <= 4 * measured, shuffled
+
+
+def test_measuring_tools_share_one_warm_up_and_one_progress_filter():
+    """bench.py is the one measuring tool: the Arrow-UDF worker warm-up
+    and the steady-batch filter over a streaming query's recentProgress
+    are written once across bench.py and scripts/ (the tests keep their
+    own workload copies and are not counted)."""
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    sources = {
+        str(py.relative_to(root)): py.read_text()
+        for py in [root / "bench.py", *sorted((root / "scripts").glob("*.py"))]
+    }
+    for needle in ("pandas_udf(lambda v: v * 1.0", "recentProgress"):
+        found = {p: s.count(needle) for p, s in sources.items() if needle in s}
+        assert found == {"bench.py": 1}, (needle, found)

@@ -1199,6 +1199,70 @@ def test_streaming_incremental_dedup_bootstrap_crash_before_corpus_write(
     assert after <= before, f"sink leaked cached RDDs: {after - before}"
 
 
+@pytest.mark.parametrize("kind", ["dedup", "tfidf"])
+def test_index_sinks_mark_an_empty_batch_and_stop(spark, tmp_path, kind):
+    """The dedup and TF-IDF sinks treat an empty micro-batch as the ANN
+    sinks do: one emptiness job, the batch marker, nothing else. After a
+    bootstrap batch the empty call runs at most 1 Spark job (statusTracker
+    job group) and writes no output or corpus partition; an empty batch 0
+    does not bootstrap an index from nothing, so batch 1 after it gives
+    the same output and index rows as batch 1 alone."""
+    from dipa_collaborative_pulsar_idps_spark.streaming.pipelines import (
+        incremental_dedup_sink,
+        incremental_tfidf_sink,
+    )
+
+    rows = [(i, f"tok{i} " * 30) for i in range(20)]
+    rows.append((100, rows[0][1]))  # within-batch near-dup of doc 0
+    docs = spark.createDataFrame(rows, ["doc_id", "text"])
+    empty = docs.limit(0)
+    index_table = "bands" if kind == "dedup" else "postings"
+
+    def sink(name: str):
+        paths = {k: str(tmp_path / name / k) for k in ("idx", "corpus", "out")}
+        if kind == "dedup":
+            fn = incremental_dedup_sink(
+                index_path=paths["idx"], corpus_path=paths["corpus"], pairs_path=paths["out"]
+            )
+        else:
+            fn = incremental_tfidf_sink(
+                index_path=paths["idx"],
+                corpus_path=paths["corpus"],
+                results_path=paths["out"],
+                k=3,
+            )
+        return fn, paths
+
+    fn, paths = sink("after_bootstrap")
+    fn(docs, 0)
+    sc = spark.sparkContext
+    group = f"empty_batch:{kind}"
+    sc.setJobGroup(group, group)
+    try:
+        fn(empty, 1)
+    finally:
+        sc.setJobGroup("idle", "")
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1
+    assert os.path.isdir(f"{paths['idx']}/_batches/1")
+    for table in ("out", "corpus"):
+        assert not os.path.exists(f"{paths[table]}/ingest_batch=1"), table
+
+    def table_rows(p: dict) -> dict:
+        return {
+            t: sorted(str(r) for r in spark.read.parquet(path).collect())
+            for t, path in (("out", p["out"]), ("index", f"{p['idx']}/{index_table}"))
+        }
+
+    fn_e, paths_e = sink("empty_first")
+    fn_e(empty, 0)
+    fn_e(docs, 1)
+    fn_1, paths_1 = sink("alone")
+    fn_1(docs, 1)
+    want = table_rows(paths_1)
+    assert want["out"] and want["index"]
+    assert table_rows(paths_e) == want
+
+
 def test_streaming_sinks_recover_from_temporary_only_corpus(spark, tmp_path):
     """Round-9 advisor closure: a crash DURING the first corpus
     _write_batch_partitions can leave corpus_path holding only a
