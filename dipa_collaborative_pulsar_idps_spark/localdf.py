@@ -37,7 +37,8 @@ def local_rows_df(spark: SparkSession, rows: list, schema) -> DataFrame:
         else spark.createDataFrame([], schema).schema
     )
     if not rows:
-        return spark.createDataFrame([], struct)
+        # no partitions, so no task (and no Python worker) ever runs on it
+        return spark.createDataFrame(spark.sparkContext.emptyRDD(), struct)
     import pandas as pd
     import pyarrow as pa
 

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..config import DEFAULT, DetectionConfig
 from ..functions.parsing import parse_alert, protocol_classifier
+from ..localdf import local_rows_df
 from ..memo import _release
 from ..storage import _exists, _fs_path, _read_text, _write_batch_partitions, _write_text
 from .state import alert_state_machine, counter_delta_stream
@@ -567,7 +568,7 @@ def _read_stamped_corpus(spark, corpus_path: str, batch: DataFrame, batch_id: in
         list(batch.schema.fields) + [StructField("ingest_batch", IntegerType())]
     )
     if not _exists(spark, corpus_path):
-        return spark.createDataFrame([], schema)
+        return local_rows_df(spark, [], schema)
     return (
         spark.read.schema(schema)
         .parquet(corpus_path)
@@ -754,9 +755,9 @@ def incremental_tfidf_sink(
         spark = batch.sparkSession
         return topk(
             batch,
-            spark.createDataFrame([], batch.schema),
-            spark.createDataFrame([], "doc_id long, t string, tf long, tb int, ingest_batch int"),
-            spark.createDataFrame([], "t string, df long, ingest_batch int"),
+            local_rows_df(spark, [], batch.schema),
+            local_rows_df(spark, [], "doc_id long, t string, tf long, tb int, ingest_batch int"),
+            local_rows_df(spark, [], "t string, df long, ingest_batch int"),
             0,
             n_buckets=n_buckets,
             persisted_out=persisted_out,

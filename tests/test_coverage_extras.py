@@ -14,6 +14,7 @@ from dipa_collaborative_pulsar_idps_spark.functions.packets import (
     build_packet,
     parse_packets,
 )
+from dipa_collaborative_pulsar_idps_spark.localdf import local_rows_df
 from dipa_collaborative_pulsar_idps_spark.streaming.replay import (
     replay_stream,
     run_to_memory,
@@ -283,9 +284,10 @@ def test_retrain_pointer_crash_recovery(spark, tmp_path):
     import random
 
     rng = random.Random(7)
-    corpus = spark.createDataFrame(
+    corpus = local_rows_df(
+        spark,
         [(i, [rng.gauss(0, 1) for _ in range(16)]) for i in range(100)],
-        ["vec_id", "e"],
+        "vec_id long, e array<double>",
     )
     path = str(tmp_path / "ivf_crash")
     assigned, centroids = build_ivf_index(corpus, dim=16, n_list=8)
@@ -329,9 +331,10 @@ def test_resolve_root_skips_incomplete_generation(spark, tmp_path):
     import random
 
     rng = random.Random(11)
-    corpus = spark.createDataFrame(
+    corpus = local_rows_df(
+        spark,
         [(i, [rng.gauss(0, 1) for _ in range(16)]) for i in range(80)],
-        ["vec_id", "e"],
+        "vec_id long, e array<double>",
     )
     path = str(tmp_path / "ivf_partial")
     assigned, centroids = build_ivf_index(corpus, dim=16, n_list=4)
@@ -368,9 +371,10 @@ def test_index_health_commit_order_non_padded_ids(spark, tmp_path):
     )
 
     rng = random.Random(3)
-    corpus = spark.createDataFrame(
+    corpus = local_rows_df(
+        spark,
         [(i, [rng.gauss(0, 1) for _ in range(16)]) for i in range(120)],
-        ["vec_id", "e"],
+        "vec_id long, e array<double>",
     )
     base = corpus.where(F.col("vec_id") < 60)
     path = str(tmp_path / "ivf_seq")
@@ -440,9 +444,10 @@ def test_resolve_root_recovers_legacy_unmarked_generation(spark, tmp_path):
     )
 
     rng = random.Random(7)
-    corpus = spark.createDataFrame(
+    corpus = local_rows_df(
+        spark,
         [(i, [rng.gauss(0, 1) for _ in range(16)]) for i in range(100)],
-        ["vec_id", "e"],
+        "vec_id long, e array<double>",
     )
     path = str(tmp_path / "ivf_legacy")
     assigned, centroids = build_ivf_index(corpus, dim=16, n_list=8)

@@ -20,6 +20,7 @@ from dipa_collaborative_pulsar_idps_spark.functions.similarity import (
     recall_at_k,
     topk,
 )
+from dipa_collaborative_pulsar_idps_spark.localdf import local_rows_df
 from dipa_collaborative_pulsar_idps_spark.tables import load_table
 
 
@@ -40,7 +41,7 @@ def planted_docs(spark):
         expected.add((i * 2, i * 2 + 1))
     for i in range(100, 140):
         rows.append((i, " ".join(rng.choice(vocab) for _ in range(60))))
-    return spark.createDataFrame(rows, ["doc_id", "text"]), expected
+    return local_rows_df(spark, rows, "doc_id long, text string"), expected
 
 
 def test_minhash_finds_planted_pairs(spark, planted_docs):
@@ -89,7 +90,9 @@ def clustered_vectors(spark):
         for _ in range(10):
             rows.append((vid, [x + rng.gauss(0, 0.15) for x in c]))
             vid += 1
-    return spark.createDataFrame(rows, ["vec_id", "e"])
+    # a local relation: every action reads the rows from the plan instead
+    # of re-running a Python worker over pickled slices
+    return local_rows_df(spark, rows, "vec_id long, e array<double>")
 
 
 def test_ann_recall_on_clustered_data(spark, clustered_vectors):
@@ -464,8 +467,10 @@ def test_minhash_signatures_drop_empty_shingles(spark):
         shingle_sets,
     )
 
-    docs = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "x y z w v u t s")], ["doc_id", "text"]
+    docs = local_rows_df(
+        spark,
+        [(1, "a"), (2, "b"), (3, "x y z w v u t s")],
+        "doc_id long, text string",
     )
     sigs = minhash_signatures(shingle_sets(docs, "doc_id", "text"))
     rows = sigs.collect()
@@ -483,14 +488,15 @@ def test_window_dedup_flags_planted_shared_window(spark):
     )
 
     shared = " ".join(f"w{i}" for i in range(8))  # one full 8-token window
-    docs = spark.createDataFrame(
+    docs = local_rows_df(
+        spark,
         [
             (1, shared + " alpha beta gamma delta epsilon zeta eta theta"),
             (2, shared + " one two three four five six seven eight"),
             (3, "lone tokens that never repeat across any doc here ok"),
             (4, "short doc"),  # < 8 tokens → zero windows
         ],
-        ["doc_id", "text"],
+        "doc_id long, text string",
     )
     got = {r["doc_id"]: r for r in window_dedup_stats(docs).collect()}
     assert got[1]["n_windows"] == 2 and got[1]["n_dup_windows"] == 1
@@ -712,8 +718,10 @@ def test_sq_error_bound_roundtrip_and_recall(spark, clustered_vectors, tmp_path)
     assert r >= 0.95, f"SQ8 recall@5 too low: {r}"
 
     # constant dimension: code 0, exact reconstruction
-    const = spark.createDataFrame(
-        [(0, [1.5, 2.0]), (1, [1.5, 3.0])], ["vec_id", "e"]
+    const = local_rows_df(
+        spark,
+        [(0, [1.5, 2.0]), (1, [1.5, 3.0])],
+        "vec_id long, e array<double>",
     )
     b2 = train_sq(const, dim=2)
     c2 = {r.vec_id: np.array(r.codes) for r in sq_encode(const, b2).collect()}
@@ -1305,8 +1313,10 @@ def test_trim_duplicate_spans_planted_truth(spark):
     b = f"b0 b1 b2 {shared} b3"
     c = " ".join(f"c{i}" for i in range(12))
     tiny = "t0 t1 t2"
-    docs = spark.createDataFrame(
-        [(1, a), (2, b), (3, c), (4, tiny)], ["doc_id", "text"]
+    docs = local_rows_df(
+        spark,
+        [(1, a), (2, b), (3, c), (4, tiny)],
+        "doc_id long, text string",
     )
     out = {r.id: r for r in trim_duplicate_spans(docs).collect()}
     assert out[1].text_trimmed == a and out[1].n_tokens_after == 14
@@ -1333,9 +1343,10 @@ def test_minhash_signature_expr_form_bit_equals_column_form(spark):
         toks_on,
     )
 
-    docs = spark.createDataFrame(
+    docs = local_rows_df(
+        spark,
         [(i, f"tok{i} tok{i + 1} tok{i % 7} alpha beta gamma delta") for i in range(60)],
-        ["doc_id", "text"],
+        "doc_id long, text string",
     )
     sh = shingle_sets(docs)
     got = {r.id: list(r.sig) for r in minhash_signatures(sh, 16).collect()}
@@ -1419,13 +1430,14 @@ def test_trim_duplicate_spans_idempotent_and_profile_clean(spark):
     )
 
     shared = " ".join(f"s{i}" for i in range(9))
-    docs = spark.createDataFrame(
+    docs = local_rows_df(
+        spark,
         [
             (1, f"a0 {shared} a1"),
             (2, f"b0 b1 {shared}"),
             (3, f"{shared} c0 c1 c2"),
         ],
-        ["doc_id", "text"],
+        "doc_id long, text string",
     )
     t1 = trim_duplicate_spans(docs).select(
         "id", F.col("text_trimmed").alias("text")
@@ -1530,9 +1542,10 @@ def test_ivf_append_batch_incremental(spark, clustered_vectors, tmp_path):
 
     # (3) shifted-distribution batch trips the drift trigger
     rng = random.Random(99)
-    far = spark.createDataFrame(
+    far = local_rows_df(
+        spark,
         [(10_000 + i, [rng.gauss(8, 1) for _ in range(64)]) for i in range(20)],
-        ["vec_id", "e"],
+        "vec_id long, e array<double>",
     )
     s3 = ivf_append_batch(spark, path, far, "b3_drift")
     assert s3["drift_ratio"] > 1.5 and s3["needs_retrain"]
@@ -1626,9 +1639,10 @@ def test_ivfpq_append_batch_incremental(spark, clustered_vectors, tmp_path):
 
     # (3) far distribution -> reconstruction drift
     rng = random.Random(99)
-    far = spark.createDataFrame(
+    far = local_rows_df(
+        spark,
         [(10_000 + i, [rng.gauss(8, 1) for _ in range(64)]) for i in range(20)],
-        ["vec_id", "e"],
+        "vec_id long, e array<double>",
     )
     s3 = ivfpq_append_batch(spark, path, far, "b3_drift")
     assert s3["drift_ratio"] > 1.5 and s3["needs_retrain"]
@@ -1677,9 +1691,10 @@ def test_ivf_retrain_closes_the_loop(spark, clustered_vectors, tmp_path):
     ivf_append_batch(spark, path, odd.where(F.col("vec_id") % 4 == 1), "b1")
     s2 = ivf_append_batch(spark, path, odd.where(F.col("vec_id") % 4 == 3), "b2")
     rng = _random.Random(99)
-    far = spark.createDataFrame(
+    far = local_rows_df(
+        spark,
         [(10_000 + i, [rng.gauss(8, 1) for _ in range(64)]) for i in range(20)],
-        ["vec_id", "e"],
+        "vec_id long, e array<double>",
     )
     s3 = ivf_append_batch(spark, path, far, "b3_drift")
     assert s2["needs_retrain"] and s3["needs_retrain"]  # both triggers planted
@@ -1755,9 +1770,10 @@ def test_ivfpq_retrain_recovers_recall(spark, clustered_vectors, tmp_path):
     ivfpq_append_batch(spark, path, odd.where(F.col("vec_id") % 4 == 1), "b1")
     ivfpq_append_batch(spark, path, odd.where(F.col("vec_id") % 4 == 3), "b2")
     rng = _random.Random(99)
-    far = spark.createDataFrame(
+    far = local_rows_df(
+        spark,
         [(10_000 + i, [rng.gauss(8, 1) for _ in range(64)]) for i in range(20)],
-        ["vec_id", "e"],
+        "vec_id long, e array<double>",
     )
     s3 = ivfpq_append_batch(spark, path, far, "b3_drift")
     assert s3["drift_ratio"] > 1.5 and s3["needs_retrain"]
@@ -2100,9 +2116,10 @@ def test_ivfsq_append_batch_and_retrain(spark, clustered_vectors, tmp_path):
 
     # (3) clipping far-distribution batch -> sharp drift
     rng = _random.Random(99)
-    far = spark.createDataFrame(
+    far = local_rows_df(
+        spark,
         [(10_000 + i, [rng.gauss(8, 1) for _ in range(64)]) for i in range(20)],
-        ["vec_id", "e"],
+        "vec_id long, e array<double>",
     )
     s3 = ivfsq_append_batch(spark, path, far, "b3_drift")
     assert s3["clip_frac"] > 0.25 and s3["needs_retrain"]
@@ -2142,12 +2159,13 @@ def test_semantic_dedup_finds_planted_neardups(spark, clustered_vectors):
     corpus = clustered_vectors
     rng = random.Random(77)
     base = {r.vec_id: r.e for r in corpus.where(F.col("vec_id") % 10 == 0).collect()}
-    dups = spark.createDataFrame(
+    dups = local_rows_df(
+        spark,
         [
             (10_000 + vid, [x + rng.gauss(0, 0.01) for x in e])
             for vid, e in base.items()
         ],
-        ["vec_id", "e"],
+        "vec_id long, e array<double>",
     )
     emb = corpus.unionByName(dups)
     assigned, _ = build_ivf_index(emb, dim=64, n_list=16)

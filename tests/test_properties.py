@@ -13,6 +13,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from dipa_collaborative_pulsar_idps_spark.localdf import local_rows_df
 from dipa_collaborative_pulsar_idps_spark.operators.deltas import counter_delta
 from dipa_collaborative_pulsar_idps_spark.operators.rangejoin import interval_join
 
@@ -49,7 +50,7 @@ def test_counter_delta_matches_model_under_resets(spark, runs_by_key):
     for key, runs in runs_by_key.items():
         seq = [c for run in runs for c in run]  # concatenated runs = resets
         rows += [(key, i, c) for i, c in enumerate(seq)]
-    df = spark.createDataFrame(rows, "k string, seq int, counter long")
+    df = local_rows_df(spark, rows, "k string, seq int, counter long")
     got = {
         (r.k, r.seq): r.delta
         for r in counter_delta(df, ["k"], "counter", ["seq"]).collect()
@@ -184,7 +185,7 @@ def test_exact_quantiles_property_equals_percentile(spark, vals, qs, n_parts):
         exact_quantiles,
     )
 
-    df = spark.createDataFrame([(v,) for v in vals], "v double")
+    df = local_rows_df(spark, [(v,) for v in vals], "v double")
     got = exact_quantiles(df, "v", qs, n_parts=n_parts)
     want = df.agg(
         F.percentile("v", F.array(*[F.lit(q) for q in qs]))
@@ -224,7 +225,7 @@ def test_grouped_quantile_strategies_property_equal_percentile(
         grouped_exact_quantiles_window,
     )
 
-    df = spark.createDataFrame(rows, "g string, v double")
+    df = local_rows_df(spark, rows, "g string, v double")
     want = {
         r.g: r.pc
         for r in df.groupBy("g")
@@ -265,7 +266,8 @@ def test_chunking_fixed_stride_contract(spark, ns, window, stride_frac):
     )
 
     stride = max(1, int(round(window * stride_frac)))
-    docs = spark.createDataFrame(
+    docs = local_rows_df(
+        spark,
         [(i, " ".join(f"d{i}t{j}" for j in range(n))) for i, n in enumerate(ns)],
         "doc_id long, text string",
     )
@@ -378,11 +380,13 @@ def test_snapshot_diff_matches_set_model(spark, n, removed, added, changed):
 
     old_ids = set(range(n))
     new_ids = (old_ids - removed) | added
-    old = spark.createDataFrame(
+    old = local_rows_df(
+        spark,
         [(i, f"text {i}") for i in sorted(old_ids)] or [(None, None)],
         "doc_id long, text string",
     ).where("doc_id IS NOT NULL")
-    new = spark.createDataFrame(
+    new = local_rows_df(
+        spark,
         [
             (i, f"text {i} v2" if i in changed else f"text {i}")
             for i in sorted(new_ids)

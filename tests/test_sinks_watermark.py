@@ -11,6 +11,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from dipa_collaborative_pulsar_idps_spark.localdf import local_rows_df
 from dipa_collaborative_pulsar_idps_spark.streaming.replay import (
     replay_stream,
     run_to_memory,
@@ -37,8 +38,10 @@ def test_mitigation_sink_idempotent(spark, tmpdirs):
         key_cols=["action", "ip"],
         apply_fn=lambda rows: applied.extend((r["action"], r["ip"]) for r in rows),
     )
-    b1 = spark.createDataFrame(
-        [("BLOCK", "10.0.0.2"), ("BLOCK", "10.0.0.5")], ["action", "ip"]
+    b1 = local_rows_df(
+        spark,
+        [("BLOCK", "10.0.0.2"), ("BLOCK", "10.0.0.5")],
+        "action string, ip string",
     )
     sink(b1, 0)
     assert sorted(applied) == [("BLOCK", "10.0.0.2"), ("BLOCK", "10.0.0.5")]
@@ -46,7 +49,7 @@ def test_mitigation_sink_idempotent(spark, tmpdirs):
     sink(b1, 1)
     assert len(applied) == 2
     # a new action for a known target still applies
-    sink(spark.createDataFrame([("RATE_LIMIT", "10.0.0.2")], ["action", "ip"]), 2)
+    sink(local_rows_df(spark, [("RATE_LIMIT", "10.0.0.2")], "action string, ip string"), 2)
     assert ("RATE_LIMIT", "10.0.0.2") in applied and len(applied) == 3
 
 
@@ -89,14 +92,14 @@ def test_mitigation_ledger_file_count_bounded(spark, tmpdirs):
     n_batches = 12
     for b in range(n_batches):
         sink(
-            spark.createDataFrame([("BLOCK", f"10.0.0.{b}")], ["action", "ip"]),
+            local_rows_df(spark, [("BLOCK", f"10.0.0.{b}")], "action string, ip string"),
             b,
         )
     assert len(applied) == n_batches
     # replay every batch → nothing re-applied
     for b in range(n_batches):
         sink(
-            spark.createDataFrame([("BLOCK", f"10.0.0.{b}")], ["action", "ip"]),
+            local_rows_df(spark, [("BLOCK", f"10.0.0.{b}")], "action string, ip string"),
             100 + b,
         )
     assert len(applied) == n_batches
@@ -119,8 +122,10 @@ def test_mitigation_sink_driver_cap_fails_loudly(spark, tmpdirs):
         apply_fn=lambda rows: applied.extend(r["__key"] for r in rows),
         max_driver_rows=5,
     )
-    hot = spark.createDataFrame(
-        [("BLOCK", f"10.0.0.{i}") for i in range(20)], ["action", "ip"]
+    hot = local_rows_df(
+        spark,
+        [("BLOCK", f"10.0.0.{i}") for i in range(20)],
+        "action string, ip string",
     )
     with pytest.raises(RuntimeError, match="max_driver_rows"):
         sink(hot, 0)
@@ -159,9 +164,10 @@ def test_mitigation_sink_foreach_partition_path(spark, tmpdirs, tmp_path):
         apply_partition_fn=apply_slice,
         max_driver_rows=1,  # must be irrelevant on this path
     )
-    b = spark.createDataFrame(
+    b = local_rows_df(
+        spark,
         [("BLOCK", f"10.0.0.{i}") for i in range(50)] + [("BLOCK", "10.0.0.7")] * 2,
-        ["action", "ip"],
+        "action string, ip string",
     ).repartition(4)
     sink(b, 0)
 
@@ -189,9 +195,10 @@ def test_mitigation_sink_dedupes_within_batch_driver_path(spark, tmpdirs):
         key_cols=["action", "ip"],
         apply_fn=applied.extend,
     )
-    b = spark.createDataFrame(
+    b = local_rows_df(
+        spark,
         [("BLOCK", "10.7.7.7"), ("BLOCK", "10.7.7.7"), ("BLOCK", "10.7.7.8")],
-        ["action", "ip"],
+        "action string, ip string",
     )
     sink(b, 0)
     assert sorted(r["ip"] for r in applied) == ["10.7.7.7", "10.7.7.8"]
@@ -206,8 +213,10 @@ def test_mitigation_sink_dedupes_within_batch_ledger_only(spark, tmpdirs):
     duplicate key once."""
     ledger, _, _ = tmpdirs
     sink = MitigationSink(f"{ledger}/ledger", ["action", "ip"])
-    b = spark.createDataFrame(
-        [("BLOCK", "10.7.7.7")] * 3 + [("BLOCK", "10.7.7.8")], ["action", "ip"]
+    b = local_rows_df(
+        spark,
+        [("BLOCK", "10.7.7.7")] * 3 + [("BLOCK", "10.7.7.8")],
+        "action string, ip string",
     ).repartition(4)
     sink(b, 0)
     assert sorted(_ledger_keys(spark, f"{ledger}/ledger")) == [
@@ -254,8 +263,10 @@ def test_mitigation_ledger_shared_between_paths(spark, tmpdirs, writer):
 
     ledger, _, _ = tmpdirs
     path = f"{ledger}/ledger"
-    b = spark.createDataFrame(
-        [("BLOCK", f"10.0.0.{i}") for i in range(6)], ["action", "ip"]
+    b = local_rows_df(
+        spark,
+        [("BLOCK", f"10.0.0.{i}") for i in range(6)],
+        "action string, ip string",
     )
     applied = []
 
@@ -277,7 +288,7 @@ def test_mitigation_ledger_shared_between_paths(spark, tmpdirs, writer):
     second()(b, 1)  # replay through a fresh instance of the other path
     assert len(applied) == n_applied
     assert len(_ledger_keys(spark, path)) == 6
-    new = spark.createDataFrame([("BLOCK", "10.0.0.99")], ["action", "ip"])
+    new = local_rows_df(spark, [("BLOCK", "10.0.0.99")], "action string, ip string")
     second()(new, 2)
     assert sorted(_ledger_keys(spark, path)) == sorted(
         [f"BLOCK§10.0.0.{i}" for i in range(6)] + ["BLOCK§10.0.0.99"]

@@ -10,6 +10,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from dipa_collaborative_pulsar_idps_spark.localdf import local_rows_df
 from dipa_collaborative_pulsar_idps_spark.schemas import ALERTS, FLOW_STATS
 from dipa_collaborative_pulsar_idps_spark.streaming.fixtures import (
     flow_stats_attack,
@@ -933,7 +934,7 @@ def test_streaming_incremental_dedup_reports_each_pair_once(spark, tmp_path):
         rows.append((i * 2 + 1, " ".join(near)))
     for i in range(100, 130):
         rows.append((i, " ".join(rng.choice(vocab) for _ in range(50))))
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
+    docs = local_rows_df(spark, rows, "doc_id long, text string")
 
     replay_dir = str(tmp_path / "replay")
     from dipa_collaborative_pulsar_idps_spark.streaming.replay import (
@@ -1005,7 +1006,7 @@ def test_streaming_incremental_tfidf_matches_batch_operator(spark, tmp_path):
     ]
     # planted: doc 40 (batch 3) is a near-copy of doc 2 (batch 1)
     rows[40] = (40, rows[2][1] + " zzz")
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
+    docs = local_rows_df(spark, rows, "doc_id long, text string")
 
     replay_dir = str(tmp_path / "replay")
     write_replay_chunks(docs, replay_dir, n_chunks=3, order_col="doc_id")
@@ -1066,7 +1067,7 @@ def test_streaming_incremental_tfidf_mid_commit_replay_is_idempotent(spark, tmp_
     )
 
     rows = [(i, f"alpha{i % 7} beta{i % 5} gamma{i % 3}") for i in range(30)]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
+    docs = local_rows_df(spark, rows, "doc_id long, text string")
     half_a = docs.where("doc_id < 15")
     half_b = docs.where("doc_id >= 15")
     paths = {k: str(tmp_path / k) for k in ("idx", "corpus", "results")}
@@ -1115,7 +1116,7 @@ def test_streaming_incremental_dedup_mid_commit_replay_is_idempotent(spark, tmp_
 
     rows = [(i, f"tok{i} " * 30) for i in range(40)]
     rows.append((100, rows[0][1]))  # exact near-dup of doc 0
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
+    docs = local_rows_df(spark, rows, "doc_id long, text string")
     half_a = docs.where("doc_id < 20")
     half_b = docs.where("doc_id >= 20")
 
@@ -1190,7 +1191,7 @@ def test_streaming_incremental_dedup_bootstrap_crash_before_corpus_write(
     # and the stream continues normally afterwards — without leaking
     # cached blocks (the sink owns its helpers' persist lifecycle)
     before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
-    more = spark.createDataFrame([(200, rows[1][1])], ["doc_id", "text"])
+    more = local_rows_df(spark, [(200, rows[1][1])], "doc_id long, text string")
     fn(more, 1)
     assert {
         (r.doc_a, r.doc_b) for r in spark.read.parquet(paths["pairs"]).collect()
@@ -1233,19 +1234,22 @@ def test_index_sinks_mark_an_empty_batch_and_stop(spark, tmp_path, kind):
             )
         return fn, paths
 
-    fn, paths = sink("after_bootstrap")
-    fn(docs, 0)
+    # batch 1 bootstraps the index, then the empty batch 2 arrives; its
+    # tables double as the "batch 1 alone" reference below, since the
+    # empty batch must leave them untouched
+    fn_1, paths_1 = sink("alone")
+    fn_1(docs, 1)
     sc = spark.sparkContext
     group = f"empty_batch:{kind}"
     sc.setJobGroup(group, group)
     try:
-        fn(empty, 1)
+        fn_1(empty, 2)
     finally:
         sc.setJobGroup("idle", "")
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1
-    assert os.path.isdir(f"{paths['idx']}/_batches/1")
+    assert os.path.isdir(f"{paths_1['idx']}/_batches/2")
     for table in ("out", "corpus"):
-        assert not os.path.exists(f"{paths[table]}/ingest_batch=1"), table
+        assert not os.path.exists(f"{paths_1[table]}/ingest_batch=2"), table
 
     def table_rows(p: dict) -> dict:
         return {
@@ -1256,8 +1260,6 @@ def test_index_sinks_mark_an_empty_batch_and_stop(spark, tmp_path, kind):
     fn_e, paths_e = sink("empty_first")
     fn_e(empty, 0)
     fn_e(docs, 1)
-    fn_1, paths_1 = sink("alone")
-    fn_1(docs, 1)
     want = table_rows(paths_1)
     assert want["out"] and want["index"]
     assert table_rows(paths_e) == want
@@ -1305,7 +1307,7 @@ def test_streaming_sinks_recover_from_temporary_only_corpus(spark, tmp_path):
 
     # --- tfidf sink ---
     trows = [(i, f"alpha{i % 7} beta{i % 5} gamma{i % 3}") for i in range(20)]
-    tdocs = spark.createDataFrame(trows, ["doc_id", "text"])
+    tdocs = local_rows_df(spark, trows, "doc_id long, text string")
     tpaths = {k: str(tmp_path / ("t_" + k)) for k in ("idx", "corpus", "results")}
     tfn = incremental_tfidf_sink(
         index_path=tpaths["idx"],
@@ -1341,7 +1343,7 @@ def test_streaming_quality_gate_matches_batch_filter(spark, tmp_path):
 
     rows = [(i, f"alpha{i} beta{i % 7} gamma{i % 3} delta{i % 5}") for i in range(60)]
     rows.append((100, ""))  # token-less: NULL score, must be dropped
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
+    docs = local_rows_df(spark, rows, "doc_id long, text string")
     d = str(tmp_path / "replay")
     write_replay_chunks(docs, d, n_chunks=3, order_col="doc_id")
 
@@ -1538,13 +1540,14 @@ def test_streaming_incremental_ann_sink_drift_retrain_and_replay(spark, tmp_path
         for _ in range(10):
             rows.append((vid, [x + rng.gauss(0, 0.15) for x in c]))
             vid += 1
-    corpus = spark.createDataFrame(rows, ["vec_id", "e"])
+    corpus = local_rows_df(spark, rows, "vec_id long, e array<double>")
     base = corpus.where(F.col("vec_id") % 2 == 0)          # 100: bootstrap
     same = corpus.where((F.col("vec_id") % 2 == 1) & (F.col("vec_id") < 60))  # 30
     drift_rng = _random.Random(99)
-    far = spark.createDataFrame(
+    far = local_rows_df(
+        spark,
         [(10_000 + i, [drift_rng.gauss(8, 1) for _ in range(64)]) for i in range(20)],
-        ["vec_id", "e"],
+        "vec_id long, e array<double>",
     )
 
     replay_dir = str(tmp_path / "replay")
@@ -1662,7 +1665,7 @@ def test_streaming_ann_sink_bootstrap_crash_replay(spark, tmp_path):
     )
 
     rows = _clustered_vectors(7)
-    corpus = spark.createDataFrame(rows, ["vec_id", "e"])
+    corpus = local_rows_df(spark, rows, "vec_id long, e array<double>")
 
     # ---- shapes 1 + 2: single bootstrap batch ----
     replay_dir = str(tmp_path / "replay_a")
@@ -1764,16 +1767,17 @@ def test_streaming_incremental_ann_sink_ivfsq_drift_retrain_and_replay(
     )
 
     rows = _clustered_vectors(11)
-    corpus = spark.createDataFrame(rows, ["vec_id", "e"])
+    corpus = local_rows_df(spark, rows, "vec_id long, e array<double>")
     base = corpus.where(F.col("vec_id") % 2 == 0)  # 100: bootstrap
     same = corpus.where((F.col("vec_id") % 2 == 1) & (F.col("vec_id") < 60))  # 30
     drift_rng = _random.Random(99)
-    far = spark.createDataFrame(
+    far = local_rows_df(
+        spark,
         [
             (10_000 + i, [drift_rng.gauss(8, 1) for _ in range(64)])
             for i in range(20)
         ],
-        ["vec_id", "e"],
+        "vec_id long, e array<double>",
     )
 
     replay_dir = str(tmp_path / "replay")
@@ -1843,7 +1847,7 @@ def test_streaming_incremental_ann_sink_ivfpq_mass_retrain(spark, tmp_path):
     )
 
     rows = _clustered_vectors(23)
-    corpus = spark.createDataFrame(rows, ["vec_id", "e"])
+    corpus = local_rows_df(spark, rows, "vec_id long, e array<double>")
     base = corpus.where(F.col("vec_id") % 2 == 0)  # 100
     odd = corpus.where(F.col("vec_id") % 2 == 1)
     b1 = odd.where(F.col("vec_id") < 60)  # 30: mass 0.3, quiet
@@ -1892,14 +1896,15 @@ def test_streaming_ann_sink_pending_retrain_survives_crash(
     )
 
     rows = _clustered_vectors(31)
-    corpus = spark.createDataFrame(rows, ["vec_id", "e"])
+    corpus = local_rows_df(spark, rows, "vec_id long, e array<double>")
     base = corpus.where(F.col("vec_id") % 2 == 0)  # 100
     import random as _random
 
     drift_rng = _random.Random(5)
-    far = spark.createDataFrame(
+    far = local_rows_df(
+        spark,
         [(10_000 + i, [drift_rng.gauss(8, 1) for _ in range(64)]) for i in range(20)],
-        ["vec_id", "e"],
+        "vec_id long, e array<double>",
     )
     late = corpus.where((F.col("vec_id") % 2 == 1) & (F.col("vec_id") < 20))  # 10
 
@@ -2014,7 +2019,7 @@ def test_streaming_semantic_dedup_sink_replay(spark, tmp_path):
     replay_dir = str(tmp_path / "replay")
     os.makedirs(replay_dir, exist_ok=True)
     for rows in (b0, b1):
-        spark.createDataFrame(rows, ["vec_id", "e"]).coalesce(1).write.mode(
+        local_rows_df(spark, rows, "vec_id long, e array<double>").coalesce(1).write.mode(
             "append"
         ).parquet(replay_dir)
         _time.sleep(0.05)
@@ -2053,12 +2058,13 @@ def test_streaming_semantic_dedup_sink_replay(spark, tmp_path):
     from dipa_collaborative_pulsar_idps_spark.functions.ivf import _read_pointer
 
     far_rng = _random.Random(5)
-    far = spark.createDataFrame(
+    far = local_rows_df(
+        spark,
         [
             (3000 + i, [far_rng.gauss(8, 1) for _ in range(64)])
             for i in range(20)
         ],
-        ["vec_id", "e"],
+        "vec_id long, e array<double>",
     )
     far.coalesce(1).write.mode("append").parquet(replay_dir)
     _time.sleep(0.05)
